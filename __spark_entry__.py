@@ -79,88 +79,46 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from cqs_spark.operators.analytic_queries import ANALYTIC_QUERIES
+    from cqs_spark.operators.graph_queries import GRAPH_QUERIES
+    from cqs_spark.operators.multimodal_queries import MULTIMODAL_QUERIES
+    from cqs_spark.operators.pipeline_queries import PIPELINE_QUERIES
     from cqs_spark.operators.relational import RELATIONAL_QUERIES
+    from cqs_spark.operators.scoring_queries import SCORING_QUERIES
+    from cqs_spark.operators.snapshot_queries import SNAPSHOT_QUERIES
 
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(RELATIONAL_QUERIES)
-    try:
-        from cqs_spark.operators.pipeline_queries import PIPELINE_QUERIES
-
-        out.update(PIPELINE_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.graph_queries import GRAPH_QUERIES
-
-        out.update(GRAPH_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.scoring_queries import SCORING_QUERIES
-
-        out.update(SCORING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.multimodal_queries import MULTIMODAL_QUERIES
-
-        out.update(MULTIMODAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.snapshot_queries import SNAPSHOT_QUERIES
-
-        out.update(SNAPSHOT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.analytic_queries import ANALYTIC_QUERIES
-
-        out.update(ANALYTIC_QUERIES)
-    except ImportError:
-        pass
+    for family in (
+        RELATIONAL_QUERIES,
+        PIPELINE_QUERIES,
+        GRAPH_QUERIES,
+        SCORING_QUERIES,
+        MULTIMODAL_QUERIES,
+        SNAPSHOT_QUERIES,
+        ANALYTIC_QUERIES,
+    ):
+        out.update(family)
     return _rotate(out)
 
 
 def oracle_sql() -> dict[str, str]:
+    from cqs_spark.operators.analytic_queries import ANALYTIC_ORACLES
+    from cqs_spark.operators.graph_queries import GRAPH_ORACLES
+    from cqs_spark.operators.multimodal_queries import MULTIMODAL_ORACLES
     from cqs_spark.operators.oracles import RELATIONAL_ORACLES
+    from cqs_spark.operators.pipeline_queries import PIPELINE_ORACLES
+    from cqs_spark.operators.scoring_queries import SCORING_ORACLES
+    from cqs_spark.operators.snapshot_queries import SNAPSHOT_ORACLES
 
     out: dict[str, str] = {}
-    out.update(RELATIONAL_ORACLES)
-    try:
-        from cqs_spark.operators.pipeline_queries import PIPELINE_ORACLES
-
-        out.update(PIPELINE_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.graph_queries import GRAPH_ORACLES
-
-        out.update(GRAPH_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.scoring_queries import SCORING_ORACLES
-
-        out.update(SCORING_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.multimodal_queries import MULTIMODAL_ORACLES
-
-        out.update(MULTIMODAL_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.snapshot_queries import SNAPSHOT_ORACLES
-
-        out.update(SNAPSHOT_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from cqs_spark.operators.analytic_queries import ANALYTIC_ORACLES
-
-        out.update(ANALYTIC_ORACLES)
-    except ImportError:
-        pass
+    for family in (
+        RELATIONAL_ORACLES,
+        PIPELINE_ORACLES,
+        GRAPH_ORACLES,
+        SCORING_ORACLES,
+        MULTIMODAL_ORACLES,
+        SNAPSHOT_ORACLES,
+        ANALYTIC_ORACLES,
+    ):
+        out.update(family)
     return _rotate(out)

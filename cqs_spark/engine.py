@@ -22,7 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from cqs_spark.functions.vector import dot
 from cqs_spark.index.ingest import build_chunks, list_files
 from cqs_spark.index.postings import build_postings, keyword_search
-from cqs_spark.index.reuse import DEFAULT_DIM, embed_with_cache, ri_embedding
+from cqs_spark.index.reuse import (
+    DEFAULT_DIM,
+    embed_with_cache,
+    new_cache_rows,
+    ri_embedding,
+)
 from cqs_spark.operators import graph, scoring
 
 # Identifiers followed by "(" — the heuristic call-site extractor.
@@ -211,7 +216,7 @@ class Engine:
         cache = None
         if os.path.exists(self._cache_path()):
             cache = self.spark.read.parquet(self._cache_path())
-        embedded, new_cache = embed_with_cache(chunks, cache, dim=self.dim)
+        embedded, _ = embed_with_cache(chunks, cache, dim=self.dim)
         self._write_table(embedded, "chunks")
         chunks_t = self.chunks()
         self._write_table(build_postings(chunks_t), "postings")
@@ -219,8 +224,12 @@ class Engine:
         from cqs_spark.index.typegraph import type_edges
 
         self._write_table(type_edges(chunks_t), "type_edges")
+        # New cache rows come from the written chunks: no second parse
+        # or embed.
         mode = "append" if cache is not None else "overwrite"
-        new_cache.write.mode(mode).parquet(self._cache_path())
+        new_cache_rows(chunks_t, cache, dim=self.dim).write.mode(mode).parquet(
+            self._cache_path()
+        )
         # File-fingerprint registry: what `stale` / `refresh` reconcile
         # against (the reference's file_registry, src/schema.sql).
         from cqs_spark.index.ingest import registry_of
@@ -1270,15 +1279,28 @@ class Engine:
         deleted ones, rebuild the derived tables (cqs refresh / the
         watch daemon's reconcile-and-upsert cycle).
 
-        The embed stage sees ONLY the fresh origins' chunks (plus the
-        canonical-hash cache), so an unchanged corpus refreshes without
-        touching the inference path — the cost model the reference's
-        incremental pipeline is built around.
+        Cost model:
+        - ONE fingerprint pass over the tree: the listing's
+          (origin, mtime, size, content hash) rows are written once to
+          ``registry.new``, and the reconcile against the stored
+          registry reads that file.  ``registry.new`` replaces the
+          registry last, only when something changed.
+        - ONE action collects the new, changed and deleted origins (a
+          set the size of the change, not of the tree).  The parse set
+          is a ``path IN (...)`` filter pushed into the binaryFile
+          scan, so only the changed files are parsed and embedded, each
+          once; the embed stage sees only their chunks plus the
+          canonical-hash cache.  (binaryFile still reads the bytes of
+          every listed file before that filter drops them.)
+        - The derived tables and the new cache rows are rebuilt from
+          the written ``chunks`` table, never by re-running parse or
+          embed.
+        An unchanged corpus costs the fingerprint pass and the reconcile.
         """
         import json
         import shutil
 
-        from cqs_spark.index.incremental import merge_chunks, plan_incremental
+        from cqs_spark.index.incremental import reconcile
         from cqs_spark.index.ingest import registry_of
         from cqs_spark.index.typegraph import type_edges
 
@@ -1316,62 +1338,69 @@ class Engine:
                 "n_chunks": self.n_chunks(),
             }
         files = list_files(self.spark, root, glob)
-        listing = registry_of(files)
-        registry = self.spark.read.parquet(self._path("registry"))
-        to_parse, to_delete = plan_incremental(listing, registry)
-        gone = to_parse.unionByName(to_delete)
-        report = {
-            "reparsed": to_parse.count(),
-            "deleted": to_delete.count(),
-        }
-        if report["reparsed"] or report["deleted"]:
-            fresh_files = files.join(
-                F.broadcast(to_parse.withColumnRenamed("origin", "path")), "path"
+        reg_new = self._path("registry") + ".new"
+        registry_of(files).write.mode("overwrite").parquet(reg_new)
+        status = {"new": [], "changed": [], "deleted": []}
+        for r in (
+            reconcile(
+                self.spark.read.parquet(reg_new),
+                self.spark.read.parquet(self._path("registry")),
             )
-            fresh = build_chunks(fresh_files)
-            cache = None
-            if os.path.exists(self._cache_path()):
-                cache = self.spark.read.parquet(self._cache_path())
-            embedded, new_cache = embed_with_cache(fresh, cache, dim=self.dim)
-            merged = merge_chunks(self.chunks(), embedded, gone)
-            # The merged plan READS the live chunks table, so an
-            # in-place overwrite would truncate its own input mid-scan.
-            # Path layout: write-then-swap.  Bucketed layout: break the
-            # self-read with an eager checkpoint, then overwrite the
-            # metastore table (saveAsTable refuses a live self-read).
-            if self.layout == "bucketed":
-                self._write_table(
-                    merged.localCheckpoint(eager=True), "chunks"
-                )
-            else:
-                tmp = self._path("chunks") + ".new"
-                merged.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(self._path("chunks"), ignore_errors=True)
-                shutil.move(tmp, self._path("chunks"))
-            chunks_t = self.chunks()
-            self._write_table(build_postings(chunks_t), "postings")
-            self._write_table(call_edges_from_chunks(chunks_t), "edges")
-            self._write_table(type_edges(chunks_t), "type_edges")
-            new_cache.write.mode(
-                "append" if cache is not None else "overwrite"
-            ).parquet(self._cache_path())
-            listing.write.mode("overwrite").parquet(self._path("registry") + ".new")
-            shutil.rmtree(self._path("registry"), ignore_errors=True)
-            shutil.move(self._path("registry") + ".new", self._path("registry"))
-            n_chunks = chunks_t.count()
-            with open(os.path.join(self.workdir, "meta.json"), "w") as fh:
-                json.dump(
-                    {
-                        "root": os.path.abspath(root),
-                        "glob": glob,
-                        "n_chunks": n_chunks,
-                        "model_fingerprint": active_fp,
-                        "dim": self.dim,
-                    },
-                    fh,
-                )
-            self._n_chunks_cached = n_chunks
-            report["n_chunks"] = n_chunks
+            .filter(F.col("status") != "unchanged")
+            .collect()
+        ):
+            status[r["status"]].append(r["origin"])
+        reparsed = status["new"] + status["changed"]
+        gone = reparsed + status["deleted"]
+        report = {"reparsed": len(reparsed), "deleted": len(status["deleted"])}
+        if not gone:
+            shutil.rmtree(reg_new, ignore_errors=True)
+            return report
+        fresh = build_chunks(files.filter(F.col("path").isin(reparsed)))
+        cache = None
+        if os.path.exists(self._cache_path()):
+            cache = self.spark.read.parquet(self._cache_path())
+        embedded, _ = embed_with_cache(fresh, cache, dim=self.dim)
+        merged = self.chunks().filter(~F.col("origin").isin(gone)).unionByName(
+            embedded
+        )
+        # The merged plan READS the live chunks table, so an in-place
+        # overwrite would truncate its own input mid-scan.  Path layout:
+        # write-then-swap.  Bucketed layout: break the self-read with an
+        # eager checkpoint, then overwrite the metastore table
+        # (saveAsTable refuses a live self-read).
+        if self.layout == "bucketed":
+            self._write_table(merged.localCheckpoint(eager=True), "chunks")
+        else:
+            tmp = self._path("chunks") + ".new"
+            merged.write.mode("overwrite").parquet(tmp)
+            shutil.rmtree(self._path("chunks"), ignore_errors=True)
+            shutil.move(tmp, self._path("chunks"))
+        chunks_t = self.chunks()
+        self._write_table(build_postings(chunks_t), "postings")
+        self._write_table(call_edges_from_chunks(chunks_t), "edges")
+        self._write_table(type_edges(chunks_t), "type_edges")
+        new_cache_rows(
+            chunks_t.filter(F.col("origin").isin(reparsed)), cache, dim=self.dim
+        ).write.mode("append" if cache is not None else "overwrite").parquet(
+            self._cache_path()
+        )
+        shutil.rmtree(self._path("registry"), ignore_errors=True)
+        shutil.move(reg_new, self._path("registry"))
+        n_chunks = chunks_t.count()
+        with open(os.path.join(self.workdir, "meta.json"), "w") as fh:
+            json.dump(
+                {
+                    "root": os.path.abspath(root),
+                    "glob": glob,
+                    "n_chunks": n_chunks,
+                    "model_fingerprint": active_fp,
+                    "dim": self.dim,
+                },
+                fh,
+            )
+        self._n_chunks_cached = n_chunks
+        report["n_chunks"] = n_chunks
         return report
 
     def trace(self, src: str, dst: str, max_depth: int = 6) -> list | None:

@@ -53,16 +53,6 @@ def reconcile(listing: DataFrame, registry: DataFrame) -> DataFrame:
     return j.select("origin", status.alias("status"))
 
 
-def plan_incremental(
-    listing: DataFrame, registry: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(origins to (re)parse, origins to delete) from a reconcile pass."""
-    rec = reconcile(listing, registry)
-    to_parse = rec.filter(F.col("status").isin("new", "changed")).select("origin")
-    to_delete = rec.filter(F.col("status") == "deleted").select("origin")
-    return to_parse, to_delete
-
-
 def merge_chunks(
     existing: DataFrame, fresh: DataFrame, reparsed_origins: DataFrame
 ) -> DataFrame:

@@ -125,6 +125,7 @@ def embed_stage(
     text_col: str,
     dim: int = DEFAULT_DIM,
     model: "ModelConfig | None" = None,
+    cached_col: str | None = None,
 ) -> DataFrame:
     """Append an ``embedding`` column via Arrow-batched mapInPandas.
 
@@ -134,6 +135,10 @@ def embed_stage(
     src/embedder/models.rs:789 — dim/seq-scaled so long-sequence models
     don't OOM the accelerator).  The fake encoder keeps the exact same
     dataflow and slicing.
+
+    ``cached_col`` names a column of already-known vectors: a row with
+    one passes it through as its ``embedding`` (the column is dropped),
+    and only the rows without one reach the encoder.
     """
     import pandas as pd  # noqa: F811
 
@@ -144,7 +149,7 @@ def embed_stage(
     bsz = model.embed_batch_size()
 
     schema = T.StructType(
-        list(df.schema.fields)
+        [f for f in df.schema.fields if f.name != cached_col]
         + [T.StructField("embedding", T.ArrayType(T.FloatType(), False), False)]
     )
 
@@ -152,18 +157,63 @@ def embed_stage(
         # Real backend would initialize the ONNX session HERE, once.
         for pdf in batches:
             pdf = pdf.copy()
-            out: list[list[float]] = []
+            if cached_col is None:
+                out: list = [None] * len(pdf)
+            else:
+                out = pdf.pop(cached_col).tolist()
+            todo = [i for i, v in enumerate(out) if v is None]
             texts = pdf[text_col].tolist()
-            for start in range(0, len(texts), bsz):
+            for start in range(0, len(todo), bsz):
                 # One encoder call per slice in the real backend.
-                out.extend(
-                    ri_embedding(t if isinstance(t, str) else "", dim)
-                    for t in texts[start : start + bsz]
-                )
+                for i in todo[start : start + bsz]:
+                    t = texts[i]
+                    out[i] = ri_embedding(t if isinstance(t, str) else "", dim)
             pdf["embedding"] = out
             yield pdf
 
     return df.mapInPandas(run, schema)
+
+
+def _active_cache(cache: DataFrame, fp: str) -> DataFrame:
+    """The cache rows that serve model ``fp``: (canonical_hash, embedding)."""
+    if "fingerprint" in cache.columns:
+        cache = cache.filter(F.col("fingerprint") == fp).drop("fingerprint")
+    return cache
+
+
+def new_cache_rows(
+    embedded: DataFrame,
+    cache: DataFrame | None,
+    text_col: str = "content",
+    dim: int = DEFAULT_DIM,
+    model: "ModelConfig | None" = None,
+) -> DataFrame:
+    """Cache rows to persist after an embed: one (canonical_hash,
+    embedding, fingerprint) row per canonical hash of ``embedded`` that
+    ``cache`` does not yet hold for the model.
+
+    ``embedded`` is any frame of embedded rows, so a caller that has
+    just WRITTEN its embedded chunks derives the rows from that table
+    instead of re-running parse and embed.  min_by keeps the cache
+    deterministic when several chunks share a canonical hash but differ
+    in raw text (formatting-only variants).
+    """
+    from cqs_spark.index.models import ModelConfig
+
+    if model is None:
+        model = ModelConfig.ri(dim)
+    fp = model.fingerprint()
+    if cache is not None:
+        embedded = embedded.join(
+            _active_cache(cache, fp).select("canonical_hash"),
+            "canonical_hash",
+            "left_anti",
+        )
+    return (
+        embedded.groupBy("canonical_hash")
+        .agg(F.min_by("embedding", text_col).alias("embedding"))
+        .withColumn("fingerprint", F.lit(fp))
+    )
 
 
 def embed_with_cache(
@@ -183,32 +233,27 @@ def embed_with_cache(
     another model's vectors; a legacy fingerprint-less cache is treated
     as belonging to the active model.  The caller persists
     new_cache_rows (append/MERGE) for the next run.
+
+    Cost: one broadcast left join of ``chunks`` against the cache, then
+    ONE mapInPandas that passes cached vectors through and runs the
+    encoder on the misses only — ``chunks``' own plan (the parse) is
+    evaluated once.  new_cache_rows is ``new_cache_rows(embedded,
+    cache)``: a function of the embedded rows, so evaluating it re-runs
+    the embed; callers that write the embedded chunks first should
+    call ``new_cache_rows`` on the written table instead.
     """
     from cqs_spark.index.models import ModelConfig
 
     if model is None:
         model = ModelConfig.ri(dim)
-    fp = model.fingerprint()
-
-    if cache is not None:
-        if "fingerprint" in cache.columns:
-            cache = cache.filter(F.col("fingerprint") == fp).drop("fingerprint")
-        hits = chunks.join(F.broadcast(cache), "canonical_hash", "inner")
-        misses = chunks.join(cache.select("canonical_hash"), "canonical_hash", "left_anti")
+    if cache is None:
+        embedded = embed_stage(chunks, text_col, dim, model=model)
     else:
-        spark = chunks.sparkSession
-        from cqs_spark.index.schemas import EMBED_CACHE_SCHEMA
-
-        cache = spark.createDataFrame([], EMBED_CACHE_SCHEMA).drop("fingerprint")
-        hits, misses = chunks.join(F.broadcast(cache), "canonical_hash"), chunks
-
-    embedded_misses = embed_stage(misses, text_col, dim, model=model)
-    # min_by keeps the cache deterministic when several chunks share a
-    # canonical hash but differ in raw text (formatting-only variants).
-    new_cache = (
-        embedded_misses.groupBy("canonical_hash")
-        .agg(F.min_by("embedding", text_col).alias("embedding"))
-        .withColumn("fingerprint", F.lit(fp))
-    )
-    all_rows = hits.select(*embedded_misses.columns).unionByName(embedded_misses)
-    return all_rows, new_cache
+        hits = _active_cache(cache, model.fingerprint()).select(
+            "canonical_hash", F.col("embedding").alias("_cached")
+        )
+        joined = chunks.join(F.broadcast(hits), "canonical_hash", "left").select(
+            *chunks.columns, "_cached"
+        )
+        embedded = embed_stage(joined, text_col, dim, model=model, cached_col="_cached")
+    return embedded, new_cache_rows(embedded, cache, text_col, dim, model)

@@ -7,6 +7,10 @@ to the parent (src/search/query.rs:626-640 parent dedup).
 
 Spark-first: the token slice is a pure array expression — slice over
 the split-token array, posexplode for the window index — no Python.
+Windowing is ONE projection over its input: every row posexplodes its
+window starts (a short chunk explodes a single sentinel start and
+passes through unchanged), so whatever computes the input (the parse
+``mapInPandas``) runs once per row, not once per filtered branch.
 """
 
 from __future__ import annotations
@@ -33,45 +37,49 @@ def apply_windowing(chunks: DataFrame, max_tokens: int = 512) -> DataFrame:
 
     Split rows get: id = {parent}:w{idx}, parent_id = original id,
     window_idx, content = the token window; short chunks pass through
-    untouched (the common case — union of two filtered branches keeps
-    the pass-through branch expression-free).
+    untouched.  Cost: one map-side projection plus a generate — no
+    join, no aggregate, no union — so the input plan is evaluated
+    once.  Rows with NULL content (no token count) are dropped, as a
+    size filter drops them.
     """
-    toks = F.split(F.col("content"), r"\s+")
-    short = chunks.filter(F.size(toks) <= max_tokens)
-    long = chunks.filter(F.size(toks) > max_tokens)
-
-    stride = max_tokens - max_tokens // OVERLAP_DENOM
-    windows = (
-        long.withColumn("_toks", toks)
+    cols = chunks.columns
+    exploded = (
+        chunks.withColumn("_n", F.size(F.split(F.col("content"), r"\s+")))
+        .filter(F.col("_n").isNotNull())
+        .withColumn("_long", F.col("_n") > max_tokens)
         .select(
-            *[c for c in chunks.columns if c not in ("id", "parent_id", "window_idx")],
-            F.col("id").alias("_pid"),
-            F.posexplode(window_bounds(F.size("_toks"), max_tokens)).alias(
-                "_widx", "_start"
-            ),
-            "_toks",
+            *cols,
+            "_long",
+            F.when(F.col("_long"), F.split(F.col("content"), r"\s+")).alias("_toks"),
+            F.posexplode(
+                F.when(F.col("_long"), window_bounds(F.col("_n"), max_tokens))
+                .otherwise(F.array(F.lit(-1)))  # sentinel: one pass-through row
+            ).alias("_widx", "_start"),
         )
-        .withColumn(
-            "content",
-            F.concat_ws(" ", F.slice("_toks", F.col("_start") + 1, max_tokens)),
-        )
-        .withColumn("id", F.concat_ws(":", "_pid", F.concat(F.lit("w"), "_widx")))
-        .withColumn("parent_id", F.col("_pid"))
-        .withColumn("window_idx", F.col("_widx"))
-        .drop("_toks", "_pid", "_widx", "_start")
     )
+    long = F.col("_long")
+    window = F.concat_ws(" ", F.slice("_toks", F.col("_start") + 1, max_tokens))
+    out = {
+        "content": F.when(long, window).otherwise(F.col("content")),
+        "id": F.when(
+            long, F.concat_ws(":", "id", F.concat(F.lit("w"), "_widx"))
+        ).otherwise(F.col("id")),
+        "parent_id": F.when(long, F.col("id")).otherwise(F.col("parent_id")),
+        "window_idx": F.when(long, F.col("_widx")).otherwise(F.col("window_idx")),
+    }
     # Window rows must carry hashes of the WINDOW slice, not the parent:
     # canonical_hash is the embedding-reuse cache key, and parent-inherited
     # hashes would alias every window of a chunk to one cached embedding.
     # The reference recomputes the canonical hash per window
     # (src/cli/pipeline/windowing.rs:67,98).
-    if "content_hash" in chunks.columns:
+    if "content_hash" in cols:
         from cqs_spark.index.ingest import _canonical
 
-        lang = F.col("language") if "language" in chunks.columns else None
-        windows = windows.withColumn(
-            "content_hash", F.sha2(F.col("content"), 256)
-        ).withColumn(
-            "canonical_hash", F.sha2(_canonical(F.col("content"), lang), 256)
+        lang = F.col("language") if "language" in cols else None
+        out["content_hash"] = F.when(long, F.sha2(window, 256)).otherwise(
+            F.col("content_hash")
         )
-    return short.unionByName(windows.select(*short.columns))
+        out["canonical_hash"] = F.when(
+            long, F.sha2(_canonical(window, lang), 256)
+        ).otherwise(F.col("canonical_hash"))
+    return exploded.select(*[out.get(c, F.col(c)).alias(c) for c in cols])

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cqs_spark.index.incremental import merge_chunks, plan_incremental, reconcile
+from cqs_spark.index.incremental import merge_chunks, reconcile
 from cqs_spark.index.ingest import build_chunks, list_files, registry_of, with_identity
 from cqs_spark.index.postings import build_postings, keyword_search
 from cqs_spark.index.reuse import embed_with_cache
@@ -96,6 +96,40 @@ def test_windowing_recomputes_hashes_per_window(spark):
         assert r["content_hash"] == hashlib.sha256(r["content"].encode()).hexdigest()
 
 
+def test_windowing_empty_long_short_null(spark):
+    """Empty and short chunks pass through unchanged, a long one splits
+    into stride-14 windows of at most 16 tokens with their own hashes,
+    and a NULL-content chunk is dropped (it has no token count)."""
+    long_toks = [f"t{i}" for i in range(40)]
+    rows = [("empty", ""), ("short", "a b c"), ("long", " ".join(long_toks)), ("null", None)]
+    base = spark.createDataFrame(
+        [(f"{n}.py", "python", "function", n, n, c, None, 1, 2) for n, c in rows],
+        "origin string, language string, chunk_type string, name string, "
+        "signature string, content string, doc string, line_start int, line_end int",
+    )
+    chunks = with_identity(base)
+    by_name = {r["name"]: r for r in chunks.collect()}
+    out = apply_windowing(chunks, max_tokens=16)
+    assert out.columns == chunks.columns
+    got = out.collect()
+    assert {r["name"] for r in got} == {"empty", "short", "long"}
+    for name in ("empty", "short"):
+        assert [r for r in got if r["name"] == name] == [by_name[name]]
+    import hashlib
+
+    parent = by_name["long"]["id"]
+    windows = sorted((r for r in got if r["name"] == "long"), key=lambda r: r["window_idx"])
+    assert [(r["id"], r["parent_id"], r["window_idx"]) for r in windows] == [
+        (f"{parent}:w{i}", parent, i) for i in range(3)
+    ]
+    assert [r["content"] for r in windows] == [
+        " ".join(long_toks[s : s + 16]) for s in (0, 14, 28)
+    ]
+    for r in windows:
+        assert r["content_hash"] == hashlib.sha256(r["content"].encode()).hexdigest()
+        assert r["canonical_hash"] == r["content_hash"]  # no comments, single spaces
+
+
 def test_canonicalization_is_language_aware(spark):
     """'#' strips only in hash-comment langs; markdown headings survive;
     C-family strips '//'; whitespace-only edits never change the hash."""
@@ -165,9 +199,7 @@ def test_incremental_reconcile(spark):
     rec = {r["origin"]: r["status"] for r in reconcile(mutated, reg).collect()}
     assert rec[first] == "changed"
     assert rec[second] == "deleted"
-    to_parse, to_delete = plan_incremental(mutated, reg)
-    assert {r["origin"] for r in to_parse.collect()} == {first}
-    assert {r["origin"] for r in to_delete.collect()} == {second}
+    assert {o for o, st in rec.items() if st != "unchanged"} == {first, second}
 
 
 def test_merge_chunks_replaces_reparsed_origin(spark, chunks):

@@ -9,6 +9,7 @@ codegen spans in the executed plan.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -171,11 +172,73 @@ def test_q101_hunk_mapping_equi_join_broadcasts_hunks(spark, sf_dir):
 
 
 def test_q102_windowing_is_join_free(spark, sf_dir):
-    """Chunk windowing is one scan + explode per branch: no join, no
+    """Chunk windowing is one scan + one explode: no join, no union, no
     aggregate — the cost is a map-side projection."""
     p = _formatted(spark, "q102", sf_dir)
     assert "Join" not in p
+    assert "Union" not in p
     assert "HashAggregate" not in p
+
+
+def _n_map_in_pandas(df) -> int:
+    return df._jdf.queryExecution().sparkPlan().toString().count("MapInPandas")
+
+
+INDEX_SRC = os.path.join(os.path.dirname(__file__), "..", "cqs_spark", "index")
+
+
+def test_build_chunks_parses_once(spark):
+    """Windowing is one projection, so the parse mapInPandas appears
+    once in the physical plan, not once per windowing branch."""
+    from cqs_spark.index.ingest import build_chunks, list_files
+
+    assert _n_map_in_pandas(build_chunks(list_files(spark, INDEX_SRC))) == 1
+
+
+def test_embed_with_cache_parses_and_embeds_once(spark):
+    """With or without a cache, the embedded frame runs two Python
+    stages: the parse and one embed (cache hits pass through it)."""
+    from cqs_spark.index.ingest import build_chunks, list_files
+    from cqs_spark.index.reuse import embed_with_cache
+
+    chunks = build_chunks(list_files(spark, INDEX_SRC))
+    cache = spark.createDataFrame(
+        [("h", [0.0] * 64, "fp")],
+        "canonical_hash string, embedding array<float>, fingerprint string",
+    )
+    for c in (None, cache):
+        embedded, _ = embed_with_cache(chunks, c)
+        assert _n_map_in_pandas(embedded) == 2
+
+
+def test_refresh_parse_scan_pushes_path_filter(spark, tmp_path, monkeypatch):
+    """Refresh parses only the changed files: the parse input is the
+    listing with a ``path IN (...)`` filter pushed into the scan."""
+    import cqs_spark.engine as engine_mod
+    from cqs_spark.engine import Engine
+
+    tree = tmp_path / "tree"
+    tree.mkdir()
+    for name in ("a", "b", "c"):
+        (tree / f"{name}.py").write_text(f"def {name}():\n    return 1\n")
+    eng = Engine(spark, str(tmp_path / "idx"))
+    eng.index(str(tree))
+    for name in ("a", "b"):
+        (tree / f"{name}.py").write_text(f"def {name}():\n    return 2\n")
+    seen = []
+    real = engine_mod.build_chunks
+
+    def spy(files, *a, **kw):
+        seen.append(files)
+        return real(files, *a, **kw)
+
+    monkeypatch.setattr(engine_mod, "build_chunks", spy)
+    assert eng.refresh()["reparsed"] == 2
+    (files,) = seen
+    plan = files._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert "PushedFilters: [In(path" in plan, plan
 
 
 def test_q103_risk_targets_broadcast(spark, sf_dir):
