@@ -585,9 +585,10 @@ def main(argv: list[str] | None = None) -> int:
             media_metadata_scan,
             media_metadata_strip,
         )
+        from cqs_spark.staging import stage
 
         media = eng.spark.read.parquet(args.input)
-        scan = media_metadata_scan(media).localCheckpoint(eager=True)
+        scan = stage(media_metadata_scan(media), eager=True)
         agg = scan.agg(
             F.count(F.lit(1)).alias("total"),
             F.count(F.when(F.col("fmt").isNull(), 1)).alias("quarantined"),
@@ -625,15 +626,17 @@ def main(argv: list[str] | None = None) -> int:
                 "pii_clean": bool(r["pii_clean"]),
             }))
     elif args.cmd == "media-dedup":
+        from cqs_spark.staging import stage
+
         media = eng.spark.read.parquet(args.input)
         if args.apply:
             if args.kind != "image":
                 raise SystemExit("--apply supports --kind image only")
             from cqs_spark.operators.multimodal import media_dedup_apply
 
-            kept = media_dedup_apply(
-                media, max_hamming=args.max_hamming
-            ).localCheckpoint(eager=True)
+            kept = stage(
+                media_dedup_apply(media, max_hamming=args.max_hamming), eager=True
+            )
             kept.write.mode("overwrite").parquet(args.output)
             print(json.dumps({
                 "survivors": kept.count(), "total": media.count(),
@@ -661,7 +664,7 @@ def main(argv: list[str] | None = None) -> int:
             from cqs_spark.operators.multimodal import image_neardup
 
             pairs = image_neardup(media, max_hamming=args.max_hamming)
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = stage(pairs, eager=True)
         pairs.write.mode("overwrite").parquet(args.output)
         print(json.dumps({"pairs": pairs.count(), "kind": args.kind}))
     elif args.cmd == "media-audit":

@@ -29,6 +29,7 @@ from cqs_spark.index.reuse import (
     ri_embedding,
 )
 from cqs_spark.operators import graph, scoring
+from cqs_spark.staging import stage
 
 # Identifiers followed by "(" — the heuristic call-site extractor.
 _CALL_RE = r"([A-Za-z_][A-Za-z0-9_]*)\s*\("
@@ -172,10 +173,10 @@ class Engine:
             c for c in ("canonical_hash", "fingerprint")
             if c in shared_df.columns
         ]
-        merged = (
+        merged = stage(
             shared_df.unionByName(legacy_df.select(*shared_df.columns))
-            .dropDuplicates(key)
-            .localCheckpoint(eager=True)  # sever lineage before the swap
+            .dropDuplicates(key),
+            eager=True,  # sever lineage before the swap
         )
         tmp = shared + ".merge.tmp"
         merged.write.mode("overwrite").parquet(tmp)
@@ -359,17 +360,16 @@ class Engine:
             F.col("name").isNotNull()
         )
         targets = changed.select(F.col("name").alias("node")).distinct()
-        pairs = test_map(
-            edges,
-            test_seeds_from_chunks(chunks),
-            max_depth=5,
-            return_pairs=True,
-        ).localCheckpoint(eager=True)
+        tseeds = test_seeds_from_chunks(chunks)
+        pairs = stage(
+            test_map(edges, tseeds, max_depth=5, return_pairs=True), eager=True
+        )
         reach = pairs.groupBy("node").agg(
             F.countDistinct("test").alias("n_tests")
         )
-        risk = risk_scores(edges, targets, reach=reach).localCheckpoint(
-            eager=True  # consumed by the join below AND the counts fold
+        risk = stage(
+            risk_scores(edges, targets, reach=reach),
+            eager=True,  # consumed by the join below AND the counts fold
         )
         changed_functions = (
             changed.select("id", "name", "origin")
@@ -474,7 +474,7 @@ class Engine:
             # surface only when the caller collects — mid-way through
             # printing the payload.  The stale set is commit-sized;
             # eager checkpoint keeps the returned DF cheap to re-read.
-            stale_warning = stale_warning.localCheckpoint(eager=True)
+            stale_warning = stage(stale_warning, eager=True)
         except (PySparkException, Py4JJavaError, OSError) as exc:
             # Narrow on the environmental failures (no registry table,
             # moved/deleted index root — these surface as Spark/JVM or
@@ -987,17 +987,15 @@ class Engine:
 
         chunks, edges = self.chunks(), self.edges()
 
-        pairs = test_map(
-            edges,
-            test_seeds_from_chunks(chunks),
-            max_depth=5,
-            return_pairs=True,
-        ).localCheckpoint(eager=True)
+        tseeds = test_seeds_from_chunks(chunks)
+        pairs = stage(
+            test_map(edges, tseeds, max_depth=5, return_pairs=True), eager=True
+        )
         reach = pairs.groupBy("node").agg(
             F.countDistinct("test").alias("n_tests")
         )
 
-        hits = self.search(query, k=limit * 5).localCheckpoint(eager=True)
+        hits = stage(self.search(query, k=limit * 5), eager=True)
         pool = hits.limit(limit)
 
         indeg = (
@@ -1081,18 +1079,16 @@ class Engine:
             # leg would compute twice (the exact double-work this verb
             # exists to avoid).  Both are bounded: |targets| risk rows,
             # |covering tests| test rows.
-            risk = risk_scores(edges, targets_df, reach=reach).localCheckpoint(
-                eager=True
-            )
-            tests = (
+            risk = stage(risk_scores(edges, targets_df, reach=reach), eager=True)
+            tests = stage(
                 pairs.join(F.broadcast(targets_df), "node")
                 .groupBy("test")
                 .agg(
                     F.sort_array(F.collect_set("node")).alias("covered"),
                     F.countDistinct("node").alias("n_covered"),
                 )
-                .orderBy(F.desc("n_covered"), "test")
-                .localCheckpoint(eager=True)
+                .orderBy(F.desc("n_covered"), "test"),
+                eager=True,
             )
         else:
             code = self.spark.createDataFrame(
@@ -1156,9 +1152,9 @@ class Engine:
             propose_patches,
         )
 
-        edits = generate_docs(
-            self.chunks(), self.edges(), limit=limit
-        ).localCheckpoint(eager=True)
+        edits = stage(
+            generate_docs(self.chunks(), self.edges(), limit=limit), eager=True
+        )
         origins = [
             r["origin"] for r in edits.select("origin").distinct().collect()
         ]
@@ -1370,7 +1366,7 @@ class Engine:
         # eager checkpoint, then overwrite the metastore table
         # (saveAsTable refuses a live self-read).
         if self.layout == "bucketed":
-            self._write_table(merged.localCheckpoint(eager=True), "chunks")
+            self._write_table(stage(merged, eager=True), "chunks")
         else:
             tmp = self._path("chunks") + ".new"
             merged.write.mode("overwrite").parquet(tmp)

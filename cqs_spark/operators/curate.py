@@ -37,6 +37,7 @@ from cqs_spark.operators.textops import (
     quality_features,
     repetition_stats,
 )
+from cqs_spark.staging import stage
 
 
 def gate_flags(
@@ -172,13 +173,15 @@ def dataset_card(
     # table and the audit's dedup legs both reuse the materialized
     # cluster/hash frames (the labels=/hashes= contract).
     pairs = minhash_dedup(docs, id_col, text_col).filter(F.col("jac") >= 0.8)
-    labels = label_propagation(
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        converge=True,
-    ).localCheckpoint(eager=False)
-    hashes = docs.select(
-        F.col(id_col), canonical_text_hash(F.col(text_col)).alias("h")
-    ).localCheckpoint(eager=False)
+    labels = stage(
+        label_propagation(
+            pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
+            converge=True,
+        )
+    )
+    hashes = stage(
+        docs.select(F.col(id_col), canonical_text_hash(F.col(text_col)).alias("h"))
+    )
 
     lines = [f"# Dataset card: {name}", ""]
     tot = docs.agg(
@@ -713,7 +716,7 @@ def curate(
         # count, the scrubber, AND the join-back — materialized once
         # (BY the count right below — lazy, so the count and the
         # checkpoint share one job) with no unpersist bookkeeping.
-        pre = out.localCheckpoint(eager=False)
+        pre = stage(out)
         report["after_near_dedup"] = pre.count()
         if scrub_pii:
             # Redaction must see RAW text: the scrubbers reassemble

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from cqs_spark.functions.text import word_shingles_arr, words
+from cqs_spark.staging import stage
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -206,7 +207,7 @@ def lsh_candidates(
         # The banded set now has 4 consumers (oversized agg, star join,
         # anti-join, self-join); materialize it once instead of
         # re-running the signature explode per consumer.
-        banded = banded.localCheckpoint(eager=False)
+        banded = stage(banded)
         oversized = (
             banded.groupBy("band", "sig")
             .agg(F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_hub"))
@@ -284,62 +285,25 @@ def jaccard_verify(sh: DataFrame, id_col: str, cand: DataFrame) -> DataFrame:
     )
 
 
-def _is_staged(df: DataFrame) -> bool:
-    """True when the frame is already a materialized staging point (a
-    ``localCheckpoint`` LogicalRDD root) — re-checkpointing one would
-    copy the blocks and spend an extra job for nothing."""
-    try:
-        return (
-            df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD"
-        )
-    except Exception:
-        return False
-
-
-def stage_table(df: DataFrame, path: str) -> DataFrame:
-    """Write ``df`` to parquet at ``path`` and read it back — real table
-    staging for multi-consumer intermediates.  On a cluster this is the
-    correct form: ``localCheckpoint`` pins blocks to executors (lost on
-    executor churn, invisible to other jobs), while a staged table is
-    durable, restartable, and lets each consumer scan with its own
-    pushed filters."""
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
     num_hashes: int = 8,
-    materialize: bool = True,
-    materialize_to: str | None = None,
 ) -> DataFrame:
     """MinHash → LSH bands → candidate pairs → exact-Jaccard verify.
 
     The shingle set feeds the signature pass AND the verify pass (3
-    consumers); without materialization Catalyst replicates the
+    consumers); without staging Catalyst replicates the
     tokenize+explode+distinct subtree into every branch (measured: 12
-    scans, 0 reused exchanges).  ``localCheckpoint`` computes it once
-    and truncates the lineage; pass ``materialize_to=<dir>`` to stage
-    the shingle set as a real parquet table instead — the 100 TB
-    deployment form (durable across executor churn; see stage_table).
+    scans, 0 reused exchanges).  Staging computes it once and
+    truncates the lineage.
     """
-    sh = shingles(df, id_col, text_col, shingle_n)
-    if materialize_to is not None:
-        import os
-
-        sh = stage_table(sh, os.path.join(materialize_to, "shingles"))
-    elif materialize:
-        # EAGER on purpose: the shingle set has multiple consumers
-        # inside ONE action (signatures + both verify joins), and a
-        # lazily-marked RDD offers no single-computation guarantee to
-        # CONCURRENT stages — each can race to compute unpersisted
-        # partitions (measured on q77/q160's ladders: 2-5x slower
-        # lazy).  Eager materializes once, before any consumer runs.
-        sh = sh.localCheckpoint(eager=True)
+    # EAGER on purpose: the shingle set has multiple consumers inside
+    # ONE action (signatures + both verify joins) that run as racing
+    # stages (measured on q77/q160's ladders: 2-5x slower lazy).
+    sh = stage(shingles(df, id_col, text_col, shingle_n), eager=True)
     sigs = minhash_signatures(sh, id_col, num_hashes)
     cand = lsh_candidates(sigs, id_col)
     return jaccard_verify(sh, id_col, cand)
@@ -367,9 +331,7 @@ def containment_pairs(
     corpus shapes plain banding recalls the quoted-block cases).
     """
     # Eager: multi-consumer within one action (see minhash_dedup).
-    sh = shingles(df, id_col, text_col, shingle_n).localCheckpoint(
-        eager=True
-    )
+    sh = stage(shingles(df, id_col, text_col, shingle_n), eager=True)
     sigs = minhash_signatures(sh, id_col, num_hashes)
     cand = lsh_candidates(sigs, id_col)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
@@ -556,8 +518,7 @@ def simhash_neardup(
     bit op on the joined pair — the shingle table is never re-touched.
     """
     sig = simhash(df, id_col, text_col, bits=bits)
-    banded = _simhash_bands(sig, id_col, bits, max_hamming)
-    cand = _simhash_band_pairs(banded, id_col, max_bucket)
+    cand = _simhash_sig_pairs(sig, id_col, bits, max_hamming, max_bucket)
     ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
     return (
         cand.distinct()
@@ -566,20 +527,30 @@ def simhash_neardup(
     )
 
 
+def _simhash_sig_pairs(
+    sig: DataFrame, id_col: str, bits: int, max_hamming: int,
+    max_bucket: int | None,
+) -> DataFrame:
+    """:func:`_simhash_band_pairs` over the bands of a signature frame.
+    With a cap the bands are staged EAGERLY: the capped join reads them
+    4 times in one action (oversized agg, star join, anti-join,
+    self-join)."""
+    banded = _simhash_bands(sig, id_col, bits, max_hamming)
+    if max_bucket is not None:
+        banded = stage(banded, eager=True)
+    return _simhash_band_pairs(banded, id_col, max_bucket)
+
+
 def _simhash_band_pairs(
     banded: DataFrame, id_col: str, max_bucket: int | None
 ) -> DataFrame:
     """Candidate pairs (a, b, _sa, _sb) from a banded signature frame
     via the per-band bucket self-join, with the star-reduce cap on
     oversized buckets — the shared core of simhash_neardup and the
-    within-batch leg of incremental_simhash."""
+    within-batch leg of incremental_simhash.  With a cap the caller
+    stages the frame eagerly first (see :func:`_simhash_sig_pairs`)."""
     star = None
     if max_bucket is not None:
-        if not _is_staged(banded):
-            # Eager: 4 consumers in one action (oversized agg, star
-            # join, anti-join, self-join).  Skipped when the caller
-            # already staged the frame (incremental paths).
-            banded = banded.localCheckpoint(eager=True)
         oversized = (
             banded.groupBy("band", "val")
             .agg(
@@ -678,8 +649,8 @@ def incremental_sig_neardup(
     to their min-id hub.  Returns (a, b, hamming), a < b, hamming <=
     ``max_hamming``.  Batch ids must be disjoint from indexed ids.
     """
-    banded_b = _simhash_bands(sig_batch, id_col, bits, max_hamming).localCheckpoint(
-        eager=True
+    banded_b = stage(
+        _simhash_bands(sig_batch, id_col, bits, max_hamming), eager=True
     )
     banded_i = _simhash_bands(indexed_sigs, id_col, bits, max_hamming)
 
@@ -787,9 +758,10 @@ def token_jaccard_pairs(
     # consumers (sizes + both sides of the self-join).  EAGER: the
     # three consumers are concurrent stages of ONE action — the
     # topology minhash_dedup documents as racy under a lazy mark.
-    toks = df.select(
-        *cols, F.explode(F.array_distinct(terms(text_col))).alias("t")
-    ).localCheckpoint(eager=True)
+    toks = stage(
+        df.select(*cols, F.explode(F.array_distinct(terms(text_col))).alias("t")),
+        eager=True,
+    )
     sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     join_keys = ["t"] + ([group_col] if group_col else [])
     a = toks.select(*[F.col(c).alias(f"{c}_a") for c in [id_col]], *join_keys)
@@ -956,7 +928,7 @@ def semantic_dedup(
     # The assignment pass (corpus × centroids argmax) feeds BOTH sides
     # of the pair join AND the output rows; checkpoint it once so the
     # plan materializes one assignment instead of three.
-    t = v.join(assign, "id").localCheckpoint(eager=False)
+    t = stage(v.join(assign, "id"))
     assign = t.select("id", "centroid_id")
     a = t.select(
         F.col("id").alias("a_id"), F.col("v").alias("a_v"),
@@ -1018,7 +990,7 @@ def semantic_leakage(
         F.col(source_col).alias("src"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("nrm", F.sqrt(dot("v", "v")))
-    t = v.join(assign, "id").localCheckpoint(eager=False)
+    t = stage(v.join(assign, "id"))
     a = t.select(
         F.col("id").alias("a_id"), F.col("src").alias("a_src"),
         F.col("v").alias("a_v"), F.col("nrm").alias("a_nrm"),
@@ -1201,13 +1173,12 @@ def build_lsh_index(
     shingle_n: int = 3,
     num_hashes: int = 8,
     max_bucket: int | None = 500,
-    materialize_to: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the persisted LSH-index state for incremental near-dedup:
     (shingle table, banded signature table, oversized-bucket hub table).
 
     At 100 TB the index is built ONCE per corpus and staged as parquet
-    (pass ``materialize_to``); every day's arrivals then run
+    (``cqs_spark.staging.durable``); every day's arrivals then run
     ``incremental_minhash`` against the staged tables — the steady
     state never re-shingles the world.  The hub table (buckets with
     more than ``max_bucket`` members, with their min-id hub) is
@@ -1222,35 +1193,16 @@ def build_lsh_index(
     # candidate probe — and the shingle table feeds both sides of the
     # verify join): without staging, each consumer re-runs the whole
     # shingle→sign→band lineage (measured on q132: 13.8 s → 9.8 s
-    # after staging, identical rows).  ``materialize_to`` stages to
-    # parquet (the durable 100 TB form); the in-memory form is a lazy
-    # ``localCheckpoint`` — lineage truncation without an extra job,
-    # computed inside the caller's first action.
-    if materialize_to is not None:
-        import os
-
-    sh = shingles(df, id_col, text_col, shingle_n)
-    sh = (
-        stage_table(sh, os.path.join(materialize_to, "shingles"))
-        if materialize_to is not None
-        else sh.localCheckpoint(eager=False)
+    # after staging, identical rows).
+    sh = stage(shingles(df, id_col, text_col, shingle_n))
+    bands = stage(
+        band_signatures(minhash_signatures(sh, id_col, num_hashes), id_col)
     )
-    bands = band_signatures(minhash_signatures(sh, id_col, num_hashes), id_col)
-    bands = (
-        stage_table(bands, os.path.join(materialize_to, "bands"))
-        if materialize_to is not None
-        else bands.localCheckpoint(eager=False)
-    )
-    hubs = (
+    hubs = stage(
         bands.groupBy("band", "sig")
         .agg(F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_hub"))
         .filter(F.col("_n") > (max_bucket if max_bucket is not None else 2**62))
         .select("band", "sig", "_hub")
-    )
-    hubs = (
-        stage_table(hubs, os.path.join(materialize_to, "hubs"))
-        if materialize_to is not None
-        else hubs.localCheckpoint(eager=False)
     )
     return sh, bands, hubs
 
@@ -1290,13 +1242,11 @@ def incremental_minhash(
     must be disjoint from indexed ids.  Oracle-gated as q132.
     """
     # Eager: multi-consumer within one action (see minhash_dedup).
-    sh_b = shingles(batch, id_col, text_col, shingle_n).localCheckpoint(
-        eager=True
-    )
+    sh_b = stage(shingles(batch, id_col, text_col, shingle_n), eager=True)
     sigs_b = minhash_signatures(sh_b, id_col, num_hashes)
     within = lsh_candidates(sigs_b, id_col, max_bucket=max_bucket)
 
-    bands_b = band_signatures(sigs_b, id_col).localCheckpoint(eager=False)
+    bands_b = stage(band_signatures(sigs_b, id_col))
     idx = indexed_bands
     star = None
     if max_bucket is not None:
@@ -1337,7 +1287,7 @@ def incremental_minhash(
     pairs = within.unionByName(cross)
     if star is not None:
         pairs = pairs.unionByName(star)
-    pairs = pairs.distinct().localCheckpoint(eager=False)
+    pairs = stage(pairs.distinct())
     touched = pairs.select(
         F.explode(F.array("a", "b")).alias(id_col)
     ).distinct()
@@ -1352,13 +1302,12 @@ def build_semantic_index(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    materialize_to: str | None = None,
 ) -> DataFrame:
     """Persisted assignment state for incremental semantic dedup:
     (id, centroid_id, v, nrm) — the indexed corpus with its centroid
-    assignment and precomputed norm, built once per index and staged
-    as parquet (partitionable by centroid_id, so the daily batch pass
-    scans only the clusters its arrivals land in)."""
+    assignment and precomputed norm, built once per index and persisted
+    by the caller as parquet (partitionable by centroid_id, so the daily
+    batch pass scans only the clusters its arrivals land in)."""
     from cqs_spark.functions.vector import dot
     from cqs_spark.operators.vectorops import ivf_assign
 
@@ -1366,12 +1315,7 @@ def build_semantic_index(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("nrm", F.sqrt(dot("v", "v")))
-    t = v.join(ivf_assign(emb, centroids, id_col, vec_col), "id")
-    if materialize_to is not None:
-        import os
-
-        t = stage_table(t, os.path.join(materialize_to, "semantic_index"))
-    return t
+    return v.join(ivf_assign(emb, centroids, id_col, vec_col), "id")
 
 
 def incremental_semantic(
@@ -1406,9 +1350,7 @@ def incremental_semantic(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).withColumn("nrm", F.sqrt(dot("v", "v")))
-    bt = bv.join(
-        ivf_assign(batch, centroids, id_col, vec_col), "id"
-    ).localCheckpoint(eager=False)
+    bt = stage(bv.join(ivf_assign(batch, centroids, id_col, vec_col), "id"))
 
     lower = indexed.select(
         F.col("id").alias("a_id"), F.col("v").alias("a_v"),

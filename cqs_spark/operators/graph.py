@@ -26,77 +26,24 @@ Scale design (100 TB):
     capped (reference caps at 5-10), so the loop is bounded.
   - Visited-set dedup per hop keeps the frontier minimal — without it
     dense graphs re-expand exponentially.
-  - For deep traversals the logical plan grows per hop;
-    frontiers are cached per hop so multi-consumer reuse never
-    recomputes prior hops (the reference's 10k-node ceiling analogue).
+  - For deep traversals the logical plan grows per hop; frontiers are
+    staged per hop (cqs_spark.staging, lazy) so multi-consumer reuse
+    never recomputes prior hops (the reference's 10k-node ceiling
+    analogue).  Staging, not ``cache()``: a cached frame keeps its full
+    lineage, so a depth-5 traversal's final plan carried ~536 Exchange
+    nodes and Catalyst re-analysis alone cost seconds per query
+    (q103: 30.1 s → 5.0 s total after the switch, identical rows);
+    a stage truncates the lineage to one leaf per hop, and the
+    ContextCleaner frees its blocks when the result is dropped.
 """
 
 from __future__ import annotations
 
-import itertools
-import os
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window, functions as F
 
+from cqs_spark.staging import stage
+
 TRUSTED_KINDS_DEFAULT = ("call",)
-
-# Opt-in durable staging (see durable_staging): when set, every
-# traversal staging point routes through dedup.stage_table under this
-# directory instead of pinning unreplicated localCheckpoint blocks.
-_DURABLE_STAGE: dict = {"dir": None, "seq": None}
-
-
-@contextmanager
-def durable_staging(stage_dir: str):
-    """Route every traversal staging point (``_stage``) through
-    ``dedup.stage_table`` under ``stage_dir`` for the duration of the
-    block — the durable 100 TB deployment form.
-
-    ``localCheckpoint`` blocks are unreplicated and die with their
-    executor, with no recompute path once the lineage is truncated;
-    that is acceptable on a single-box harness but not for a long
-    traversal on a real cluster.  Inside this context each staging
-    point writes a parquet table (restartable, visible to other jobs,
-    scan-prunable per consumer) and reads it back.  Default behavior —
-    outside the context — is unchanged.
-    """
-    if _DURABLE_STAGE["dir"] is not None:
-        raise RuntimeError("durable_staging contexts do not nest")
-    _DURABLE_STAGE["dir"] = stage_dir
-    _DURABLE_STAGE["seq"] = itertools.count()
-    try:
-        yield
-    finally:
-        _DURABLE_STAGE["dir"] = None
-        _DURABLE_STAGE["seq"] = None
-
-
-def _stage(df: DataFrame) -> DataFrame:
-    """Stage multi-consumer traversal state: lazy ``localCheckpoint``.
-
-    Replaces the previous hop-``cache()`` + generation-release design
-    (r12 optimization round, guide §1/§3.3).  ``cache()`` keeps the
-    full logical lineage alive: every hop's plan embeds every prior
-    hop's subtree, so a depth-5 traversal's final plan carried ~536
-    Exchange nodes and Catalyst re-analysis alone cost seconds per
-    query (measured on q103: 30.1 s → 5.0 s total after this change,
-    identical rows).  A lazy ``localCheckpoint`` truncates the lineage
-    to a LogicalRDD at each hop — plans stay O(1) per hop, the blocks
-    materialize inside the caller's single action exactly like cache
-    blocks did, and the ContextCleaner frees them when the result
-    DataFrame is dropped (no manual generation bookkeeping).  On a
-    cluster the same call pins blocks to executors; the durable form
-    for 100 TB deployments is staging frontiers as tables —
-    opt in with :func:`durable_staging`."""
-    if _DURABLE_STAGE["dir"] is not None:
-        from cqs_spark.operators.dedup import stage_table
-
-        idx = next(_DURABLE_STAGE["seq"])
-        return stage_table(
-            df, os.path.join(_DURABLE_STAGE["dir"], f"stage_{idx:04d}")
-        )
-    return df.localCheckpoint(eager=False)
 
 
 def _nodes(edges: DataFrame) -> DataFrame:
@@ -125,15 +72,15 @@ def bfs(
     """
     here, there = ("dst", "src") if reverse else ("src", "dst")
     # The edge set is joined once per hop; staging it first means each
-    # hop's plan references one LogicalRDD instead of re-embedding the
-    # caller's whole edge-derivation lineage (see _stage).
-    edges = _stage(edges.select("src", "dst"))
+    # hop's plan references one leaf instead of re-embedding the
+    # caller's whole edge-derivation lineage.
+    edges = stage(edges.select("src", "dst"))
     frontier = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     # Each hop's frontier has THREE consumers (next hop's join, the
     # visited anti-join, the final union); an unstaged lineage would
     # recompute all prior hops per consumer — quadratic work growth
-    # with depth (see _stage for why localCheckpoint, not cache).
-    frontier = _stage(frontier)
+    # with depth (see the module docstring for why staged, not cached).
+    frontier = stage(frontier)
     visited = frontier
     reached = frontier.withColumn("depth", F.lit(0))
     for depth in range(1, max_depth + 1):
@@ -149,7 +96,7 @@ def bfs(
             # via the min-depth agg, but the work grows sharply with
             # depth).  The LAST hop skips it — its frontier is never
             # expanded again and the final aggregate dedups it for free.
-            frontier = _stage(frontier.join(visited, "node", "left_anti"))
+            frontier = stage(frontier.join(visited, "node", "left_anti"))
             visited = visited.unionByName(frontier)
         reached = reached.unionByName(frontier.withColumn("depth", F.lit(depth)))
     return reached.groupBy("node").agg(
@@ -229,8 +176,8 @@ def test_map(
     review's affected-tests leg needs WHICH tests cover a function, not
     just how many (src/review.rs DiffTestInfo).
     """
-    edges = _stage(edges.select("src", "dst"))
-    frontier = _stage(
+    edges = stage(edges.select("src", "dst"))
+    frontier = stage(
         test_seeds.select(F.col(test_seeds.columns[0]).alias("test"))
         .distinct()
         .withColumn("node", F.col("test"))
@@ -246,7 +193,7 @@ def test_map(
             # Per-(test, node) visited-set dedup — same frontier hygiene
             # (and the same per-hop staging + last-hop skip) as bfs();
             # the final countDistinct absorbs last-hop duplicates.
-            frontier = _stage(
+            frontier = stage(
                 frontier.join(reached, ["test", "node"], "left_anti")
             )
         reached = reached.unionByName(frontier)
@@ -271,8 +218,8 @@ def gather_scores(
     capped to ``limit`` rows by (score desc, node) — the gather shape
     (src/gather.rs:532: seed search → BFS expand → dedup → cap 200).
     """
-    edges = _stage(edges.select("src", "dst"))
-    frontier = _stage(
+    edges = stage(edges.select("src", "dst"))
+    frontier = stage(
         seeds.select(
             F.col(seeds.columns[0]).alias("node"),
             F.col(score_col).alias("score"),
@@ -280,7 +227,7 @@ def gather_scores(
     )
     reached = frontier
     for _ in range(max_depth):
-        frontier = _stage(
+        frontier = stage(
             frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"), (F.col("score") * decay).alias("score"))
             .groupBy("node")
@@ -319,7 +266,7 @@ def label_propagation(
       label-tables count (a shuffle per round), and two propagation
       steps run per check (an extra no-op step past the fixpoint is
       cheaper than doubling the check cadence).  Each round is
-      localCheckpointed so lineage stays flat.  Min-label diameter
+      staged so lineage stays flat.  Min-label diameter
       halves are not implemented (large-star/small-star) — worst case
       steps = graph diameter, which ``max_iters`` bounds; near-dup
       clusters are shallow in practice.  A chain whose diameter
@@ -333,8 +280,8 @@ def label_propagation(
     # Stage the edge set FIRST: ``edges`` often arrives with an
     # expensive lineage (q72/q182: the whole MinHash/perceptual pair
     # ladder), and und + nodes + labels would each re-execute it —
-    # staging computes it once (see _stage).
-    edges = _stage(edges.select("src", "dst"))
+    # staging computes it once.
+    edges = stage(edges.select("src", "dst"))
     nodes = _nodes(edges)
     # Self-loops fold the "keep own label" term into the neighbor-min
     # aggregate: min over (neighbors ∪ self) == least(own, neighbor min).
@@ -342,7 +289,7 @@ def label_propagation(
     # left join back to the previous labels (halves the shuffles).
     # Staged for both modes: every iteration joins it (3 consumers in
     # iters mode, 2·steps in converge mode).
-    und = _stage(
+    und = stage(
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .unionByName(nodes.select(F.col("node").alias("src"), F.col("node").alias("dst")))
@@ -361,7 +308,7 @@ def label_propagation(
         for i in range(iters):
             labels = step(labels)
             if i < iters - 1:
-                labels = _stage(labels)
+                labels = stage(labels)
         return labels
 
     from pyspark.sql.types import NumericType
@@ -375,11 +322,11 @@ def label_propagation(
     # shallow-diameter graphs (the near-dup norm) the per-job fixed cost
     # IS the query's cost (q89: 42 jobs ≈ 5 s at sf0.1, almost all
     # scheduling floor).
-    labels = _stage(labels)
+    labels = stage(labels)
     prev_sum = None
     done = False
     for _ in range(0, max_iters, 2):
-        new = _stage(step(step(labels)))
+        new = stage(step(step(labels)))
         if numeric:
             # decimal(38,0) sum: 64-bit hash-derived labels can overflow a
             # long sum (ANSI abort / silent wrap); decimal is exact here.
@@ -420,12 +367,12 @@ def trace(
     hop-2 frontier can be O(|V|)).  Min parent per node for determinism;
     first-seen depth wins via anti-join.  Only after dst appears does the
     driver reconstruct the path, one parent lookup per hop — at most
-    max_depth single-row fetches against the checkpointed visited table.
+    max_depth single-row fetches against the staged visited table.
     """
     if src == dst:
         return [src]
     spark = edges.sparkSession
-    edges = _stage(edges.select("src", "dst"))
+    edges = stage(edges.select("src", "dst"))
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     ntype = edges.schema["src"].dataType
@@ -451,14 +398,14 @@ def trace(
         # checkpoint would spend a SECOND job per hop on the same
         # blocks (likewise `visited`, which the next hop's anti-join
         # materializes).
-        fresh = _stage(step.join(visited, "node", "left_anti"))
+        fresh = stage(step.join(visited, "node", "left_anti"))
         stats = fresh.agg(
             F.count(F.lit(1)).alias("n"),
             F.max((F.col("node") == F.lit(dst)).cast("int")).alias("hit"),
         ).first()
         if stats["n"] == 0:
             return None
-        visited = _stage(visited.unionByName(fresh))
+        visited = stage(visited.unionByName(fresh))
         if stats["hit"] == 1:
             found = True
             break
@@ -507,9 +454,7 @@ def impact(
     )
 
 
-def triangle_count(
-    edges: DataFrame, materialize_to: str | None = None
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation: (node, n_triangles).
 
     Canonical degree-ordered enumeration (the standard distributed
@@ -520,34 +465,18 @@ def triangle_count(
     join fan-out by the graph's arboricity rather than the max degree
     — the mega-hub whose D^2 wedge explosion kills the naive join
     contributes only its forward wedges.
-
-    ``materialize_to=<dir>`` stages the two multi-consumer
-    intermediates (undirected edges, oriented edges) as parquet tables
-    instead of executor-local cache — the cluster-deployment form
-    (durable across executor churn; see dedup.stage_table).
     """
-
-    def _stage_named(df: DataFrame, name: str) -> DataFrame:
-        if materialize_to is not None:
-            import os
-
-            from cqs_spark.operators.dedup import stage_table
-
-            return stage_table(df, os.path.join(materialize_to, name))
-        return _stage(df)
-
     # und feeds two consumers (degrees + rank attachment) and fwd four
-    # (both wedge legs + both closing-edge directions): stage them (or
-    # a real table) or the edge-derivation lineage re-executes per
-    # consumer (measured ~5x cost).
-    und = _stage_named(
+    # (both wedge legs + both closing-edge directions): stage them or
+    # the edge-derivation lineage re-executes per consumer (measured
+    # ~5x cost).
+    und = stage(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct(),
-        "und",
+        .distinct()
     )
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
@@ -564,12 +493,11 @@ def triangle_count(
             "dst",
         )
     )
-    fwd = _stage_named(
+    fwd = stage(
         ranked.filter(
             (F.col("sdeg") < F.col("ddeg"))
             | ((F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst")))
-        ).select("src", "dst"),
-        "fwd",
+        ).select("src", "dst")
     )
     a = fwd.select(F.col("src").alias("apex"), F.col("dst").alias("b"))
     b = fwd.select(F.col("src").alias("apex"), F.col("dst").alias("c"))
@@ -608,12 +536,12 @@ def pagerank(
     """
     # e feeds every iteration's contribution join and nodes every
     # iteration's reassembly; stage both (and the edge set they derive
-    # from) so the per-iteration plans stay O(1) — see _stage.
-    edges = _stage(edges.select("src", "dst"))
-    nodes = _stage(_nodes(edges))
+    # from) so the per-iteration plans stay O(1).
+    edges = stage(edges.select("src", "dst"))
+    nodes = stage(_nodes(edges))
     n = nodes.count()
-    e = _stage(edges.distinct())
-    outdeg = _stage(
+    e = stage(edges.distinct())
+    outdeg = stage(
         e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("outdeg")
         )
@@ -652,7 +580,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        ranks = _stage(ranks)
+        ranks = stage(ranks)
     return ranks
 
 
@@ -682,8 +610,8 @@ def explain_symbols(
     Oracle-gated as q131.
     """
     # Three consumers of the edge set (callers, callees, the reverse
-    # BFS) — stage it once (see _stage).
-    edges = _stage(edges.select("src", "dst"))
+    # BFS) — stage it once.
+    edges = stage(edges.select("src", "dst"))
     nm = names.select(F.col(names.columns[0]).alias("name")).distinct()
     callers = (
         edges.join(F.broadcast(nm), edges.dst == F.col("name"))

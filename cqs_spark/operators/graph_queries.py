@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cqs_spark.catalog import load_table
 from cqs_spark.operators import graph
+from cqs_spark.staging import stage
 
 
 def _r4(c):
@@ -193,14 +194,13 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and callee legs inside enrich_with_call_context): stage the
     # derived edge set once instead of re-running union+distinct per
     # consumer.
-    edges = (
+    edges = stage(
         e0.unionByName(hub)
         .select(
             F.concat(F.lit("fn_"), F.col("src").cast("string")).alias("src"),
             F.concat(F.lit("fn_"), F.col("dst").cast("string")).alias("dst"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
     nodes = (
         edges.select(F.col("src").alias("name"))

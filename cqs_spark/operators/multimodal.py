@@ -25,6 +25,8 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from cqs_spark.staging import stage
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -866,15 +868,14 @@ def image_neardup(
     q145's: the banding explodes the per-image SIGNATURE table, never
     the pixels, and oversized buckets star-reduce.
     """
-    from cqs_spark.operators.dedup import _simhash_band_pairs, _simhash_bands
+    from cqs_spark.operators.dedup import _simhash_sig_pairs
 
     sig = (
         phash_images(media, id_col, data_col)
         .filter(F.col(method).isNotNull())
         .select(F.col("media_id").alias(id_col), F.col(method).alias("simhash"))
     )
-    banded = _simhash_bands(sig, id_col, 64, max_hamming)
-    cand = _simhash_band_pairs(banded, id_col, max_bucket)
+    cand = _simhash_sig_pairs(sig, id_col, 64, max_hamming, max_bucket)
     ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
     return (
         cand.distinct()
@@ -1029,15 +1030,14 @@ def audio_neardup(
     delta-sign fingerprint — amplitude-rescaled copies of a clip pair
     at distance ~0.  Same pigeonhole band join as image_neardup, on a
     ``frames-1``-bit signature."""
-    from cqs_spark.operators.dedup import _simhash_band_pairs, _simhash_bands
+    from cqs_spark.operators.dedup import _simhash_sig_pairs
 
     sig = (
         audio_fingerprints(media, id_col, data_col, frames)
         .filter(F.col("afp").isNotNull())
         .select(F.col("media_id").alias(id_col), F.col("afp").alias("simhash"))
     )
-    banded = _simhash_bands(sig, id_col, frames - 1, max_hamming)
-    cand = _simhash_band_pairs(banded, id_col, max_bucket)
+    cand = _simhash_sig_pairs(sig, id_col, frames - 1, max_hamming, max_bucket)
     ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
     return (
         cand.distinct()
@@ -1192,7 +1192,7 @@ def audio_neardup_windowed(
         .distinct()
     )
     if max_df is not None:
-        fp = fp.localCheckpoint(eager=True)
+        fp = stage(fp, eager=True)
         common = (
             fp.groupBy("afp")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -1650,7 +1650,7 @@ def video_neardup(
         .distinct()
     )
     if max_df is not None:
-        fp = fp.localCheckpoint(eager=True)
+        fp = stage(fp, eager=True)
         common = (
             fp.groupBy("dhash")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -1701,7 +1701,7 @@ def frame_containment(
         .select(F.col("media_id").alias("video_id"), "frame", "dhash")
     )
     if max_df is not None:
-        vid = vid.localCheckpoint(eager=True)
+        vid = stage(vid, eager=True)
         common = (
             vid.select("video_id", "dhash")
             .distinct()
@@ -1827,16 +1827,17 @@ def incremental_video_neardup(
     for the join and the index staging.
     """
     if batch_sigs is not None:
-        fp_b = batch_sigs.select(
-            F.col(id_col), F.col("simhash").alias("dhash")
-        ).localCheckpoint(eager=True)
+        fp_b = stage(
+            batch_sigs.select(F.col(id_col), F.col("simhash").alias("dhash")),
+            eager=True,
+        )
     else:
-        fp_b = (
+        fp_b = stage(
             video_fingerprints(batch, id_col, data_col, frame_step)
             .filter(F.col("dhash").isNotNull())
             .select(F.col("media_id").alias(id_col), "dhash")
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
     fp_i = indexed_sigs.select(F.col(id_col), F.col("simhash").alias("dhash"))
     return _incremental_set_neardup(fp_b, fp_i, id_col, min_shared, max_df)
@@ -1912,16 +1913,17 @@ def incremental_audio_neardup_windowed(
     Batch ids must be disjoint from indexed ids.  Pass ``batch_sigs``
     to reuse one signature pass (the streaming path)."""
     if batch_sigs is not None:
-        fp_b = batch_sigs.select(
-            F.col(id_col), F.col("simhash").alias("dhash")
-        ).localCheckpoint(eager=True)
+        fp_b = stage(
+            batch_sigs.select(F.col(id_col), F.col("simhash").alias("dhash")),
+            eager=True,
+        )
     else:
-        fp_b = (
+        fp_b = stage(
             audio_window_fingerprints(batch, id_col, data_col, window, frames)
             .filter(F.col("afp").isNotNull())
             .select(F.col("media_id").alias(id_col), F.col("afp").alias("dhash"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            eager=True,
         )
     fp_i = indexed_sigs.select(F.col(id_col), F.col("simhash").alias("dhash"))
     return _incremental_set_neardup(fp_b, fp_i, id_col, min_shared, max_df)
@@ -2035,7 +2037,7 @@ def media_audit(
         raise ValueError(
             f"media_audit supports kind in ('image', 'audio'), got {kind!r}"
         )
-    from cqs_spark.operators.dedup import _simhash_band_pairs, _simhash_bands
+    from cqs_spark.operators.dedup import _simhash_sig_pairs
 
     # ONE fused Arrow walk computes signature + metadata flags per blob
     # (previously: a media_signatures walk AND a media_metadata_scan
@@ -2044,16 +2046,15 @@ def media_audit(
     # The per-blob kernels are the SAME functions the individually
     # gated operators run (_phash_blob/_afp_blob, scan_media_metadata),
     # so the audit's numbers cannot drift from q165/q178's operators.
-    feats = _audit_features(
-        media, id_col, data_col, kind, method, frames
-    ).localCheckpoint(eager=True)
+    feats = stage(
+        _audit_features(media, id_col, data_col, kind, method, frames), eager=True
+    )
     total = feats.agg(F.count(F.lit(1)).cast("long").alias("_tot"))
     sigs = feats.filter(F.col("simhash").isNotNull()).select(
         F.col("media_id").alias(id_col), "simhash"
     )
     bits = 64 if kind == "image" else frames - 1
-    banded = _simhash_bands(sigs, id_col, bits, max_hamming)
-    cand = _simhash_band_pairs(banded, id_col, max_bucket)
+    cand = _simhash_sig_pairs(sigs, id_col, bits, max_hamming, max_bucket)
     ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
     pairs = (
         cand.distinct()
@@ -2092,7 +2093,7 @@ def media_audit(
     quar = dec.crossJoin(F.broadcast(total)).select(
         (F.col("_tot") - F.coalesce(F.col("n"), F.lit(0))).alias("n")
     )
-    meta_counts = (
+    meta_counts = stage(
         feats.agg(
             F.count(F.when(F.col("has_pii"), 1)).cast("long").alias("_pii"),
             # unscannable = full quarantine OR a carrier the scan saw
@@ -2101,8 +2102,8 @@ def media_audit(
             F.count(F.when(F.col("unscannable"), 1))
             .cast("long")
             .alias("_unsc"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     pii = meta_counts.select(F.col("_pii").alias("n"))
     unsc = meta_counts.select(F.col("_unsc").alias("n"))

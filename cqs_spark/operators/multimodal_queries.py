@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cqs_spark.catalog import load_table
 from cqs_spark.operators.multimodal import frame_plan, media_stats, media_table
+from cqs_spark.staging import stage
 
 
 def q49(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,9 +620,7 @@ def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (media_signatures → stage once per corpus); the gate computes
     # them inline, so checkpoint to mirror "persisted" — otherwise the
     # index-side decode would re-run for every downstream leg.
-    idx_sigs = media_signatures(_q171_index_media(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    idx_sigs = stage(media_signatures(_q171_index_media(spark, sf_dir)))
     return incremental_media_neardup(
         _q171_batch_media(spark, sf_dir), idx_sigs, max_hamming=2
     ).orderBy("a", "b")
@@ -1563,11 +1562,13 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_signatures,
     )
 
-    idx_sigs = media_signatures(
-        _q180_index_media(spark, sf_dir),
-        kind="audio_windowed",
-        window=_Q179_WIN,
-    ).localCheckpoint(eager=False)
+    idx_sigs = stage(
+        media_signatures(
+            _q180_index_media(spark, sf_dir),
+            kind="audio_windowed",
+            window=_Q179_WIN,
+        )
+    )
     return incremental_audio_neardup_windowed(
         _q180_batch_media(spark, sf_dir),
         idx_sigs,
@@ -1634,7 +1635,7 @@ def q182(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two passes over the corpus (signature decode + the survivor
     # anti-join's probe side): stage the synthesized frame so the
     # Arrow encode runs once (same rationale as q177/q178).
-    out = media_dedup_apply(_q165_media(spark, sf_dir).localCheckpoint(eager=False))
+    out = media_dedup_apply(stage(_q165_media(spark, sf_dir)))
     return out.select("media_id").orderBy("media_id")
 
 
@@ -2234,10 +2235,8 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
         tiff_container_info,
     )
 
-    media = _q185_media(spark, sf_dir).localCheckpoint(eager=False)
-    stripped = media_metadata_strip(
-        media.select("media_id", "data")
-    ).localCheckpoint(eager=False)
+    media = stage(_q185_media(spark, sf_dir))
+    stripped = stage(media_metadata_strip(media.select("media_id", "data")))
     info = tiff_container_info(media)
     re_info = tiff_container_info(stripped).select(
         "media_id",

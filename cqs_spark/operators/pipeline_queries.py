@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from cqs_spark.catalog import load_table
 from cqs_spark.operators import dedup, eventops, textops, vectorops
+from cqs_spark.staging import stage
 
 
 def _r4(c):
@@ -2487,7 +2488,7 @@ def q151(spark: SparkSession, sf_dir: str) -> DataFrame:
     # five legs all fan out from this one frame in ONE action, so
     # materializing it first beats both the lazy race and the
     # re-derivation.
-    planted = planted.localCheckpoint(eager=True)
+    planted = stage(planted, eager=True)
     flags = gate_flags(
         planted, "doc_id", "text",
         keep_langs=("en",), min_quality=0.3, min_lang_confidence=0.5,
@@ -2624,11 +2625,13 @@ def q155(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The attrition report consumes the planted corpus in three legs
     # (exact-hash pass, MinHash ladder, per-source totals); stage the
     # union once (plan-size + recompute hygiene, guide §1/§3.3).
-    planted = docs.unionByName(
-        docs.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 10007).alias("doc_id"), "source", "text"
+    planted = stage(
+        docs.unionByName(
+            docs.filter(F.col("doc_id") % 3 == 0).select(
+                (F.col("doc_id") + 10007).alias("doc_id"), "source", "text"
+            )
         )
-    ).localCheckpoint(eager=False)
+    )
     out = textops.dedup_attrition(planted, "doc_id", "source", "text")
     return out.orderBy("source")
 
@@ -2740,7 +2743,7 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two audit legs each derive the clone-planted union twice (split
     # assignment + hash groupBy); stage it once so four consumers read
     # one LogicalRDD instead of re-embedding the union lineage.
-    planted = _q152_planted(spark, sf_dir).localCheckpoint(eager=False)
+    planted = stage(_q152_planted(spark, sf_dir))
     by_id = textops.split_contamination(
         textops.dataset_split(planted, "doc_id"), "doc_id", "text"
     ).select(F.lit("by_id").alias("method"), "straddling_pairs",
@@ -2856,11 +2859,13 @@ def q156(spark: SparkSession, sf_dir: str) -> DataFrame:
     # injection, decontamination, split contamination, dominance);
     # unstaged, every leg re-embeds the enrich+union lineage — the
     # before-plan carried 214 nodes and Catalyst alone cost seconds.
-    planted = enr.unionByName(
-        enr.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 10007).alias("doc_id"), "source", "text"
+    planted = stage(
+        enr.unionByName(
+            enr.filter(F.col("doc_id") % 3 == 0).select(
+                (F.col("doc_id") + 10007).alias("doc_id"), "source", "text"
+            )
         )
-    ).localCheckpoint(eager=False)
+    )
     eval_df = enr.filter(F.col("doc_id") % 97 == 0)
     out = release_audit(planted, eval_df, "doc_id", "source", "text")
     return out.select(
@@ -3024,7 +3029,7 @@ def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # drift_profile reads its input twice (per-doc features + the
     # batch/source key join); stage the planted frame once.
-    staged = staged.localCheckpoint(eager=True)
+    staged = stage(staged, eager=True)
     out = drift_profile(
         staged, "batch", "doc_id", "text", source_col="source"
     )

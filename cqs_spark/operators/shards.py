@@ -26,7 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from cqs_spark.operators.textops import _fan_out, shard_bucket
+from cqs_spark.operators.textops import shard_bucket
+from cqs_spark.partitioning import fan_out
 
 
 def _doc_hash(id_col: str, text_col: str):
@@ -51,7 +52,7 @@ def shard_manifest(
     identically (oracle-gated as q167)."""
     from cqs_spark.functions.text import words
 
-    rows = _fan_out(df.select(id_col, text_col)).select(
+    rows = fan_out(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         shard_bucket(id_col, n_shards).alias("shard"),
         F.size(words(text_col)).cast("long").alias("_n"),

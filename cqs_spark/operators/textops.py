@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from cqs_spark.functions.text import terms
+from cqs_spark.partitioning import fan_out
+from cqs_spark.staging import stage
 
 # Deterministic per-language stopword lists (heuristic n-gram langid).
 STOPWORDS = {
@@ -40,17 +42,6 @@ def _tok_col(text_col: str):
 # 1.3 s to 2.2 s when the 1 MB budget serialized its hash stage to 2
 # tasks; 128 KB restores 12-way and the 1.3 s).
 _HASH_KERNEL_BYTES_PER_TASK = 1 << 17
-
-
-def _fan_out(df: DataFrame, bytes_per_task: int = 1 << 20) -> DataFrame:
-    # Single-row-group sources scan as one task — but only fan out when
-    # the existing partitioning is actually inadequate for the per-row
-    # token work, with a size-derived width (cqs_spark.partitioning):
-    # the old unconditional defaultParallelism repartition sprayed tiny
-    # frames across every core and re-shuffled already-split corpora.
-    from cqs_spark.partitioning import fan_out
-
-    return fan_out(df, bytes_per_task=bytes_per_task)
 
 
 def _lang_scores(text_col: str) -> dict:
@@ -81,7 +72,7 @@ def langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     character-n-gram profiles; the operator shape (per-language score →
     deterministic argmax) is identical.
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     scores = _lang_scores(text_col)
     best, pred = _lang_argmax(scores)
     return df.select(
@@ -104,13 +95,13 @@ def lang_confidence(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     tie-break.  Same argmax + tie-break as :func:`langid`; the integer
     ratio is the identical IEEE double division in Spark and DuckDB,
     so thresholds on it compare bit-stably cross-engine.  Pure column
-    expressions — one narrow projection, no shuffle beyond _fan_out.
+    expressions — one narrow projection, no shuffle beyond fan_out.
     Oracle-gated as q142; feeds ``curate(min_lang_confidence=)``.
     """
     import operator
     from functools import reduce
 
-    df = _fan_out(df)
+    df = fan_out(df)
     scores = _lang_scores(text_col)
     best, pred = _lang_argmax(scores)
     total = reduce(operator.add, scores.values())
@@ -134,7 +125,7 @@ def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     quality) — the length/punctuation/stopword heuristics of standard
     pretraining-data filters, all JVM-side.
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     toks = _tok_col(text_col)
     n_tokens = F.size(toks)
     n_chars = F.length(text_col)
@@ -208,7 +199,7 @@ def repetition_stats(
     from cqs_spark.functions.text import word_shingles_arr, words
 
     sh = (
-        _fan_out(df.select(id_col, text_col))
+        fan_out(df.select(id_col, text_col))
         .select(id_col, words(text_col).alias("_t"))
         .select(id_col, F.explode(word_shingles_arr("_t", n)).alias("sh"))
     )
@@ -246,7 +237,7 @@ def vocab_stats(
     """
     from cqs_spark.functions.text import words
 
-    tok = _fan_out(df.select(id_col, text_col)).select(
+    tok = fan_out(df.select(id_col, text_col)).select(
         id_col, F.explode(words(text_col)).alias("term")
     )
     n_docs = df.agg(F.countDistinct(id_col).alias("n_docs"))
@@ -611,7 +602,7 @@ def mix_report(
     """
     from cqs_spark.functions.text import words
 
-    counts = _fan_out(df.select(id_col, text_col, *by)).select(
+    counts = fan_out(df.select(id_col, text_col, *by)).select(
         *by, F.size(words(text_col)).cast("long").alias("_n")
     )
     cells = counts.groupBy(*by).agg(
@@ -686,7 +677,7 @@ def fertility_report(
     """
     from cqs_spark.functions.text import bpe_token_count, words
 
-    counts = _fan_out(df.select(id_col, text_col, *by)).select(
+    counts = fan_out(df.select(id_col, text_col, *by)).select(
         *by,
         F.size(words(text_col)).cast("long").alias("_w"),
         bpe_token_count(text_col).alias("_b"),
@@ -725,7 +716,7 @@ def sequence_pack(
     """
     from cqs_spark.functions.text import words
 
-    counts = _fan_out(df.select(id_col, text_col)).select(
+    counts = fan_out(df.select(id_col, text_col)).select(
         F.col(id_col), F.size(words(text_col)).cast("long").alias("n_tokens")
     )
     if bucket_span is None:
@@ -779,7 +770,7 @@ def bpe_pair_counts(
     """
     from cqs_spark.functions.text import words
 
-    tok = _fan_out(df.select(id_col, text_col)).select(
+    tok = fan_out(df.select(id_col, text_col)).select(
         F.explode(words(text_col)).alias("term")
     )
     types = tok.groupBy("term").agg(F.count("*").alias("tf"))
@@ -866,7 +857,7 @@ def winnowing_fingerprints(
     from cqs_spark.operators.dedup import _hash44
 
     base = (
-        _fan_out(
+        fan_out(
             df.select(id_col, text_col),
             bytes_per_task=_HASH_KERNEL_BYTES_PER_TASK,
         )
@@ -931,7 +922,7 @@ def decontaminate(
     from cqs_spark.functions.text import word_shingles_arr, words
 
     c_sh = (
-        _fan_out(corpus.select(id_col, text_col))
+        fan_out(corpus.select(id_col, text_col))
         .select(id_col, words(text_col).alias("_t"))
         .select(id_col, F.explode(word_shingles_arr("_t", n)).alias("g"))
     )
@@ -982,16 +973,18 @@ def contamination_profile(
     # (lazy): e_doc has two consumers (the broadcast distinct + the
     # per-doc join back); the old post-explode .distinct() exchange
     # was reused between them, so without staging the eval
-    # tokenize+shingle pass would now run twice.  Lazy is race-free
-    # here because the broadcast build runs as its own job BEFORE the
-    # main action — it materializes the checkpoint blocks the join
-    # then reuses (sequential consumers, unlike the fan-out-in-one-
-    # action sites that need eager=True).
-    e_doc = eval_df.select(id_col, words(text_col).alias("_t")).select(
-        id_col, F.explode(F.array_distinct(word_shingles_arr("_t", n))).alias("g")
-    ).localCheckpoint(eager=False)
+    # tokenize+shingle pass would now run twice.  Lazy is safe because
+    # e_doc's lineage is deterministic (a pure per-row tokenize +
+    # shingle of eval_df): whichever consumer computes a block first,
+    # the other reads — or recomputes — the same rows.
+    e_doc = stage(
+        eval_df.select(id_col, words(text_col).alias("_t")).select(
+            id_col,
+            F.explode(F.array_distinct(word_shingles_arr("_t", n))).alias("g"),
+        )
+    )
     c_sh = (
-        _fan_out(corpus.select(id_col, text_col))
+        fan_out(corpus.select(id_col, text_col))
         .select(words(text_col).alias("_t"))
         .select(F.explode(word_shingles_arr("_t", n)).alias("g"))
     )
@@ -1043,10 +1036,10 @@ def oov_rate(
 
     # Two consumers (vocab aggregate + per-doc join); the explode is
     # narrow (no exchange to reuse) — stage it once.
-    tok = (
-        _fan_out(df.select(id_col, text_col))
-        .select(id_col, F.explode(words(text_col)).alias("term"))
-        .localCheckpoint(eager=True)
+    tok = stage(
+        fan_out(df.select(id_col, text_col))
+        .select(id_col, F.explode(words(text_col)).alias("term")),
+        eager=True,
     )
     vocab = (
         tok.groupBy("term")
@@ -1129,7 +1122,7 @@ def block_dedup(
     from cqs_spark.functions.text import words
 
     b = int(block_tokens)
-    toked = _fan_out(df.select(id_col, text_col)).select(
+    toked = fan_out(df.select(id_col, text_col)).select(
         id_col, words(text_col).alias("_t")
     )
     n_blocks = (F.size("_t") / b).cast("int")
@@ -1181,10 +1174,10 @@ def unigram_xent(
     # Three consumers (corpus total, LM aggregate, per-doc join): the
     # explode is narrow, so there is no exchange to reuse — stage it
     # once instead of tokenizing three times.
-    tok = (
-        _fan_out(df.select(id_col, text_col))
-        .select(id_col, F.explode(words(text_col)).alias("term"))
-        .localCheckpoint(eager=True)
+    tok = stage(
+        fan_out(df.select(id_col, text_col))
+        .select(id_col, F.explode(words(text_col)).alias("term")),
+        eager=True,
     )
     total = tok.agg(F.count("*").alias("n_total"))
     lm = (
@@ -1384,7 +1377,7 @@ def gopher_rules(
     Every statistic is a Catalyst expression over one whitespace split
     and one line split — no shuffle, no Python.
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     words = F.filter(
         F.split(F.col(text_col), r"\s+"), lambda w: F.length(w) > 0
     )
@@ -1466,17 +1459,17 @@ def tfidf_top_terms(
     count off the same exploded pass, and the |vocab|-row doc-freq
     table broadcasts back — the corpus shuffles once on (id, term).
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     # Corpus doc count rides as a broadcast single-row aggregate (like
     # vocab_stats) instead of an eager df.count() — one job, not two.
     n_docs = df.agg(F.count(F.lit(1)).cast("double").alias("_N"))
     tok = df.select(F.col(id_col).alias("id"), F.explode(_tok_col(text_col)).alias("term"))
     # tf feeds the doc-freq aggregate AND the ranking join — stage it
     # so the tokenize+explode+count runs once.
-    tf = (
+    tf = stage(
         tok.groupBy("id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("tf")),
+        eager=True,
     )
     dfreq = (
         tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -1511,7 +1504,7 @@ def ngram_lm_counts(
     explode to bigrams, three groupBys that AQE coalesces off the same
     shuffle key.
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     toks = _tok_col(text_col)
     bigrams = df.select(
         F.explode(
@@ -1533,7 +1526,7 @@ def ngram_lm_counts(
     # serializes this pass before the action's independent legs, and
     # locally the single BlockManager's per-block locking already
     # prevents duplicate computation between the two consumers).
-    bg_d = bigrams.distinct().localCheckpoint(eager=False)
+    bg_d = stage(bigrams.distinct())
     left_div = (
         bg_d.groupBy(F.col("w2").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_left_ctx"))
@@ -1635,7 +1628,7 @@ def span_dedup(
     """
     from cqs_spark.functions.text import words
 
-    toks = _fan_out(df.select(id_col, text_col)).select(
+    toks = fan_out(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"), words(text_col).alias("_t")
     )
     n_sp = ((F.size("_t") + F.lit(span_w - 1)) / F.lit(span_w)).cast("int")
@@ -1713,7 +1706,7 @@ def mixture_allocation(
     from cqs_spark.functions.text import words
 
     cells = (
-        _fan_out(df.select(stratum_col, text_col))
+        fan_out(df.select(stratum_col, text_col))
         .select(stratum_col, F.size(words(text_col)).cast("long").alias("_n"))
         .groupBy(stratum_col)
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("_n").alias("n_tokens"))
@@ -1776,7 +1769,7 @@ def shard_plan(
     """
     from cqs_spark.functions.text import words
 
-    rows = _fan_out(df.select(id_col, text_col)).select(
+    rows = fan_out(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         shard_bucket(id_col, n_shards).alias("shard"),
         F.size(words(text_col)).cast("long").alias("_n"),
@@ -1826,18 +1819,17 @@ def bigram_lm_score(
     # toks feeds the bigram tf AND the unigram counts; tf feeds the
     # corpus model AND the per-doc scoring join — stage both so the
     # tokenize/explode lineage runs once per frame, not once per
-    # consumer (multi-consumer staging, guide §1/§3.3; the durable
-    # cluster form is stage_table).
-    toks = (
-        _fan_out(df.select(id_col, text_col))
-        .select(F.col(id_col).alias("_id"), words(text_col).alias("_t"))
-        .localCheckpoint(eager=True)
+    # consumer (multi-consumer staging, guide §1/§3.3).
+    toks = stage(
+        fan_out(df.select(id_col, text_col))
+        .select(F.col(id_col).alias("_id"), words(text_col).alias("_t")),
+        eager=True,
     )
-    tf = (
+    tf = stage(
         toks.select("_id", F.explode(word_shingles_arr("_t", 2)).alias("bg"))
         .groupBy("_id", "bg")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("tf")),
+        eager=True,
     )
     c2 = tf.groupBy("bg").agg(F.sum("tf").alias("n2"))
     uni = (
@@ -1910,8 +1902,8 @@ def nb_confusion(
     # LAZY by measurement (r13 A/B: the two eager jobs serialized the
     # whole ladder at construction, q94 +0.76 s; per-block locking
     # keeps the concurrent consumers from duplicating work locally).
-    tf = (
-        _fan_out(df.select(id_col, label_col, text_col))
+    tf = stage(
+        fan_out(df.select(id_col, label_col, text_col))
         .select(
             F.col(id_col).alias("_id"),
             F.col(label_col).alias("_y"),
@@ -1919,12 +1911,10 @@ def nb_confusion(
         )
         .groupBy("_id", "_y", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
     )
-    class_tf = (
+    class_tf = stage(
         tf.groupBy("_y", "term")
         .agg(F.sum("tf").alias("ctf"))
-        .localCheckpoint(eager=False)
     )
     vocab = class_tf.select("term").distinct()
     class_tot = class_tf.groupBy("_y").agg(F.sum("ctf").alias("_T"))
@@ -2013,7 +2003,7 @@ def vocab_coverage(
     from cqs_spark.functions.text import words
 
     tf = (
-        _fan_out(df.select(id_col, text_col))
+        fan_out(df.select(id_col, text_col))
         .select(F.explode(words(text_col)).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -2099,7 +2089,7 @@ def learn_bpe(df: DataFrame, text_col: str, num_merges: int = 8) -> DataFrame:
     one driver scalar, the same bounded-collect pattern as
     graph.label_propagation's convergence probe; the merge itself is a
     left-to-right greedy fold per word (array `aggregate`, JVM-side,
-    non-overlapping like the reference algorithm).  localCheckpoint
+    non-overlapping like the reference algorithm).  Staging
     per round truncates the nested-fold lineage.
 
     Returns (step, left_sym, right_sym, weight) — the learned merge
@@ -2117,9 +2107,11 @@ def learn_bpe(df: DataFrame, text_col: str, num_merges: int = 8) -> DataFrame:
     # units — eager spent a SEPARATE job per round on the same blocks,
     # and the final round's units (never consumed again) cost a whole
     # wasted pass.
-    units = words.select(
-        "w", "f", F.expr("regexp_extract_all(w, '.', 0)").alias("syms")
-    ).localCheckpoint(eager=False)
+    units = stage(
+        words.select(
+            "w", "f", F.expr("regexp_extract_all(w, '.', 0)").alias("syms")
+        )
+    )
     merges: list[tuple] = []
     for step in range(num_merges):
         pairs = units.select(
@@ -2142,19 +2134,21 @@ def learn_bpe(df: DataFrame, text_col: str, num_merges: int = 8) -> DataFrame:
         a, b = best["a"], best["b"]
         merges.append((step, a, b, int(best["cnt"])))
         la, lb, lm = F.lit(a), F.lit(b), F.lit(a + b)
-        units = units.withColumn(
-            "syms",
-            F.aggregate(
-                F.slice("syms", F.lit(2), F.size("syms") - 1),
-                F.slice("syms", F.lit(1), F.lit(1)),
-                lambda acc, x: F.when(
-                    (F.element_at(acc, -1) == la) & (x == lb),
-                    F.concat(
-                        F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(lm)
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            ),
-        ).localCheckpoint(eager=False)
+        units = stage(
+            units.withColumn(
+                "syms",
+                F.aggregate(
+                    F.slice("syms", F.lit(2), F.size("syms") - 1),
+                    F.slice("syms", F.lit(1), F.lit(1)),
+                    lambda acc, x: F.when(
+                        (F.element_at(acc, -1) == la) & (x == lb),
+                        F.concat(
+                            F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(lm)
+                        ),
+                    ).otherwise(F.concat(acc, F.array(x))),
+                ),
+            )
+        )
     return spark.createDataFrame(
         merges, "step long, left_sym string, right_sym string, weight long"
     )
@@ -2258,7 +2252,7 @@ def _gram_arrays(
     most compact form (no exploded rows)."""
     from cqs_spark.functions.text import words
 
-    toks = _fan_out(
+    toks = fan_out(
         docs.select(id_col, text_col),
         bytes_per_task=_HASH_KERNEL_BYTES_PER_TASK,
     ).select(id_col, words(text_col).alias("_t"))
@@ -2354,9 +2348,7 @@ def duplicate_passages(
     with the gram table optionally staged to parquet for the APPLY
     pass (``passage_scrub``) to reuse.
     """
-    gf = _gram_arrays(docs, id_col, text_col, k).localCheckpoint(
-        eager=True
-    )
+    gf = stage(_gram_arrays(docs, id_col, text_col, k), eager=True)
     dup = _duplicate_windows_from_grams(gf, id_col)
     return _merge_islands(dup, id_col, k)
 
@@ -2409,7 +2401,7 @@ def sentence_units(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     (no lookbehind), so the identical split runs in DuckDB.  Pure
     column expressions + one posexplode — linear in corpus characters.
     """
-    df = _fan_out(docs.select(id_col, text_col))
+    df = fan_out(docs.select(id_col, text_col))
     pieces = F.split(F.col(text_col), "[.!?]+")
     ex = df.select(id_col, F.posexplode(pieces).alias("sidx", "_raw"))
     toks = F.filter(
@@ -2457,10 +2449,10 @@ def _duplicate_from_units(
     segment the corpus ONCE for both the detect and the apply legs.
     The candidate frame is staged: it feeds the first-occurrence
     aggregate AND the join back (two consumers)."""
-    cand = (
+    cand = stage(
         units.filter(F.col("n_tokens") >= min_tokens)
-        .withColumn("h", F.md5("sent_norm"))
-        .localCheckpoint(eager=True)
+        .withColumn("h", F.md5("sent_norm")),
+        eager=True,
     )
     first = cand.groupBy("h").agg(F.min(id_col).alias("_fdoc"))
     return (
@@ -2485,9 +2477,7 @@ def sentence_scrub(
     # Segment ONCE (staged): the unit frame feeds the detect leg and
     # the reassembly — previously the split ran three times (once here
     # plus twice inside duplicate_sentences' two consumers).
-    sents = sentence_units(docs, id_col, text_col).localCheckpoint(
-        eager=True
-    )
+    sents = stage(sentence_units(docs, id_col, text_col), eager=True)
     dup = _duplicate_from_units(sents, id_col, min_tokens)
     return _reassemble_sentences(sents, dup, id_col)
 
@@ -2551,9 +2541,9 @@ def passage_scrub(
     their own tokens.  Returns (id, kept_text, kept_tokens,
     dropped_tokens) over the normalized token stream.
     """
-    gf = _gram_arrays(
-        docs, id_col, text_col, k, keep_tokens=True
-    ).localCheckpoint(eager=True)
+    gf = stage(
+        _gram_arrays(docs, id_col, text_col, k, keep_tokens=True), eager=True
+    )
     dup = _duplicate_windows_from_grams(gf, id_col)
     return _strip_from_toks(gf, dup, id_col, k)
 
@@ -2567,7 +2557,7 @@ def _strip_windows(
     ``strip_boilerplate`` (and the streaming incremental scrub)."""
     from cqs_spark.functions.text import words
 
-    toks = _fan_out(docs.select(id_col, text_col)).select(
+    toks = fan_out(docs.select(id_col, text_col)).select(
         id_col, words(text_col).alias("_t")
     )
     return _strip_from_toks(toks, flagged, id_col, k)
@@ -2643,7 +2633,7 @@ def unicode_hygiene(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     are length-difference expressions (len(text) − len(text with the
     class stripped)) — pure JVM regex, one projection, no shuffle.
     """
-    df = _fan_out(df)
+    df = fan_out(df)
     ln = F.length(text_col)
 
     def n_of(cls):
@@ -2668,7 +2658,7 @@ def unicode_scrub(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Strip the encoding-damage classes (see :func:`unicode_hygiene`)
     in place: (id, text) with controls / U+FFFD / zero-widths removed.
     Tab, newline and CR survive — they are structure, not damage."""
-    df = _fan_out(df)
+    df = fan_out(df)
     return df.select(
         F.col(id_col),
         F.regexp_replace(text_col, _HYGIENE_CLASS, "").alias(text_col),
@@ -2692,7 +2682,7 @@ def ngram_novelty(
     # Per-doc distinct grams without the post-explode shuffle
     # (array_distinct pre-explode; see _kgram_set).  Staged once: the
     # frame feeds both the doc-frequency aggregate and the join back.
-    wg = _kgram_set(docs, id_col, text_col, k).localCheckpoint(eager=True)
+    wg = stage(_kgram_set(docs, id_col, text_col, k), eager=True)
     docfreq = wg.groupBy("h").agg(F.count(F.lit(1)).alias("_nd"))
     per = (
         wg.join(docfreq, "h")
@@ -2742,12 +2732,12 @@ def source_leakage(
     # input and skips the unused position computation; the (source, h)
     # distinct across documents still runs (it must).  Staged: three
     # consumers (per-source totals + both sides of the self-join).
-    grams = (
+    grams = stage(
         _kgram_set(docs, id_col, text_col, k)
         .join(docs.select(id_col, source_col), id_col)
         .select(source_col, "h")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n = grams.groupBy(source_col).agg(F.count(F.lit(1)).alias("_ng"))
     a = grams.select(F.col(source_col).alias("source_a"), "h")
@@ -2856,9 +2846,9 @@ def strip_boilerplate(
     dominant linear cost, so the apply path must not pay it twice
     (previously the strip tail re-tokenized the corpus from scratch).
     """
-    gf = _gram_arrays(
-        docs, id_col, text_col, k, keep_tokens=True
-    ).localCheckpoint(eager=True)
+    gf = stage(
+        _gram_arrays(docs, id_col, text_col, k, keep_tokens=True), eager=True
+    )
     src = docs.select(id_col, source_col)
     gs = gf.select(id_col, F.explode(F.array_distinct("_g")).alias("h"))
     bp = _boilerplate_from_sets(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from cqs_spark.functions.vector import dot
+from cqs_spark.staging import stage
 
 
 def _with_norm(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
@@ -737,7 +738,7 @@ def class_separation(
     # rival sides, final n_vecs join); without a checkpoint each one
     # re-runs the wide aggregate — the dominant cost of the operator.
     # |labels| rows, so materializing it is free.
-    cents = cents.localCheckpoint(eager=True)
+    cents = stage(cents, eager=True)
     # Pad ragged member vectors to the centroid dimension with zeros —
     # the dot-product analogue of try_element_at's "missing dim absent"
     # (zip_with would NULL-pad and silently DROP short vectors from the

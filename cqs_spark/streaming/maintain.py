@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cqs_spark.staging import stage
+
 
 BINARY_FILE_DDL = (
     "path string, modificationTime timestamp, length long, content binary"
@@ -340,7 +342,7 @@ def seed_staged_index(
     hs_p = os.path.join(index_dir, "hashes")
     for p in (sh_p, bd_p, hs_p):
         _migrate_legacy_slices(spark, p)
-    ssh = shingles(corpus, id_col, text_col).localCheckpoint(eager=True)
+    ssh = stage(shingles(corpus, id_col, text_col), eager=True)
     _write_batch_slice(ssh, sh_p, -1, "__seed__")
     _write_batch_slice(
         band_signatures(minhash_signatures(ssh, id_col), id_col),
@@ -434,7 +436,7 @@ def dedup_arrivals(
         if not rid_cache:  # checkpoint metadata exists once we're here
             rid_cache.append(_run_id(spark, checkpoint_dir))
         rid = rid_cache[0]
-        batch = batch.localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
         # Staged reads exclude this run's own slice for this batch
         # (_read_staged): replay safety.  Per-table checks: batch
         # slices are overwrite-idempotent, so a crash that staged
@@ -458,13 +460,9 @@ def dedup_arrivals(
         # batch ladder applies; only across MICRO-BATCH boundaries is
         # the dedup greedy against survivors.)
         dups = pairs.select(F.col("b").alias(id_col)).distinct()
-        survivors = batch.join(dups, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
+        survivors = stage(batch.join(dups, id_col, "left_anti"), eager=True)
         _write_batch_slice(survivors, out_dir, batch_id, rid)
-        ssh = shingles(survivors, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        ssh = stage(shingles(survivors, id_col, text_col), eager=True)
         # Shingles land BEFORE bands: a crash between the writes then
         # leaves shingle rows without band rows (some candidates missed
         # until the retry completes) rather than band rows whose ids
@@ -603,16 +601,19 @@ def curate_arrivals(
         if not rid_cache:  # checkpoint metadata exists once we're here
             rid_cache.append(_run_id(spark, checkpoint_dir))
         rid = rid_cache[0]
-        batch = batch.localCheckpoint(eager=True)
-        flagged = gate_flags(
-            batch, id_col, text_col,
-            keep_langs=keep_langs, min_quality=min_quality,
-            max_dup_ratio=max_dup_ratio,
-            gopher_min_words=gopher_min_words,
-            gopher_min_stops=gopher_min_stops,
-            min_lang_confidence=min_lang_confidence,
-            flag_injection=flag_injection,
-        ).localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
+        flagged = stage(
+            gate_flags(
+                batch, id_col, text_col,
+                keep_langs=keep_langs, min_quality=min_quality,
+                max_dup_ratio=max_dup_ratio,
+                gopher_min_words=gopher_min_words,
+                gopher_min_stops=gopher_min_stops,
+                min_lang_confidence=min_lang_confidence,
+                flag_injection=flag_injection,
+            ),
+            eager=True,
+        )
         # The report costs three extra driver actions per micro-batch
         # (gate aggregate + two stage counts) — only pay them when a
         # report sink exists.
@@ -626,9 +627,7 @@ def curate_arrivals(
         kept = incremental_exact(
             gated, seen, id_col, text_col, prehashed=True
         ).select(id_col)
-        gated = gated.join(kept, id_col, "left_semi").localCheckpoint(
-            eager=True
-        )
+        gated = stage(gated.join(kept, id_col, "left_semi"), eager=True)
         if report_dir is not None:
             report["after_exact_dedup"] = gated.count()
 
@@ -647,9 +646,7 @@ def curate_arrivals(
         # Canonical a < b + monotone arrival ids: b is always the newer
         # doc, so the b-side set IS this batch's near-duplicates.
         dups = pairs.select(F.col("b").alias(id_col)).distinct()
-        survivors = gated.join(dups, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
+        survivors = stage(gated.join(dups, id_col, "left_anti"), eager=True)
         if report_dir is not None:
             report["after_near_dedup"] = survivors.count()
 
@@ -673,9 +670,9 @@ def curate_arrivals(
             )
 
             k = exactsubstr_k
-            units = _kgram_windows(
-                redacted, id_col, text_col, k
-            ).localCheckpoint(eager=True)
+            units = stage(
+                _kgram_windows(redacted, id_col, text_col, k), eager=True
+            )
             seen_g = _read_staged(spark, gr_p, batch_id, "h string", ("h",), rid)
             first = units.groupBy("h").agg(F.min(id_col).alias("_fdoc"))
             flagged = (
@@ -694,9 +691,7 @@ def curate_arrivals(
                 sentence_units,
             )
 
-            sents = sentence_units(redacted, id_col, text_col).localCheckpoint(
-                eager=True
-            )
+            sents = stage(sentence_units(redacted, id_col, text_col), eager=True)
             units = sents.filter(F.col("n_tokens") >= 5).withColumn(
                 "h", F.md5("sent_norm")
             )
@@ -713,7 +708,7 @@ def curate_arrivals(
             )
             kept = _reassemble_sentences(sents, flagged, id_col)
         if units is not None:
-            scrubbed = (
+            scrubbed = stage(
                 redacted.drop(text_col)
                 .join(
                     kept.select(
@@ -721,8 +716,8 @@ def curate_arrivals(
                     ),
                     id_col,
                 )
-                .select(*survivors.columns)
-                .localCheckpoint(eager=True)
+                .select(*survivors.columns),
+                eager=True,
             )
 
         out = scrubbed
@@ -742,9 +737,7 @@ def curate_arrivals(
         _write_batch_slice(out, out_dir, batch_id, rid)
         # Index maintenance on RAW survivor text, survivors only;
         # shingles BEFORE bands (see dedup_arrivals on crash ordering).
-        ssh = shingles(survivors, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        ssh = stage(shingles(survivors, id_col, text_col), eager=True)
         _write_batch_slice(ssh, sh_p, batch_id, rid)
         _write_batch_slice(
             band_signatures(minhash_signatures(ssh, id_col), id_col),
@@ -893,7 +886,7 @@ def monitor_arrivals(
         if not batch.take(1):
             return
         rid = _run_id(spark, checkpoint_dir)
-        batch = batch.localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
         per_doc = profile_per_doc(batch, id_col, text_col)
         # (source key, profile dict) — '__all__' is the whole batch.
         all_row = per_doc.agg(*metric_aggs).first()  # ONE action
@@ -1037,7 +1030,7 @@ def monitor_semantic_arrivals(
     """
     from cqs_spark.operators.vectorops import ivf_assign
 
-    cen = centroids.localCheckpoint(eager=True)
+    cen = stage(centroids, eager=True)
     cids = sorted(
         r["_cid"]
         for r in cen.select(
@@ -1053,7 +1046,7 @@ def monitor_semantic_arrivals(
         if not batch.take(1):
             return
         rid = _run_id(spark, checkpoint_dir)
-        batch = batch.localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
         asg = ivf_assign(batch, cen, id_col, vec_col, with_cos=True)
         got = asg.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n"), F.sum("cos").alias("_cs")
@@ -1190,9 +1183,10 @@ def seed_media_index(
     sg_p = os.path.join(index_dir, "sigs")
     _migrate_legacy_slices(spark, sg_p)
     _check_media_marker(spark, index_dir, kind, method, frames, window)
-    sigs = media_signatures(
-        media, id_col, data_col, kind, method, frames, window
-    ).localCheckpoint(eager=True)
+    sigs = stage(
+        media_signatures(media, id_col, data_col, kind, method, frames, window),
+        eager=True,
+    )
     _write_batch_slice(sigs, sg_p, -1, "__seed__")
 
 
@@ -1256,17 +1250,18 @@ def media_arrivals(
         if not rid_cache:
             rid_cache.append(_run_id(spark, checkpoint_dir))
         rid = rid_cache[0]
-        batch = batch.localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
         isigs = _read_staged(
             spark, sg_p, batch_id, f"{id_col} long, simhash long",
             (id_col, "simhash"), rid,
         )
-        # ONE signature pass per batch: the checkpointed frame feeds
-        # the pair join AND the index staging — the decode (the whole
+        # ONE signature pass per batch: the staged frame feeds the
+        # pair join AND the index staging — the decode (the whole
         # per-batch cost for image/JPEG/GIF blobs) never runs twice.
-        sigs_b = media_signatures(
-            batch, id_col, data_col, kind, method, frames, window
-        ).localCheckpoint(eager=True)
+        sigs_b = stage(
+            media_signatures(batch, id_col, data_col, kind, method, frames, window),
+            eager=True,
+        )
         if kind == "video":
             from cqs_spark.operators.multimodal import (
                 incremental_video_neardup,
@@ -1291,9 +1286,7 @@ def media_arrivals(
                 max_hamming, max_bucket, batch_sigs=sigs_b,
             )
         dups = pairs.select(F.col("b").alias(id_col)).distinct()
-        survivors = batch.join(dups, id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
+        survivors = stage(batch.join(dups, id_col, "left_anti"), eager=True)
         _write_batch_slice(survivors, out_dir, batch_id, rid)
         _write_batch_slice(
             sigs_b.join(dups, id_col, "left_anti"), sg_p, batch_id, rid
@@ -1364,7 +1357,7 @@ def monitor_media_arrivals(
         if not batch.take(1):
             return
         rid = _run_id(spark, checkpoint_dir)
-        batch = batch.localCheckpoint(eager=True)
+        batch = stage(batch, eager=True)
         sizes = batch.select(
             F.col(id_col), (F.length(data_col) / 1024.0).alias("_kb")
         )

@@ -19,7 +19,6 @@ from cqs_spark.operators.dedup import (
     dedup_corpus,
     embedding_neardup,
     lsh_candidates,
-    minhash_dedup,
     minhash_signatures,
     shingles,
 )
@@ -170,52 +169,6 @@ def test_bfs_releases_hop_caches(spark):
             break
         time.sleep(1)
     assert leaked <= 3, f"staged traversal RDDs never reclaimed: {leaked}"
-
-
-def test_minhash_dedup_table_staged_matches_local(spark, tmp_path):
-    """materialize_to: the parquet-staged shingle path (the cluster
-    deployment form) produces identical pairs to localCheckpoint, and
-    actually writes the staged table."""
-    import os
-
-    words = [f"w{i}" for i in range(60)]
-    docs = [(d, " ".join(words[d : d + 31])) for d in range(8)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    local = {
-        (r["a"], r["b"], round(r["jac"], 6))
-        for r in minhash_dedup(df, "doc_id", "text").collect()
-    }
-    stage_dir = str(tmp_path / "mh_stage")
-    staged = {
-        (r["a"], r["b"], round(r["jac"], 6))
-        for r in minhash_dedup(
-            df, "doc_id", "text", materialize_to=stage_dir
-        ).collect()
-    }
-    assert staged == local and local
-    assert os.path.isdir(os.path.join(stage_dir, "shingles"))
-
-
-def test_triangle_count_table_staged_matches_cached(spark, tmp_path):
-    """materialize_to for triangle_count: staged und/fwd tables give the
-    same per-node counts as the cached path."""
-    import os
-
-    from cqs_spark.operators.graph import triangle_count
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (2, 1)],
-        "src long, dst long",
-    )
-    cached = {r["node"]: r["n_triangles"] for r in triangle_count(edges).collect()}
-    stage_dir = str(tmp_path / "tri_stage")
-    staged = {
-        r["node"]: r["n_triangles"]
-        for r in triangle_count(edges, materialize_to=stage_dir).collect()
-    }
-    assert staged == cached == {1: 1, 2: 1, 3: 2, 4: 1, 5: 1}
-    assert os.path.isdir(os.path.join(stage_dir, "und"))
-    assert os.path.isdir(os.path.join(stage_dir, "fwd"))
 
 
 def test_lsh_construction_is_lazy_regardless_of_log_level(spark):

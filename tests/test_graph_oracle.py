@@ -54,35 +54,3 @@ def test_pagerank_mass_and_ordering(spark):
     assert abs(total - 1.0) < 1e-9
     hub = next(r["rank"] for r in rows if r["node"] == 0)
     assert all(hub > r["rank"] for r in rows if r["node"] != 0)
-
-
-def test_durable_staging_opt_in(spark, tmp_path_factory):
-    """durable_staging routes every traversal staging point through
-    dedup.stage_table (parquet, restartable) with IDENTICAL results —
-    the 100 TB deployment form; default behavior (localCheckpoint) is
-    unchanged outside the context (r13 VERDICT item 7)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from cqs_spark.operators.graph import bfs, durable_staging
-
-    edges = spark.createDataFrame(
-        [(i, (i * 3 + 1) % 17) for i in range(17)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,)], "node long")
-    default_rows = sorted(
-        (r["node"], r["depth"]) for r in bfs(edges, seeds, 4).collect()
-    )
-    sd = str(tmp_path_factory.mktemp("graph_stage"))
-    with durable_staging(sd):
-        durable_rows = sorted(
-            (r["node"], r["depth"]) for r in bfs(edges, seeds, 4).collect()
-        )
-    assert durable_rows == default_rows
-    staged = [d for d in os.listdir(sd) if d.startswith("stage_")]
-    assert staged, "durable staging wrote no tables"
-    # context exited: staging is back to localCheckpoint (no new dirs)
-    n = len(staged)
-    bfs(edges, seeds, 2).collect()
-    assert len([d for d in os.listdir(sd) if d.startswith("stage_")]) == n

@@ -18,9 +18,13 @@ import __spark_entry__ as E
 
 
 def _formatted(spark, name, sf_dir):
-    df = E.queries()[name](spark, sf_dir)
+    return _explain(E.queries()[name](spark, sf_dir))
+
+
+def _explain(df):
+    jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
 
 
@@ -262,14 +266,40 @@ def test_q143_sentence_detect_hashes_join_key(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
 
 
+def _staged_frames(p: str) -> dict[str, str]:
+    """Staged (ExistingRDD) leaves of a formatted plan: RDD → its output
+    columns, one entry per staged frame however many consumers scan it."""
+    return {
+        rdd: cols
+        for cols, rdd in re.findall(
+            r"Arguments: \[([^\]]*)\], (\w+RDD\[\d+\]) at \S+ at [^,]*, ExistingRDD",
+            p,
+        )
+    }
+
+
+def _is_band_frame(cols: str) -> bool:
+    return {"simhash", "band", "val"} <= {c.split("#")[0] for c in cols.split(", ")}
+
+
 def test_q145_simhash_bands_equi_join(spark, sf_dir):
     """The hamming band join is an equi-join on (band, val) with the
     oversized-bucket stats broadcast; the verify is a bit op in the
-    projection, never a re-scan of the token table."""
+    projection, never a re-scan of the token table.  With the bucket
+    cap the banded frame is staged exactly once (its four consumers
+    read one leaf); without the cap nothing is staged."""
+    from cqs_spark.catalog import load_table
+    from cqs_spark.operators.dedup import simhash_neardup
+
     p = _formatted(spark, "q145", sf_dir)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "bit_count" in p
+    staged = list(_staged_frames(p).values())
+    assert len(staged) == 1 and _is_band_frame(staged[0]), staged
+    docs = load_table(spark, sf_dir, "documents")
+    uncapped = simhash_neardup(docs, "doc_id", "text", max_bucket=None)
+    assert _staged_frames(_explain(uncapped)) == {}
 
 
 def test_q146_leakage_output_is_source_pair_bounded(spark, sf_dir):
@@ -287,6 +317,10 @@ def test_q147_incremental_simhash_index_never_shuffles_to_batch(spark, sf_dir):
     p = _formatted(spark, "q147", sf_dir)
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p
+    # The batch bands are staged once and shared by the within-batch
+    # capped join and the cross join — never staged a second time.
+    staged = list(_staged_frames(p).values())
+    assert len(staged) == 1 and _is_band_frame(staged[0]), staged
 
 
 def test_q157_drift_profile_windows_over_tiny_frame(spark, sf_dir):

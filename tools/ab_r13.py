@@ -37,6 +37,7 @@ def main() -> None:
     from cqs_spark.functions.text import word_shingles_arr, words
     from cqs_spark.operators import textops
     from cqs_spark.operators.curate import gate_flags
+    from cqs_spark.partitioning import fan_out
 
     _r4 = lambda c: F.round(c.cast("decimal(30,10)"), 4).cast("double")  # noqa: E731
 
@@ -58,7 +59,7 @@ def main() -> None:
             else:
                 raise ValueError(e_doc_shape)
             c_sh = (
-                textops._fan_out(corpus.select(id_col, text_col))
+                fan_out(corpus.select(id_col, text_col))
                 .select(words(text_col).alias("_t"))
                 .select(F.explode(word_shingles_arr("_t", n)).alias("g"))
             )
