@@ -97,14 +97,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         per_session.clear()
     per_session[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read all testdata tables as a dict of DataFrames."""
-    return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql use)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

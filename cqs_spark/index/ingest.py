@@ -144,17 +144,3 @@ def build_chunks(
     if max_tokens:
         chunks = apply_windowing(chunks, max_tokens=max_tokens)
     return chunks
-
-
-def index_corpus(
-    spark: SparkSession,
-    root: str,
-    out_dir: str | None = None,
-    glob: str = "*.{py,md}",
-) -> DataFrame:
-    """One-shot index build; writes parquet when ``out_dir`` is given."""
-    chunks = build_chunks(list_files(spark, root, glob))
-    if out_dir:
-        chunks.write.mode("overwrite").parquet(f"{out_dir}/chunks.parquet")
-        chunks = spark.read.parquet(f"{out_dir}/chunks.parquet")
-    return chunks

@@ -1,11 +1,9 @@
-"""Physical table layout: partitioning + bucketing for co-located joins.
+"""Physical table layout: bucketing for co-located joins.
 
 The reference's analogue is its composite covering indexes
 (src/schema.sql:104-126, ~50× on the staleness scan).  On Spark the
-equivalent levers are:
+equivalent lever is:
 
-  partitioned writes   coarse pruning key (language / source_type /
-                       date) → partition elimination at scan time
   bucketed tables      pre-shuffled on the join key → joins between
                        tables bucketed on the same key skip BOTH
                        exchanges (and the sort, when sorted)
@@ -18,12 +16,6 @@ Bucketing requires a metastore table (saveAsTable), not a bare path.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(df: DataFrame, path: str, by: list[str]) -> None:
-    """Partition-pruned parquet layout (coarse keys only — avoid
-    high-cardinality partition columns; that's what bucketing is for)."""
-    df.write.mode("overwrite").partitionBy(*by).parquet(path)
 
 
 def write_bucketed(

@@ -17,8 +17,6 @@ surfaces:
                          keyword scorer (the Spark-native form: the
                          expanded terms simply join the broadcast
                          query-term list)
-  synonym_df             (term, expanded) DataFrame for broadcast
-                         joins in batch encoders (SPLADE expansion)
 """
 
 from __future__ import annotations
@@ -159,14 +157,6 @@ def expand_terms(terms: list[str]) -> list[str]:
             if cand not in out:
                 out.append(cand)
     return out
-
-
-def synonym_df(spark):
-    """(term, expanded) rows of the current table for broadcast joins."""
-    rows = [
-        (src, dst) for src, dsts in sorted(_table.items()) for dst in dsts
-    ]
-    return spark.createDataFrame(rows, "term string, expanded string")
 
 
 def expand_queries_df(queries, id_col: str, query_col: str, table=None):

@@ -218,6 +218,40 @@ ORDER BY media_id
 MULTIMODAL_ORACLES["q134"] = _Q134
 
 
+def _id_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    rows_of,
+    schema: str = "media_id long, data binary",
+) -> DataFrame:
+    """A synthetic fixture corpus built per ``documents.doc_id``.
+
+    ``rows_of(doc_id)`` yields the rows for one id as tuples in
+    ``schema``'s column order, id first.  We spread the id frame so the
+    Arrow decode stage runs on every core — the fixture parquet is a
+    single file and would otherwise pin the whole encode+decode on one
+    task.  The id column is built as int64: a float64 detour would
+    corrupt the low bits of the ``1 << 50`` batch-id offsets.
+    """
+    from collections.abc import Iterator
+
+    names = [col.split()[0] for col in schema.split(",")]
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [r for did in pdf["doc_id"] for r in rows_of(int(did))]
+            yield pd.DataFrame(rows, columns=names).astype({names[0]: "int64"})
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .repartition(spark.sparkContext.defaultParallelism)
+    )
+    return docs.mapInPandas(run, schema)
+
+
 # ---------------------------------------------------------------------------
 # q165/q166 — perceptual image hashing + near-dup join
 # ---------------------------------------------------------------------------
@@ -249,46 +283,27 @@ def _q165_pixels(seed: int) -> list:
 
 
 def _q165_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import (
         encode_bmp,
         encode_png,
         encode_pnm,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        # spread the id frame so the Arrow decode stage runs on
-        # every core — the fixture parquet is a single file and
-        # would otherwise pin the whole encode+decode on one task
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    encoders = (encode_pnm, encode_bmp, encode_png)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did):
+        if did % 25 == 0:
+            yield did, b"not an image at all"
+        elif did % 3 == 2 and did % 2 == 1:
+            # Adam7-interlaced variant: same pixels, different
+            # container — the oracle is container-blind, so the
+            # deinterlacing decode is gated inside q165/q166/
+            # q176/q177 with zero oracle change
+            yield did, encode_png(_q165_pixels(did // 2), interlace=True)
+        else:
+            yield did, encoders[did % 3](_q165_pixels(did // 2))
 
-        encoders = (encode_pnm, encode_bmp, encode_png)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 25 == 0:
-                    blobs.append(b"not an image at all")
-                elif did % 3 == 2 and did % 2 == 1:
-                    # Adam7-interlaced variant: same pixels, different
-                    # container — the oracle is container-blind, so the
-                    # deinterlacing decode is gated inside q165/q166/
-                    # q176/q177 with zero oracle change
-                    blobs.append(
-                        encode_png(_q165_pixels(did // 2), interlace=True)
-                    )
-                else:
-                    blobs.append(encoders[did % 3](_q165_pixels(did // 2)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,36 +417,18 @@ def _q169_samples(seed: int) -> list:
 
 
 def _q169_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import encode_wav
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        # spread the id frame so the Arrow decode stage runs on
-        # every core — the fixture parquet is a single file and
-        # would otherwise pin the whole encode+decode on one task
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(did):
+        if did % 25 == 0:
+            yield did, b"not a wav clip"
+            return
+        s = _q169_samples(did // 2)
+        if did % 2 == 1:
+            s = [x // 2 for x in s]  # re-normalized twin
+        yield did, encode_wav(s)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 25 == 0:
-                    blobs.append(b"not a wav clip")
-                    continue
-                s = _q169_samples(did // 2)
-                if did % 2 == 1:
-                    s = [x // 2 for x in s]  # re-normalized twin
-                blobs.append(encode_wav(s))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,80 +526,44 @@ _Q171_B = 1 << 50
 
 
 def _q171_index_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import (
         encode_bmp,
         encode_png,
         encode_pnm,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        # spread the id frame so the Arrow decode stage runs on
-        # every core — the fixture parquet is a single file and
-        # would otherwise pin the whole encode+decode on one task
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    encoders = (encode_pnm, encode_bmp, encode_png)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did):
+        if did % 25 == 0:
+            yield did, b"not an image at all"
+        else:
+            yield did, encoders[did % 3](_q165_pixels(did))
 
-        encoders = (encode_pnm, encode_bmp, encode_png)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 25 == 0:
-                    blobs.append(b"not an image at all")
-                else:
-                    blobs.append(encoders[did % 3](_q165_pixels(did)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def _q171_batch_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import (
         encode_bmp,
         encode_png,
         encode_pnm,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        # spread the id frame so the Arrow decode stage runs on
-        # every core — the fixture parquet is a single file and
-        # would otherwise pin the whole encode+decode on one task
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    encoders = (encode_pnm, encode_bmp, encode_png)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(d):
+        if d % 25 == 0:
+            blob = b"still not an image"
+        elif d % 2 == 0:
+            # cross twin: index image d, re-encoded
+            blob = encoders[(d + 1) % 3](_q165_pixels(d))
+        else:
+            # fresh negative seed, shared pairwise within batch
+            blob = encoders[d % 3](_q165_pixels(-(d // 4) - 1))
+        yield d + _Q171_B, blob
 
-        encoders = (encode_pnm, encode_bmp, encode_png)
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                ids.append(d + _Q171_B)
-                if d % 25 == 0:
-                    blobs.append(b"still not an image")
-                elif d % 2 == 0:
-                    # cross twin: index image d, re-encoded
-                    blobs.append(encoders[(d + 1) % 3](_q165_pixels(d)))
-                else:
-                    # fresh negative seed, shared pairwise within batch
-                    blobs.append(encoders[d % 3](_q165_pixels(-(d // 4) - 1)))
-            yield pd.DataFrame(
-                {"media_id": pd.array(ids, dtype="Int64"), "data": blobs}
-            )
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q171(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,38 +665,19 @@ def _q172_frame_px(seed: int, f: int) -> list:
 def _q172_media(
     spark: SparkSession, sf_dir: str, twins: bool = False
 ) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import encode_gif
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not a gif"
+            return
+        nf = 4 + d % 3
+        frames = [_q172_frame_px(d, f) for f in range(nf)]
+        yield d, encode_gif(frames)
+        if twins and d % 2 == 0:
+            yield d + _Q173_B, encode_gif(frames[1:], interlace=True)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                ids.append(d)
-                if d % 25 == 0:
-                    blobs.append(b"not a gif")
-                    continue
-                nf = 4 + d % 3
-                frames = [_q172_frame_px(d, f) for f in range(nf)]
-                blobs.append(encode_gif(frames))
-                if twins and d % 2 == 0:
-                    ids.append(d + _Q173_B)
-                    blobs.append(encode_gif(frames[1:], interlace=True))
-            yield pd.DataFrame(
-                {"media_id": pd.array(ids, dtype="Int64"), "data": blobs}
-            )
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,37 +781,23 @@ ORDER BY a, b
 
 
 def _q174_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import (
         encode_bmp,
         encode_png,
         encode_pnm,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    encoders = (encode_pnm, encode_bmp, encode_png)
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not an image"
+        elif d % 2 == 0:
+            yield d, encoders[d % 3](_q172_frame_px(d, d % 4))
+        else:
+            yield d, encoders[d % 3](_q172_frame_px(-(d // 4) - 1, 0))
 
-        encoders = (encode_pnm, encode_bmp, encode_png)
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    blobs.append(b"not an image")
-                elif d % 2 == 0:
-                    blobs.append(encoders[d % 3](_q172_frame_px(d, d % 4)))
-                else:
-                    blobs.append(encoders[d % 3](_q172_frame_px(-(d // 4) - 1, 0)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q174(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,59 +854,41 @@ ORDER BY image_id, video_id, frame
 
 
 def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.jpegcodec import (
         decode_jpeg_luma,
         encode_jpeg,
         encode_jpeg_progressive,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            oks = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    oks.append(decode_jpeg_luma(b"not a jpeg") is not None)
-                    continue
-                px = _q165_pixels(d)
-                if d % 4 == 3:
-                    blob = encode_jpeg_progressive(px, quality=100)
-                else:
-                    blob = encode_jpeg(
-                        px,
-                        quality=100,
-                        subsample=d % 4 == 1,
-                        restart=2 if d % 4 == 2 else 0,
-                    )
-                out = decode_jpeg_luma(blob)
-                oks.append(
-                    out is not None
-                    and len(out) == 16
-                    and len(out[0]) == 16
-                    and max(
-                        abs(a - b)
-                        for ra, rb in zip(out, px)
-                        for a, b in zip(ra, rb)
-                    )
-                    <= 2
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"], "ok": pd.array(oks, dtype="boolean")}
+    def rows(d):
+        if d % 25 == 0:
+            yield d, decode_jpeg_luma(b"not a jpeg") is not None
+            return
+        px = _q165_pixels(d)
+        if d % 4 == 3:
+            blob = encode_jpeg_progressive(px, quality=100)
+        else:
+            blob = encode_jpeg(
+                px,
+                quality=100,
+                subsample=d % 4 == 1,
+                restart=2 if d % 4 == 2 else 0,
             )
+        out = decode_jpeg_luma(blob)
+        yield d, (
+            out is not None
+            and len(out) == 16
+            and len(out[0]) == 16
+            and max(
+                abs(a - b)
+                for ra, rb in zip(out, px)
+                for a, b in zip(ra, rb)
+            )
+            <= 2
+        )
 
-    return docs.mapInPandas(run, "media_id long, ok boolean").orderBy(
-        "media_id"
-    )
+    ok = _id_corpus(spark, sf_dir, rows, "media_id long, ok boolean")
+    return ok.orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q175"] = q175
@@ -1113,8 +1023,6 @@ ORDER BY "check"
 
 
 def _q178_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.jpegcodec import encode_jpeg
     from cqs_spark.operators.mediameta import (
         build_id3v2,
@@ -1140,155 +1048,142 @@ def _q178_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_wav,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    blobs.append(b"no metadata to see here")
-                    continue
-                px = _q165_pixels(d)
-                f, m = d % 5, d % 4
-                if f == 0:
-                    blob = encode_jpeg(px, quality=100)
-                    c = (d // 5) % 3
-                    if c == 0:  # EXIF carrier
-                        if m == 0:
-                            blob = inject_jpeg_metadata(
-                                blob, gps=(d % 90, d % 60, d % 60)
-                            )
-                        elif m == 1:
-                            blob = inject_jpeg_metadata(
-                                blob, serial=f"SN{d:08d}"
-                            )
-                        elif m == 2:
-                            blob = inject_jpeg_metadata(
-                                blob, artist=f"user{d}", comment=f"note {d}"
-                            )
-                    elif c == 1:  # XMP carrier (no EXIF at all)
-                        if m == 0:
-                            blob = inject_jpeg_xmp(
-                                blob, gps=(d % 90, d % 60, d % 60)
-                            )
-                        elif m == 1:
-                            blob = inject_jpeg_xmp(blob, serial=f"SN{d:08d}")
-                        elif m == 2:
-                            blob = inject_jpeg_xmp(blob, creator=f"user{d}")
-                        else:  # unreadable carrier → unscanned flag
-                            blob = inject_jpeg_opaque_appn(
-                                blob, 9, b"\x00\x01opaque %d" % d
-                            )
-                    else:  # IPTC APP13 carrier
-                        if m == 0:
-                            blob = inject_jpeg_iptc(blob, byline=f"user{d}")
-                        elif m == 1:
-                            blob = inject_jpeg_iptc(blob, caption=f"note {d}")
-                        elif m == 2:
-                            blob = inject_jpeg_iptc(
-                                blob, copyright_=f"(c) user{d}"
-                            )
-                elif f == 1:
-                    blob = encode_png(px)
-                    c = (d // 5) % 3
-                    if m == 0:
-                        blob = inject_png_metadata(
-                            blob, text=("Author", f"user{d}")
-                        )
-                    elif m == 1:
-                        blob = inject_png_metadata(blob, serial=f"PX{d:08d}")
-                    elif m == 2 and c == 1:
-                        # XMP packet inside an iTXt chunk (the Adobe
-                        # PNG carrier): GPS must flag as PII, not just
-                        # as a text side-channel
-                        blob = inject_png_xmp(
-                            blob, gps=(d % 90, d % 60, d % 60),
-                            compress=bool(d % 2),
-                        )
-                    elif m == 2:
-                        blob = inject_png_metadata(
-                            blob, text=("Comment", f"note {d}")
-                        )
-                    elif m == 3 and c == 2:
-                        # private ancillary chunk: the r11 judge's
-                        # PNG smuggling channel — seen but unread
-                        blob = inject_png_chunk(
-                            blob, b"prVt", b"lat=%d lon=%d" % (d % 90, d % 180)
-                        )
-                elif f == 2:
-                    blob = encode_pnm(px)
-                    if m == 0:
-                        # planted header comment: the PNM text carrier
-                        blob = blob.replace(
-                            b"P5\n", b"P5\n# field note %d\n" % d, 1
-                        )
-                elif f == 3:
-                    blob = encode_gif([px])
-                    c = (d // 5) % 3
-                    if m == 0:
-                        if c == 0:
-                            blob = inject_gif_comment(blob, f"frame note {d}")
-                        elif c == 1:
-                            # Adobe XMP-in-GIF with GPS: the judge-
-                            # reproduced r11 false-clean carrier
-                            blob = inject_gif_xmp(
-                                blob, gps=(d % 90, d % 60, d % 60)
-                            )
-                        else:
-                            blob = inject_gif_plaintext(
-                                blob, f"rendered note {d}"
-                            )
-                    elif m == 1 and c == 0:
-                        blob = inject_gif_appext(
-                            blob, b"MYVENDOR1.0", b"opaque %d" % d
-                        )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"no metadata to see here"
+            return
+        px = _q165_pixels(d)
+        f, m = d % 5, d % 4
+        if f == 0:
+            blob = encode_jpeg(px, quality=100)
+            c = (d // 5) % 3
+            if c == 0:  # EXIF carrier
+                if m == 0:
+                    blob = inject_jpeg_metadata(
+                        blob, gps=(d % 90, d % 60, d % 60)
+                    )
+                elif m == 1:
+                    blob = inject_jpeg_metadata(
+                        blob, serial=f"SN{d:08d}"
+                    )
+                elif m == 2:
+                    blob = inject_jpeg_metadata(
+                        blob, artist=f"user{d}", comment=f"note {d}"
+                    )
+            elif c == 1:  # XMP carrier (no EXIF at all)
+                if m == 0:
+                    blob = inject_jpeg_xmp(
+                        blob, gps=(d % 90, d % 60, d % 60)
+                    )
+                elif m == 1:
+                    blob = inject_jpeg_xmp(blob, serial=f"SN{d:08d}")
+                elif m == 2:
+                    blob = inject_jpeg_xmp(blob, creator=f"user{d}")
+                else:  # unreadable carrier → unscanned flag
+                    blob = inject_jpeg_opaque_appn(
+                        blob, 9, b"\x00\x01opaque %d" % d
+                    )
+            else:  # IPTC APP13 carrier
+                if m == 0:
+                    blob = inject_jpeg_iptc(blob, byline=f"user{d}")
+                elif m == 1:
+                    blob = inject_jpeg_iptc(blob, caption=f"note {d}")
+                elif m == 2:
+                    blob = inject_jpeg_iptc(
+                        blob, copyright_=f"(c) user{d}"
+                    )
+        elif f == 1:
+            blob = encode_png(px)
+            c = (d // 5) % 3
+            if m == 0:
+                blob = inject_png_metadata(
+                    blob, text=("Author", f"user{d}")
+                )
+            elif m == 1:
+                blob = inject_png_metadata(blob, serial=f"PX{d:08d}")
+            elif m == 2 and c == 1:
+                # XMP packet inside an iTXt chunk (the Adobe
+                # PNG carrier): GPS must flag as PII, not just
+                # as a text side-channel
+                blob = inject_png_xmp(
+                    blob, gps=(d % 90, d % 60, d % 60),
+                    compress=bool(d % 2),
+                )
+            elif m == 2:
+                blob = inject_png_metadata(
+                    blob, text=("Comment", f"note {d}")
+                )
+            elif m == 3 and c == 2:
+                # private ancillary chunk: the r11 judge's
+                # PNG smuggling channel — seen but unread
+                blob = inject_png_chunk(
+                    blob, b"prVt", b"lat=%d lon=%d" % (d % 90, d % 180)
+                )
+        elif f == 2:
+            blob = encode_pnm(px)
+            if m == 0:
+                # planted header comment: the PNM text carrier
+                blob = blob.replace(
+                    b"P5\n", b"P5\n# field note %d\n" % d, 1
+                )
+        elif f == 3:
+            blob = encode_gif([px])
+            c = (d // 5) % 3
+            if m == 0:
+                if c == 0:
+                    blob = inject_gif_comment(blob, f"frame note {d}")
+                elif c == 1:
+                    # Adobe XMP-in-GIF with GPS: the judge-
+                    # reproduced r11 false-clean carrier
+                    blob = inject_gif_xmp(
+                        blob, gps=(d % 90, d % 60, d % 60)
+                    )
                 else:
-                    blob = encode_wav(_q179_samples(d, 528))
-                    c = (d // 5) % 3
-                    if m == 0:
-                        blob = inject_wav_info(blob, artist=f"user{d}")
-                    elif m == 1:
-                        blob = inject_wav_info(blob, comment=f"note {d}")
-                    elif m == 2:
-                        if c == 0:
-                            # Broadcast-Wave originator: the judge-
-                            # reproduced r11 bext carrier
-                            blob = inject_wav_chunk(
-                                blob, b"bext",
-                                build_wav_bext(originator=f"op{d}"),
-                            )
-                        elif c == 1:
-                            blob = inject_wav_chunk(
-                                blob, b"bext",
-                                build_wav_bext(umid=b"\x06\x0a%d" % d),
-                            )
-                        else:
-                            blob = inject_wav_chunk(
-                                blob, b"ID3 ",
-                                build_id3v2(artist=f"user{d}"),
-                            )
-                    elif m == 3:
-                        if c == 0:
-                            blob = inject_wav_chunk(
-                                blob, b"iXML",
-                                b"<BWFXML><NOTE>take %d</NOTE></BWFXML>" % d,
-                            )
-                        elif c == 1:
-                            blob = inject_wav_chunk(
-                                blob, b"JUNK", b"\x00pad %d\x00" % d
-                            )
-                blobs.append(blob)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
+                    blob = inject_gif_plaintext(
+                        blob, f"rendered note {d}"
+                    )
+            elif m == 1 and c == 0:
+                blob = inject_gif_appext(
+                    blob, b"MYVENDOR1.0", b"opaque %d" % d
+                )
+        else:
+            blob = encode_wav(_q179_samples(d, 528))
+            c = (d // 5) % 3
+            if m == 0:
+                blob = inject_wav_info(blob, artist=f"user{d}")
+            elif m == 1:
+                blob = inject_wav_info(blob, comment=f"note {d}")
+            elif m == 2:
+                if c == 0:
+                    # Broadcast-Wave originator: the judge-
+                    # reproduced r11 bext carrier
+                    blob = inject_wav_chunk(
+                        blob, b"bext",
+                        build_wav_bext(originator=f"op{d}"),
+                    )
+                elif c == 1:
+                    blob = inject_wav_chunk(
+                        blob, b"bext",
+                        build_wav_bext(umid=b"\x06\x0a%d" % d),
+                    )
+                else:
+                    blob = inject_wav_chunk(
+                        blob, b"ID3 ",
+                        build_id3v2(artist=f"user{d}"),
+                    )
+            elif m == 3:
+                if c == 0:
+                    blob = inject_wav_chunk(
+                        blob, b"iXML",
+                        b"<BWFXML><NOTE>take %d</NOTE></BWFXML>" % d,
+                    )
+                elif c == 1:
+                    blob = inject_wav_chunk(
+                        blob, b"JUNK", b"\x00pad %d\x00" % d
+                    )
+        yield d, blob
 
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1373,40 +1268,26 @@ def _q179_samples(seed: int, n: int) -> list:
 
 
 def _q179_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import encode_wav
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     W, NW = _Q179_WIN, _Q179_NWIN
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not a wav clip either"
+            return
+        m, g = d % 4, d // 4
+        if m == 3:
+            s = _q179_samples(-d - 1, NW * W)
+        else:
+            s = _q179_samples(g, NW * W)
+            if m == 1:
+                s = s[2 * W :]          # prefix trim: 2 windows
+            elif m == 2:
+                s = s[: 5 * W]          # suffix trim: keep 5
+        yield d, encode_wav(s)
 
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    blobs.append(b"not a wav clip either")
-                    continue
-                m, g = d % 4, d // 4
-                if m == 3:
-                    s = _q179_samples(-d - 1, NW * W)
-                else:
-                    s = _q179_samples(g, NW * W)
-                    if m == 1:
-                        s = s[2 * W :]          # prefix trim: 2 windows
-                    elif m == 2:
-                        s = s[: 5 * W]          # suffix trim: keep 5
-                blobs.append(encode_wav(s))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,73 +1363,39 @@ FROM pairs WHERE shared >= 3 ORDER BY a, b
 
 
 def _q180_index_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import encode_wav
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     W, NW = _Q179_WIN, _Q179_NWIN
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"indexed garbage"
+        else:
+            yield d, encode_wav(_q179_samples(d, NW * W))
 
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    blobs.append(b"indexed garbage")
-                else:
-                    blobs.append(encode_wav(_q179_samples(d, NW * W)))
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 _Q180_B = 1 << 50  # same id-disjointness bound as _Q171_B
 
 
 def _q180_batch_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.multimodal import encode_wav
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     W, NW = _Q179_WIN, _Q179_NWIN
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(d):
+        if d % 25 == 0:
+            blob = b"batch garbage"
+        elif d % 2 == 0:
+            # trimmed re-upload of index clip d (drop 2 windows)
+            blob = encode_wav(_q179_samples(d, NW * W)[2 * W :])
+        else:
+            # fresh clip, seed shared pairwise within the batch
+            blob = encode_wav(_q179_samples(-(d // 4) - 1, NW * W))
+        yield d + _Q180_B, blob
 
-        for pdf in batches:
-            ids, blobs = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                ids.append(d + _Q180_B)
-                if d % 25 == 0:
-                    blobs.append(b"batch garbage")
-                elif d % 2 == 0:
-                    # trimmed re-upload of index clip d (drop 2 windows)
-                    blobs.append(
-                        encode_wav(_q179_samples(d, NW * W)[2 * W :])
-                    )
-                else:
-                    # fresh clip, seed shared pairwise within the batch
-                    blobs.append(
-                        encode_wav(_q179_samples(-(d // 4) - 1, NW * W))
-                    )
-            yield pd.DataFrame(
-                {"media_id": pd.array(ids, dtype="Int64"), "data": blobs}
-            )
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1677,65 +1524,48 @@ ORDER BY media_id
 
 
 def _q183_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
     from cqs_spark.operators.mediameta import build_mp4
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not an iso-bmff stream"
+            return
+        # m picks the FLAG (the oracle's contract); c2 picks
+        # the CARRIER for it — ©xyz vs Adobe top-level
+        # uuid-XMP vs udta/XMP_ for GPS, ilst ©ART vs XMP
+        # dc:creator for author — so the gate proves all the
+        # real-world carriers feed the same flags
+        kw = {}
+        m, c2 = d % 4, (d // 4) % 3
+        if m == 0:
+            if c2 == 0:
+                kw["gps"] = (float(d % 90), float(d % 180) - 90.0)
+            else:
+                kw["xmp"] = {"gps": (d % 90, d % 60, d % 60)}
+                kw["xmp_in"] = "uuid" if c2 == 1 else "udta"
+        elif m == 1:
+            if c2 == 0:
+                kw["xmp"] = {"creator": f"user{d}"}
+            else:
+                kw["artist"] = f"user{d}"
+        elif m == 2:
+            kw["comment"] = f"note {d}"
+        if d % 2:
+            # half the fixtures carry a real sample table:
+            # strip must REMAP the stco offsets when dropping
+            # carriers shifts mdat (ADVICE r11 medium), and
+            # the gate's chunks_intact leg proves the entries
+            # still point at the same media bytes
+            kw["chunk_offsets"] = [0, 8]
+        yield d, build_mp4(
+            160 + (d % 8) * 80,
+            120 + (d % 6) * 60,
+            1000 + (d % 97) * 250,
+            payload=(b"%016d" % d),
+            **kw,
+        )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    blobs.append(b"not an iso-bmff stream")
-                    continue
-                # m picks the FLAG (the oracle's contract); c2 picks
-                # the CARRIER for it — ©xyz vs Adobe top-level
-                # uuid-XMP vs udta/XMP_ for GPS, ilst ©ART vs XMP
-                # dc:creator for author — so the gate proves all the
-                # real-world carriers feed the same flags
-                kw = {}
-                m, c2 = d % 4, (d // 4) % 3
-                if m == 0:
-                    if c2 == 0:
-                        kw["gps"] = (float(d % 90), float(d % 180) - 90.0)
-                    else:
-                        kw["xmp"] = {"gps": (d % 90, d % 60, d % 60)}
-                        kw["xmp_in"] = "uuid" if c2 == 1 else "udta"
-                elif m == 1:
-                    if c2 == 0:
-                        kw["xmp"] = {"creator": f"user{d}"}
-                    else:
-                        kw["artist"] = f"user{d}"
-                elif m == 2:
-                    kw["comment"] = f"note {d}"
-                if d % 2:
-                    # half the fixtures carry a real sample table:
-                    # strip must REMAP the stco offsets when dropping
-                    # carriers shifts mdat (ADVICE r11 medium), and
-                    # the gate's chunks_intact leg proves the entries
-                    # still point at the same media bytes
-                    kw["chunk_offsets"] = [0, 8]
-                blobs.append(
-                    build_mp4(
-                        160 + (d % 8) * 80,
-                        120 + (d % 6) * 60,
-                        1000 + (d % 97) * 250,
-                        payload=(b"%016d" % d),
-                        **kw,
-                    )
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "data": blobs})
-
-    return docs.mapInPandas(run, "media_id long, data binary")
+    return _id_corpus(spark, sf_dir, rows)
 
 
 def _kand(*vs):
@@ -1806,61 +1636,6 @@ def _fused_md5_strip_walk(scanner, names, info_cols, tail=None, n_tail=0):
             yield pd.DataFrame(rows, columns=names)
 
     return run
-
-
-def _q183_chunks_intact(media: DataFrame, stripped: DataFrame) -> DataFrame:
-    """Per blob: do the (remapped) stco entries of the stripped file
-    point at the SAME media bytes as the original's?  True when no
-    sample table exists (nothing to remap), NULL on quarantine."""
-    from collections.abc import Iterator
-
-    j = media.select("media_id", F.col("data").alias("orig")).join(
-        stripped.select("media_id", F.col("data").alias("strp")), "media_id"
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import struct
-
-        import pandas as pd
-
-        from cqs_spark.operators.mediameta import _mp4_boxes
-
-        def entries(b: bytes) -> list:
-            out = []
-
-            def walk(lo, hi):
-                for t, _s, e, p in _mp4_boxes(b, lo, hi):
-                    if t in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                        walk(p, e)
-                    elif t == b"stco":
-                        n = struct.unpack_from(">I", b, p + 4)[0]
-                        for k in range(n):
-                            out.append(
-                                struct.unpack_from(">I", b, p + 8 + 4 * k)[0]
-                            )
-
-            walk(0, len(b))
-            return out
-
-        for pdf in batches:
-            rows = []
-            for mid, o, s in zip(pdf["media_id"], pdf["orig"], pdf["strp"]):
-                if o is None or s is None:
-                    rows.append((int(mid), None))
-                    continue
-                try:
-                    bo, bs = bytes(o), bytes(s)
-                    eo, es = entries(bo), entries(bs)
-                    ok = len(eo) == len(es) and all(
-                        bo[a : a + 8] == bs[b2 : b2 + 8]
-                        for a, b2 in zip(eo, es)
-                    )
-                except Exception:
-                    ok = None
-                rows.append((int(mid), ok))
-            yield pd.DataFrame(rows, columns=["media_id", "chunks_intact"])
-
-    return j.mapInPandas(run, "media_id long, chunks_intact boolean")
 
 
 def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2021,50 +1796,34 @@ ORDER BY media_id
 
 def _q184_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    from collections.abc import Iterator
 
     from cqs_spark.operators.mediameta import build_mp3, inject_png_xmp
     from cqs_spark.operators.multimodal import encode_png
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    rows.append((d, b"not an mpeg stream", None))
-                    continue
-                m = d % 5
-                nf = 3 + d % 4
-                kw = {}
-                if m == 0:
-                    kw["artist"] = f"user{d}"
-                elif m == 1:
-                    kw["comment"] = f"note {d}"
-                elif m == 2:
-                    kw["id3v1_artist"] = f"user{d}"
-                elif m == 3:
-                    kw["apic"] = inject_png_xmp(
-                        encode_png(_q165_pixels(d)),
-                        gps=(d % 90, d % 60, d % 60),
-                    )
-                blob = build_mp3(nf, seed=d, **kw)
-                frames = build_mp3(nf, seed=d)  # tag-free twin
-                rows.append((d, blob, hashlib.md5(frames).hexdigest()))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "data", "frames_md5"]
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not an mpeg stream", None
+            return
+        m = d % 5
+        nf = 3 + d % 4
+        kw = {}
+        if m == 0:
+            kw["artist"] = f"user{d}"
+        elif m == 1:
+            kw["comment"] = f"note {d}"
+        elif m == 2:
+            kw["id3v1_artist"] = f"user{d}"
+        elif m == 3:
+            kw["apic"] = inject_png_xmp(
+                encode_png(_q165_pixels(d)),
+                gps=(d % 90, d % 60, d % 60),
             )
+        blob = build_mp3(nf, seed=d, **kw)
+        frames = build_mp3(nf, seed=d)  # tag-free twin
+        yield d, blob, hashlib.md5(frames).hexdigest()
 
-    return docs.mapInPandas(
-        run, "media_id long, data binary, frames_md5 string"
+    return _id_corpus(
+        spark, sf_dir, rows, "media_id long, data binary, frames_md5 string"
     )
 
 
@@ -2185,43 +1944,29 @@ ORDER BY media_id
 
 def _q185_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    from collections.abc import Iterator
 
     from cqs_spark.operators.mediameta import build_tiff
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not a tiff", None
+            return
+        m = d % 4
+        px = bytes(((d * 31 + t * 7) % 251) for t in range(64))
+        kw = {}
+        if m == 0:
+            kw["gps"] = (d % 90, d % 60, d % 60)
+        elif m == 1:
+            kw["serial"] = f"SN{d:08d}"
+        elif m == 2:
+            kw["artist"] = f"user{d}"
+        blob = build_tiff(
+            16 + (d % 32) * 8, 16 + (d % 24) * 8, pixels=px, **kw
+        )
+        yield d, blob, hashlib.md5(px).hexdigest()
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    rows.append((d, b"not a tiff", None))
-                    continue
-                m = d % 4
-                px = bytes(((d * 31 + t * 7) % 251) for t in range(64))
-                kw = {}
-                if m == 0:
-                    kw["gps"] = (d % 90, d % 60, d % 60)
-                elif m == 1:
-                    kw["serial"] = f"SN{d:08d}"
-                elif m == 2:
-                    kw["artist"] = f"user{d}"
-                blob = build_tiff(
-                    16 + (d % 32) * 8, 16 + (d % 24) * 8, pixels=px, **kw
-                )
-                rows.append((d, blob, hashlib.md5(px).hexdigest()))
-            yield pd.DataFrame(rows, columns=["media_id", "data", "px_md5"])
-
-    return docs.mapInPandas(
-        run, "media_id long, data binary, px_md5 string"
+    return _id_corpus(
+        spark, sf_dir, rows, "media_id long, data binary, px_md5 string"
     )
 
 
@@ -2328,7 +2073,6 @@ ORDER BY media_id
 
 def _q186_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    from collections.abc import Iterator
 
     from cqs_spark.operators.mediameta import (
         _build_exif,
@@ -2336,39 +2080,26 @@ def _q186_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_webp,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"RIFFnope", None
+            return
+        m = d % 4
+        w, h = 16 + (d % 64) * 4, 16 + (d % 48) * 4
+        px = bytes(((d * 37 + t * 11) % 253) for t in range(40))
+        kw = {}
+        if m == 0:
+            kw["exif"] = _build_exif(gps=(d % 90, d % 60, d % 60))
+        elif m == 1:
+            kw["xmp"] = _xmp_packet(gps=(d % 90, d % 60, d % 60))
+        elif m == 2:
+            kw["exif"] = _build_exif(artist=f"user{d}")
+        blob = build_webp(w, h, payload=px, **kw)
+        clean = build_webp(w, h, payload=px)
+        yield d, blob, hashlib.md5(clean).hexdigest()
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    rows.append((d, b"RIFFnope", None))
-                    continue
-                m = d % 4
-                w, h = 16 + (d % 64) * 4, 16 + (d % 48) * 4
-                px = bytes(((d * 37 + t * 11) % 253) for t in range(40))
-                kw = {}
-                if m == 0:
-                    kw["exif"] = _build_exif(gps=(d % 90, d % 60, d % 60))
-                elif m == 1:
-                    kw["xmp"] = _xmp_packet(gps=(d % 90, d % 60, d % 60))
-                elif m == 2:
-                    kw["exif"] = _build_exif(artist=f"user{d}")
-                blob = build_webp(w, h, payload=px, **kw)
-                clean = build_webp(w, h, payload=px)
-                rows.append((d, blob, hashlib.md5(clean).hexdigest()))
-            yield pd.DataFrame(rows, columns=["media_id", "data", "clean_md5"])
-
-    return docs.mapInPandas(
-        run, "media_id long, data binary, clean_md5 string"
+    return _id_corpus(
+        spark, sf_dir, rows, "media_id long, data binary, clean_md5 string"
     )
 
 
@@ -2445,7 +2176,6 @@ ORDER BY media_id
 
 def _q187_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
-    from collections.abc import Iterator
 
     from cqs_spark.operators.mediameta import (
         _HEIF_CLEAN_EXIF,
@@ -2454,59 +2184,46 @@ def _q187_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_heif,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"not a heif at all", None
+            return
+        m = d % 5
+        w, h = 64 + (d % 64) * 8, 64 + (d % 48) * 8
+        px = bytes(((d * 41 + t * 13) % 251) for t in range(40))
+        kw = {}
+        tail = None  # (planted payload length, replacement)
+        if m == 0:
+            exif = b"\x00\x00\x00\x00" + _build_exif(
+                gps=(d % 90, d % 60, d % 60)
+            )
+            kw["gps"] = (d % 90, d % 60, d % 60)
+            tail = (len(exif), _HEIF_CLEAN_EXIF)
+        elif m == 1:
+            exif = b"\x00\x00\x00\x00" + _build_exif(
+                serial=f"SN{d:08d}"
+            )
+            kw["serial"] = f"SN{d:08d}"
+            tail = (len(exif), _HEIF_CLEAN_EXIF)
+        elif m == 2:
+            xmp = _xmp_packet(creator=f"user{d}")
+            kw["xmp"] = {"creator": f"user{d}"}
+            tail = (len(xmp), b"")
+        elif m == 3:
+            kw["extra_item"] = (b"vndr", b"opaque %d" % d)
+        blob = build_heif(w, h, pixel_payload=px, **kw)
+        if m == 3:
+            clean_md5 = None  # strip must QUARANTINE
+        elif tail is None:
+            clean_md5 = hashlib.md5(blob).hexdigest()
+        else:
+            ln, repl = tail
+            expected = blob[:-ln] + repl.ljust(ln, b"\x00")
+            clean_md5 = hashlib.md5(expected).hexdigest()
+        yield d, blob, clean_md5
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    rows.append((d, b"not a heif at all", None))
-                    continue
-                m = d % 5
-                w, h = 64 + (d % 64) * 8, 64 + (d % 48) * 8
-                px = bytes(((d * 41 + t * 13) % 251) for t in range(40))
-                kw = {}
-                tail = None  # (planted payload length, replacement)
-                if m == 0:
-                    exif = b"\x00\x00\x00\x00" + _build_exif(
-                        gps=(d % 90, d % 60, d % 60)
-                    )
-                    kw["gps"] = (d % 90, d % 60, d % 60)
-                    tail = (len(exif), _HEIF_CLEAN_EXIF)
-                elif m == 1:
-                    exif = b"\x00\x00\x00\x00" + _build_exif(
-                        serial=f"SN{d:08d}"
-                    )
-                    kw["serial"] = f"SN{d:08d}"
-                    tail = (len(exif), _HEIF_CLEAN_EXIF)
-                elif m == 2:
-                    xmp = _xmp_packet(creator=f"user{d}")
-                    kw["xmp"] = {"creator": f"user{d}"}
-                    tail = (len(xmp), b"")
-                elif m == 3:
-                    kw["extra_item"] = (b"vndr", b"opaque %d" % d)
-                blob = build_heif(w, h, pixel_payload=px, **kw)
-                if m == 3:
-                    clean_md5 = None  # strip must QUARANTINE
-                elif tail is None:
-                    clean_md5 = hashlib.md5(blob).hexdigest()
-                else:
-                    ln, repl = tail
-                    expected = blob[:-ln] + repl.ljust(ln, b"\x00")
-                    clean_md5 = hashlib.md5(expected).hexdigest()
-                rows.append((d, blob, clean_md5))
-            yield pd.DataFrame(rows, columns=["media_id", "data", "clean_md5"])
-
-    return docs.mapInPandas(
-        run, "media_id long, data binary, clean_md5 string"
+    return _id_corpus(
+        spark, sf_dir, rows, "media_id long, data binary, clean_md5 string"
     )
 
 
@@ -2594,7 +2311,6 @@ ORDER BY media_id
 def _q188_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import struct
-    from collections.abc import Iterator
 
     from cqs_spark.operators.mediameta import (
         _ogg_crc,
@@ -2603,78 +2319,65 @@ def _q188_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from cqs_spark.operators.multimodal import encode_png
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows(d):
+        if d % 25 == 0:
+            yield d, b"OggSnope", None
+            return
+        m = d % 5
+        codec = "vorbis" if d % 2 else "opus"
+        np_ = 1 + d % 3
+        kw = {}
+        if m == 0:
+            kw["artist"] = f"user{d}"
+        elif m == 1:
+            kw["title"] = f"take {d}"
+        elif m == 2:
+            kw["location"] = f"{d % 90}.{d % 10},{d % 180}.{d % 10}"
+        elif m == 3:
+            px = [[(d + r * 8 + c) % 256 for c in range(8)]
+                  for r in range(8)]
+            kw["picture"] = inject_png_metadata(
+                encode_png(px), serial=f"PX{d:08d}"
+            )
+        blob = build_ogg(
+            codec=codec, n_audio_pages=np_, seed=d, **kw
+        )
+        # expected scrubbed twin from the builder's layout:
+        # page 0 = header packet page, page 1 = tags page;
+        # replace the tags packet per the padding rule and
+        # recompute page 1's CRC.  The scrub NORMALIZES the
+        # tags packet even when no comment was planted (the
+        # vendor string is encoder metadata too), so the twin
+        # uses the same arithmetic for every m.
+        if True:
+            # page 1 spans [len(page0), len(page0)+page1_len)
+            def page1_span(b):
+                n0 = b[26]
+                p0 = 27 + n0 + sum(b[27 : 27 + n0])
+                n1 = b[p0 + 26]
+                lac = b[p0 + 27 : p0 + 27 + n1]
+                return p0, p0 + 27 + n1 + sum(lac), 27 + n1
+            p0, p1e, hdr1 = page1_span(blob)
+            sig, trail = (
+                (b"\x03vorbis", b"\x01") if d % 2 else (b"OpusTags", b"")
+            )
+            total = p1e - (p0 + hdr1)
+            pad = total - len(sig) - 8 - len(trail)
+            repl = (
+                sig + struct.pack("<I", pad) + b" " * pad
+                + struct.pack("<I", 0) + trail
+            )
+            exp = bytearray(blob)
+            exp[p0 + hdr1 : p1e] = repl
+            struct.pack_into("<I", exp, p0 + 22, 0)
+            struct.pack_into(
+                "<I", exp, p0 + 22, _ogg_crc(bytes(exp[p0:p1e]))
+            )
+            clean_md5 = hashlib.md5(bytes(exp)).hexdigest()
+        yield d, blob, clean_md5
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 25 == 0:
-                    rows.append((d, b"OggSnope", None))
-                    continue
-                m = d % 5
-                codec = "vorbis" if d % 2 else "opus"
-                np_ = 1 + d % 3
-                kw = {}
-                if m == 0:
-                    kw["artist"] = f"user{d}"
-                elif m == 1:
-                    kw["title"] = f"take {d}"
-                elif m == 2:
-                    kw["location"] = f"{d % 90}.{d % 10},{d % 180}.{d % 10}"
-                elif m == 3:
-                    px = [[(d + r * 8 + c) % 256 for c in range(8)]
-                          for r in range(8)]
-                    kw["picture"] = inject_png_metadata(
-                        encode_png(px), serial=f"PX{d:08d}"
-                    )
-                blob = build_ogg(
-                    codec=codec, n_audio_pages=np_, seed=d, **kw
-                )
-                # expected scrubbed twin from the builder's layout:
-                # page 0 = header packet page, page 1 = tags page;
-                # replace the tags packet per the padding rule and
-                # recompute page 1's CRC.  The scrub NORMALIZES the
-                # tags packet even when no comment was planted (the
-                # vendor string is encoder metadata too), so the twin
-                # uses the same arithmetic for every m.
-                if True:
-                    # page 1 spans [len(page0), len(page0)+page1_len)
-                    def page1_span(b):
-                        n0 = b[26]
-                        p0 = 27 + n0 + sum(b[27 : 27 + n0])
-                        n1 = b[p0 + 26]
-                        lac = b[p0 + 27 : p0 + 27 + n1]
-                        return p0, p0 + 27 + n1 + sum(lac), 27 + n1
-                    p0, p1e, hdr1 = page1_span(blob)
-                    sig, trail = (
-                        (b"\x03vorbis", b"\x01") if d % 2 else (b"OpusTags", b"")
-                    )
-                    total = p1e - (p0 + hdr1)
-                    pad = total - len(sig) - 8 - len(trail)
-                    repl = (
-                        sig + struct.pack("<I", pad) + b" " * pad
-                        + struct.pack("<I", 0) + trail
-                    )
-                    exp = bytearray(blob)
-                    exp[p0 + hdr1 : p1e] = repl
-                    struct.pack_into("<I", exp, p0 + 22, 0)
-                    struct.pack_into(
-                        "<I", exp, p0 + 22, _ogg_crc(bytes(exp[p0:p1e]))
-                    )
-                    clean_md5 = hashlib.md5(bytes(exp)).hexdigest()
-                rows.append((d, blob, clean_md5))
-            yield pd.DataFrame(rows, columns=["media_id", "data", "clean_md5"])
-
-    return docs.mapInPandas(
-        run, "media_id long, data binary, clean_md5 string"
+    return _id_corpus(
+        spark, sf_dir, rows, "media_id long, data binary, clean_md5 string"
     )
 
 

@@ -20,38 +20,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 # Language-agnostic forms of the reference's six patterns
-# (src/structural.rs:44).  Keys are the reference's pattern names.
+# (src/structural.rs:44) — all but `recursion`, which needs the
+# chunk's own name and so has no static regex.  Keys are the
+# reference's pattern names.
 PATTERNS = {
     "builder": r"(?s)\breturn\s+self\b",
     "error_swallow": r"(?s)except[^\n]*:\s*\n\s*pass\b",
     "async": r"\basync\s+def\b|\bawait\b",
     "mutex": r"\b(Lock|Mutex|Semaphore|RLock)\b",
     "unsafe": r"\b(unsafe|eval|exec)\s*\(",
-    "recursion": None,  # needs the name — built per-row below
 }
-
-
-def match_pattern(chunks: DataFrame, pattern: str) -> DataFrame:
-    """Filter chunks by a named structural pattern (regex on content)."""
-    if pattern == "recursion":
-        # A function mentioning its own name in its body past the signature.
-        body = F.expr("substring(content, length(signature) + 1)")
-        return chunks.filter(
-            F.col("name").isNotNull()
-            & body.rlike(F.concat(F.lit(r"\b"), F.col("name"), F.lit(r"\s*\(")))
-        )
-    rx = PATTERNS.get(pattern)
-    if rx is None:
-        raise ValueError(f"unknown pattern: {pattern}")
-    return chunks.filter(F.col("content").rlike(rx))
 
 
 def tag_patterns(chunks: DataFrame) -> DataFrame:
     """Add one boolean column per static pattern (for faceted stats)."""
     out = chunks
     for name, rx in PATTERNS.items():
-        if rx is not None:
-            out = out.withColumn(f"is_{name}", F.col("content").rlike(rx))
+        out = out.withColumn(f"is_{name}", F.col("content").rlike(rx))
     return out
 
 

@@ -1,8 +1,9 @@
-"""Structured Streaming surface: event-time windows + incremental index.
+"""Structured Streaming surface: incremental index + arrival curation.
 
 The reference's only stream is the watch daemon (FS events → debounce →
-incremental reindex + periodic reconcile, src/cli/watch/); the engine
-declares the full Spark event-time surface (SURVEY.md §2.9) — the
-batch twins of every operator here live in
-cqs_spark.operators.eventops and are oracle-checked (q37–q39).
+incremental reindex + periodic reconcile, src/cli/watch/);
+cqs_spark.streaming.maintain holds its twin plus the arrival ladders
+(dedup, curate, monitor), each tested against its batch ladder.  The
+event-time operators are batch-only (cqs_spark.operators.eventops,
+oracle-checked as q37–q39).
 """

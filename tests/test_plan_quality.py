@@ -436,6 +436,29 @@ def test_q175_q176_decode_single_arrow_stage(spark, sf_dir):
         assert _exchange_nodes(p) <= 2
 
 
+_ID_CORPORA = [
+    "_q165_media", "_q169_media", "_q171_index_media", "_q171_batch_media",
+    "_q172_media", "_q174_images", "q175", "_q178_media", "_q179_media",
+    "_q180_index_media", "_q180_batch_media", "_q183_media", "_q184_media",
+    "_q185_media", "_q186_media", "_q187_media", "_q188_media",
+]
+
+
+@pytest.mark.parametrize("builder", _ID_CORPORA)
+def test_id_corpus_is_one_spread_arrow_stage(spark, sf_dir, builder):
+    """Every synthetic media corpus is the documents id frame spread
+    round-robin over defaultParallelism partitions, then ONE
+    mapInPandas: the encode runs on every core, never on the single
+    task of the one-file fixture scan.  q175's builder is inline; its
+    extra range exchange is the presentation orderBy."""
+    from cqs_spark.operators import multimodal_queries as M
+
+    p = _explain(getattr(M, builder)(spark, sf_dir))
+    assert len(re.findall(r"^\(\d+\) MapInPandas$", p, re.M)) == 1
+    spread = re.findall(r"Arguments: RoundRobinPartitioning\((\d+)\)", p)
+    assert spread == [str(spark.sparkContext.defaultParallelism)]
+
+
 def test_q178_metadata_scan_joins_flag_frames_never_blobs(spark, sf_dir):
     """The PII gate's joins run on the per-id FLAG/hash frames — the
     binary column never crosses a shuffle (blobs exist only inside the

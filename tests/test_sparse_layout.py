@@ -1,4 +1,4 @@
-"""Sparse (SPLADE-shape) leg + bucketed layout co-location."""
+"""Bucketed layout co-location."""
 
 from __future__ import annotations
 
@@ -9,37 +9,6 @@ from cqs_spark.index.layout import (
     bucketed_join_is_exchange_free,
     write_bucketed,
 )
-from cqs_spark.index.sparse import encode_corpus, encode_query, sparse_score
-
-
-def test_sparse_encode_expands_synonyms(spark, sf_dir):
-    docs = spark.createDataFrame(
-        [(1, "log the err and continue"), (2, "log the event and continue")],
-        "doc_id long, text string",
-    )
-    enc = encode_corpus(docs, "doc_id", "text", threshold=0.0)
-    # 'err' must activate 'error'/'failure'/'exception' tokens it never
-    # contains (builtin table, src/search/synonyms.rs:20).
-    q = encode_query(spark, "error")
-    scores = {r["id"]: r["score"] for r in sparse_score(enc, q, k=10).collect()}
-    assert 1 in scores and 2 not in scores
-
-
-def test_sparse_score_ranks_surface_above_expansion(spark):
-    docs = spark.createDataFrame(
-        [(1, "error error error stale rows"), (2, "err stale rows")],
-        "doc_id long, text string",
-    )
-    enc = encode_corpus(docs, "doc_id", "text", threshold=0.0)
-    ranked = [r["id"] for r in sparse_score(enc, encode_query(spark, "error"), 2).collect()]
-    assert ranked[0] == 1  # surface match outranks synonym activation
-
-
-def test_sparse_leg_on_documents(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    enc = encode_corpus(docs, "doc_id", "text")
-    top = sparse_score(enc, encode_query(spark, "fast query scan"), k=5).collect()
-    assert len(top) == 5 and top[0]["score"] >= top[-1]["score"]
 
 
 def test_bucketed_join_skips_exchanges(spark, sf_dir):
@@ -61,36 +30,6 @@ def test_bucketed_join_skips_exchanges(spark, sf_dir):
     finally:
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
-def test_learned_expansion_discovers_cooccurring_terms(spark):
-    """NPMI expansion learns that 'backoff' belongs with 'retry' from
-    the corpus alone — no curated synonym table — and the learned
-    encoding activates the neighbor in docs that never contain it."""
-    from cqs_spark.index.sparse import (
-        _token_id,
-        encode_corpus_learned,
-        train_expansion,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [(i, "retry backoff exponential wait") for i in range(6)] + [
-        (10 + i, "parse tree grammar syntax node") for i in range(6)
-    ] + [(100, "retry alone here today")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    exp = train_expansion(df, "doc_id", "text", top_k=2, min_count=3)
-    got = {
-        (r["term"], r["expanded"]): r["mult"] for r in exp.collect()
-    }
-    assert any(t == "retry" and e == "backoff" for t, e in got)
-    assert not any(t == "retry" and e == "grammar" for t, e in got)
-
-    enc = encode_corpus_learned(df, "doc_id", "text", exp, threshold=0.01)
-    backoff_id = spark.range(1).select(
-        _token_id(F.lit("backoff")).alias("t")
-    ).first()["t"]
-    doc100 = {r["token_id"] for r in enc.filter("id = 100").collect()}
-    assert backoff_id in doc100  # activated though the text lacks it
 
 
 def test_engine_bucketed_layout_end_to_end(spark, tmp_path_factory):

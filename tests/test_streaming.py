@@ -8,49 +8,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from cqs_spark.catalog import load_table
-from cqs_spark.operators.eventops import sessionize, tumbling_agg
-from cqs_spark.streaming.windows import (
-    run_available_now,
-    session_counts,
-    stream_events,
-    tumbling_counts,
-)
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, sf_dir, tmp_path_factory):
-    """Events re-written as micro-batch-sized parquet files."""
-    d = tmp_path_factory.mktemp("events_stream")
-    events = load_table(spark, sf_dir, "events")
-    events.repartition(4).write.mode("overwrite").parquet(str(d / "data"))
-    return str(d)
-
-
-def test_tumbling_stream_matches_batch(spark, sf_dir, events_dir):
-    stream = stream_events(spark, f"{events_dir}/data")
-    assert stream.isStreaming
-    out = tumbling_counts(stream, watermark="0 seconds")
-    run_available_now(out, "tumbling_t", f"{events_dir}/ckpt_tumbling")
-    got = spark.sql(
-        "SELECT win_start_sec, event_type, n, sum_value FROM tumbling_t"
-    ).withColumn("sum_value", F.round("sum_value", 4))
-    expect = tumbling_agg(load_table(spark, sf_dir, "events"))
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
-
-
-def test_session_stream_matches_batch_multiset(spark, sf_dir, events_dir):
-    stream = stream_events(spark, f"{events_dir}/data")
-    out = session_counts(stream, watermark="0 seconds")
-    run_available_now(out, "sessions_t", f"{events_dir}/ckpt_sessions")
-    got = spark.sql("SELECT user_id, n_events FROM sessions_t")
-    expect = sessionize(load_table(spark, sf_dir, "events")).select(
-        "user_id", "n_events"
-    )
-    # Session ids differ (ordinal vs window bounds); the per-user
-    # multiset of session sizes must be identical.
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
-
 
 def test_maintain_index_incremental(spark, tmp_path):
     from cqs_spark.streaming.maintain import maintain_index
@@ -71,71 +28,6 @@ def test_maintain_index_incremental(spark, tmp_path):
     t2 = spark.read.parquet(f"{chunks_dir}/chunks.parquet")
     assert {r["name"] for r in t2.select("name").collect()} == {"alpha", "beta"}
     shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_sliding_stream_matches_batch(spark, sf_dir, events_dir):
-    from cqs_spark.streaming.windows import sliding_counts
-
-    stream = stream_events(spark, f"{events_dir}/data")
-    out = sliding_counts(stream, width="1 hour", slide="30 minutes", watermark="0 seconds")
-    run_available_now(out, "sliding_t", f"{events_dir}/ckpt_sliding")
-    got = sorted(
-        map(tuple, spark.sql("SELECT win_start_sec, n FROM sliding_t").collect())
-    )
-    expect = sorted(
-        map(
-            tuple,
-            load_table(spark, sf_dir, "events")
-            .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.unix_timestamp("win.start").alias("s"), "n")
-            .collect(),
-        )
-    )
-    assert got == expect and len(got) > 0
-
-
-def test_dedup_stream_matches_batch_keys(spark, sf_dir, events_dir):
-    from cqs_spark.streaming.windows import dedup_stream
-
-    stream = stream_events(spark, f"{events_dir}/data")
-    out = dedup_stream(stream, keys=("user_id", "event_type"))
-    run_available_now(out, "dedup_t", f"{events_dir}/ckpt_dedup")
-    got = spark.sql("SELECT DISTINCT user_id, event_type FROM dedup_t")
-    expect = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id", "event_type")
-        .distinct()
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
-    # One surviving row per key — the dedup contract itself.
-    n_rows = spark.sql("SELECT COUNT(*) FROM dedup_t").collect()[0][0]
-    assert n_rows == expect.count()
-
-
-def test_interval_join_streams_matches_batch(spark, sf_dir, events_dir):
-    """Stream-stream attribution join (click -> purchase within 1 h):
-    the streaming result must equal the identical join on the static
-    frames — and the time-bound condition is what lets Spark evict
-    join state, so it is part of the contract, not an optimization."""
-    from cqs_spark.streaming.windows import interval_join_streams
-
-    stream = stream_events(spark, f"{events_dir}/data")
-    clicks = stream.filter(F.col("event_type") == "click")
-    buys = stream.filter(F.col("event_type") == "purchase")
-    out = interval_join_streams(clicks, buys, watermark="0 seconds")
-    run_available_now(out, "attrib_t", f"{events_dir}/ckpt_attrib")
-    got = spark.sql("SELECT * FROM attrib_t")
-
-    ev = load_table(spark, sf_dir, "events")
-    static = interval_join_streams(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, static.collect())
-    )
-    assert got.count() > 0  # the corpus actually exercises the join
 
 
 def test_dedup_arrivals_stream(spark, tmp_path):
