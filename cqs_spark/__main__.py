@@ -40,6 +40,45 @@ def _emit(df, limit: int | None = None):
         print(json.dumps(r.asDict(), default=str))
 
 
+def _stream_table(spark, path):
+    """The table a stream drain wrote at ``path``, or None: a drain
+    whose batches were all empty (or an empty arrivals dir) never
+    creates it."""
+    from cqs_spark.streaming.maintain import _fs_exists
+
+    return spark.read.parquet(path) if _fs_exists(spark, path) else None
+
+
+def _print_drift_summary(spark, stats_dir, source_col=None, sources=False):
+    """One JSON line summarizing a drift monitor's stats table: batch
+    count, drifted batch ids and the last row.  ``sources`` adds the
+    ``drift_sources`` key (None unless the stats carry ``source_col``
+    rows)."""
+    stats = _stream_table(spark, stats_dir)
+    if stats is None:
+        print(json.dumps({"batches": 0, "drift_batches": []}))
+        return
+    rows = stats.orderBy(
+        *(["batch_id", "source"] if source_col else ["batch_id"])
+    ).collect()
+    out = {
+        "batches": len({int(r["batch_id"]) for r in rows}),
+        "drift_batches": sorted(
+            {int(r["batch_id"]) for r in rows if r["any_drift"]}
+        ),
+    }
+    if sources:
+        out["drift_sources"] = sorted(
+            {r["source"] for r in rows if r["any_drift"]}
+        ) if source_col else None
+    out["last"] = {
+        k: (round(v, 4) if isinstance(v, float) else v)
+        for k, v in rows[-1].asDict().items()
+        if k not in ("run", "batch")
+    }
+    print(json.dumps(out))
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="cqs_spark")
     p.add_argument("--workdir", default=".cqs_spark_index", help="index table directory")
@@ -683,11 +722,7 @@ def main(argv: list[str] | None = None) -> int:
                 "ratio": round(float(r["ratio"]), 4), "ok": bool(r["ok"]),
             }))
     elif args.cmd == "media-stream":
-        from cqs_spark.streaming.maintain import (
-            _fs_exists,
-            media_arrivals,
-            seed_media_index,
-        )
+        from cqs_spark.streaming.maintain import media_arrivals, seed_media_index
 
         if args.seed is not None:
             seed_media_index(
@@ -701,74 +736,27 @@ def main(argv: list[str] | None = None) -> int:
             window=args.window, max_hamming=args.max_hamming,
             min_shared=args.min_shared,
         )
-        n = (
-            eng.spark.read.parquet(args.output).count()
-            if _fs_exists(eng.spark, args.output)
-            else 0
-        )
-        print(json.dumps({"survivors": n}))
+        out = _stream_table(eng.spark, args.output)
+        print(json.dumps({"survivors": out.count() if out is not None else 0}))
     elif args.cmd == "monitor-stream":
-        from cqs_spark.streaming.maintain import _fs_exists, monitor_arrivals
+        from cqs_spark.streaming.maintain import monitor_arrivals
 
         monitor_arrivals(
             eng.spark, args.arrivals, args.stats_dir, args.checkpoint,
             z_threshold=args.z_threshold, min_history=args.min_history,
             source_col=args.source_col,
         )
-        if _fs_exists(eng.spark, args.stats_dir):
-            rows = (
-                eng.spark.read.parquet(args.stats_dir)
-                .orderBy(
-                    *(["batch_id", "source"] if args.source_col
-                      else ["batch_id"])
-                )
-                .collect()
-            )
-            print(json.dumps({
-                "batches": len({int(r["batch_id"]) for r in rows}),
-                "drift_batches": sorted(
-                    {int(r["batch_id"]) for r in rows if r["any_drift"]}
-                ),
-                "drift_sources": sorted(
-                    {r["source"] for r in rows if r["any_drift"]}
-                ) if args.source_col else None,
-                "last": {
-                    k: (round(v, 4) if isinstance(v, float) else v)
-                    for k, v in rows[-1].asDict().items()
-                    if k not in ("run", "batch")
-                },
-            }))
-        else:
-            print(json.dumps({"batches": 0, "drift_batches": []}))
-    elif args.cmd == "media-monitor":
-        from cqs_spark.streaming.maintain import (
-            _fs_exists,
-            monitor_media_arrivals,
+        _print_drift_summary(
+            eng.spark, args.stats_dir, args.source_col, sources=True
         )
+    elif args.cmd == "media-monitor":
+        from cqs_spark.streaming.maintain import monitor_media_arrivals
 
         monitor_media_arrivals(
             eng.spark, args.arrivals, args.stats_dir, args.checkpoint,
             z_threshold=args.z_threshold, min_history=args.min_history,
         )
-        if _fs_exists(eng.spark, args.stats_dir):
-            rows = (
-                eng.spark.read.parquet(args.stats_dir)
-                .orderBy("batch_id")
-                .collect()
-            )
-            print(json.dumps({
-                "batches": len({int(r["batch_id"]) for r in rows}),
-                "drift_batches": sorted(
-                    {int(r["batch_id"]) for r in rows if r["any_drift"]}
-                ),
-                "last": {
-                    k: (round(v, 4) if isinstance(v, float) else v)
-                    for k, v in rows[-1].asDict().items()
-                    if k not in ("run", "batch")
-                },
-            }))
-        else:
-            print(json.dumps({"batches": 0, "drift_batches": []}))
+        _print_drift_summary(eng.spark, args.stats_dir)
     elif args.cmd == "curate-stream":
         if args.ladder:
             from cqs_spark.streaming.maintain import curate_arrivals
@@ -791,17 +779,8 @@ def main(argv: list[str] | None = None) -> int:
                 eng.spark, args.arrivals, args.index_dir, args.output,
                 args.checkpoint, threshold=args.threshold,
             )
-        # step() never runs on an empty arrivals dir (or all-empty
-        # batches), so the output dir may not exist after a successful
-        # run — read only when it does.
-        from cqs_spark.streaming.maintain import _fs_exists
-
-        n = (
-            eng.spark.read.parquet(args.output).count()
-            if _fs_exists(eng.spark, args.output)
-            else 0
-        )
-        print(json.dumps({"survivors": n}))
+        out = _stream_table(eng.spark, args.output)
+        print(json.dumps({"survivors": out.count() if out is not None else 0}))
     elif args.cmd == "trace":
         path = eng.trace(args.src, args.dst, max_depth=args.depth)
         print(json.dumps({"path": path}))

@@ -51,17 +51,3 @@ def reconcile(listing: DataFrame, registry: DataFrame) -> DataFrame:
         .otherwise("changed")
     )
     return j.select("origin", status.alias("status"))
-
-
-def merge_chunks(
-    existing: DataFrame, fresh: DataFrame, reparsed_origins: DataFrame
-) -> DataFrame:
-    """Upsert semantics without Delta: drop re-parsed origins, append fresh.
-
-    The reference does ON CONFLICT upserts per chunk
-    (src/cli/pipeline/upsert.rs); with parquet tables the equivalent is
-    partition overwrite — remove every chunk of a re-parsed origin,
-    union the fresh parse.  (On Delta this becomes a single MERGE.)
-    """
-    kept = existing.join(reparsed_origins, "origin", "left_anti")
-    return kept.unionByName(fresh)

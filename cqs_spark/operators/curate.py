@@ -561,8 +561,7 @@ def semantic_drift_profile(
     shift (new crawl, model-generated spam) keeps length/stopword/PII
     stats flat while the embedding mass migrates between clusters
     (reference parallel src/drift.rs:51 — index-embedding drift vs a
-    frozen baseline; batch twin of
-    :func:`cqs_spark.streaming.maintain.monitor_semantic_arrivals`).
+    frozen baseline).
 
     Returns one row per (batch, centroid): ``n`` assigned, ``share``
     of the batch, plus the batch-level ``n_hist`` (prior batches),
@@ -576,8 +575,7 @@ def semantic_drift_profile(
     — ``l1_shift = Σ|n_bc·totH − nH_c·totB| / (2·totB·totH)`` with
     bigint numerators, ONE IEEE division at the end, so Spark and
     DuckDB agree bitwise.  Mean cosine-to-centroid (a float mean) is
-    deliberately NOT in this surface; the streaming monitor reports it
-    as advisory only.
+    deliberately NOT in this surface.
 
     Scale shape: one broadcast assignment pass over the corpus, then
     all windows run on the (batches × centroids) grid — thousands of

@@ -3464,9 +3464,8 @@ PIPELINE_ORACLES["q163"] = _q163_sql()
 
 
 def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space drift profile (the semantic monitor leg, batch
-    twin of monitor_semantic_arrivals): 4 batches of 125 vectors plus
-    a planted flood — 40 clones of vec_id 0 forced into the final
+    """Embedding-space drift profile (the semantic monitor leg): 4
+    batches of 125 vectors plus a planted flood — 40 clones of vec_id 0 forced into the final
     batch — shift that batch's centroid-share vector; with the frozen
     mod-50 centroid set (q68's quantizer) the flood batch's
     total-variation shift (0.249) clears the 0.18 threshold while the

@@ -132,17 +132,12 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    with_cos: bool = False,
 ) -> DataFrame:
     """Assign every vector to its nearest centroid: (id, centroid_id).
 
     One broadcast pass over the corpus; ties broken by centroid id.
-    ``with_cos`` keeps the winning cosine as a third column (the
-    semantic drift monitor reports mean cosine-to-assigned-centroid).
     """
-    return _ivf_assign_n(
-        corpus, centroids, id_col, vec_col, 1, with_cos=with_cos
-    )
+    return _ivf_assign_n(corpus, centroids, id_col, vec_col, 1)
 
 
 def _ivf_assign_n(
@@ -151,7 +146,6 @@ def _ivf_assign_n(
     id_col: str,
     vec_col: str,
     n: int,
-    with_cos: bool = False,
 ) -> DataFrame:
     """Top-n nearest centroids per vector: (id, centroid_id) — the
     multi-probe generalization of ivf_assign."""
@@ -159,13 +153,12 @@ def _ivf_assign_n(
     cen = _with_norm(centroids, id_col, vec_col, "c")
     cos = dot("cv", "v") / F.nullif(F.col("cnrm") * F.col("nrm"), F.lit(0.0))
     w = Window.partitionBy("id").orderBy(F.desc("cos"), "centroid_id")
-    out_cols = ["id", "centroid_id"] + (["cos"] if with_cos else [])
     return (
         c.join(F.broadcast(cen))
         .select("id", F.col("cid").alias("centroid_id"), cos.alias("cos"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n)
-        .select(*out_cols)
+        .select("id", "centroid_id")
     )
 
 

@@ -1,9 +1,10 @@
-"""Structured Streaming surface: incremental index + arrival curation.
+"""Structured Streaming surface: the arrival ladders.
 
-The reference's only stream is the watch daemon (FS events → debounce →
-incremental reindex + periodic reconcile, src/cli/watch/);
-cqs_spark.streaming.maintain holds its twin plus the arrival ladders
-(dedup, curate, monitor), each tested against its batch ladder.  The
+cqs_spark.streaming.maintain drains arriving parquet files through the
+dedup, curate, media-dedup and drift-monitor ladders, each tested
+against its batch twin.  The reference's only stream, the watch daemon
+(FS events → debounce → incremental reindex + periodic reconcile,
+src/cli/watch/), has its batch twin in ``Engine.refresh``.  The
 event-time operators are batch-only (cqs_spark.operators.eventops,
 oracle-checked as q37–q39).
 """

@@ -1,16 +1,27 @@
-"""Streaming incremental index maintenance (the watch-daemon twin).
+"""The arrival ladders: streaming twins of the batch curation operators.
 
-The reference's watch loop — FS events → debounce → reindex changed
-files, with a periodic reconcile sweep (src/cli/watch/reconcile.rs:1-14)
-— maps to a file-source stream of new/changed files drained with
-``foreachBatch``: each micro-batch re-parses its files and upserts the
-chunks table via the same merge the batch reconcile path uses
-(cqs_spark.index.incremental.merge_chunks).
+Each ladder drains a directory of arriving parquet files, one file per
+micro-batch, against staged state under an index or stats directory:
+``dedup_arrivals`` (near dedup), ``curate_arrivals`` (the full curation
+ladder), ``monitor_arrivals`` (quality drift), ``media_arrivals``
+(perceptual media dedup) and ``monitor_media_arrivals`` (media-feed
+drift).  ``seed_staged_index`` and ``seed_media_index`` write the day-0
+state a ladder starts from.
 
-foreachBatch (not a plain sink) because the upsert is a multi-step
-batch job: parse → window → identity → merge — exactly-once per batch
-via the checkpoint, at-least-once overall with the periodic reconcile
-as the repair sweep (the reference's same trade).
+:func:`_drain` runs every ladder's stream.  It reads the arrivals with a
+fixed schema, skips empty micro-batches, resolves the stream
+incarnation's run id from the checkpoint, stages the batch eagerly and
+hands it to the ladder's step, then stops once the backlog is drained
+(``availableNow``).  foreachBatch is at-least-once: a crash after a
+step's writes but before the streaming commit replays the batch.  Steps
+converge anyway because every write is an overwrite of the run's own
+``run=<id>/batch=N`` slice (:func:`_write_batch_slice`) and every read
+of staged state excludes that slice (:func:`_read_staged`) — so each
+batch lands exactly once per checkpoint.
+
+The reference's watch daemon (FS events, incremental reindex, periodic
+reconcile; src/cli/watch/reconcile.rs) has its batch twin in
+``Engine.refresh``, not here.
 """
 
 from __future__ import annotations
@@ -20,79 +31,41 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from cqs_spark.staging import stage
 
 
-BINARY_FILE_DDL = (
-    "path string, modificationTime timestamp, length long, content binary"
-)
-
-
-def stream_corpus(spark: SparkSession, root: str, glob: str = "*.py") -> DataFrame:
-    """File-source stream of raw files (binary content + path)."""
-    return (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_DDL)
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(root)
-    )
-
-
-def maintain_index(
-    spark: SparkSession,
-    corpus_root: str,
-    chunks_dir: str,
-    checkpoint_dir: str,
-    glob: str = "*.py",
-    available_now: bool = True,
-):
-    """Start (or drain) the incremental index maintenance stream.
-
-    Every micro-batch: parse the batch's files, replace those origins
-    in the chunks table.  ``available_now=True`` processes the backlog
-    and stops — the scheduled-batch mode; False leaves it running.
-    """
-    from cqs_spark.index.incremental import merge_chunks
-    from cqs_spark.index.ingest import build_chunks
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        fresh = build_chunks(batch)
-        origins = batch.select(F.col("path").alias("origin")).distinct()
-        try:
-            existing = spark.read.parquet(f"{chunks_dir}/chunks.parquet")
-            merged = merge_chunks(existing, fresh, origins)
-        except Exception:  # first batch: no table yet
-            merged = fresh
-        # Write-then-swap keeps the read path consistent (poor-man's
-        # atomic commit; Delta MERGE replaces this on a real deployment).
-        merged.write.mode("overwrite").parquet(f"{chunks_dir}/chunks_new.parquet")
-        import shutil
-
-        shutil.rmtree(f"{chunks_dir}/chunks.parquet", ignore_errors=True)
-        shutil.move(f"{chunks_dir}/chunks_new.parquet", f"{chunks_dir}/chunks.parquet")
-
-    writer = (
-        stream_corpus(spark, corpus_root, glob)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``.  os.path only sees the
+    driver's LOCAL disk, so it would read a remote (hdfs://, s3a://)
+    staged index as permanently absent — silently disabling dedup every
+    batch.  The Hadoop FileSystem resolves whatever filesystem the
+    path's scheme names, exactly like the reads and writes themselves."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem API: os.path only sees
-    the driver's LOCAL disk, so it would read a remote (hdfs://,
-    s3a://) staged index as permanently absent — silently disabling
-    dedup every batch.  The Hadoop check resolves whatever filesystem
-    the path's scheme names, exactly like the read itself will."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, path)
     return fs.exists(hpath)
+
+
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """The small UTF-8 text file at ``path``, or None when absent."""
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Create or overwrite the small UTF-8 text file at ``path``."""
+    fs, hpath = _fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
 
 
 def _run_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -115,15 +88,8 @@ def _run_id(spark: SparkSession, checkpoint_dir: str) -> str:
     import hashlib
     import json
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/metadata")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        stream = fs.open(hpath)
-        try:
-            data = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
+    data = _read_text(spark, f"{checkpoint_dir}/metadata")
+    if data is not None:
         try:
             rid = json.loads(data).get("id")
             if rid:
@@ -142,8 +108,7 @@ def _migrate_legacy_slices(spark: SparkSession, root: str) -> None:
     name can never equal a metadata uuid, so migrated state is always
     visible to every new run's replay exclusion."""
     jvm = spark._jvm
-    hroot = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hroot.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hroot = _fs(spark, root)
     if not fs.exists(hroot):
         return
     legacy = [
@@ -226,6 +191,44 @@ def _write_batch_slice(
     df.write.mode("overwrite").parquet(f"{root}/run={run_id}/batch={batch_id}")
 
 
+def _drain(
+    spark: SparkSession,
+    arrivals_root: str,
+    schema: str,
+    checkpoint_dir: str,
+    step,
+) -> None:
+    """Drain the arrival backlog at ``arrivals_root`` (parquet files
+    with ``schema``, one file per micro-batch) through
+    ``step(batch, batch_id, run_id)`` and stop.
+
+    Empty micro-batches never reach ``step``.  The run id is resolved
+    once, at the first non-empty batch — the checkpoint metadata exists
+    by then.  The batch reaches ``step`` eagerly staged, so every
+    consumer in the step reads one materialization.  Replay safety is
+    the step's contract: write only through :func:`_write_batch_slice`
+    and read staged state only through :func:`_read_staged`."""
+    rid_cache: list[str] = []
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if not batch.take(1):
+            return
+        if not rid_cache:
+            rid_cache.append(_run_id(spark, checkpoint_dir))
+        step(stage(batch, eager=True), batch_id, rid_cache[0])
+
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(arrivals_root)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def _check_unit_marker(
     spark: SparkSession, index_dir: str, unit: str, k: int = 8
 ) -> None:
@@ -268,17 +271,10 @@ def _check_unit_marker(
         legacy_ok = {f"passage:k={k}"} | ({"passage"} if k == 8 else set())
     else:
         legacy_ok = {unit}
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/grams_unit")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        stream = fs.open(hpath)
-        try:
-            prev = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            ).strip()
-        finally:
-            stream.close()
+    path = f"{index_dir}/grams_unit"
+    prev = _read_text(spark, path)
+    if prev is not None:
+        prev = prev.strip()
         if prev == marker or not prev:
             return
         if prev not in legacy_ok:
@@ -299,11 +295,7 @@ def _check_unit_marker(
             UserWarning,
             stacklevel=2,
         )
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(marker.encode("utf-8")))
-    finally:
-        out.close()
+    _write_text(spark, path, marker)
 
 
 def seed_staged_index(
@@ -394,7 +386,6 @@ def dedup_arrivals(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    available_now: bool = True,
 ):
     """Streaming arrival near-dedup: the incremental MinHash pass as a
     continuously-maintained pipeline.
@@ -412,8 +403,7 @@ def dedup_arrivals(
     batch here; a deployment refreshes the staged hub table in the
     periodic reconcile sweep instead, like chunk staleness.  Ids must
     arrive monotonically increasing (append-only arrival log).
-    foreachBatch gives exactly-once per batch via the checkpoint, the
-    same contract as maintain_index.
+    :func:`_drain` gives exactly-once per batch via the checkpoint.
     """
     import os
 
@@ -428,15 +418,8 @@ def dedup_arrivals(
     bd_p = os.path.join(index_dir, "bands")
     for p in (sh_p, bd_p, out_dir):
         _migrate_legacy_slices(spark, p)
-    rid_cache: list[str] = []
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        if not rid_cache:  # checkpoint metadata exists once we're here
-            rid_cache.append(_run_id(spark, checkpoint_dir))
-        rid = rid_cache[0]
-        batch = stage(batch, eager=True)
+    def step(batch: DataFrame, batch_id: int, rid: str) -> None:
         # Staged reads exclude this run's own slice for this batch
         # (_read_staged): replay safety.  Per-table checks: batch
         # slices are overwrite-idempotent, so a crash that staged
@@ -475,19 +458,10 @@ def dedup_arrivals(
             rid,
         )
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
+    _drain(
+        spark, arrivals_root, f"{id_col} long, {text_col} string",
+        checkpoint_dir, step,
     )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
 
 
 def curate_arrivals(
@@ -510,7 +484,6 @@ def curate_arrivals(
     exactsubstr: str | None = None,
     exactsubstr_k: int = 8,
     flag_injection: bool = False,
-    available_now: bool = True,
 ):
     """The FULL curation ladder as a continuously-maintained stream —
     the streaming twin of :func:`cqs_spark.operators.curate.curate`.
@@ -593,15 +566,8 @@ def curate_arrivals(
         (report_dir,) if report_dir is not None else ()
     ):
         _migrate_legacy_slices(spark, p)
-    rid_cache: list[str] = []
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        if not rid_cache:  # checkpoint metadata exists once we're here
-            rid_cache.append(_run_id(spark, checkpoint_dir))
-        rid = rid_cache[0]
-        batch = stage(batch, eager=True)
+    def step(batch: DataFrame, batch_id: int, rid: str) -> None:
         flagged = stage(
             gate_flags(
                 batch, id_col, text_col,
@@ -772,19 +738,10 @@ def curate_arrivals(
                 rid,
             )
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {text_col} string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
+    _drain(
+        spark, arrivals_root, f"{id_col} long, {text_col} string",
+        checkpoint_dir, step,
     )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
 
 
 _REPORT_KEYS = (
@@ -797,6 +754,16 @@ _REPORT_KEYS = (
 # batch drift twin — the monitor and curate.drift_profile cannot drift.
 from cqs_spark.operators.curate import _DRIFT_METRICS as _MONITOR_METRICS  # noqa: E402
 
+
+def _history_aggs(metrics: tuple) -> list:
+    """The history statistics :func:`_zscore_flag` reads: row count
+    ``_n``, and per metric the mean ``_mu_<m>`` and population standard
+    deviation ``_sd_<m>``."""
+    return [
+        F.count(F.lit(1)).alias("_n"),
+        *[F.avg(m).alias(f"_mu_{m}") for m in metrics],
+        *[F.stddev_pop(m).alias(f"_sd_{m}") for m in metrics],
+    ]
 
 
 def _zscore_flag(
@@ -835,7 +802,6 @@ def monitor_arrivals(
     z_threshold: float = 3.0,
     min_history: int = 3,
     source_col: str | None = None,
-    available_now: bool = True,
 ):
     """Streaming corpus-quality DRIFT MONITOR — the ops layer of the
     arrival pipeline: each micro-batch computes an aggregate quality
@@ -882,11 +848,7 @@ def monitor_arrivals(
         + ", any_drift boolean"
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        rid = _run_id(spark, checkpoint_dir)
-        batch = stage(batch, eager=True)
+    def step(batch: DataFrame, batch_id: int, rid: str) -> None:
         per_doc = profile_per_doc(batch, id_col, text_col)
         # (source key, profile dict) — '__all__' is the whole batch.
         all_row = per_doc.agg(*metric_aggs).first()  # ONE action
@@ -935,11 +897,7 @@ def monitor_arrivals(
             + _MONITOR_METRICS,
             rid,
         )
-        stat_aggs = [
-            F.count(F.lit(1)).alias("_n"),
-            *[F.avg(m).alias(f"_mu_{m}") for m in _MONITOR_METRICS],
-            *[F.stddev_pop(m).alias(f"_sd_{m}") for m in _MONITOR_METRICS],
-        ]
+        stat_aggs = _history_aggs(_MONITOR_METRICS)
         if source_col is not None:
             by_key = {
                 r["source"]: r
@@ -971,140 +929,7 @@ def monitor_arrivals(
     arrival_schema = f"{id_col} long, " + (
         f"{source_col} string, " if source_col is not None else ""
     ) + f"{text_col} string"
-    stream = (
-        spark.readStream.schema(arrival_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
-    )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
-
-
-def monitor_semantic_arrivals(
-    spark: SparkSession,
-    arrivals_root: str,
-    centroids: DataFrame,
-    stats_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    shift_threshold: float = 0.25,
-    min_history: int = 1,
-    available_now: bool = True,
-):
-    """Streaming EMBEDDING-SPACE drift monitor — the semantic leg the
-    surface monitor (:func:`monitor_arrivals`) is blind to: a
-    paraphrase-level corpus shift (a new crawl, model-generated spam)
-    keeps length/stopword/PII statistics flat while the embedding mass
-    migrates between clusters.  Each micro-batch of arriving
-    embeddings is assigned to a FROZEN centroid set (one broadcast
-    pass — the centroids are the contract: refitting them per batch
-    would absorb exactly the drift being measured; reference parallel
-    src/drift.rs:51, drift vs a frozen baseline), the batch's
-    per-centroid assignment counts append to a staged stats table, and
-    the batch flags when the total-variation distance between its
-    share vector and the POOLED prior batches' exceeds
-    ``shift_threshold`` (needs ``min_history`` prior batches).
-
-    Math is shared with the oracle-gated batch twin
-    (:func:`cqs_spark.operators.curate.semantic_drift_profile`, q164):
-    integer cross-multiplied L1 — ``Σ|n_bc·totH − nH_c·totB| /
-    (2·totB·totH)`` — so the two cannot drift.  ``mean_cos`` (mean
-    cosine to the assigned centroid) is recorded per batch as an
-    ADVISORY column only: a float mean is not oracle-stable (the q157
-    lesson) and a uniform outward drift shows up there before the
-    share vector moves.
-
-    Stats rows are run/batch-scoped slices like every staged table
-    (replay excludes the batch's own rows).  Per batch the monitor
-    costs one assignment pass over the batch and one read of the
-    (batches × centroids — tiny) stats table; the per-centroid counts
-    are driver-collected, bounded by the CENTROID count, never by
-    arrivals.
-    """
-    from cqs_spark.operators.vectorops import ivf_assign
-
-    cen = stage(centroids, eager=True)
-    cids = sorted(
-        r["_cid"]
-        for r in cen.select(
-            F.col(id_col).cast("long").alias("_cid")
-        ).collect()
-    )
-    row_schema = (
-        "batch_id long, centroid_id long, n long, mean_cos double, "
-        "l1_shift double, any_drift boolean"
-    )
-
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        rid = _run_id(spark, checkpoint_dir)
-        batch = stage(batch, eager=True)
-        asg = ivf_assign(batch, cen, id_col, vec_col, with_cos=True)
-        got = asg.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("cos").alias("_cs")
-        ).collect()
-        n_b = {int(r["centroid_id"]): int(r["n"]) for r in got}
-        tot_b = sum(n_b.values())
-        mean_cos = (
-            sum(float(r["_cs"] or 0.0) for r in got) / tot_b
-            if tot_b else 0.0
-        )
-
-        hist = _read_staged(
-            spark, stats_dir, batch_id, row_schema,
-            ("batch_id", "centroid_id", "n"), rid,
-        )
-        hrows = hist.groupBy("centroid_id").agg(
-            F.sum("n").alias("hn"),
-            F.countDistinct("batch_id").alias("hb"),
-        ).collect()
-        n_h = {int(r["centroid_id"]): int(r["hn"] or 0) for r in hrows}
-        n_hist = max((int(r["hb"]) for r in hrows), default=0)
-        tot_h = sum(n_h.values())
-
-        # Integer cross-multiplied total variation — the q164 math.
-        l1_num = sum(
-            abs(n_b.get(c, 0) * tot_h - n_h.get(c, 0) * tot_b)
-            for c in cids
-        )
-        l1_shift = (
-            l1_num / (2.0 * float(tot_b * tot_h))
-            if tot_b and tot_h else 0.0
-        )
-        drift = n_hist >= min_history and l1_shift > shift_threshold
-        rows = [
-            (
-                int(batch_id), int(c), int(n_b.get(c, 0)),
-                float(mean_cos), float(l1_shift), bool(drift),
-            )
-            for c in cids
-        ]
-        _write_batch_slice(
-            spark.createDataFrame(rows, row_schema), stats_dir, batch_id, rid
-        )
-
-    _migrate_legacy_slices(spark, stats_dir)
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {vec_col} array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
-    )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
+    _drain(spark, arrivals_root, arrival_schema, checkpoint_dir, step)
 
 
 def _check_media_marker(
@@ -1133,31 +958,17 @@ def _check_media_marker(
     }.get(kind)
     if marker is None:
         raise ValueError(f"unknown media kind {kind!r}")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{index_dir}/sigs_kind")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        stream = fs.open(hpath)
-        try:
-            prev = jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            ).strip()
-        finally:
-            stream.close()
-        if prev and prev != marker:
-            raise ValueError(
-                f"media index_dir {index_dir} was seeded with {prev!r}; "
-                f"refusing to mix with {marker!r} (staged signatures are "
-                "not interchangeable across fingerprint families; re-seed "
-                "a fresh index_dir to change them)"
-            )
-        if prev == marker:
-            return
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(marker.encode("utf-8")))
-    finally:
-        out.close()
+    path = f"{index_dir}/sigs_kind"
+    prev = (_read_text(spark, path) or "").strip()
+    if prev and prev != marker:
+        raise ValueError(
+            f"media index_dir {index_dir} was seeded with {prev!r}; "
+            f"refusing to mix with {marker!r} (staged signatures are "
+            "not interchangeable across fingerprint families; re-seed "
+            "a fresh index_dir to change them)"
+        )
+    if prev != marker:
+        _write_text(spark, path, marker)
 
 
 def seed_media_index(
@@ -1205,7 +1016,6 @@ def media_arrivals(
     max_hamming: int = 2,
     max_bucket: int | None = 500,
     min_shared: int = 3,
-    available_now: bool = True,
 ):
     """Streaming perceptual media dedup: each micro-batch of arriving
     image/audio blobs (parquet file stream, one file per trigger) runs
@@ -1242,15 +1052,8 @@ def media_arrivals(
     sg_p = os.path.join(index_dir, "sigs")
     _migrate_legacy_slices(spark, sg_p)
     _check_media_marker(spark, index_dir, kind, method, frames, window)
-    rid_cache: list[str] = []
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        if not rid_cache:
-            rid_cache.append(_run_id(spark, checkpoint_dir))
-        rid = rid_cache[0]
-        batch = stage(batch, eager=True)
+    def step(batch: DataFrame, batch_id: int, rid: str) -> None:
         isigs = _read_staged(
             spark, sg_p, batch_id, f"{id_col} long, simhash long",
             (id_col, "simhash"), rid,
@@ -1292,19 +1095,10 @@ def media_arrivals(
             sigs_b.join(dups, id_col, "left_anti"), sg_p, batch_id, rid
         )
 
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {data_col} binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
+    _drain(
+        spark, arrivals_root, f"{id_col} long, {data_col} binary",
+        checkpoint_dir, step,
     )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
 
 
 #: Media-monitor metrics: one header-walk pass, no pixel decode — the
@@ -1326,7 +1120,6 @@ def monitor_media_arrivals(
     data_col: str = "data",
     z_threshold: float = 3.0,
     min_history: int = 3,
-    available_now: bool = True,
 ):
     """Streaming MEDIA-feed drift monitor — the media twin of
     :func:`monitor_arrivals`: each micro-batch of arriving blobs
@@ -1353,11 +1146,7 @@ def monitor_media_arrivals(
         + ", any_drift boolean"
     )
 
-    def step(batch: DataFrame, batch_id: int) -> None:
-        if not batch.take(1):
-            return
-        rid = _run_id(spark, checkpoint_dir)
-        batch = stage(batch, eager=True)
+    def step(batch: DataFrame, batch_id: int, rid: str) -> None:
         sizes = batch.select(
             F.col(id_col), (F.length(data_col) / 1024.0).alias("_kb")
         )
@@ -1390,14 +1179,7 @@ def monitor_media_arrivals(
             spark, stats_dir, batch_id, row_schema,
             ("batch_id",) + _MEDIA_MONITOR_METRICS, rid,
         )
-        stats = hist.agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[F.avg(m).alias(f"_mu_{m}") for m in _MEDIA_MONITOR_METRICS],
-            *[
-                F.stddev_pop(m).alias(f"_sd_{m}")
-                for m in _MEDIA_MONITOR_METRICS
-            ],
-        ).first()
+        stats = hist.agg(*_history_aggs(_MEDIA_MONITOR_METRICS)).first()
         flagged = _zscore_flag(
             prof, stats, _MEDIA_MONITOR_METRICS, min_history, z_threshold
         )
@@ -1411,16 +1193,7 @@ def monitor_media_arrivals(
         )
 
     _migrate_legacy_slices(spark, stats_dir)
-    stream = (
-        spark.readStream.schema(f"{id_col} long, {data_col} binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals_root)
+    _drain(
+        spark, arrivals_root, f"{id_col} long, {data_col} binary",
+        checkpoint_dir, step,
     )
-    writer = stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()

@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cqs_spark.index.incremental import merge_chunks, reconcile
+from cqs_spark.index.incremental import reconcile
 from cqs_spark.index.ingest import build_chunks, list_files, registry_of, with_identity
 from cqs_spark.index.postings import build_postings, keyword_search
 from cqs_spark.index.reuse import embed_with_cache
@@ -200,20 +200,6 @@ def test_incremental_reconcile(spark):
     assert rec[first] == "changed"
     assert rec[second] == "deleted"
     assert {o for o, st in rec.items() if st != "unchanged"} == {first, second}
-
-
-def test_merge_chunks_replaces_reparsed_origin(spark, chunks):
-    origin = chunks.select("origin").first()["origin"]
-    reparsed = spark.createDataFrame([(origin,)], ["origin"])
-    fresh = chunks.filter(F.col("origin") == origin).withColumn(
-        "name", F.lit("REPLACED")
-    )
-    merged = merge_chunks(chunks, fresh, reparsed)
-    assert merged.count() == chunks.count()
-    names = {
-        r["name"] for r in merged.filter(F.col("origin") == origin).select("name").collect()
-    }
-    assert names == {"REPLACED"}
 
 
 def test_methods_extracted_with_parent_type(spark):

@@ -3,9 +3,9 @@
 Durable mode (``staging.durable(dir)``) must give the same rows as the
 default localCheckpoint staging for every family that stages — graph
 traversal, triangle counting, the MinHash ladder, the persisted LSH
-index and an eager textops site — and must write its ``stage_*``
-tables only inside the context.  A source scan pins every staging
-call behind ``staging.stage``.
+index, an eager textops site and the ``dedup_arrivals`` stream — and
+must write its ``stage_*`` tables only inside the context.  A source
+scan pins every staging call behind ``staging.stage``.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ def test_local_checkpoint_only_in_staging_module():
     assert not offenders, f"stage through cqs_spark.staging.stage: {offenders}"
 
 
-def _bfs(spark):
+def _bfs(spark, work):
     from cqs_spark.operators.graph import bfs
 
     edges = spark.createDataFrame(
@@ -42,7 +42,7 @@ def _bfs(spark):
     return bfs(edges, seeds, 4)
 
 
-def _triangle_count(spark):
+def _triangle_count(spark, work):
     from cqs_spark.operators.graph import triangle_count
 
     edges = spark.createDataFrame(
@@ -52,7 +52,7 @@ def _triangle_count(spark):
     return triangle_count(edges)
 
 
-def _minhash_dedup(spark):
+def _minhash_dedup(spark, work):
     from cqs_spark.operators.dedup import minhash_dedup
 
     words = [f"w{i}" for i in range(60)]
@@ -61,7 +61,7 @@ def _minhash_dedup(spark):
     return minhash_dedup(df, "doc_id", "text")
 
 
-def _lsh_index(spark):
+def _lsh_index(spark, work):
     from cqs_spark.operators.dedup import build_lsh_index, incremental_minhash
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
@@ -80,7 +80,7 @@ def _lsh_index(spark):
     )
 
 
-def _passage_scrub(spark):
+def _passage_scrub(spark, work):
     from cqs_spark.operators.textops import passage_scrub
 
     shared = "one two three four five six seven eight nine ten"
@@ -92,12 +92,41 @@ def _passage_scrub(spark):
     return passage_scrub(docs, "doc_id", "text", k=4)
 
 
+def _dedup_arrivals(spark, work):
+    """Two arrival files with one cross-file clone, drained into fresh
+    dirs under ``work``.  The durable context is a module global, so
+    the foreachBatch callback thread stages durably too."""
+    import glob
+    import shutil
+
+    from cqs_spark.streaming.maintain import dedup_arrivals
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
+    arr = work / "arrivals"
+    arr.mkdir(parents=True)
+    for name, rows in (
+        ("f1.parquet", [(1, base), (2, "lorem ipsum dolor sit amet " * 3)]),
+        ("f2.parquet", [(10, base), (11, "fresh words about parquet streams")]),
+    ):
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("overwrite").parquet(str(work / "tmp"))
+        shutil.copy(glob.glob(str(work / "tmp" / "*.parquet"))[0], str(arr / name))
+    out = str(work / "out")
+    dedup_arrivals(
+        spark, str(arr), str(work / "index"), out, str(work / "ckpt")
+    )
+    # run= differs per checkpoint; compare the survivors themselves.
+    return spark.read.parquet(out).select("doc_id", "text")
+
+
 CASES = {
     "bfs": _bfs,
     "triangle_count": _triangle_count,
     "minhash_dedup": _minhash_dedup,
     "lsh_index": _lsh_index,
     "passage_scrub": _passage_scrub,
+    "dedup_arrivals": _dedup_arrivals,
 }
 
 
@@ -115,14 +144,14 @@ def _stage_dirs(d):
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_durable_matches_local(spark, tmp_path, case):
     build = CASES[case]
-    local = _rows(build(spark))
+    local = _rows(build(spark, tmp_path / "local"))
     assert local, "case must produce rows to compare"
     stage_dir = str(tmp_path)
     with staging.durable(stage_dir):
         with pytest.raises(RuntimeError):
             with staging.durable(str(tmp_path / "nested")):
                 pass
-        durable = _rows(build(spark))
+        durable = _rows(build(spark, tmp_path / "durable"))
     assert durable == local
     written = _stage_dirs(stage_dir)
     assert written, "durable mode wrote no stage tables"

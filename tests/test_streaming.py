@@ -2,32 +2,8 @@
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
-
-
-def test_maintain_index_incremental(spark, tmp_path):
-    from cqs_spark.streaming.maintain import maintain_index
-
-    corpus = tmp_path / "corpus"
-    corpus.mkdir()
-    (corpus / "a.py").write_text("def alpha():\n    return 1\n")
-    chunks_dir, ckpt = str(tmp_path / "idx"), str(tmp_path / "ckpt")
-    os.makedirs(chunks_dir, exist_ok=True)
-
-    maintain_index(spark, str(corpus), chunks_dir, ckpt)
-    t1 = spark.read.parquet(f"{chunks_dir}/chunks.parquet")
-    assert {r["name"] for r in t1.select("name").collect()} == {"alpha"}
-
-    # New file arrives; only it is processed (checkpoint skips a.py).
-    (corpus / "b.py").write_text("def beta():\n    return 2\n")
-    maintain_index(spark, str(corpus), chunks_dir, ckpt)
-    t2 = spark.read.parquet(f"{chunks_dir}/chunks.parquet")
-    assert {r["name"] for r in t2.select("name").collect()} == {"alpha", "beta"}
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_dedup_arrivals_stream(spark, tmp_path):
@@ -961,78 +937,6 @@ def test_monitor_media_arrivals_flags_pii_and_garbage_floods(spark, tmp_path):
     assert not any(rows[b]["any_drift"] for b in range(4))
     assert rows[4]["any_drift"] and rows[4]["pii_ratio"] == 1.0
     assert rows[5]["any_drift"] and rows[5]["recognized_ratio"] == 0.0
-
-
-def test_monitor_semantic_arrivals_flags_embedding_flood(spark, tmp_path):
-    """The SEMANTIC drift monitor: batches whose centroid-assignment
-    shares match history stay quiet; a batch flooded onto one cluster
-    flags within that batch.  The surface monitor is blind to this —
-    the flood vectors are ordinary-looking rows; only the embedding
-    mass moved.  Also pins streaming == batch twin: the per-batch
-    l1_shift/drift values reproduce q164's semantic_drift_profile on
-    the unioned corpus."""
-    from pyspark.sql import functions as F
-
-    from cqs_spark.operators.curate import semantic_drift_profile
-    from cqs_spark.streaming.maintain import monitor_semantic_arrivals
-
-    e1, e2 = [1.0, 0.0], [0.0, 1.0]
-    schema = "vec_id long, embedding array<double>"
-    batches = [
-        [(0, e1), (1, e1), (2, e2), (3, e2)],      # balanced
-        [(10, e1), (11, e1), (12, e2), (13, e2)],  # balanced again
-        [(20 + i, e1) for i in range(8)],          # flood onto c1
-    ]
-    arr = tmp_path / "arrivals"
-    arr.mkdir()
-    for b, rows in enumerate(batches):
-        _plant_arrival(
-            spark, tmp_path, arr, f"f{b}.parquet", rows, schema=schema
-        )
-    centroids = spark.createDataFrame([(100, e1), (200, e2)], schema)
-    stats = str(tmp_path / "stats")
-    monitor_semantic_arrivals(
-        spark, str(arr), centroids, stats, str(tmp_path / "ckpt"),
-        shift_threshold=0.25, min_history=1,
-    )
-    got = spark.read.parquet(stats)
-    per_batch = {
-        r["batch_id"]: r
-        for r in got.select(
-            "batch_id", "l1_shift", "any_drift", "mean_cos"
-        ).distinct().collect()
-    }
-    assert set(per_batch) == {0, 1, 2}
-    assert not per_batch[0]["any_drift"]          # no history yet
-    assert not per_batch[1]["any_drift"]          # identical shares
-    assert per_batch[1]["l1_shift"] == 0.0
-    assert per_batch[2]["any_drift"]              # flood flags at once
-    assert per_batch[2]["l1_shift"] == 0.5        # (1,0) vs (.5,.5) TV
-    assert per_batch[2]["mean_cos"] == 1.0        # exact cluster members
-    counts = {
-        (r["batch_id"], r["centroid_id"]): r["n"] for r in got.collect()
-    }
-    assert counts[(2, 100)] == 8 and counts[(2, 200)] == 0
-
-    # Streaming == batch twin on the SAME corpus.
-    union = spark.createDataFrame(
-        [(b, vid, v) for b, rows in enumerate(batches) for vid, v in rows],
-        "batch long, vec_id long, embedding array<double>",
-    )
-    twin = semantic_drift_profile(
-        union, centroids, "batch", "vec_id", "embedding",
-        shift_threshold=0.25, min_history=1,
-    )
-    twin_rows = {
-        (r["batch"], r["centroid_id"]): r for r in twin.collect()
-    }
-    for (b, c), n in counts.items():
-        # centroid ids in the twin come from the same centroids frame
-        assert twin_rows[(b, c)]["n"] == n
-        assert twin_rows[(b, c)]["drift"] == per_batch[b]["any_drift"]
-        assert abs(
-            twin_rows[(b, c)]["l1_shift"] - per_batch[b]["l1_shift"]
-        ) < 1e-12
 
 
 def test_media_arrivals_stream(spark, tmp_path):
