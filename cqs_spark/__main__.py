@@ -14,6 +14,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import time
 
 
 def _engine(args):
@@ -34,12 +35,6 @@ def _engine(args):
     return Engine(spark, wd)
 
 
-def _emit(df, limit: int | None = None):
-    rows = df.collect() if limit is None else df.limit(limit).collect()
-    for r in rows:
-        print(json.dumps(r.asDict(), default=str))
-
-
 def _stream_table(spark, path):
     """The table a stream drain wrote at ``path``, or None: a drain
     whose batches were all empty (or an empty arrivals dir) never
@@ -49,15 +44,14 @@ def _stream_table(spark, path):
     return spark.read.parquet(path) if _fs_exists(spark, path) else None
 
 
-def _print_drift_summary(spark, stats_dir, source_col=None, sources=False):
-    """One JSON line summarizing a drift monitor's stats table: batch
-    count, drifted batch ids and the last row.  ``sources`` adds the
+def _drift_summary(spark, stats_dir, source_col=None, sources=False) -> dict:
+    """The summary of a drift monitor's stats table: batch count,
+    drifted batch ids and the last row.  ``sources`` adds the
     ``drift_sources`` key (None unless the stats carry ``source_col``
     rows)."""
     stats = _stream_table(spark, stats_dir)
     if stats is None:
-        print(json.dumps({"batches": 0, "drift_batches": []}))
-        return
+        return {"batches": 0, "drift_batches": []}
     rows = stats.orderBy(
         *(["batch_id", "source"] if source_col else ["batch_id"])
     ).collect()
@@ -76,10 +70,64 @@ def _print_drift_summary(spark, stats_dir, source_col=None, sources=False):
         for k, v in rows[-1].asDict().items()
         if k not in ("run", "batch")
     }
-    print(json.dumps(out))
+    return out
 
 
-def main(argv: list[str] | None = None) -> int:
+def _ladder_opts(s) -> None:
+    """The curation-ladder options of ``curate`` and ``curate-stream
+    --ladder``; :func:`_ladder_kwargs` turns them into the keyword
+    arguments both ``curate`` and ``curate_arrivals`` take."""
+    s.add_argument("--langs", default="en", help="comma-separated keep list")
+    s.add_argument("--min-quality", type=float, default=0.3)
+    s.add_argument("--min-lang-confidence", type=float, default=0.0,
+                   help="reject docs whose predicted language holds less "
+                   "than this share of the stopword evidence (q142 score)")
+    s.add_argument("--exactsubstr", choices=["passage", "sentence"],
+                   default=None,
+                   help="strip duplicate spans (passage) or sentences: "
+                   "cross-doc after near dedup, or (curate-stream) "
+                   "already seen in prior survivors")
+    s.add_argument("--no-pii-scrub", action="store_true")
+    s.add_argument("--flag-injection", action="store_true",
+                   help="also cut docs carrying a line-leading prompt-"
+                   "injection directive (q163 leading_directive)")
+
+
+def _ladder_kwargs(args) -> dict:
+    return dict(
+        keep_langs=tuple(l for l in args.langs.split(",") if l),
+        min_quality=args.min_quality,
+        min_lang_confidence=args.min_lang_confidence,
+        exactsubstr=args.exactsubstr,
+        scrub_pii=not args.no_pii_scrub,
+        flag_injection=args.flag_injection,
+    )
+
+
+def _media_opts(s) -> None:
+    """The fingerprint options of ``media-dedup`` and ``media-stream``."""
+    s.add_argument("--kind",
+                   choices=["image", "audio", "video", "audio_windowed"],
+                   default="image")
+    s.add_argument("--max-hamming", type=int, default=2,
+                   help="hamming radius for image/audio fingerprints")
+    s.add_argument("--min-shared", type=int, default=3,
+                   help="shared distinct hashes for video/audio_windowed")
+    s.add_argument("--window", type=int, default=1024,
+                   help="samples per sub-fingerprint window "
+                   "(--kind audio_windowed)")
+
+
+def _monitor_opts(s) -> None:
+    """The stats/checkpoint arguments of ``monitor-stream`` and
+    ``media-monitor`` (after their ``arrivals`` positional)."""
+    s.add_argument("stats_dir", help="staged per-batch profile/flag table")
+    s.add_argument("checkpoint", help="stream checkpoint directory")
+    s.add_argument("--z-threshold", type=float, default=3.0)
+    s.add_argument("--min-history", type=int, default=3)
+
+
+def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="cqs_spark")
     p.add_argument("--workdir", default=".cqs_spark_index", help="index table directory")
     p.add_argument(
@@ -146,20 +194,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     s.add_argument("input", help="parquet with (doc_id, text, ...) columns")
     s.add_argument("output", help="directory for the curated parquet")
-    s.add_argument("--langs", default="en", help="comma-separated keep list")
-    s.add_argument("--min-quality", type=float, default=0.3)
-    s.add_argument("--min-lang-confidence", type=float, default=0.0,
-                   help="reject docs whose predicted language holds less "
-                   "than this share of the stopword evidence (q142 score)")
+    _ladder_opts(s)
     s.add_argument("--near-dup-threshold", type=float, default=0.8)
-    s.add_argument("--exactsubstr", choices=["passage", "sentence"],
-                   default=None,
-                   help="after near dedup, strip residual cross-doc "
-                   "duplicate spans (passage) or sentences")
-    s.add_argument("--no-pii-scrub", action="store_true")
-    s.add_argument("--flag-injection", action="store_true",
-                   help="also cut docs carrying a line-leading prompt-"
-                   "injection directive (q163 leading_directive)")
     s.add_argument("--split", action="store_true",
                    help="append a deterministic 80/10/10 train/val/test column")
     s = sub.add_parser(
@@ -224,27 +260,14 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument(
         "--ladder", action="store_true",
         help="run the FULL curation ladder per micro-batch (gates + "
-        "exact dedup + near dedup + PII scrub), not just near-dedup",
+        "exact dedup + near dedup + PII scrub), not just near-dedup; "
+        "the ladder options below take effect only with it",
     )
     s.add_argument("--report-dir", default=None,
                    help="append per-batch stage counts here (--ladder only)")
-    s.add_argument("--langs", default="en",
-                   help="comma-separated keep list (--ladder only)")
-    s.add_argument("--min-quality", type=float, default=0.3,
-                   help="quality floor (--ladder only)")
-    s.add_argument("--min-lang-confidence", type=float, default=0.0,
-                   help="language-confidence floor (--ladder only)")
-    s.add_argument("--exactsubstr", choices=["passage", "sentence"],
-                   default=None,
-                   help="strip spans/sentences already seen in prior "
-                   "survivors (incremental ExactSubstr; --ladder only)")
+    _ladder_opts(s)
     s.add_argument("--exactsubstr-k", type=int, default=8,
                    help="k-gram width for --exactsubstr passage")
-    s.add_argument("--no-pii-scrub", action="store_true",
-                   help="skip PII redaction (--ladder only)")
-    s.add_argument("--flag-injection", action="store_true",
-                   help="also cut docs carrying a line-leading prompt-"
-                   "injection directive (--ladder only)")
     s = sub.add_parser(
         "media-dedup",
         help="perceptual media near-dup pairs over a (media_id, data) "
@@ -252,16 +275,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     s.add_argument("input", help="parquet with (media_id, data) columns")
     s.add_argument("output", help="directory for the pairs parquet")
-    s.add_argument("--kind",
-                   choices=["image", "audio", "video", "audio_windowed"],
-                   default="image")
-    s.add_argument("--max-hamming", type=int, default=2,
-                   help="hamming radius for image/audio fingerprints")
-    s.add_argument("--min-shared", type=int, default=3,
-                   help="shared distinct hashes for video/audio_windowed")
-    s.add_argument("--window", type=int, default=1024,
-                   help="samples per sub-fingerprint window "
-                   "(--kind audio_windowed)")
+    _media_opts(s)
     s.add_argument("--apply", action="store_true",
                    help="write the DEDUPLICATED corpus (min-id survivor "
                    "per transitive cluster) instead of the pair report "
@@ -288,16 +302,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--seed", default=None,
                    help="backlog media parquet to seed the index from "
                    "(day-0 state) before draining")
-    s.add_argument("--kind",
-                   choices=["image", "audio", "video", "audio_windowed"],
-                   default="image")
+    _media_opts(s)
     s.add_argument("--method", choices=["dhash", "ahash"], default="dhash")
-    s.add_argument("--max-hamming", type=int, default=2)
-    s.add_argument("--min-shared", type=int, default=3,
-                   help="shared distinct hashes for video/audio_windowed")
-    s.add_argument("--window", type=int, default=1024,
-                   help="samples per sub-fingerprint window "
-                   "(--kind audio_windowed)")
     s = sub.add_parser(
         "media-pii",
         help="media-metadata PII scan (EXIF GPS/serial/author, PNG "
@@ -322,10 +328,7 @@ def main(argv: list[str] | None = None) -> int:
         "profile + z-score drift flags vs prior batches",
     )
     s.add_argument("arrivals", help="directory of arriving (doc_id, text) parquet files")
-    s.add_argument("stats_dir", help="staged per-batch profile/flag table")
-    s.add_argument("checkpoint", help="stream checkpoint directory")
-    s.add_argument("--z-threshold", type=float, default=3.0)
-    s.add_argument("--min-history", type=int, default=3)
+    _monitor_opts(s)
     s.add_argument("--source-col", default=None,
                    help="arrival column naming each doc's source; adds "
                    "per-(batch, source) rows z-scored against that "
@@ -337,10 +340,7 @@ def main(argv: list[str] | None = None) -> int:
         "drift flags vs prior batches",
     )
     s.add_argument("arrivals", help="directory of arriving (media_id, data) parquet files")
-    s.add_argument("stats_dir", help="staged per-batch profile/flag table")
-    s.add_argument("checkpoint", help="stream checkpoint directory")
-    s.add_argument("--z-threshold", type=float, default=3.0)
-    s.add_argument("--min-history", type=int, default=3)
+    _monitor_opts(s)
     s = sub.add_parser("trace", help="shortest call path between two symbols")
     s.add_argument("src")
     s.add_argument("dst")
@@ -427,67 +427,68 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--dim", type=int, default=None, help="encoder dim (create)")
     s.add_argument("--other", help="second slot name (eval compare)")
     s.add_argument("--queries", type=int, default=30)
+    return p
 
-    args = p.parse_args(argv)
-    eng = _engine(args)
 
+def _run(eng, args, emit) -> int:
+    """Run one verb; every output line goes through ``emit``."""
     if args.cmd == "index":
         eng.index(args.root, args.glob)
-        print(json.dumps({"indexed": args.root, "chunks": eng.chunks().count()}))
+        emit({"indexed": args.root, "chunks": eng.chunks().count()})
     elif args.cmd == "search":
-        _emit(eng.search(args.query, k=args.k, alpha=args.alpha, mmr_lambda=args.mmr))
+        emit(eng.search(args.query, k=args.k, alpha=args.alpha, mmr_lambda=args.mmr))
     elif args.cmd == "callers":
-        _emit(eng.callers(args.name))
+        emit(eng.callers(args.name))
     elif args.cmd == "callees":
-        _emit(eng.callees(args.name))
+        emit(eng.callees(args.name))
     elif args.cmd == "impact":
-        _emit(eng.impact(args.name))
+        emit(eng.impact(args.name))
     elif args.cmd == "related":
-        _emit(eng.related(args.name))
+        emit(eng.related(args.name))
     elif args.cmd == "dead-code":
-        _emit(eng.dead_code())
+        emit(eng.dead_code())
     elif args.cmd == "stats":
-        _emit(eng.stats())
+        emit(eng.stats())
     elif args.cmd == "gather":
-        _emit(eng.gather(args.query))
+        emit(eng.gather(args.query))
     elif args.cmd == "where-to-add":
-        _emit(eng.where_to_add(args.query))
+        emit(eng.where_to_add(args.query))
     elif args.cmd == "scout":
-        _emit(eng.scout(args.query))
+        emit(eng.scout(args.query))
     elif args.cmd == "eval":
         from cqs_spark.eval import eval_engine
 
-        print(json.dumps(eval_engine(eng, max_queries=args.queries, alpha=args.alpha)))
+        emit(eval_engine(eng, max_queries=args.queries, alpha=args.alpha))
     elif args.cmd == "diff":
         from cqs_spark.engine import Engine
 
         out = eng.diff(Engine(eng.spark, args.other_workdir))
-        _emit(out["diff"].groupBy("status").count())
-        _emit(out["drift"], limit=20)
+        emit(out["diff"].groupBy("status").count())
+        emit(out["drift"], limit=20)
     elif args.cmd == "notes":
         store = eng.notes_store()
         if args.action == "add":
             mentions = [m for m in args.mentions.split(",") if m]
             nid = store.add(args.value, args.sentiment, mentions, args.kind)
-            print(json.dumps({"id": nid}))
+            emit({"id": nid})
         elif args.action == "list":
-            _emit(store.list_notes())
+            emit(store.list_notes())
         elif args.action == "search":
-            _emit(store.search(args.value))
+            emit(store.search(args.value))
         elif args.action == "rm":
             store.delete(args.value)
-            print(json.dumps({"deleted": args.value}))
+            emit({"deleted": args.value})
         elif args.action == "stale":
-            _emit(store.stale(eng.chunks()))
+            emit(store.stale(eng.chunks()))
     elif args.cmd == "ci":
         out = eng.ci(args.repo, sha=args.sha, threshold=args.threshold)
-        _emit(out["risk"], limit=50)
-        print(json.dumps(out["gate"]))
+        emit(out["risk"], limit=50)
+        emit(out["gate"])
         # The exit code IS the gate (the reference CLI exits GateFailed
         # when the verdict fails, src/cli/commands/review/ci.rs:161).
         return 0 if out["gate"]["passed"] else 1
     elif args.cmd == "deps":
-        _emit(
+        emit(
             eng.deps(
                 args.name,
                 reverse=args.reverse,
@@ -496,51 +497,41 @@ def main(argv: list[str] | None = None) -> int:
         )
     elif args.cmd == "review":
         out = eng.review(args.repo, sha=args.sha, max_depth=args.depth)
-        print(
-            json.dumps(
-                {
-                    "sha": out["sha"],
-                    "risk_summary": out["risk_summary"],
-                    "warnings": out["warnings"],
-                }
-            )
-        )
+        emit({
+            "sha": out["sha"],
+            "risk_summary": out["risk_summary"],
+            "warnings": out["warnings"],
+        })
         for section in (
             "changed_functions", "affected_callers", "affected_tests",
             "relevant_notes",
         ):
-            print(json.dumps({"section": section}))
-            _emit(out[section], limit=100)
+            emit({"section": section})
+            emit(out[section], limit=100)
         if out["stale_warning"] is not None:
-            print(json.dumps({"section": "stale_warning"}))
-            _emit(out["stale_warning"], limit=100)
+            emit({"section": "stale_warning"})
+            emit(out["stale_warning"], limit=100)
     elif args.cmd == "audit":
         mode = eng.audit_mode()
         if args.action == "on":
-            print(json.dumps(mode.enable(hours=args.hours)))
+            emit(mode.enable(hours=args.hours))
         elif args.action == "off":
-            print(json.dumps(mode.disable()))
+            emit(mode.disable())
         else:
-            print(json.dumps(mode.status()))
+            emit(mode.status())
     elif args.cmd == "curate":
         from cqs_spark.operators.curate import curate
         from cqs_spark.operators.textops import dataset_split
 
         docs = eng.spark.read.parquet(args.input)
         out, report = curate(
-            docs,
-            keep_langs=tuple(l for l in args.langs.split(",") if l),
-            min_quality=args.min_quality,
-            min_lang_confidence=args.min_lang_confidence,
-            near_dup_threshold=args.near_dup_threshold,
-            scrub_pii=not args.no_pii_scrub,
-            exactsubstr=args.exactsubstr,
-            flag_injection=args.flag_injection,
+            docs, near_dup_threshold=args.near_dup_threshold,
+            **_ladder_kwargs(args),
         )
         if args.split:
             out = dataset_split(out, "doc_id").drop("bucket")
         out.write.mode("overwrite").parquet(args.output)
-        print(json.dumps(report))
+        emit(report)
     elif args.cmd == "dataset-card":
         from cqs_spark.operators.curate import dataset_card
 
@@ -555,9 +546,9 @@ def main(argv: list[str] | None = None) -> int:
         if args.output:
             with open(args.output, "w") as fh:
                 fh.write(card)
-            print(json.dumps({"written": args.output, "bytes": len(card)}))
+            emit({"written": args.output, "bytes": len(card)})
         else:
-            print(card)
+            emit(card)
     elif args.cmd == "project-embeddings":
         from cqs_spark.operators.vectorops import pca_project
 
@@ -566,12 +557,12 @@ def main(argv: list[str] | None = None) -> int:
             emb, args.id_col, args.vec_col, k=args.k
         )
         proj.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({
+        emit({
             "written": args.output,
             "k": args.k,
             "eigenvalues": [round(e, 6) for e in eigs],
             "rows": emb.count(),
-        }))
+        })
     elif args.cmd == "export-shards":
         from cqs_spark.operators.shards import verify_shards, write_shards
 
@@ -590,7 +581,7 @@ def main(argv: list[str] | None = None) -> int:
             report["bad_shards"] = [
                 r["shard"] for r in audit if not r["ok"]
             ]
-        print(json.dumps(report))
+        emit(report)
     elif args.cmd == "release-audit":
         from cqs_spark.operators.curate import release_audit
 
@@ -606,7 +597,7 @@ def main(argv: list[str] | None = None) -> int:
             decontam_n=args.decontam_n,
             max_source_share=args.max_source_share,
         ).collect()
-        print(json.dumps({
+        emit({
             "checks": [
                 {
                     "check": r["check"], "n": int(r["n"]),
@@ -616,7 +607,7 @@ def main(argv: list[str] | None = None) -> int:
                 for r in rows
             ],
             "release_ok": all(bool(r["ok"]) for r in rows),
-        }))
+        })
     elif args.cmd == "media-pii":
         from pyspark.sql import functions as F
 
@@ -641,15 +632,15 @@ def main(argv: list[str] | None = None) -> int:
                 "unscanned_meta"
             ),
         ).collect()[0]
-        print(json.dumps({k: int(agg[k]) for k in agg.asDict()}))
+        emit({k: int(agg[k]) for k in agg.asDict()})
         if args.strip is not None:
             stripped = media_metadata_strip(media).filter(
                 F.col("data").isNotNull()
             )
             stripped.write.mode("overwrite").parquet(args.strip)
-            print(json.dumps({
+            emit({
                 "stripped": eng.spark.read.parquet(args.strip).count()
-            }))
+            })
     elif args.cmd == "media-export":
         from cqs_spark.operators.shards import write_media_shards
 
@@ -658,12 +649,12 @@ def main(argv: list[str] | None = None) -> int:
             n_shards=args.shards,
         )
         for r in manifest.collect():
-            print(json.dumps({
+            emit({
                 "shard": r["shard"], "n_items": int(r["n_items"]),
                 "n_bytes": int(r["n_bytes"]),
                 "checksum": int(r["checksum"]),
                 "pii_clean": bool(r["pii_clean"]),
-            }))
+            })
     elif args.cmd == "media-dedup":
         from cqs_spark.staging import stage
 
@@ -673,39 +664,34 @@ def main(argv: list[str] | None = None) -> int:
                 raise SystemExit("--apply supports --kind image only")
             from cqs_spark.operators.multimodal import media_dedup_apply
 
-            kept = stage(
-                media_dedup_apply(media, max_hamming=args.max_hamming), eager=True
-            )
-            kept.write.mode("overwrite").parquet(args.output)
-            print(json.dumps({
-                "survivors": kept.count(), "total": media.count(),
-                "kind": args.kind,
-            }))
-            _log_telemetry(args)
-            return 0
-        if args.kind == "video":
+            result = media_dedup_apply(media, max_hamming=args.max_hamming)
+        elif args.kind == "video":
             from cqs_spark.operators.multimodal import video_neardup
 
-            pairs = video_neardup(media, min_shared=args.min_shared)
+            result = video_neardup(media, min_shared=args.min_shared)
         elif args.kind == "audio_windowed":
             from cqs_spark.operators.multimodal import (
                 audio_neardup_windowed,
             )
 
-            pairs = audio_neardup_windowed(
+            result = audio_neardup_windowed(
                 media, window=args.window, min_shared=args.min_shared
             )
         elif args.kind == "audio":
             from cqs_spark.operators.multimodal import audio_neardup
 
-            pairs = audio_neardup(media, max_hamming=args.max_hamming)
+            result = audio_neardup(media, max_hamming=args.max_hamming)
         else:
             from cqs_spark.operators.multimodal import image_neardup
 
-            pairs = image_neardup(media, max_hamming=args.max_hamming)
-        pairs = stage(pairs, eager=True)
-        pairs.write.mode("overwrite").parquet(args.output)
-        print(json.dumps({"pairs": pairs.count(), "kind": args.kind}))
+            result = image_neardup(media, max_hamming=args.max_hamming)
+        result = stage(result, eager=True)
+        result.write.mode("overwrite").parquet(args.output)
+        n = result.count()
+        emit(
+            {"survivors": n, "total": media.count(), "kind": args.kind}
+            if args.apply else {"pairs": n, "kind": args.kind}
+        )
     elif args.cmd == "media-audit":
         from cqs_spark.operators.multimodal import media_audit
 
@@ -717,10 +703,10 @@ def main(argv: list[str] | None = None) -> int:
             min_decodable=args.min_decodable,
         )
         for r in rep.orderBy("check").collect():
-            print(json.dumps({
+            emit({
                 "check": r["check"], "n": r["n"],
                 "ratio": round(float(r["ratio"]), 4), "ok": bool(r["ok"]),
-            }))
+            })
     elif args.cmd == "media-stream":
         from cqs_spark.streaming.maintain import media_arrivals, seed_media_index
 
@@ -737,7 +723,7 @@ def main(argv: list[str] | None = None) -> int:
             min_shared=args.min_shared,
         )
         out = _stream_table(eng.spark, args.output)
-        print(json.dumps({"survivors": out.count() if out is not None else 0}))
+        emit({"survivors": out.count() if out is not None else 0})
     elif args.cmd == "monitor-stream":
         from cqs_spark.streaming.maintain import monitor_arrivals
 
@@ -746,9 +732,9 @@ def main(argv: list[str] | None = None) -> int:
             z_threshold=args.z_threshold, min_history=args.min_history,
             source_col=args.source_col,
         )
-        _print_drift_summary(
+        emit(_drift_summary(
             eng.spark, args.stats_dir, args.source_col, sources=True
-        )
+        ))
     elif args.cmd == "media-monitor":
         from cqs_spark.streaming.maintain import monitor_media_arrivals
 
@@ -756,7 +742,7 @@ def main(argv: list[str] | None = None) -> int:
             eng.spark, args.arrivals, args.stats_dir, args.checkpoint,
             z_threshold=args.z_threshold, min_history=args.min_history,
         )
-        _print_drift_summary(eng.spark, args.stats_dir)
+        emit(_drift_summary(eng.spark, args.stats_dir))
     elif args.cmd == "curate-stream":
         if args.ladder:
             from cqs_spark.streaming.maintain import curate_arrivals
@@ -764,13 +750,8 @@ def main(argv: list[str] | None = None) -> int:
             curate_arrivals(
                 eng.spark, args.arrivals, args.index_dir, args.output,
                 args.checkpoint, report_dir=args.report_dir,
-                keep_langs=tuple(l for l in args.langs.split(",") if l),
-                min_quality=args.min_quality, threshold=args.threshold,
-                min_lang_confidence=args.min_lang_confidence,
-                exactsubstr=args.exactsubstr,
-                exactsubstr_k=args.exactsubstr_k,
-                scrub_pii=not args.no_pii_scrub,
-                flag_injection=args.flag_injection,
+                threshold=args.threshold, exactsubstr_k=args.exactsubstr_k,
+                **_ladder_kwargs(args),
             )
         else:
             from cqs_spark.streaming.maintain import dedup_arrivals
@@ -780,29 +761,29 @@ def main(argv: list[str] | None = None) -> int:
                 args.checkpoint, threshold=args.threshold,
             )
         out = _stream_table(eng.spark, args.output)
-        print(json.dumps({"survivors": out.count() if out is not None else 0}))
+        emit({"survivors": out.count() if out is not None else 0})
     elif args.cmd == "trace":
         path = eng.trace(args.src, args.dst, max_depth=args.depth)
-        print(json.dumps({"path": path}))
+        emit({"path": path})
         return 0 if path is not None else 1
     elif args.cmd == "test-map":
-        _emit(eng.test_map(max_depth=args.depth))
+        emit(eng.test_map(max_depth=args.depth))
     elif args.cmd == "blame":
-        _emit(eng.blame(args.repo), limit=100)
+        emit(eng.blame(args.repo), limit=100)
     elif args.cmd == "affected":
-        _emit(eng.affected(args.repo, args.sha))
+        emit(eng.affected(args.repo, args.sha))
     elif args.cmd == "explain":
-        print(json.dumps(eng.explain_symbol(args.name), default=str))
+        emit(eng.explain_symbol(args.name))
     elif args.cmd == "onboard":
         for section, df in eng.onboard().items():
-            print(json.dumps({"section": section}))
-            _emit(df)
+            emit({"section": section})
+            emit(df)
     elif args.cmd == "suggest":
-        _emit(eng.suggest())
+        emit(eng.suggest())
     elif args.cmd == "health":
         for section, df in eng.health().items():
-            print(json.dumps({"section": section}))
-            _emit(df)
+            emit({"section": section})
+            emit(df)
     elif args.cmd == "read":
         # skip-when-default envelope: the reference's serde shape
         # omits injection_flags when no detector fired
@@ -812,9 +793,9 @@ def main(argv: list[str] | None = None) -> int:
             d = r.asDict()
             if not d.get("injection_flags"):
                 d.pop("injection_flags", None)
-            print(json.dumps(d, default=str))
+            emit(d)
     elif args.cmd == "neighbors":
-        _emit(eng.neighbors(args.chunk_id, k=args.k))
+        emit(eng.neighbors(args.chunk_id, k=args.k))
     elif args.cmd == "batch":
         # The reference's `cqs batch`: one query per stdin line, one
         # JSON result envelope per line (src/cli/definitions.rs:503).
@@ -823,30 +804,30 @@ def main(argv: list[str] | None = None) -> int:
             if not q:
                 continue
             rows = [r.asDict() for r in eng.search(q, k=args.k).collect()]
-            print(json.dumps({"query": q, "results": rows}, default=str))
+            emit({"query": q, "results": rows})
     elif args.cmd == "train-data":
         from cqs_spark.operators.nlgen import contrastive_triples, training_pairs
 
         pairs = training_pairs(eng.chunks())
         out = contrastive_triples(pairs, eng.chunks()) if args.triples else pairs
-        _emit(out, limit=1000)
+        emit(out, limit=1000)
     elif args.cmd == "stale":
-        _emit(eng.stale(args.root))
+        emit(eng.stale(args.root))
     elif args.cmd == "refresh":
-        print(json.dumps(eng.refresh(args.root)))
+        emit(eng.refresh(args.root))
     elif args.cmd == "project":
         from cqs_spark.index.projects import ProjectRegistry
 
         reg = ProjectRegistry(args.workdir)
         if args.action == "add":
             reg.register(args.value, args.project_workdir or ".", args.weight)
-            print(json.dumps({"registered": args.value}))
+            emit({"registered": args.value})
         elif args.action == "list":
-            print(json.dumps(reg.projects()))
+            emit(reg.projects())
         elif args.action == "rm":
-            print(json.dumps({"removed": reg.unregister(args.value)}))
+            emit({"removed": reg.unregister(args.value)})
         elif args.action == "search":
-            _emit(
+            emit(
                 reg.search_all(
                     eng.spark, args.value, k=args.k, primary=args.primary
                 )
@@ -876,7 +857,7 @@ def main(argv: list[str] | None = None) -> int:
             }
             if r["injection_flags"]:
                 env["injection_flags"] = list(r["injection_flags"])
-            print(json.dumps(env))
+            emit(env)
     elif args.cmd == "context":
         # Token-budgeted context assembly (cqs context): gather's
         # decayed relevance expansion, then keep the score-ranked
@@ -903,17 +884,17 @@ def main(argv: list[str] | None = None) -> int:
             .select("node", "id", "origin", "score", "n_tokens", "cum_tokens")
             .orderBy(F.desc("score"), "node")
         )
-        _emit(out)
+        emit(out)
     elif args.cmd == "reconstruct":
         # full-file relay: scan == relayed (injection_flags present
         # only when a detector fired — reference v1.51 envelope shape)
-        print(json.dumps(eng.reconstruct_envelope(args.origin)))
+        emit(eng.reconstruct_envelope(args.origin))
     elif args.cmd == "impact-diff":
         from cqs_spark.operators.gitops import diff_impact, git_log_df
 
         _, changes = git_log_df(eng.spark, args.repo)
         prefix = args.repo.rstrip("/") + "/"
-        _emit(
+        emit(
             diff_impact(
                 eng.chunks(), eng.edges(), changes, args.sha, prefix,
                 max_depth=args.depth,
@@ -923,33 +904,25 @@ def main(argv: list[str] | None = None) -> int:
         from cqs_spark.engine import Engine
 
         out = eng.diff(Engine(eng.spark, args.other_workdir))
-        _emit(out["drift"], limit=args.k)
+        emit(out["drift"], limit=args.k)
     elif args.cmd == "task":
         out = eng.task(args.query, limit=args.k)
-        print(
-            json.dumps(
-                {"description": out["description"], "summary": out["summary"]}
-            )
-        )
+        emit({"description": out["description"], "summary": out["summary"]})
         for section in (
             "scout", "code", "risk", "tests", "placement", "notes",
         ):
-            print(json.dumps({"section": section}))
-            _emit(out[section], limit=100)
+            emit({"section": section})
+            emit(out[section], limit=100)
     elif args.cmd == "plan":
         out = eng.plan(args.query, k=args.k)
-        print(
-            json.dumps(
-                {
-                    "template": out["template"],
-                    "template_description": out["template_description"],
-                    "checklist": out["checklist"],
-                    "patterns": out["patterns"],
-                }
-            )
-        )
-        print(json.dumps({"section": "scout"}))
-        _emit(out["scout"], limit=100)
+        emit({
+            "template": out["template"],
+            "template_description": out["template_description"],
+            "checklist": out["checklist"],
+            "patterns": out["patterns"],
+        })
+        emit({"section": "scout"})
+        emit(out["scout"], limit=100)
     elif args.cmd == "doc":
         rows = eng.document(limit=args.k).collect()
         for r in rows:
@@ -961,16 +934,12 @@ def main(argv: list[str] | None = None) -> int:
             if wrote:
                 with open(path[len("file:"):], "w") as fh:
                     fh.write(r["new_content"])
-            print(
-                json.dumps(
-                    {
-                        "origin": path,
-                        "applied": r["applied"],
-                        "written": wrote,
-                    }
-                )
-            )
-        print(json.dumps({"files": len(rows)}))
+            emit({
+                "origin": path,
+                "applied": r["applied"],
+                "written": wrote,
+            })
+        emit({"files": len(rows)})
     elif args.cmd == "doctor":
         import os as _os
 
@@ -985,10 +954,10 @@ def main(argv: list[str] | None = None) -> int:
             isinstance(report[t], int) and report[t] > 0
             for t in ("chunks", "postings", "edges")
         )
-        print(json.dumps(report))
+        emit(report)
         return 0 if report["ok"] else 1
     elif args.cmd == "gc":
-        print(json.dumps(eng.gc()))
+        emit(eng.gc())
     elif args.cmd == "telemetry":
         import os as _os
 
@@ -996,56 +965,84 @@ def main(argv: list[str] | None = None) -> int:
 
         log = _os.path.join(args.workdir, "telemetry.jsonl")
         if not _os.path.exists(log):
-            print(json.dumps({"events": 0}))
+            emit({"events": 0})
             return 0
         rep = telemetry_report(read_telemetry(eng.spark, log))
-        print(json.dumps({"events": rep["events"], "date_range": rep["date_range"]}))
-        _emit(rep["commands"])
-        _emit(rep["categories"])
-        _emit(rep["top_queries"], limit=10)
+        emit({"events": rep["events"], "date_range": rep["date_range"]})
+        emit(rep["commands"])
+        emit(rep["categories"])
+        emit(rep["top_queries"], limit=10)
     elif args.cmd == "slot":
         from cqs_spark.index import slots as S
 
         if args.action == "create":
             if not args.value or not args.root:
-                p.error("slot create needs a name and --root")
+                _parser().error("slot create needs a name and --root")
             se = S.create(
                 eng.spark, args.workdir, args.value, args.root,
                 dim=args.dim, glob=args.glob,
             )
-            print(json.dumps({
+            emit({
                 "slot": args.value,
                 "chunks": se.n_chunks(),
                 "active": S.read_active(args.workdir) == args.value,
-            }))
+            })
         elif args.action == "list":
             S.migrate_legacy(args.workdir)
             for row in S.list_slots(args.workdir):
-                print(json.dumps(row))
+                emit(row)
         elif args.action == "promote":
             if not args.value:
-                p.error("slot promote needs a name")
+                _parser().error("slot promote needs a name")
             S.migrate_legacy(args.workdir)
             S.promote(args.workdir, args.value)
-            print(json.dumps({"active": args.value}))
+            emit({"active": args.value})
         elif args.action == "eval":
             if not args.value or not args.other:
-                p.error("slot eval needs a name and --other")
-            print(json.dumps(S.compare(
+                _parser().error("slot eval needs a name and --other")
+            emit(S.compare(
                 eng.spark, args.workdir, args.value, args.other,
                 max_queries=args.queries,
-            )))
-    _log_telemetry(args)
+            ))
     return 0
 
 
-def _log_telemetry(args) -> None:
+def main(argv: list[str] | None = None) -> int:
+    args = _parser().parse_args(argv)
+    eng = _engine(args)
+    from pyspark.sql import DataFrame
+
+    lines = 0
+
+    def emit(x, limit: int | None = None) -> None:
+        """The CLI's one output sink.  A DataFrame prints one JSON line
+        per row (the first ``limit`` rows when given), a str prints as
+        it is, anything else prints as one JSON line; every line
+        written is counted for the telemetry row."""
+        nonlocal lines
+        if isinstance(x, DataFrame):
+            rows = x.collect() if limit is None else x.limit(limit).collect()
+            for r in rows:
+                emit(r.asDict())
+        else:
+            text = x if isinstance(x, str) else json.dumps(x, default=str)
+            print(text)
+            lines += text.count("\n") + 1
+
+    t0 = time.monotonic()
+    rc = _run(eng, args, emit)
+    _log_telemetry(args, lines, int((time.monotonic() - t0) * 1000))
+    return rc
+
+
+def _log_telemetry(args, result_count: int, duration_ms: int) -> None:
     """Append one usage row to the workdir's telemetry JSONL (the
     reference records every CLI invocation, src/cli/telemetry.rs;
     queries are stored raw here and redacted at REPORT time via
-    telemetry.redact_query — the log stays local to the index dir)."""
+    telemetry.redact_query — the log stays local to the index dir).
+    ``result_count`` is the number of lines the verb printed and
+    ``duration_ms`` its wall time, session start-up excluded."""
     import os
-    import time
 
     if args.cmd == "telemetry":  # reading the dashboard isn't usage
         return
@@ -1054,7 +1051,8 @@ def _log_telemetry(args) -> None:
             "ts": int(time.time()),
             "command": args.cmd,
             "query": getattr(args, "query", None) or getattr(args, "name", None),
-            "result_count": None,
+            "result_count": result_count,
+            "duration_ms": duration_ms,
         }
         with open(os.path.join(args.workdir, "telemetry.jsonl"), "a") as fh:
             fh.write(json.dumps(row) + "\n")

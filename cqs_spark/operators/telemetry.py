@@ -21,13 +21,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-# Command → dashboard category (telemetry_cmd.rs:76 category_for).
+# Command → dashboard category (telemetry_cmd.rs:76 category_for), keyed
+# by this CLI's verb names: the reference's `where`, `similar` and `dead`
+# are `where-to-add`, `neighbors` and `dead-code` here.
 CATEGORY_FOR: dict[str, str] = {
     **{c: "Search" for c in
-       ("search", "gather", "scout", "onboard", "where", "related", "similar")},
+       ("search", "gather", "scout", "onboard", "where-to-add", "related",
+        "neighbors")},
     **{c: "Structural" for c in
        ("callers", "callees", "impact", "impact-diff", "test-map", "deps",
-        "trace", "explain", "context", "dead")},
+        "trace", "explain", "context", "dead-code")},
     **{c: "Orchestrator" for c in ("task", "review", "plan", "ci")},
     **{c: "Read/Write" for c in
        ("read", "notes", "blame", "diff", "drift", "stale", "suggest",
@@ -38,7 +41,8 @@ SESSION_GAP_SECS = 4 * 3600  # telemetry_cmd.rs:202 GAP_SECS
 
 
 def read_telemetry(spark, path: str) -> DataFrame:
-    """Read a telemetry JSONL log (ts, command, query, result_count)."""
+    """Read a telemetry JSONL log (ts, command, query, result_count,
+    duration_ms)."""
     return spark.read.json(path)
 
 

@@ -26,6 +26,8 @@ reconcile; src/cli/watch/reconcile.rs) has its batch twin in
 
 from __future__ import annotations
 
+from collections.abc import Callable, Collection
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cqs_spark.staging import stage
@@ -66,6 +68,30 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
         out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
+
+
+def _claim_marker(
+    spark: SparkSession,
+    path: str,
+    marker: str,
+    refusal: Callable[[str], str],
+    legacy_ok: Collection[str] = (),
+    legacy_warning: Callable[[str], str] | None = None,
+) -> None:
+    """Claim the key-space marker file at ``path`` for ``marker``:
+    absent or empty (a truncated write) -> write it; equal -> ok; in
+    ``legacy_ok`` -> warn ``legacy_warning(prev)`` and upgrade in place;
+    anything else -> ``ValueError(refusal(prev))``."""
+    prev = (_read_text(spark, path) or "").strip()
+    if prev == marker:
+        return
+    if prev:
+        if prev not in legacy_ok:
+            raise ValueError(refusal(prev))
+        import warnings
+
+        warnings.warn(legacy_warning(prev), UserWarning, stacklevel=3)
+    _write_text(spark, path, marker)
 
 
 def _run_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -271,31 +297,23 @@ def _check_unit_marker(
         legacy_ok = {f"passage:k={k}"} | ({"passage"} if k == 8 else set())
     else:
         legacy_ok = {unit}
-    path = f"{index_dir}/grams_unit"
-    prev = _read_text(spark, path)
-    if prev is not None:
-        prev = prev.strip()
-        if prev == marker or not prev:
-            return
-        if prev not in legacy_ok:
-            raise ValueError(
-                f"index_dir {index_dir} was built with "
-                f"exactsubstr={prev!r}; refusing to mix with {marker!r} "
-                "(staged hashes are not interchangeable across units or "
-                "k-gram widths; re-seed a fresh index_dir to change them)"
-            )
-        import warnings
-
-        warnings.warn(
+    _claim_marker(
+        spark, f"{index_dir}/grams_unit", marker,
+        refusal=lambda prev: (
+            f"index_dir {index_dir} was built with "
+            f"exactsubstr={prev!r}; refusing to mix with {marker!r} "
+            "(staged hashes are not interchangeable across units or "
+            "k-gram widths; re-seed a fresh index_dir to change them)"
+        ),
+        legacy_ok=legacy_ok,
+        legacy_warning=lambda prev: (
             f"index_dir {index_dir} carries a pre-v2 exactsubstr marker "
             f"{prev!r}: its staged hashes were keyed on raw text, so "
             "cross-batch dedup may miss units containing PII until the "
             "index_dir is re-seeded (upgrading marker to "
-            f"{marker!r} and continuing).",
-            UserWarning,
-            stacklevel=2,
-        )
-    _write_text(spark, path, marker)
+            f"{marker!r} and continuing)."
+        ),
+    )
 
 
 def seed_staged_index(
@@ -958,17 +976,15 @@ def _check_media_marker(
     }.get(kind)
     if marker is None:
         raise ValueError(f"unknown media kind {kind!r}")
-    path = f"{index_dir}/sigs_kind"
-    prev = (_read_text(spark, path) or "").strip()
-    if prev and prev != marker:
-        raise ValueError(
+    _claim_marker(
+        spark, f"{index_dir}/sigs_kind", marker,
+        refusal=lambda prev: (
             f"media index_dir {index_dir} was seeded with {prev!r}; "
             f"refusing to mix with {marker!r} (staged signatures are "
             "not interchangeable across fingerprint families; re-seed "
             "a fresh index_dir to change them)"
-        )
-    if prev != marker:
-        _write_text(spark, path, marker)
+        ),
+    )
 
 
 def seed_media_index(

@@ -217,6 +217,51 @@ def test_cli_reconstruct_gc_telemetry(workdir, capsys):
     assert cmds.get("reconstruct", 0) >= 1 and cmds.get("gc", 0) >= 1
 
 
+def test_cli_telemetry_one_row_per_invocation(workdir, capsys):
+    """Every verb run appends exactly one telemetry row, whatever its
+    exit status: ``command``, ``result_count`` = the stdout lines it
+    printed, and ``duration_ms``.  Reading the dashboard appends none."""
+    import os
+
+    log = os.path.join(workdir, "telemetry.jsonl")
+
+    def rows():
+        with open(log) as fh:
+            return [json.loads(l) for l in fh]
+
+    for argv, rc in (
+        (["trace", "reverse_bfs", "bfs"], 0),
+        (["trace", "no_such_symbol_a", "no_such_symbol_b"], 1),
+        (["doctor"], 0),
+    ):
+        before = len(rows())
+        capsys.readouterr()
+        assert main(["--workdir", workdir, *argv]) == rc
+        printed = capsys.readouterr().out.splitlines()
+        new = rows()[before:]
+        assert [r["command"] for r in new] == [argv[0]]
+        assert new[0]["result_count"] == len(printed) == 1
+        assert isinstance(new[0]["duration_ms"], int)
+        assert new[0]["duration_ms"] >= 0
+    before = len(rows())
+    main(["--workdir", workdir, "telemetry"])
+    assert len(rows()) == before
+
+
+def test_cli_prints_through_one_sink():
+    """``__main__`` writes stdout only through ``emit`` and logs
+    telemetry from one call site."""
+    import pathlib
+    import re
+
+    src = (
+        pathlib.Path(__file__).resolve().parents[1] / "cqs_spark" / "__main__.py"
+    ).read_text()
+    assert len(re.findall(r"(?<!\w)print\(", src)) == 1
+    assert "_emit(" not in src
+    assert len(re.findall(r"(?<!def )_log_telemetry\(", src)) == 1
+
+
 def test_cli_review_composition(workdir, capsys):
     """End-to-end `review` on this repo's own git history: payload
     sections mirror review.rs's ReviewResult fields."""

@@ -580,16 +580,39 @@ def test_exactsubstr_unit_marker_legacy_upgrade(spark, tmp_path):
     """Pre-v2 markers (bare 'passage', 'passage:k=<k>', bare
     'sentence') are accepted with a recall-loss warning and upgraded
     in place to the v2 form; a bare 'passage' with a NON-default k
-    still raises (the k genuinely differs)."""
+    still raises (the k genuinely differs).  An empty marker (a
+    truncated write) is claimed like an absent one, for the media
+    ``sigs_kind`` marker as for ``grams_unit``, and then holds."""
     import warnings
 
-    from cqs_spark.streaming.maintain import _check_unit_marker
+    from cqs_spark.streaming.maintain import (
+        _check_media_marker,
+        _check_unit_marker,
+    )
 
-    def plant(name: str, content: str) -> str:
+    def plant(name: str, content: str, marker: str = "grams_unit") -> str:
         d = tmp_path / name
         d.mkdir()
-        (d / "grams_unit").write_text(content)
+        (d / marker).write_text(content)
         return str(d)
+
+    # empty 'grams_unit': claimed by the first unit, which then holds
+    idx = plant("empty_unit", "")
+    _check_unit_marker(spark, idx, "passage")
+    assert (tmp_path / "empty_unit" / "grams_unit").read_text() == (
+        "passage:k=8:v2"
+    )
+    with pytest.raises(ValueError, match="passage.*sentence"):
+        _check_unit_marker(spark, idx, "sentence")
+    # empty 'sigs_kind': the same rule for the media fingerprint family
+    idx = plant("empty_sigs", "", marker="sigs_kind")
+    _check_media_marker(spark, idx, "image", "dhash", 64)
+    assert (tmp_path / "empty_sigs" / "sigs_kind").read_text() == (
+        "image:dhash:v1"
+    )
+    _check_media_marker(spark, idx, "image", "dhash", 64)
+    with pytest.raises(ValueError, match="image:dhash:v1.*image:ahash:v1"):
+        _check_media_marker(spark, idx, "image", "ahash", 64)
 
     # bare legacy 'passage' + default k: accepted, warned, upgraded
     idx = plant("legacy_passage", "passage")

@@ -59,3 +59,18 @@ def test_redact_query_digest(spark):
     got = [r["d"] for r in df.select(redact_query("q").alias("d")).collect()]
     assert got[0] == got[1] != got[2]
     assert len(got[0]) == 8 and got[0] != "secret q"
+
+
+def test_category_keys_are_cli_verbs():
+    """Every dashboard category key is a verb of this CLI, so no verb
+    is counted as Infra under a name only the reference uses."""
+    import argparse
+
+    from cqs_spark.__main__ import _parser
+    from cqs_spark.operators.telemetry import CATEGORY_FOR
+
+    (verbs,) = [
+        a.choices for a in _parser()._actions
+        if isinstance(a, argparse._SubParsersAction)
+    ]
+    assert sorted(set(CATEGORY_FOR) - set(verbs)) == []
