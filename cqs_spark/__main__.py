@@ -893,7 +893,7 @@ def _run(eng, args, emit) -> int:
         from cqs_spark.operators.gitops import diff_impact, git_log_df
 
         _, changes = git_log_df(eng.spark, args.repo)
-        prefix = args.repo.rstrip("/") + "/"
+        prefix = eng._origin_prefix(args.repo)
         emit(
             diff_impact(
                 eng.chunks(), eng.edges(), changes, args.sha, prefix,

@@ -1422,7 +1422,7 @@ class Engine:
         from cqs_spark.operators.gitops import blame_functions, git_log_df
 
         commits, changes = git_log_df(self.spark, repo, max_commits)
-        prefix = repo.rstrip("/") + "/"
+        prefix = self._origin_prefix(repo)
         return blame_functions(self.chunks(), commits, changes, prefix).orderBy(
             F.desc("n_commits"), "id"
         )
@@ -1432,7 +1432,7 @@ class Engine:
         from cqs_spark.operators.gitops import affected_functions, git_log_df
 
         _, changes = git_log_df(self.spark, repo)
-        prefix = repo.rstrip("/") + "/"
+        prefix = self._origin_prefix(repo)
         return affected_functions(self.chunks(), changes, sha, prefix).orderBy("id")
 
     def reconstruct(self, origin_suffix: str) -> str:

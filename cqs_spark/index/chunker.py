@@ -23,15 +23,11 @@ origin+span+hash, so the chunker stays a pure text transform.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
 from cqs_spark.index.schemas import CHUNK_PARSE_SCHEMA
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from cqs_spark.rows import map_rows
 
 try:  # pragma: no cover - not present in this container
     import tree_sitter  # noqa: F401
@@ -1819,18 +1815,13 @@ def parse_files(files: DataFrame) -> DataFrame:
     model/parser initialization (when tree-sitter is present) happens
     once per worker process, not per row.
     """
-    import pandas as pd  # noqa: F811
+    cols = CHUNK_PARSE_SCHEMA.fieldNames()
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = [f.name for f in CHUNK_PARSE_SCHEMA.fields]
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                text = bytes(blob).decode("utf-8", errors="replace")
-                rows.extend(chunk_file(path, text))
-            out = pd.DataFrame(rows, columns=cols)
-            # Chunkers omit optional keys (parent_type_name, doc);
-            # normalize NaN → None so Arrow sees typed nulls.
-            yield out.where(out.notna(), None)
+    def row(path, blob):
+        text = bytes(blob).decode("utf-8", errors="replace")
+        # Chunkers omit optional keys (parent_type_name, doc): a
+        # missing key is a NULL cell.
+        for c in chunk_file(path, text):
+            yield tuple(c.get(k) for k in cols)
 
-    return files.select("path", "content").mapInPandas(run, CHUNK_PARSE_SCHEMA)
+    return map_rows(files, ["path", "content"], row, CHUNK_PARSE_SCHEMA)

@@ -11,13 +11,10 @@ fully testable.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, types as T
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from cqs_spark.rows import map_rows
 
 HAVE_PDF = False
 _PDF_BACKEND = None
@@ -217,28 +214,17 @@ def convert_files(files: DataFrame) -> DataFrame:
     extractor, and raise only when no text is recoverable at all
     (fail-loud beats silently indexing binary soup).
     """
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out_paths, out_blobs = [], []
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                raw = bytes(blob)
-                if path.endswith((".html", ".htm")):
-                    md = html_to_markdown(raw.decode("utf-8", errors="replace"))
-                    out_paths.append(re.sub(r"\.html?$", ".md", path))
-                    out_blobs.append(md.encode("utf-8"))
-                elif path.endswith(".pdf"):
-                    md = pdf_to_markdown(raw)
-                    out_paths.append(path[:-4] + ".md")
-                    out_blobs.append(md.encode("utf-8"))
-                elif path.endswith(".chm"):
-                    md = chm_to_markdown(raw, path)
-                    out_paths.append(path[:-4] + ".md")
-                    out_blobs.append(md.encode("utf-8"))
-                else:
-                    out_paths.append(path)
-                    out_blobs.append(raw)
-            yield pd.DataFrame({"path": out_paths, "content": out_blobs})
+    def row(path, blob):
+        raw = bytes(blob)
+        if path.endswith((".html", ".htm")):
+            md = html_to_markdown(raw.decode("utf-8", errors="replace"))
+            yield re.sub(r"\.html?$", ".md", path), md.encode("utf-8")
+        elif path.endswith(".pdf"):
+            yield path[:-4] + ".md", pdf_to_markdown(raw).encode("utf-8")
+        elif path.endswith(".chm"):
+            yield path[:-4] + ".md", chm_to_markdown(raw, path).encode("utf-8")
+        else:
+            yield path, raw
 
-    return files.select("path", "content").mapInPandas(run, CONVERTED_SCHEMA)
+    return map_rows(files, ["path", "content"], row, CONVERTED_SCHEMA)

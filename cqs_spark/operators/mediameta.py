@@ -82,6 +82,8 @@ import struct
 
 from pyspark.sql import DataFrame, functions as F
 
+from cqs_spark.rows import map_rows
+
 _SERIAL_TAGS = {0xA431, 0xC62F, 0xA435}  # body / camera / lens serial
 _AUTHOR_TAGS = {0x013B, 0x8298}          # Artist, Copyright
 _TEXT_TAGS = {0x9286, 0x010E}            # UserComment, ImageDescription
@@ -2993,6 +2995,17 @@ def build_mp4(
 # DataFrame ops
 # ---------------------------------------------------------------------------
 
+
+class _NoScan(dict):
+    """The scan of a quarantined blob: every field reads NULL, so a row
+    builder over it yields the NULL row without counting columns."""
+
+    def __missing__(self, key):
+        return None
+
+
+NO_SCAN = _NoScan()
+
 _SCAN_SCHEMA = (
     "media_id long, fmt string, has_gps boolean, has_serial boolean, "
     "has_author boolean, has_text boolean, has_pii boolean, "
@@ -3010,49 +3023,16 @@ def media_metadata_scan(
     ``has_unscanned_meta`` marks carriers the scan saw but could not
     read (unknown APPn signature) — certifiable as NOTHING, so the
     audit counts them with the unscannable quarantines."""
-    from collections.abc import Iterator
 
-    cols = [id_col, data_col]
+    def row(mid, blob):
+        r = (None if blob is None else scan_media_metadata(bytes(blob))) or NO_SCAN
+        yield (
+            mid, r["fmt"], r["gps"], r["serial"], r["author"], r["text"],
+            r["gps"] or r["serial"] or r["author"], r["unscanned"],
+            r["meta_bytes"],
+        )
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                r = None if blob is None else scan_media_metadata(bytes(blob))
-                if r is None:
-                    rows.append((int(mid),) + (None,) * 8)
-                else:
-                    rows.append(
-                        (
-                            int(mid),
-                            r["fmt"],
-                            r["gps"],
-                            r["serial"],
-                            r["author"],
-                            r["text"],
-                            r["gps"] or r["serial"] or r["author"],
-                            r["unscanned"],
-                            r["meta_bytes"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "fmt",
-                    "has_gps",
-                    "has_serial",
-                    "has_author",
-                    "has_text",
-                    "has_pii",
-                    "has_unscanned_meta",
-                    "meta_bytes",
-                ],
-            )
-
-    return media.select(*cols).mapInPandas(run, _SCAN_SCHEMA)
+    return map_rows(media, [id_col, data_col], row, _SCAN_SCHEMA)
 
 
 _MP4_INFO_SCHEMA = (
@@ -3079,49 +3059,25 @@ _OGG_INFO_SCHEMA = (
 def _make_container_info(scanner, extras: list, schema: str,
                          include_serial: bool = True):
     """Shared builder for the per-container info Arrow ops: one
-    ``mapInPandas`` stage over (id, data) emitting (id, fmt,
-    *extras, has_gps[, has_serial], has_author, has_text, has_pii,
+    per-row stage over (id, data) emitting (id, fmt, *extras,
+    has_gps[, has_serial], has_author, has_text, has_pii,
     has_unscanned_meta, meta_bytes), with a NULL row per quarantined
     blob.  ``has_pii`` is always gps|serial|author even when the
     serial column itself is omitted from the surface."""
-    flag_cols = (
-        ["has_gps"]
-        + (["has_serial"] if include_serial else [])
-        + ["has_author", "has_text", "has_pii", "has_unscanned_meta"]
-    )
-    names = ["media_id", "fmt", *extras, *flag_cols, "meta_bytes"]
+
+    def row(mid, blob):
+        r = (None if blob is None else scanner(bytes(blob))) or NO_SCAN
+        yield (
+            mid, r["fmt"], *(r[x] for x in extras), r["gps"],
+            *((r["serial"],) if include_serial else ()),
+            r["author"], r["text"], r["gps"] or r["serial"] or r["author"],
+            r["unscanned"], r["meta_bytes"],
+        )
 
     def op(
         media: DataFrame, id_col: str = "media_id", data_col: str = "data"
     ) -> DataFrame:
-        from collections.abc import Iterator
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                rows = []
-                for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                    r = None if blob is None else scanner(bytes(blob))
-                    if r is None:
-                        rows.append((int(mid),) + (None,) * (len(names) - 1))
-                        continue
-                    vals = [int(mid), r["fmt"]]
-                    vals += [r[x] for x in extras]
-                    vals.append(r["gps"])
-                    if include_serial:
-                        vals.append(r["serial"])
-                    vals += [
-                        r["author"],
-                        r["text"],
-                        r["gps"] or r["serial"] or r["author"],
-                        r["unscanned"],
-                        r["meta_bytes"],
-                    ]
-                    rows.append(tuple(vals))
-                yield pd.DataFrame(rows, columns=names)
-
-        return media.select(id_col, data_col).mapInPandas(run, schema)
+        return map_rows(media, [id_col, data_col], row, schema)
 
     return op
 
@@ -3186,77 +3142,37 @@ def media_release_scan(
     both sides (two undecodable signatures compare equal, exactly the
     join form's ``eqNullSafe``).
     """
-    from collections.abc import Iterator
+    from cqs_spark.operators.multimodal import _afp_blob, _phash_blob
 
-    cols = [id_col, data_col]
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from cqs_spark.operators.multimodal import _afp_blob, _phash_blob
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                blob = None if blob is None else bytes(blob)
-                r = None if blob is None else scan_media_metadata(blob)
-                if r is None:
-                    rows.append((int(mid),) + (None,) * 9)
-                    continue
-                stripped = strip_media_metadata(blob)
-                rs = (
-                    None if stripped is None else scan_media_metadata(stripped)
-                )
-                strip_clean = (
-                    None
-                    if rs is None
-                    else not (
-                        rs["gps"]
-                        or rs["serial"]
-                        or rs["author"]
-                        or rs["text"]
-                        or rs["unscanned"]
-                    )
-                )
-                if r["fmt"] == "wav":
-                    preserved = _afp_blob(blob) == _afp_blob(stripped)
-                else:
-                    po = _phash_blob(blob)
-                    ps = _phash_blob(stripped)
-                    preserved = (po[1] if po else None) == (
-                        ps[1] if ps else None
-                    )
-                rows.append(
-                    (
-                        int(mid),
-                        r["fmt"],
-                        r["gps"],
-                        r["serial"],
-                        r["author"],
-                        r["text"],
-                        r["gps"] or r["serial"] or r["author"],
-                        r["unscanned"],
-                        strip_clean,
-                        preserved,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "fmt",
-                    "has_gps",
-                    "has_serial",
-                    "has_author",
-                    "has_text",
-                    "has_pii",
-                    "has_unscanned_meta",
-                    "strip_clean",
-                    "pixels_preserved",
-                ],
+    def row(mid, blob):
+        blob = None if blob is None else bytes(blob)
+        r = None if blob is None else scan_media_metadata(blob)
+        if r is None:
+            yield (mid,) + (None,) * 9
+            return
+        stripped = strip_media_metadata(blob)
+        rs = None if stripped is None else scan_media_metadata(stripped)
+        strip_clean = (
+            None
+            if rs is None
+            else not (
+                rs["gps"] or rs["serial"] or rs["author"] or rs["text"]
+                or rs["unscanned"]
             )
+        )
+        if r["fmt"] == "wav":
+            preserved = _afp_blob(blob) == _afp_blob(stripped)
+        else:
+            po = _phash_blob(blob)
+            ps = _phash_blob(stripped)
+            preserved = (po[1] if po else None) == (ps[1] if ps else None)
+        yield (
+            mid, r["fmt"], r["gps"], r["serial"], r["author"], r["text"],
+            r["gps"] or r["serial"] or r["author"], r["unscanned"],
+            strip_clean, preserved,
+        )
 
-    return media.select(*cols).mapInPandas(run, _RELEASE_SCAN_SCHEMA)
+    return map_rows(media, [id_col, data_col], row, _RELEASE_SCAN_SCHEMA)
 
 
 def media_metadata_strip(

@@ -1,8 +1,9 @@
-"""Multimodal columns: binary media + typed metadata + UDF plumbing.
+"""Multimodal columns: binary media + typed metadata + per-row stages.
 
 A 100 TB training-data pipeline carries image/audio/video as opaque
 ``binary`` columns with typed metadata structs; decode and feature
-extraction run as Arrow-batched ``mapInPandas`` stages.  Decode to
+extraction run as Arrow-batched per-row stages, each one
+``cqs_spark.rows.map_rows`` over a per-blob kernel.  Decode to
 typed metadata is REAL for the fixed-header formats via pure-python
 parsers (PNG/GIF/BMP/JPEG/PNM dimensions+channels, WAV rate/channels/
 duration) — no codec wheel needed; PIL/ffmpeg slot in for pixel-level
@@ -20,15 +21,10 @@ Operators:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from cqs_spark.rows import map_rows
 from cqs_spark.staging import stage
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 try:  # pragma: no cover - not present in this container
     import PIL.Image  # noqa: F401
@@ -95,7 +91,6 @@ def byte_features(media: DataFrame, bins: int = 16) -> DataFrame:
     deterministic (so tests can assert exact values).
     """
     import numpy as np
-    import pandas as pd  # noqa: F811
 
     schema = T.StructType(
         [
@@ -106,26 +101,16 @@ def byte_features(media: DataFrame, bins: int = 16) -> DataFrame:
     )
     width = 256 // bins
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = []
-            for blob in pdf["data"]:
-                # Vectorized per blob: frombuffer + bincount, no
-                # per-byte Python loop (the UDF slow-path rule applies
-                # INSIDE Arrow batches too).
-                arr = np.frombuffer(bytes(blob), dtype=np.uint8)
-                counts = np.bincount(arr // width, minlength=bins).astype(np.float64)
-                total = counts.sum() or 1.0
-                feats.append((counts / total).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "features": feats,
-                }
-            )
+    def row(mid, kind, blob):
+        # Vectorized per blob: frombuffer + bincount, no per-byte
+        # Python loop (the UDF slow-path rule applies INSIDE Arrow
+        # batches too).
+        arr = np.frombuffer(bytes(blob), dtype=np.uint8)
+        counts = np.bincount(arr // width, minlength=bins).astype(np.float64)
+        total = counts.sum() or 1.0
+        yield mid, kind, (counts / total).tolist()
 
-    return media.select("media_id", "kind", "data").mapInPandas(run, schema)
+    return map_rows(media, ["media_id", "kind", "data"], row, schema)
 
 
 DECODED_SCHEMA = T.StructType(
@@ -219,55 +204,33 @@ def sniff_wav(blob: bytes) -> tuple[int, int, int] | None:
     return None
 
 
-def decode_image(media: DataFrame, fake: bool = False) -> DataFrame:
+def decode_image(media: DataFrame) -> DataFrame:
     """Image decode stage: binary → (width, height, channels).
 
     Recognized formats (PNG/GIF/BMP/JPEG/PNM) decode for REAL via the
     pure-python header parsers above; PIL extends coverage when the
     wheel exists.  Unrecognizable blobs yield NULL dimensions — a
     decode failure at 100 TB must quarantine the row, never kill the
-    job — unless ``fake=True``, which derives them from the metadata
-    struct (the synthetic-corpus path: its blobs are text bytes, not
-    images).
+    job.
     """
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ws, hs, cs = [], [], []
-            for blob, mw, mh in zip(pdf["data"], pdf["width"], pdf["height"]):
-                s = sniff_image(bytes(blob))
-                if s is None and HAVE_PIL:  # pragma: no cover - wheel absent
-                    import io
+    def row(mid, blob):
+        s = sniff_image(bytes(blob))
+        if s is None and HAVE_PIL:  # pragma: no cover - wheel absent
+            import io
 
-                    import PIL.Image
+            import PIL.Image
 
-                    try:
-                        with PIL.Image.open(io.BytesIO(bytes(blob))) as im:
-                            s = (im.format or "?", im.width, im.height,
-                                 len(im.getbands()))
-                    except Exception:
-                        s = None
-                if s is not None:
-                    ws.append(s[1]); hs.append(s[2]); cs.append(s[3])
-                elif fake:
-                    ws.append(mw); hs.append(mh); cs.append(3)
-                else:
-                    ws.append(None); hs.append(None); cs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "channels": pd.array(cs, dtype="Int32"),
-                }
-            )
+            try:
+                with PIL.Image.open(io.BytesIO(bytes(blob))) as im:
+                    s = (im.format or "?", im.width, im.height,
+                         len(im.getbands()))
+            except Exception:
+                s = None
+        yield (mid, None, None, None) if s is None else (mid, *s[1:])
 
-    imgs = media.filter(F.col("kind") == "image").select(
-        "media_id", "data", F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-    )
-    return imgs.mapInPandas(run, DECODED_SCHEMA)
+    imgs = media.filter(F.col("kind") == "image")
+    return map_rows(imgs, ["media_id", "data"], row, DECODED_SCHEMA)
 
 
 DECODED_AUDIO_SCHEMA = T.StructType(
@@ -280,37 +243,17 @@ DECODED_AUDIO_SCHEMA = T.StructType(
 )
 
 
-def decode_audio(media: DataFrame, fake: bool = False) -> DataFrame:
+def decode_audio(media: DataFrame) -> DataFrame:
     """Audio decode stage: binary → (sample_rate, channels,
     duration_ms).  WAV decodes for real (RIFF chunk walk); other
-    containers need ffmpeg/librosa and yield NULLs (or the metadata
-    stand-in with ``fake=True``)."""
-    import pandas as pd  # noqa: F811
+    containers need ffmpeg/librosa and yield NULLs."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rates, chs, durs = [], [], []
-            for blob, md in zip(pdf["data"], pdf["duration_ms"]):
-                s = sniff_wav(bytes(blob))
-                if s is not None:
-                    rates.append(s[0]); chs.append(s[1]); durs.append(s[2])
-                elif fake:
-                    rates.append(16_000); chs.append(1); durs.append(md)
-                else:
-                    rates.append(None); chs.append(None); durs.append(None)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": pd.array(rates, dtype="Int32"),
-                    "channels": pd.array(chs, dtype="Int32"),
-                    "duration_ms": pd.array(durs, dtype="Int64"),
-                }
-            )
+    def row(mid, blob):
+        s = sniff_wav(bytes(blob))
+        yield (mid, None, None, None) if s is None else (mid, *s)
 
-    auds = media.filter(F.col("kind") == "audio").select(
-        "media_id", "data", F.col("meta.duration_ms").alias("duration_ms")
-    )
-    return auds.mapInPandas(run, DECODED_AUDIO_SCHEMA)
+    auds = media.filter(F.col("kind") == "audio")
+    return map_rows(auds, ["media_id", "data"], row, DECODED_AUDIO_SCHEMA)
 
 
 def frame_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -825,28 +768,14 @@ def phash_images(
     the binary column — the decode stage is the only Python in the
     dedup path; everything downstream (banding, hamming verify) is
     JVM bit arithmetic."""
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ah, dh = [], []
-            for blob in pdf[data_col]:
-                hp = _phash_blob(blob, grid)
-                if hp is None:
-                    ah.append(None); dh.append(None)
-                else:
-                    ah.append(hp[0]); dh.append(hp[1])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "ahash": pd.array(ah, dtype="Int64"),
-                    "dhash": pd.array(dh, dtype="Int64"),
-                }
-            )
+    def row(mid, blob):
+        hp = _phash_blob(blob, grid)
+        yield (mid, None, None) if hp is None else (mid, *hp)
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(data_col)
-    ).mapInPandas(run, PHASH_SCHEMA)
+    return map_rows(
+        media, [F.col(id_col).alias(id_col), F.col(data_col)], row, PHASH_SCHEMA
+    )
 
 
 def image_neardup(
@@ -999,23 +928,13 @@ def audio_fingerprints(
     """Per-clip audio fingerprints: (media_id, afp), NULL on
     undecodable blobs.  Arrow-batched mapInPandas — the decode is the
     only Python; banding and hamming verify stay JVM-side."""
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            fps = []
-            for blob in pdf[data_col]:
-                fps.append(_afp_blob(blob, frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "afp": pd.array(fps, dtype="Int64"),
-                }
-            )
+    def row(mid, blob):
+        yield mid, _afp_blob(blob, frames)
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(data_col)
-    ).mapInPandas(run, AUDIO_FP_SCHEMA)
+    return map_rows(
+        media, [F.col(id_col).alias(id_col), F.col(data_col)], row, AUDIO_FP_SCHEMA
+    )
 
 
 def audio_neardup(
@@ -1132,36 +1051,20 @@ def audio_window_fingerprints(
     survive verbatim and the shared-hash JOIN finds the pair (the
     exact ``video_neardup`` shared-frame design; a video 'frame' and
     an audio 'window' are the same discretization trick)."""
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, wins, fps = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                s = None if blob is None else decode_samples(bytes(blob))
-                nw = 0 if s is None else len(s) // window
-                if not nw:
-                    ids.append(mid); wins.append(None); fps.append(None)
-                    continue
-                for w in range(nw):
-                    ids.append(mid)
-                    wins.append(w)
-                    fps.append(
-                        audio_fingerprint_bits(
-                            s[w * window : (w + 1) * window], frames
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "win": pd.array(wins, dtype="Int64"),
-                    "afp": pd.array(fps, dtype="Int64"),
-                }
+    def row(mid, blob):
+        s = None if blob is None else decode_samples(bytes(blob))
+        nw = 0 if s is None else len(s) // window
+        if not nw:
+            yield mid, None, None
+        for w in range(nw):
+            yield mid, w, audio_fingerprint_bits(
+                s[w * window : (w + 1) * window], frames
             )
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(data_col)
-    ).mapInPandas(run, AUDIO_WIN_SCHEMA)
+    return map_rows(
+        media, [F.col(id_col).alias(id_col), F.col(data_col)], row, AUDIO_WIN_SCHEMA
+    )
 
 
 def audio_neardup_windowed(
@@ -1598,30 +1501,18 @@ def video_fingerprints(
     of frame_plan's 1-frame/sec contract — at 100 TB the hash table
     is frames/k rows of 16 bytes, the blobs never leave the decode
     stage."""
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fnos, hashes = [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                fr = None if blob is None else decode_frames(bytes(blob))
-                if not fr:
-                    ids.append(mid); fnos.append(None); hashes.append(None)
-                    continue
-                for fno in range(0, len(fr), frame_step):
-                    _, dh = perceptual_hashes(fr[fno], grid)
-                    ids.append(mid); fnos.append(fno); hashes.append(dh)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "frame": pd.array(fnos, dtype="Int64"),
-                    "dhash": pd.array(hashes, dtype="Int64"),
-                }
-            )
+    def row(mid, blob):
+        fr = None if blob is None else decode_frames(bytes(blob))
+        if not fr:
+            yield mid, None, None
+            return
+        for fno in range(0, len(fr), frame_step):
+            yield mid, fno, perceptual_hashes(fr[fno], grid)[1]
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(data_col)
-    ).mapInPandas(run, VIDEO_FP_SCHEMA)
+    return map_rows(
+        media, [F.col(id_col).alias(id_col), F.col(data_col)], row, VIDEO_FP_SCHEMA
+    )
 
 
 def video_neardup(
@@ -1768,33 +1659,20 @@ def resize_images(
     ANN ladders consume).  One NULL row per undecodable blob.  The
     same `_box_cells` kernel the perceptual hashes pool with, so the
     SQL twin (inverse index ((x+1)·g−1)//N) agrees bit-exactly."""
-    import pandas as pd  # noqa: F811
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, rs, cs, vs = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                px = None if blob is None else decode_pixels(bytes(blob))
-                if px is None:
-                    ids.append(mid); rs.append(None); cs.append(None); vs.append(None)
-                    continue
-                cells = _box_cells(px, out_h, out_w)
-                for r in range(out_h):
-                    for c in range(out_w):
-                        ids.append(mid); rs.append(r); cs.append(c)
-                        vs.append(cells[r][c])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "r": pd.array(rs, dtype="Int64"),
-                    "c": pd.array(cs, dtype="Int64"),
-                    "v": pd.array(vs, dtype="Int64"),
-                }
-            )
+    def row(mid, blob):
+        px = None if blob is None else decode_pixels(bytes(blob))
+        if px is None:
+            yield mid, None, None, None
+            return
+        cells = _box_cells(px, out_h, out_w)
+        for r in range(out_h):
+            for c in range(out_w):
+                yield mid, r, c, cells[r][c]
 
-    return media.select(
-        F.col(id_col).alias(id_col), F.col(data_col)
-    ).mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(
+        media, [F.col(id_col).alias(id_col), F.col(data_col)], row, RESIZE_SCHEMA
+    )
 
 
 def incremental_video_neardup(
@@ -1953,48 +1831,24 @@ def _audit_features(
     operators run (``_phash_blob``/``_afp_blob``,
     ``mediameta.scan_media_metadata``) — one decode+parse pass instead
     of one walk per audit leg."""
-    import pandas as pd  # noqa: F811
+    from cqs_spark.operators.mediameta import scan_media_metadata
 
     if kind == "image" and method not in ("ahash", "dhash"):
         raise ValueError(f"unknown perceptual hash {method!r}")
     midx = 0 if method == "ahash" else 1
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from cqs_spark.operators.mediameta import scan_media_metadata
+    def row(mid, blob):
+        blob = None if blob is None else bytes(blob)
+        if kind == "image":
+            hp = _phash_blob(blob)
+            sig = None if hp is None else hp[midx]
+        else:
+            sig = None if blob is None else _afp_blob(blob, frames)
+        r = None if blob is None else scan_media_metadata(blob)
+        pii = None if r is None else (r["gps"] or r["serial"] or r["author"])
+        yield mid, sig, pii, r is None or r["unscanned"]
 
-        for pdf in batches:
-            mids, sigs, piis, unscs = [], [], [], []
-            for mid, blob in zip(pdf[id_col], pdf[data_col]):
-                blob = None if blob is None else bytes(blob)
-                if kind == "image":
-                    hp = _phash_blob(blob)
-                    sig = None if hp is None else hp[midx]
-                else:
-                    sig = None if blob is None else _afp_blob(blob, frames)
-                r = None if blob is None else scan_media_metadata(blob)
-                mids.append(int(mid))
-                # pd.array Int64, NOT a tuple column: a nullable int64
-                # column built from tuples coerces to float64 and
-                # corrupts 64-bit hash values in the low bits.
-                sigs.append(sig)
-                piis.append(
-                    None
-                    if r is None
-                    else (r["gps"] or r["serial"] or r["author"])
-                )
-                unscs.append(r is None or r["unscanned"])
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "simhash": pd.array(sigs, dtype="Int64"),
-                    "has_pii": piis,
-                    "unscannable": unscs,
-                }
-            )
-
-    return media.select(id_col, data_col).mapInPandas(
-        run, _AUDIT_FEATURES_SCHEMA
-    )
+    return map_rows(media, [id_col, data_col], row, _AUDIT_FEATURES_SCHEMA)
 
 
 def media_audit(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cqs_spark.catalog import load_table
 from cqs_spark.operators.multimodal import frame_plan, media_stats, media_table
+from cqs_spark.rows import map_rows
 from cqs_spark.staging import stage
 
 
@@ -230,26 +231,14 @@ def _id_corpus(
     ``schema``'s column order, id first.  We spread the id frame so the
     Arrow decode stage runs on every core — the fixture parquet is a
     single file and would otherwise pin the whole encode+decode on one
-    task.  The id column is built as int64: a float64 detour would
-    corrupt the low bits of the ``1 << 50`` batch-id offsets.
+    task.
     """
-    from collections.abc import Iterator
-
-    names = [col.split()[0] for col in schema.split(",")]
-
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [r for did in pdf["doc_id"] for r in rows_of(int(did))]
-            yield pd.DataFrame(rows, columns=names).astype({names[0]: "int64"})
-
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    return docs.mapInPandas(run, schema)
+    return map_rows(docs, ["doc_id"], rows_of, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1589,53 +1578,32 @@ def _eqns(a, b):
     return a == b
 
 
-def _fused_md5_strip_walk(scanner, names, info_cols, tail=None, n_tail=0):
-    """mapInPandas body for the clean_md5-proof container family
+def _fused_md5_strip_walk(scanner, info_cols, tail=None):
+    """Row function for the clean_md5-proof container family
     (q186/q187/q188): per blob, info scan + strip + md5-vs-expected-
     twin in ONE Arrow stage, kernels shared with the gated operators.
     ``info_cols(r)`` maps the scan dict to the columns between
-    media_id and strip_clean; ``tail(r, s)`` appends ``n_tail`` proof
-    columns after strip_clean.  Quarantined blobs (scanner → None)
-    yield the NULL info row; strip_clean is NULL when the expected
-    twin is NULL (the old join form's when(clean_md5 isNull) arm)."""
-    from collections.abc import Iterator
+    media_id and strip_clean; ``tail(r, s)`` appends proof columns
+    after strip_clean.  Quarantined blobs (scanner → None) yield the
+    NULL info row; strip_clean is NULL when the expected twin is NULL
+    (the old join form's when(clean_md5 isNull) arm)."""
+    import hashlib
 
-    n_info = len(names) - 2 - n_tail
+    from cqs_spark.operators.mediameta import NO_SCAN, strip_media_metadata
 
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
+    def row(mid, blob, cm):
+        blob = None if blob is None else bytes(blob)
+        r = None if blob is None else scanner(blob)
+        s = None if blob is None else strip_media_metadata(blob)
+        strip_clean = (
+            None
+            if cm is None
+            else _eqns(None if s is None else hashlib.md5(s).hexdigest(), cm)
+        )
+        out = (mid, *info_cols(NO_SCAN if r is None else r), strip_clean)
+        yield out if tail is None else out + tuple(tail(r, s))
 
-        import pandas as pd
-
-        from cqs_spark.operators.mediameta import strip_media_metadata
-
-        for pdf in batches:
-            rows = []
-            for mid, blob, cm in zip(
-                pdf["media_id"], pdf["data"], pdf["clean_md5"]
-            ):
-                blob = None if blob is None else bytes(blob)
-                cm = None if cm is None else str(cm)
-                r = None if blob is None else scanner(blob)
-                s = None if blob is None else strip_media_metadata(blob)
-                strip_clean = (
-                    None
-                    if cm is None
-                    else _eqns(
-                        None if s is None else hashlib.md5(s).hexdigest(),
-                        cm,
-                    )
-                )
-                if r is None:
-                    row = (int(mid),) + (None,) * n_info + (strip_clean,)
-                else:
-                    row = (int(mid),) + tuple(info_cols(r)) + (strip_clean,)
-                if tail is not None:
-                    row = row + tuple(tail(r, s))
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=names)
-
-    return run
+    return row
 
 
 def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1644,7 +1612,13 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserved, sample-table chunk offsets remapped to the same media
     bytes) — the q178 contract extended to ISO-BMFF; garbage
     quarantines to a NULL row."""
-    from collections.abc import Iterator
+    import struct
+
+    from cqs_spark.operators.mediameta import (
+        _mp4_boxes,
+        scan_mp4_info,
+        strip_media_metadata,
+    )
 
     # Fused release walk (r13): info-scan + strip + re-scan + stco
     # byte proof per blob in ONE Arrow stage over ONE corpus pass —
@@ -1659,93 +1633,60 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_text boolean, has_pii boolean, has_unscanned_meta boolean, "
         "strip_clean boolean, chunks_intact boolean"
     )
-    names = [
-        "media_id", "fmt", "width", "height", "duration_ms", "has_gps",
-        "has_author", "has_text", "has_pii", "has_unscanned_meta",
-        "strip_clean", "chunks_intact",
-    ]
 
-    def run(batches: Iterator) -> Iterator:
-        import struct
+    def entries(b: bytes) -> list:
+        out = []
 
-        import pandas as pd
+        def walk(lo, hi):
+            for t, _s, e, p in _mp4_boxes(b, lo, hi):
+                if t in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
+                    walk(p, e)
+                elif t == b"stco":
+                    n = struct.unpack_from(">I", b, p + 4)[0]
+                    for k in range(n):
+                        out.append(struct.unpack_from(">I", b, p + 8 + 4 * k)[0])
 
-        from cqs_spark.operators.mediameta import (
-            _mp4_boxes,
-            scan_mp4_info,
-            strip_media_metadata,
+        walk(0, len(b))
+        return out
+
+    def row(mid, blob):
+        blob = None if blob is None else bytes(blob)
+        r = None if blob is None else scan_mp4_info(blob)
+        if r is None:
+            yield (mid,) + (None,) * 11
+            return
+        s = strip_media_metadata(blob)
+        rs = None if s is None else scan_mp4_info(s)
+        flags_clear = (
+            None
+            if rs is None
+            else not (rs["gps"] or rs["author"] or rs["text"] or rs["unscanned"])
+        )
+        strip_clean = _kand(
+            flags_clear,
+            _eqns(r["width"], None if rs is None else rs["width"]),
+            _eqns(r["height"], None if rs is None else rs["height"]),
+            _eqns(r["duration_ms"], None if rs is None else rs["duration_ms"]),
+        )
+        if s is None:
+            chunks = None
+        else:
+            try:
+                eo, es = entries(blob), entries(s)
+                chunks = len(eo) == len(es) and all(
+                    blob[a : a + 8] == s[b2 : b2 + 8] for a, b2 in zip(eo, es)
+                )
+            except Exception:
+                chunks = None
+        yield (
+            mid, r["fmt"], r["width"], r["height"], r["duration_ms"],
+            r["gps"], r["author"], r["text"],
+            r["gps"] or r["serial"] or r["author"], r["unscanned"],
+            strip_clean, chunks,
         )
 
-        def entries(b: bytes) -> list:
-            out = []
-
-            def walk(lo, hi):
-                for t, _s, e, p in _mp4_boxes(b, lo, hi):
-                    if t in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                        walk(p, e)
-                    elif t == b"stco":
-                        n = struct.unpack_from(">I", b, p + 4)[0]
-                        for k in range(n):
-                            out.append(
-                                struct.unpack_from(">I", b, p + 8 + 4 * k)[0]
-                            )
-
-            walk(0, len(b))
-            return out
-
-        for pdf in batches:
-            rows = []
-            for mid, blob in zip(pdf["media_id"], pdf["data"]):
-                blob = None if blob is None else bytes(blob)
-                r = None if blob is None else scan_mp4_info(blob)
-                if r is None:
-                    rows.append((int(mid),) + (None,) * 11)
-                    continue
-                s = strip_media_metadata(blob)
-                rs = None if s is None else scan_mp4_info(s)
-                flags_clear = (
-                    None
-                    if rs is None
-                    else not (
-                        rs["gps"] or rs["author"] or rs["text"]
-                        or rs["unscanned"]
-                    )
-                )
-                strip_clean = _kand(
-                    flags_clear,
-                    _eqns(r["width"], None if rs is None else rs["width"]),
-                    _eqns(r["height"], None if rs is None else rs["height"]),
-                    _eqns(
-                        r["duration_ms"],
-                        None if rs is None else rs["duration_ms"],
-                    ),
-                )
-                if s is None:
-                    chunks = None
-                else:
-                    try:
-                        eo, es = entries(blob), entries(s)
-                        chunks = len(eo) == len(es) and all(
-                            blob[a : a + 8] == s[b2 : b2 + 8]
-                            for a, b2 in zip(eo, es)
-                        )
-                    except Exception:
-                        chunks = None
-                rows.append(
-                    (
-                        int(mid), r["fmt"], r["width"], r["height"],
-                        r["duration_ms"], r["gps"], r["author"], r["text"],
-                        r["gps"] or r["serial"] or r["author"],
-                        r["unscanned"], strip_clean, chunks,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=names)
-
-    return (
-        _q183_media(spark, sf_dir)
-        .mapInPandas(run, schema)
-        .orderBy("media_id")
-    )
+    media = _q183_media(spark, sf_dir)
+    return map_rows(media, ["media_id", "data"], row, schema).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q183"] = q183
@@ -1832,7 +1773,12 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
     album-art GPS case) from real struct walks, then strip + re-scan
     (clean) + md5 proof that the audio frames shipped byte-identical;
     garbage quarantines to a NULL row."""
-    from collections.abc import Iterator
+    import hashlib
+
+    from cqs_spark.operators.mediameta import (
+        scan_media_metadata,
+        strip_media_metadata,
+    )
 
     # Fused release walk (r13): scan + strip + re-scan + md5 frame
     # proof per blob in ONE Arrow stage (previously: two staged blob
@@ -1843,65 +1789,38 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_text boolean, has_pii boolean, has_unscanned_meta boolean, "
         "strip_clean boolean, frames_preserved boolean"
     )
-    names = [
-        "media_id", "fmt", "has_gps", "has_author", "has_text", "has_pii",
-        "has_unscanned_meta", "strip_clean", "frames_preserved",
-    ]
 
-    def run(batches: Iterator) -> Iterator:
-        import hashlib
-
-        import pandas as pd
-
-        from cqs_spark.operators.mediameta import (
-            scan_media_metadata,
-            strip_media_metadata,
+    def row(mid, blob, fm):
+        blob = None if blob is None else bytes(blob)
+        r = None if blob is None else scan_media_metadata(blob)
+        s = None if blob is None else strip_media_metadata(blob)
+        frames_preserved = (
+            None
+            if fm is None
+            else _eqns(None if s is None else hashlib.md5(s).hexdigest(), fm)
+        )
+        if r is None:
+            yield (mid,) + (None,) * 7 + (frames_preserved,)
+            return
+        rs = None if s is None else scan_media_metadata(s)
+        strip_clean = (
+            None
+            if rs is None
+            else not (
+                rs["gps"] or rs["serial"] or rs["author"] or rs["text"]
+                or rs["unscanned"]
+            )
+        )
+        yield (
+            mid, r["fmt"], r["gps"], r["author"], r["text"],
+            r["gps"] or r["serial"] or r["author"], r["unscanned"],
+            strip_clean, frames_preserved,
         )
 
-        for pdf in batches:
-            rows = []
-            for mid, blob, fm in zip(
-                pdf["media_id"], pdf["data"], pdf["frames_md5"]
-            ):
-                blob = None if blob is None else bytes(blob)
-                fm = None if fm is None else str(fm)
-                r = None if blob is None else scan_media_metadata(blob)
-                s = None if blob is None else strip_media_metadata(blob)
-                frames_preserved = (
-                    None
-                    if fm is None
-                    else _eqns(
-                        None if s is None else hashlib.md5(s).hexdigest(), fm
-                    )
-                )
-                if r is None:
-                    rows.append(
-                        (int(mid),) + (None,) * 7 + (frames_preserved,)
-                    )
-                    continue
-                rs = None if s is None else scan_media_metadata(s)
-                strip_clean = (
-                    None
-                    if rs is None
-                    else not (
-                        rs["gps"] or rs["serial"] or rs["author"]
-                        or rs["text"] or rs["unscanned"]
-                    )
-                )
-                rows.append(
-                    (
-                        int(mid), r["fmt"], r["gps"], r["author"], r["text"],
-                        r["gps"] or r["serial"] or r["author"],
-                        r["unscanned"], strip_clean, frames_preserved,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=names)
-
-    return (
-        _q184_media(spark, sf_dir)
-        .mapInPandas(run, schema)
-        .orderBy("media_id")
-    )
+    media = _q184_media(spark, sf_dir)
+    return map_rows(
+        media, ["media_id", "data", "frames_md5"], row, schema
+    ).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q184"] = q184
@@ -2116,23 +2035,17 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_gps boolean, has_author boolean, has_pii boolean, "
         "strip_clean boolean"
     )
-    names = [
-        "media_id", "fmt", "width", "height", "has_gps", "has_author",
-        "has_pii", "strip_clean",
-    ]
-    run = _fused_md5_strip_walk(
+    row = _fused_md5_strip_walk(
         scan_webp_info,
-        names,
         lambda r: (
             r["fmt"], r["width"], r["height"], r["gps"], r["author"],
             r["gps"] or r["serial"] or r["author"],
         ),
     )
-    return (
-        _q186_media(spark, sf_dir)
-        .mapInPandas(run, schema)
-        .orderBy("media_id")
-    )
+    media = _q186_media(spark, sf_dir)
+    return map_rows(
+        media, ["media_id", "data", "clean_md5"], row, schema
+    ).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q186"] = q186
@@ -2241,27 +2154,19 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_pii boolean, has_unscanned_meta boolean, "
         "strip_clean boolean, strip_quarantined boolean"
     )
-    names = [
-        "media_id", "fmt", "width", "height", "has_gps", "has_serial",
-        "has_author", "has_pii", "has_unscanned_meta", "strip_clean",
-        "strip_quarantined",
-    ]
-    run = _fused_md5_strip_walk(
+    row = _fused_md5_strip_walk(
         scan_heif_info,
-        names,
         lambda r: (
             r["fmt"], r["width"], r["height"], r["gps"], r["serial"],
             r["author"], r["gps"] or r["serial"] or r["author"],
             r["unscanned"],
         ),
         tail=lambda r, s: (None if r is None else (s is None),),
-        n_tail=1,
     )
-    return (
-        _q187_media(spark, sf_dir)
-        .mapInPandas(run, schema)
-        .orderBy("media_id")
-    )
+    media = _q187_media(spark, sf_dir)
+    return map_rows(
+        media, ["media_id", "data", "clean_md5"], row, schema
+    ).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q187"] = q187
@@ -2394,25 +2299,18 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_serial boolean, has_author boolean, has_text boolean, "
         "has_pii boolean, has_unscanned_meta boolean, strip_clean boolean"
     )
-    names = [
-        "media_id", "fmt", "duration_ms", "has_gps", "has_serial",
-        "has_author", "has_text", "has_pii", "has_unscanned_meta",
-        "strip_clean",
-    ]
-    run = _fused_md5_strip_walk(
+    row = _fused_md5_strip_walk(
         scan_ogg_info,
-        names,
         lambda r: (
             r["fmt"], r["duration_ms"], r["gps"], r["serial"], r["author"],
             r["text"], r["gps"] or r["serial"] or r["author"],
             r["unscanned"],
         ),
     )
-    return (
-        _q188_media(spark, sf_dir)
-        .mapInPandas(run, schema)
-        .orderBy("media_id")
-    )
+    media = _q188_media(spark, sf_dir)
+    return map_rows(
+        media, ["media_id", "data", "clean_md5"], row, schema
+    ).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q188"] = q188

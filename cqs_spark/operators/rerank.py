@@ -18,13 +18,11 @@ the reference's (384/hidden)·(512/len) sizing hook
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
-from typing import TYPE_CHECKING
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from cqs_spark.rows import map_rows
 
 _WORD_RE = re.compile(r"[a-z0-9]+")
 
@@ -61,11 +59,6 @@ def lexical_cross_score(query: str, passage: str) -> float:
     return sat * coverage + prox
 
 
-# Back-compat alias: earlier rounds shipped a hash-free overlap stub
-# under this name; the lexical model supersedes it.
-fake_cross_score = lexical_cross_score
-
-
 def rerank_pool(
     pool: DataFrame,
     query: str,
@@ -79,8 +72,6 @@ def rerank_pool(
     (upstream top-k), so this is one partition-parallel pass, never a
     corpus scan.
     """
-    import pandas as pd  # noqa: F811
-
     schema = T.StructType(
         [
             T.StructField(id_col, T.StringType(), False),
@@ -88,20 +79,12 @@ def rerank_pool(
         ]
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        # A real backend builds the ONNX session here, once per worker,
-        # and batches pairs by the hidden-size/seq-len formula.
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "ce_score": [
-                        score_pairs_fn(query, t) for t in pdf[text_col]
-                    ],
-                }
-            )
+    # A real backend builds its ONNX session once per worker process,
+    # on the first call of ``score_pairs_fn``, not once per pair.
+    def row(rid, text):
+        yield rid, score_pairs_fn(query, text)
 
-    return pool.select(id_col, text_col).mapInPandas(run, schema)
+    return map_rows(pool, [id_col, text_col], row, schema)
 
 
 def apply_rerank(

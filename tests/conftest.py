@@ -73,7 +73,6 @@ SLOW_TESTS = {
     "tests/test_cli.py::test_cli_trace_explain_testmap",
     "tests/test_cli.py::test_engine_task_composes_with_single_bfs",
     "tests/test_convert.py::test_chm_salvage_extraction",
-    "tests/test_convert.py::test_convert_files_html_and_passthrough",
     "tests/test_convert.py::test_convert_integrated_into_index",
     "tests/test_convert.py::test_pdf_fixture_converts[False]",
     "tests/test_curate.py::test_block_dedup_first_occurrence_rule",
@@ -155,14 +154,11 @@ SLOW_TESTS = {
     "tests/test_engine.py::test_search_rrf_mode",
     "tests/test_engine.py::test_where_to_add_and_scout",
     "tests/test_eval.py::test_eval_engine_keyword_leg_retrieves",
-    "tests/test_gitops.py::test_affected_and_impact",
-    "tests/test_gitops.py::test_blame_attributes_commits",
     "tests/test_graph_oracle.py::test_pagerank_mass_and_ordering",
     "tests/test_graph_oracle.py::test_triangle_count_known_graphs",
     "tests/test_index_pipeline.py::test_keyword_search_finds_cosine_topk",
     "tests/test_injection_relay.py::test_convert_relay_flags",
     "tests/test_mediameta.py::test_media_audit_pii_leg",
-    "tests/test_mediameta.py::test_media_release_scan_matches_operator_join",
     "tests/test_mediameta.py::test_r11_review_hardening",
     "tests/test_mediameta.py::test_write_media_shards_strips_and_certifies",
     "tests/test_ml_audit.py::test_class_separation_all_short_label_dense_centroid",
@@ -173,8 +169,6 @@ SLOW_TESTS = {
     "tests/test_ml_audit.py::test_nb_confusion_is_diagonal_on_separable_corpus",
     "tests/test_ml_audit.py::test_nb_confusion_rows_partition_the_corpus",
     "tests/test_ml_audit.py::test_shard_plan_balances_structured_ids",
-    "tests/test_multimodal.py::test_audio_windowed_neardup_clip_robust",
-    "tests/test_multimodal.py::test_frame_containment_banded_and_stopword",
     "tests/test_multimodal.py::test_incremental_media_neardup_image_and_audio",
     "tests/test_multimodal.py::test_label_propagation_strict_raises_on_diameter",
     "tests/test_multimodal.py::test_media_dedup_apply_transitive_and_passthrough",

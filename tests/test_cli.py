@@ -511,6 +511,29 @@ def test_cli_doctor_and_impact_diff(workdir, capsys):
     assert all({"node", "depth"} <= set(r) for r in rows)
 
 
+def test_cli_git_verbs_match_indexed_files(workdir, capsys):
+    """affected / impact-diff / blame strip the ``file:`` origin of an
+    indexed chunk to git's repo-relative path, so the newest commit
+    under cqs_spark/ touches indexed chunks and blame sees history."""
+    import os
+    import subprocess
+
+    repo = os.path.dirname(ROOT)
+    sha = subprocess.run(
+        ["git", "-C", repo, "log", "-1", "--format=%H", "--", "cqs_spark"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+
+    def rows(*argv):
+        capsys.readouterr()
+        assert main(["--workdir", workdir, *argv]) == 0
+        return [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
+
+    assert rows("affected", repo, sha)
+    assert rows("impact-diff", repo, sha)
+    assert any(r["n_commits"] > 0 for r in rows("blame", repo))
+
+
 def test_audit_corrupt_state_reads_inactive(tmp_path_factory):
     """A corrupt/truncated/oversized audit.json must read as
     default-inactive, never raise into review/search (r5 ADVICE fix;

@@ -2,13 +2,13 @@
 
 from __future__ import annotations
 
-from cqs_spark.operators.rerank import apply_rerank, fake_cross_score, rerank_pool
+from cqs_spark.operators.rerank import apply_rerank, lexical_cross_score, rerank_pool
 
 
-def test_fake_cross_score_properties():
-    assert fake_cross_score("find the lock", "the lock is here") > 0
-    assert fake_cross_score("find the lock", "unrelated words entirely") == 0.0
-    assert fake_cross_score("", "x") == 0.0
+def test_lexical_cross_score_properties():
+    assert lexical_cross_score("find the lock", "the lock is here") > 0
+    assert lexical_cross_score("find the lock", "unrelated words entirely") == 0.0
+    assert lexical_cross_score("", "x") == 0.0
 
 
 def test_rerank_promotes_overlapping_passage(spark):
@@ -34,8 +34,6 @@ def test_rerank_promotes_overlapping_passage(spark):
 def test_lexical_cross_score_is_an_interaction_model():
     """Signals a hash stub cannot produce: tight co-occurrence beats
     the same terms scattered; full coverage beats partial."""
-    from cqs_spark.operators.rerank import lexical_cross_score
-
     q = "exponential backoff retry"
     tight = "the client does retry exponential backoff on failure"
     scattered = (
