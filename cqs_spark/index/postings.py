@@ -65,9 +65,10 @@ def keyword_search(
 
     score = Σ_terms field_weight · tf · ln(1 + N/df).  The query terms
     broadcast; only their postings shuffle.  Deterministic (score desc,
-    chunk_id) ordering.  Query terms expand through the synonym table
-    (src/search/synonyms.rs expand_query_for_fts — "auth" also matches
-    "authentication") unless ``expand_synonyms=False``.
+    chunk_id) ordering and bit-reproducible scores.  Query terms expand
+    through the synonym table (src/search/synonyms.rs
+    expand_query_for_fts — "auth" also matches "authentication") unless
+    ``expand_synonyms=False``.
     """
     weights = field_weights or FIELD_WEIGHTS
     spark = postings.sparkSession
@@ -95,7 +96,13 @@ def keyword_search(
             F.col("w") * F.col("tf") * F.log(1.0 + F.lit(float(n_chunks)) / F.col("df")),
         )
         .groupBy("chunk_id")
-        .agg(F.sum("s").alias("score"))
+        # Sum in sorted order, not shuffle order: float addition is not
+        # associative, and the score must be the same in every run.
+        .agg(
+            F.aggregate(
+                F.array_sort(F.collect_list("s")), F.lit(0.0), lambda a, x: a + x
+            ).alias("score")
+        )
         .orderBy(F.desc("score"), "chunk_id")
         .limit(k)
     )

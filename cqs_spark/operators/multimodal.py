@@ -215,7 +215,7 @@ def decode_image(media: DataFrame) -> DataFrame:
     """
 
     def row(mid, blob):
-        s = sniff_image(bytes(blob))
+        s = None if blob is None else sniff_image(bytes(blob))
         if s is None and HAVE_PIL:  # pragma: no cover - wheel absent
             import io
 
@@ -249,7 +249,7 @@ def decode_audio(media: DataFrame) -> DataFrame:
     containers need ffmpeg/librosa and yield NULLs."""
 
     def row(mid, blob):
-        s = sniff_wav(bytes(blob))
+        s = None if blob is None else sniff_wav(bytes(blob))
         yield (mid, None, None, None) if s is None else (mid, *s)
 
     auds = media.filter(F.col("kind") == "audio")

@@ -125,7 +125,6 @@ SLOW_TESTS = {
     "tests/test_determinism.py::test_incremental_and_budget_select_repartition_invariant[7]",
     "tests/test_determinism.py::test_minhash_repartition_invariant[1]",
     "tests/test_determinism.py::test_minhash_repartition_invariant[7]",
-    "tests/test_determinism.py::test_mmr_python_matches_unrolled_sql_oracle",
     "tests/test_determinism.py::test_new_pipeline_ops_repartition_invariant[1]",
     "tests/test_determinism.py::test_new_pipeline_ops_repartition_invariant[7]",
     "tests/test_determinism.py::test_round7_ops_repartition_invariant[1]",
@@ -154,8 +153,6 @@ SLOW_TESTS = {
     "tests/test_engine.py::test_search_rrf_mode",
     "tests/test_engine.py::test_where_to_add_and_scout",
     "tests/test_eval.py::test_eval_engine_keyword_leg_retrieves",
-    "tests/test_graph_oracle.py::test_pagerank_mass_and_ordering",
-    "tests/test_graph_oracle.py::test_triangle_count_known_graphs",
     "tests/test_index_pipeline.py::test_keyword_search_finds_cosine_topk",
     "tests/test_injection_relay.py::test_convert_relay_flags",
     "tests/test_mediameta.py::test_media_audit_pii_leg",
@@ -179,7 +176,6 @@ SLOW_TESTS = {
     "tests/test_notes.py::test_search_and_scoring_projection",
     "tests/test_notes.py::test_stale_flags_any_stale_mention_and_skips_mentionless",
     "tests/test_notes.py::test_stale_notes_detected",
-    "tests/test_pipeline_oracle.py::test_learn_apply_bpe_roundtrip",
     "tests/test_plan_quality.py::test_q156_release_audit_single_row_legs_broadcast",
     "tests/test_plan_quality.py::test_q171_incremental_media_index_never_shuffles_to_batch",
     "tests/test_plan_quality.py::test_q173_video_neardup_stopword_drop_is_broadcast_anti",
@@ -192,8 +188,6 @@ SLOW_TESTS = {
     "tests/test_slots.py::test_slot_eval_compares_two_encoders",
     "tests/test_slots.py::test_slot_local_cache_merge_unions_missing_rows",
     "tests/test_slots.py::test_slot_local_embed_cache_migrates_to_root",
-    "tests/test_snapshot_oracle.py::test_scd2_duplicate_updates_one_open_version",
-    "tests/test_snapshot_oracle.py::test_scd2_merge_semantics",
     "tests/test_streaming.py::test_curate_arrivals_incremental_exactsubstr",
     "tests/test_streaming.py::test_curate_arrivals_incremental_sentence_exactsubstr",
     "tests/test_streaming.py::test_curate_arrivals_matches_batch_ladder",

@@ -429,3 +429,29 @@ def test_round7_ops_repartition_invariant(spark, parts):
             leak.repartition(parts), "doc_id", "source", "text", k=5
         )
     ) == _rows(textops.source_leakage(leak, "doc_id", "source", "text", k=5))
+
+
+def test_keyword_search_scores_independent_of_row_order(spark):
+    """A chunk's TF-IDF score sums its field scores in a fixed order, so
+    the same postings rows in two input orders give bit-identical
+    scores.  One term in three fields per chunk keeps the rows of a
+    chunk together through the term shuffle, in input order; their
+    scores sit near 0.1-0.3, where float addition order changes the
+    last bit."""
+    from cqs_spark.index.postings import keyword_search
+
+    rows = [
+        ("alpha", f"c{i:02d}", field, tf)
+        for i in range(24)
+        for field, tf in (("name", 1 + i % 2), ("doc", 2 + i % 3), ("content", 3 + i % 4))
+    ]
+    schema = "term string, chunk_id string, field string, tf long"
+
+    def scores(ordered):
+        postings = spark.createDataFrame(ordered, schema).coalesce(1)
+        hits = keyword_search(postings, "alpha", 2, k=24, expand_synonyms=False)
+        return {r["chunk_id"]: r["score"] for r in hits.collect()}
+
+    forward, backward = scores(rows), scores(rows[::-1])
+    assert len(forward) == 24
+    assert forward == backward

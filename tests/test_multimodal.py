@@ -94,6 +94,9 @@ def test_real_header_decode_without_codec_wheel(spark):
         (0, "image", _png(64, 32), (len(_png(64, 32)), 0, 0, 0)),
         (1, "image", _bmp(8, 4), (len(_bmp(8, 4)), 0, 0, 0)),
         (2, "audio", _wav(8000, 2, 2), (10, 0, 0, 0)),
+        # NULL blobs quarantine to a NULL row instead of failing the job
+        (3, "image", None, (0, 0, 0, 0)),
+        (4, "audio", None, (0, 0, 0, 0)),
     ]
     media = spark.createDataFrame(
         rows,
@@ -103,8 +106,10 @@ def test_real_header_decode_without_codec_wheel(spark):
     imgs = {r["media_id"]: r for r in decode_image(media).collect()}
     assert (imgs[0]["width"], imgs[0]["height"], imgs[0]["channels"]) == (64, 32, 4)
     assert (imgs[1]["width"], imgs[1]["height"], imgs[1]["channels"]) == (8, 4, 3)
-    aud = decode_audio(media).collect()[0]
-    assert (aud["sample_rate"], aud["channels"], aud["duration_ms"]) == (8000, 2, 2000)
+    assert (imgs[3]["width"], imgs[3]["height"], imgs[3]["channels"]) == (None, None, None)
+    auds = {r["media_id"]: r for r in decode_audio(media).collect()}
+    assert (auds[2]["sample_rate"], auds[2]["channels"], auds[2]["duration_ms"]) == (8000, 2, 2000)
+    assert (auds[4]["sample_rate"], auds[4]["channels"], auds[4]["duration_ms"]) == (None, None, None)
 
 
 def test_media_neardup_flags_identical_blobs(spark):

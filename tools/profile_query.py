@@ -1,128 +1,40 @@
-#!/usr/bin/env python
-"""Profile declared queries: wall time (toPandas, as the bench times it),
-noop-sink time (guide §1.4), Spark job/stage/task counts, and
-.explain("formatted") capture.
-
-Usage:
-  python tools/profile_query.py q103 q156 ...          # profile these
-  python tools/profile_query.py --plans-dir plans/r12 --suffix before q103
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 controls the data dir.
-
-Job/stage/task counts come from the status tracker after isolating each
-query in its own job group.
-"""
-
-from __future__ import annotations
-
+"""Profile declared queries with perfbench's tracer (python tools/profile_query.py q103
+q172): one JSON line per query with its plan-build and toPandas seconds and the Spark
+work the event log attributes to them.  --plans-dir DIR writes each explain("formatted")
+plan to DIR/<query>_<suffix>.txt; SPARK_GRAFT_SF_DIR names the data dir."""
 import argparse
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
+import harness  # noqa: E402
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="+")
-    ap.add_argument("--plans-dir", default=None)
-    ap.add_argument("--suffix", default="before")
-    ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--noop", action="store_true",
-                    help="also time with the noop sink")
-    args = ap.parse_args()
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from cqs_spark.session import get_spark
-
-    spark = get_spark(app_name="cqs_spark-profile", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as E
-    from cqs_spark.catalog import TESTDATA_TABLES, load_table
-
-    qs = E.queries()
-
-    # Same warmup as bench.py: cache base tables, prime codegen + Python workers
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).cache().count()
-    for warm in ("q05", "q15", "q18", "q16"):
-        if warm in qs:
-            qs[warm](spark, sf_dir).toPandas()
-    spark.range(1000).mapInPandas(lambda it: it, "id long").toPandas()
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    results = {}
-    for name in args.queries:
-        if name not in qs:
-            print(f"!! {name}: not in queries()", file=sys.stderr)
-            continue
-        rec: dict = {}
-        # plan capture (before any run so hop caches from prior queries
-        # don't change the plan we record)
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        rec["plan_build_sec"] = round(time.perf_counter() - t0, 3)
-        if args.plans_dir:
-            os.makedirs(args.plans_dir, exist_ok=True)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(
-                os.path.join(args.plans_dir, f"{name}_{args.suffix}.txt"), "w"
-            ) as fh:
-                fh.write(plan)
-            rec["exchanges"] = plan.count("Exchange")
-            rec["python_evals"] = (
-                plan.count("BatchEvalPython")
-                + plan.count("ArrowEvalPython")
-                + plan.count("MapInPandas")
-                + plan.count("MapInArrow")
-            )
-
-        samples = []
-        for i in range(args.runs):
-            group = f"{name}-run{i}"
-            sc.setJobGroup(group, f"profile {name} run {i}")
-            t0 = time.perf_counter()
-            df_i = qs[name](spark, sf_dir)
-            df_i.toPandas()
-            samples.append(round(time.perf_counter() - t0, 3))
-            jobs = tracker.getJobIdsForGroup(group)
-            if i == 0:
-                n_stages = 0
-                n_tasks = 0
-                for j in jobs:
-                    ji = tracker.getJobInfo(j)
-                    if ji is None:
-                        continue
-                    for st in ji.stageIds:
-                        si = tracker.getStageInfo(st)
-                        if si is not None:
-                            n_stages += 1
-                            n_tasks += si.numTasks
-                rec["jobs"] = len(jobs)
-                rec["stages"] = n_stages
-                rec["tasks"] = n_tasks
-            sc.setJobGroup("", "")
-        rec["toPandas_sec"] = samples
-        if args.noop:
-            sc.setJobDescription(f"{name} noop")
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            rec["noop_sec"] = round(time.perf_counter() - t0, 3)
-            sc.setJobDescription(None)
-        results[name] = rec
-        print(name, json.dumps(rec))
-
-    print(json.dumps(results, indent=1))
-
-
-if __name__ == "__main__":
-    main()
+WORK = ("jobs", "stages", "tasks", "executor_run_s", "executor_cpu_s", "shuffle_mb", "spill_mb")
+ap = argparse.ArgumentParser()
+ap.add_argument("queries", nargs="+")
+ap.add_argument("--plans-dir")
+ap.add_argument("--suffix", default="before")
+args = ap.parse_args()
+sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+harness.prepare_env(ROOT)
+spark = harness.start_spark(ROOT, event_log=True)
+import __spark_entry__  # noqa: E402
+queries, tracer, spans = __spark_entry__.queries(), harness.Tracer(spark, enabled=True), {}
+for q in args.queries:
+    with tracer.span(f"{q}.build") as build:
+        df = queries[q](spark, sf_dir)
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
+        with open(os.path.join(args.plans_dir, f"{q}_{args.suffix}.txt"), "w") as fh:
+            fh.write(df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted"))
+    with tracer.span(f"{q}.exec") as run:
+        df.toPandas()
+    spans[q] = (build, run)
+app_id = spark.sparkContext.applicationId
+harness.stop_spark(spark)
+tracer.attribute(harness.read_event_log(ROOT, app_id))
+for q, (b, r) in spans.items():
+    rec = {"build_s": b["end"] - b["start"], "exec_s": r["end"] - r["start"], **{k: b[k] + r[k] for k in WORK}}
+    print(json.dumps({"query": q, **{k: round(v, 3) for k, v in rec.items()}}))
