@@ -197,7 +197,12 @@ class Engine:
         if self.layout == "bucketed" and key:
             from cqs_spark.index.layout import write_bucketed
 
-            write_bucketed(df, self._table_name(table), key, sort_by=key)
+            # External, inside the workdir: a managed table's directory
+            # under the warehouse outlives the in-memory catalog entry,
+            # and a later session would collide with it.
+            write_bucketed(
+                df, self._table_name(table), key, sort_by=key, path=self._path(table)
+            )
         else:
             df.write.mode("overwrite").parquet(self._path(table))
 

@@ -24,11 +24,16 @@ def write_bucketed(
     bucket_by: str,
     n_buckets: int = 32,
     sort_by: str | None = None,
+    path: str | None = None,
 ) -> None:
-    """Save as a bucketed (optionally sort-merged) metastore table."""
+    """Save as a bucketed (optionally sort-merged) metastore table.
+    With ``path`` the table is external, its files at ``path`` instead
+    of under the session's warehouse directory."""
     w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_by)
     if sort_by:
         w = w.sortBy(sort_by)
+    if path:
+        w = w.option("path", path)
     w.format("parquet").saveAsTable(table)
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from cqs_spark.catalog import load_table
+from cqs_spark.staging import stage
 
 
 def _r4(c):
@@ -566,18 +567,15 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("path"),
         F.encode(md, "utf-8").alias("content"),
     )
-    return (
-        parse_files(files)
-        .select(
-            "origin",
-            "name",
-            "signature",
-            "content",
-            F.col("line_start").cast("long").alias("line_start"),
-            F.col("line_end").cast("long").alias("line_end"),
-        )
-        .orderBy("origin", "line_start")
+    chunks = parse_files(files).select(
+        "origin",
+        "name",
+        "signature",
+        "content",
+        F.col("line_start").cast("long").alias("line_start"),
+        F.col("line_end").cast("long").alias("line_end"),
     )
+    return stage(chunks).orderBy("origin", "line_start")
 
 
 ANALYTIC_QUERIES["q115"] = q115
@@ -634,8 +632,8 @@ def q116(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(html, "utf-8").alias("content"),
     )
     out = convert_files(files)
-    return out.select(
-        "path", F.decode("content", "utf-8").alias("md")
+    return stage(
+        out.select("path", F.decode("content", "utf-8").alias("md"))
     ).orderBy("path")
 
 
@@ -701,21 +699,18 @@ def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("py/"), F.col("doc_id"), F.lit(".py")).alias("path"),
         F.encode(src, "utf-8").alias("content"),
     )
-    return (
-        parse_files(files)
-        .select(
-            "origin",
-            "chunk_type",
-            "name",
-            "signature",
-            "content",
-            "doc",
-            "parent_type_name",
-            F.col("line_start").cast("long").alias("line_start"),
-            F.col("line_end").cast("long").alias("line_end"),
-        )
-        .orderBy("origin", "line_start")
+    chunks = parse_files(files).select(
+        "origin",
+        "chunk_type",
+        "name",
+        "signature",
+        "content",
+        "doc",
+        "parent_type_name",
+        F.col("line_start").cast("long").alias("line_start"),
+        F.col("line_end").cast("long").alias("line_end"),
     )
+    return stage(chunks).orderBy("origin", "line_start")
 
 
 ANALYTIC_QUERIES["q119"] = q119
@@ -801,20 +796,17 @@ def q120(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("plc/"), F.col("doc_id"), F.lit(".L5X")).alias("path"),
         F.encode(xml, "utf-8").alias("content"),
     )
-    return (
-        parse_files(files)
-        .select(
-            "origin",
-            "chunk_type",
-            "name",
-            "signature",
-            "content",
-            "parent_type_name",
-            F.col("line_start").cast("long").alias("line_start"),
-            F.col("line_end").cast("long").alias("line_end"),
-        )
-        .orderBy("origin", "line_start")
+    chunks = parse_files(files).select(
+        "origin",
+        "chunk_type",
+        "name",
+        "signature",
+        "content",
+        "parent_type_name",
+        F.col("line_start").cast("long").alias("line_start"),
+        F.col("line_end").cast("long").alias("line_end"),
     )
+    return stage(chunks).orderBy("origin", "line_start")
 
 
 ANALYTIC_QUERIES["q120"] = q120
@@ -867,19 +859,16 @@ def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("web/"), F.col("doc_id"), F.lit(".aspx")).alias("path"),
         F.encode(aspx, "utf-8").alias("content"),
     )
-    return (
-        parse_files(files)
-        .select(
-            "origin",
-            "chunk_type",
-            "name",
-            "signature",
-            "content",
-            F.col("line_start").cast("long").alias("line_start"),
-            F.col("line_end").cast("long").alias("line_end"),
-        )
-        .orderBy("origin", "chunk_type")
+    chunks = parse_files(files).select(
+        "origin",
+        "chunk_type",
+        "name",
+        "signature",
+        "content",
+        F.col("line_start").cast("long").alias("line_start"),
+        F.col("line_end").cast("long").alias("line_end"),
     )
+    return stage(chunks).orderBy("origin", "chunk_type")
 
 
 ANALYTIC_QUERIES["q121"] = q121
@@ -981,21 +970,18 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("end"),
     )
     files = c.unionByName(sql).unionByName(yaml).unionByName(toml).unionByName(rb)
-    return (
-        parse_files(files)
-        .select(
-            "origin",
-            "chunk_type",
-            "name",
-            "signature",
-            "content",
-            "doc",
-            "parent_type_name",
-            F.col("line_start").cast("long").alias("line_start"),
-            F.col("line_end").cast("long").alias("line_end"),
-        )
-        .orderBy("origin", "line_start")
+    chunks = parse_files(files).select(
+        "origin",
+        "chunk_type",
+        "name",
+        "signature",
+        "content",
+        "doc",
+        "parent_type_name",
+        F.col("line_start").cast("long").alias("line_start"),
+        F.col("line_end").cast("long").alias("line_end"),
     )
+    return stage(chunks).orderBy("origin", "line_start")
 
 
 ANALYTIC_QUERIES["q122"] = q122
@@ -1107,8 +1093,8 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(pdf, "utf-8").alias("content"),
     )
     out = convert_files(files)
-    return out.select(
-        "path", F.decode("content", "utf-8").alias("md")
+    return stage(
+        out.select("path", F.decode("content", "utf-8").alias("md"))
     ).orderBy("path")
 
 
@@ -1163,8 +1149,8 @@ def q124(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.encode(blob, "utf-8").alias("content"),
     )
     out = convert_files(files)
-    return out.select(
-        "path", F.decode("content", "utf-8").alias("md")
+    return stage(
+        out.select("path", F.decode("content", "utf-8").alias("md"))
     ).orderBy("path")
 
 

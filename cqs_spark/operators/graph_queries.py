@@ -130,7 +130,10 @@ def q103(spark: SparkSession, sf_dir: str) -> DataFrame:
     of `review`, oracle-gated on targets node%9==0 / tests node%7==0."""
     from cqs_spark.operators.ci import risk_scores
 
-    edges = call_edges(spark, sf_dir)
+    # Four readers (targets, tests, the caller counts, test_map), each
+    # behind build-time staging jobs: stage the derived edges once so
+    # the lineitem scan + distinct runs once, not once per job.
+    edges = stage(call_edges(spark, sf_dir))
     targets = _nodes(edges).filter(F.col("node") % 9 == 0)
     tests = _nodes(edges).filter(F.col("node") % 7 == 0)
     out = risk_scores(edges, targets, tests)

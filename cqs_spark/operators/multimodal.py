@@ -706,23 +706,31 @@ def _pack64(bits: "list[int]") -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def perceptual_hashes(px: "list[list[int]]", grid: int = 8) -> tuple:
-    """(ahash, dhash) of a grayscale grid, both signed 64-bit for
-    ``grid=8``.  aHash: bit i·g+j = box-cell (i,j) >= integer mean of
-    all cells.  dHash: cells on a g×(g+1) grid, bit i·g+j = cell(i,j)
-    > cell(i,j+1) — the horizontal-gradient hash, robust to uniform
-    brightness shifts."""
-    a_cells = _box_cells(px, grid, grid)
-    flat = [c for row in a_cells for c in row]
+def ahash(px: "list[list[int]]", grid: int = 8) -> int:
+    """aHash of a grayscale grid: bit i·g+j = box-cell (i,j) >= integer
+    mean of all cells; signed 64-bit for ``grid=8``."""
+    flat = [c for row in _box_cells(px, grid, grid) for c in row]
     mean = sum(flat) // (grid * grid)
-    abits = [1 if c >= mean else 0 for c in flat]
-    d_cells = _box_cells(px, grid, grid + 1)
-    dbits = [
-        1 if d_cells[i][j] > d_cells[i][j + 1] else 0
-        for i in range(grid)
-        for j in range(grid)
-    ]
-    return _pack64(abits), _pack64(dbits)
+    return _pack64([1 if c >= mean else 0 for c in flat])
+
+
+def dhash(px: "list[list[int]]", grid: int = 8) -> int:
+    """dHash of a grayscale grid: cells on a g×(g+1) grid, bit i·g+j =
+    cell(i,j) > cell(i,j+1) — the horizontal-gradient hash, robust to
+    uniform brightness shifts; signed 64-bit for ``grid=8``."""
+    cells = _box_cells(px, grid, grid + 1)
+    return _pack64(
+        [
+            1 if cells[i][j] > cells[i][j + 1] else 0
+            for i in range(grid)
+            for j in range(grid)
+        ]
+    )
+
+
+def perceptual_hashes(px: "list[list[int]]", grid: int = 8) -> tuple:
+    """(ahash, dhash) of a grayscale grid (:func:`ahash`, :func:`dhash`)."""
+    return ahash(px, grid), dhash(px, grid)
 
 
 PHASH_SCHEMA = T.StructType(
@@ -1508,7 +1516,7 @@ def video_fingerprints(
             yield mid, None, None
             return
         for fno in range(0, len(fr), frame_step):
-            yield mid, fno, perceptual_hashes(fr[fno], grid)[1]
+            yield mid, fno, dhash(fr[fno], grid)
 
     return map_rows(
         media, [F.col(id_col).alias(id_col), F.col(data_col)], row, VIDEO_FP_SCHEMA

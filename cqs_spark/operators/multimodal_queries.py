@@ -40,7 +40,9 @@ def q78(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     pairs = media_neardup(media_table(docs), threshold=0.99999)
     r4 = lambda c: F.round(c.cast("decimal(30,10)"), 4).cast("double")  # noqa: E731
-    return pairs.select("a", "b", r4(F.col("cos")).alias("cos")).orderBy("a", "b")
+    return stage(pairs.select("a", "b", r4(F.col("cos")).alias("cos"))).orderBy(
+        "a", "b"
+    )
 
 
 MULTIMODAL_QUERIES = {"q49": q49, "q50": q50, "q78": q78}
@@ -177,7 +179,7 @@ def q134(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("channels").cast("long").alias("v2"),
         F.col("duration_ms").cast("long").alias("v3"),
     )
-    return img.unionByName(aud).orderBy("media_id")
+    return stage(img.unionByName(aud)).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q134"] = q134
@@ -302,7 +304,7 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.  Gated bit-exactly against the oracle's arithmetic twin."""
     from cqs_spark.operators.multimodal import phash_images
 
-    return phash_images(_q165_media(spark, sf_dir)).orderBy("media_id")
+    return stage(phash_images(_q165_media(spark, sf_dir))).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q165"] = q165
@@ -426,7 +428,7 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gated bit-exactly against the oracle's sample-arithmetic twin."""
     from cqs_spark.operators.multimodal import audio_fingerprints
 
-    return audio_fingerprints(_q169_media(spark, sf_dir)).orderBy("media_id")
+    return stage(audio_fingerprints(_q169_media(spark, sf_dir))).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q169"] = q169
@@ -675,7 +677,7 @@ def q172(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gated bit-exactly against the oracle's pixel-arithmetic twin."""
     from cqs_spark.operators.multimodal import video_fingerprints
 
-    return video_fingerprints(_q172_media(spark, sf_dir)).orderBy(
+    return stage(video_fingerprints(_q172_media(spark, sf_dir))).orderBy(
         "media_id", "frame"
     )
 
@@ -842,7 +844,7 @@ ORDER BY image_id, video_id, frame
 # deterministic, so the boolean surface is bit-stable.
 
 
-def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q175_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cqs_spark.operators.jpegcodec import (
         decode_jpeg_luma,
         encode_jpeg,
@@ -876,8 +878,11 @@ def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= 2
         )
 
-    ok = _id_corpus(spark, sf_dir, rows, "media_id long, ok boolean")
-    return ok.orderBy("media_id")
+    return _id_corpus(spark, sf_dir, rows, "media_id long, ok boolean")
+
+
+def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return stage(_q175_ok(spark, sf_dir)).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q175"] = q175
@@ -895,7 +900,7 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
     garbage blobs quarantine to one NULL row."""
     from cqs_spark.operators.multimodal import resize_images
 
-    return resize_images(_q165_media(spark, sf_dir), 4, 4).orderBy(
+    return stage(resize_images(_q165_media(spark, sf_dir), 4, 4)).orderBy(
         "media_id", "r", "c"
     )
 
@@ -1186,7 +1191,7 @@ def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE Arrow stage over ONE corpus pass (previously: two staged
     # corpora, six mapInPandas walks and five joins).  Kernel-level
     # shared definitions — see media_release_scan's docstring.
-    return media_release_scan(_q178_media(spark, sf_dir)).orderBy("media_id")
+    return stage(media_release_scan(_q178_media(spark, sf_dir))).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q178"] = q178
@@ -1686,7 +1691,9 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     media = _q183_media(spark, sf_dir)
-    return map_rows(media, ["media_id", "data"], row, schema).orderBy("media_id")
+    return stage(map_rows(media, ["media_id", "data"], row, schema)).orderBy(
+        "media_id"
+    )
 
 
 MULTIMODAL_QUERIES["q183"] = q183
@@ -1818,8 +1825,8 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     media = _q184_media(spark, sf_dir)
-    return map_rows(
-        media, ["media_id", "data", "frames_md5"], row, schema
+    return stage(
+        map_rows(media, ["media_id", "data", "frames_md5"], row, schema)
     ).orderBy("media_id")
 
 
@@ -1931,7 +1938,7 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("_len0") == F.col("_len1"))
         & F.col("_px1").eqNullSafe(F.col("px_md5"))
     )
-    return (
+    out = (
         info.join(re_info, "media_id", "left")
         .join(sizes, "media_id", "left")
         .join(strip_side, "media_id", "left")
@@ -1948,8 +1955,8 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(strip_clean)
             .alias("strip_clean"),
         )
-        .orderBy("media_id")
     )
+    return stage(out).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q185"] = q185
@@ -2043,8 +2050,8 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     media = _q186_media(spark, sf_dir)
-    return map_rows(
-        media, ["media_id", "data", "clean_md5"], row, schema
+    return stage(
+        map_rows(media, ["media_id", "data", "clean_md5"], row, schema)
     ).orderBy("media_id")
 
 
@@ -2164,8 +2171,8 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
         tail=lambda r, s: (None if r is None else (s is None),),
     )
     media = _q187_media(spark, sf_dir)
-    return map_rows(
-        media, ["media_id", "data", "clean_md5"], row, schema
+    return stage(
+        map_rows(media, ["media_id", "data", "clean_md5"], row, schema)
     ).orderBy("media_id")
 
 
@@ -2308,8 +2315,8 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     media = _q188_media(spark, sf_dir)
-    return map_rows(
-        media, ["media_id", "data", "clean_md5"], row, schema
+    return stage(
+        map_rows(media, ["media_id", "data", "clean_md5"], row, schema)
     ).orderBy("media_id")
 
 

@@ -53,7 +53,9 @@ def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (threshold 0.35)."""
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = dedup.embedding_neardup(emb, "vec_id", "embedding", threshold=0.35)
-    return pairs.select("a", "b", _r4(F.col("cos")).alias("cos")).orderBy("a", "b")
+    return stage(pairs.select("a", "b", _r4(F.col("cos")).alias("cos"))).orderBy(
+        "a", "b"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,7 @@ from cqs_spark.catalog import load_table
 from cqs_spark.operators import scoring
 from cqs_spark.operators.relational import tokenized_docs
 from cqs_spark.operators.textops import quality_features
+from cqs_spark.staging import stage
 
 QUERY_TERMS = [("data", 2.0), ("query", 1.5), ("scan", 1.0)]
 NOTES = [("src3", 1.0), ("src7", -0.5), ("src11", 0.5)]
@@ -292,12 +293,13 @@ def q113(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", 1, 400).alias("content"),
     )
     out = rerank_pool(pool, RERANK_QUERY)
-    return out.select(
+    scored = out.select(
         "id",
         F.round(F.col("ce_score").cast("decimal(30,10)"), 4)
         .cast("double")
         .alias("ce_score"),
-    ).orderBy("id")
+    )
+    return stage(scored).orderBy("id")
 
 
 SCORING_QUERIES["q113"] = q113

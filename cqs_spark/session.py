@@ -26,6 +26,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 48g, or
+    ¾ of physical memory on a smaller host (a heap above RAM gets the
+    JVM killed by the kernel, not a Java OOM)."""
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (ValueError, OSError):
+        return "48g"
+    return f"{min(48 << 10, ram_mb * 3 // 4)}m"
+
+
 def get_spark(
     app_name: str = "cqs_spark",
     master: str | None = None,
@@ -48,7 +59,10 @@ def get_spark(
         # Broadcast threshold: small dims (region/nation/probe sets) must
         # broadcast; 64 MB is safe for our dimension tables at any SF.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
     )
     if master:

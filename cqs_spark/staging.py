@@ -19,6 +19,17 @@ The eager/lazy rule, for every caller of :func:`stage`:
   over DETERMINISTIC lineage — a consumer that recomputes a partition
   must see the same rows.
 
+A global sort reads its input twice, since the range partitioner
+samples it in its own job before the shuffle reads it.  So a sort over
+an Arrow Python stage (``map_rows``, ``applyInPandas``) stages that
+stage first, lazily: ``stage(df).orderBy(...)``.  The sample job then
+runs the Python once and persists its output, and the shuffle reads
+those blocks; the two jobs run one after the other, so lazy meets the
+rule above.  The stage goes at the sort, not inside ``map_rows``: a
+per-row stage may emit blobs, pixels or chunk text, and staging every
+one of them would copy the corpus into executor storage where nothing
+reads it twice.
+
 A durable stage is always eager: the parquet write is its own job.
 """
 

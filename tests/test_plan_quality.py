@@ -427,18 +427,25 @@ def test_q174_containment_joins_hash_tables_only(spark, sf_dir):
 
 def test_q175_q176_decode_single_arrow_stage(spark, sf_dir):
     """The JPEG tolerance gate and the resize are one Arrow stage over
-    the id frame: no join, no aggregation — the only exchanges are the
-    fixture-spread repartition and the presentation orderBy."""
-    for name in ("q175", "q176"):
-        p = _formatted(spark, name, sf_dir)
+    the id frame: no join, no aggregation — the only exchange is the
+    fixture-spread repartition (the presentation orderBy reads the
+    staged frame)."""
+    from cqs_spark.operators import multimodal_queries as M
+    from cqs_spark.operators.multimodal import resize_images
+
+    for df in (
+        M._q175_ok(spark, sf_dir),
+        resize_images(M._q165_media(spark, sf_dir), 4, 4),
+    ):
+        p = _explain(df)
         assert "Join" not in p
         assert "HashAggregate" not in p
-        assert _exchange_nodes(p) <= 2
+        assert _exchange_nodes(p) <= 1
 
 
 _ID_CORPORA = [
     "_q165_media", "_q169_media", "_q171_index_media", "_q171_batch_media",
-    "_q172_media", "_q174_images", "q175", "_q178_media", "_q179_media",
+    "_q172_media", "_q174_images", "_q175_ok", "_q178_media", "_q179_media",
     "_q180_index_media", "_q180_batch_media", "_q183_media", "_q184_media",
     "_q185_media", "_q186_media", "_q187_media", "_q188_media",
 ]
@@ -449,8 +456,8 @@ def test_id_corpus_is_one_spread_arrow_stage(spark, sf_dir, builder):
     """Every synthetic media corpus is the documents id frame spread
     round-robin over defaultParallelism partitions, then ONE
     mapInPandas: the encode runs on every core, never on the single
-    task of the one-file fixture scan.  q175's builder is inline; its
-    extra range exchange is the presentation orderBy."""
+    task of the one-file fixture scan.  ``_q175_ok`` is q175's corpus:
+    it yields each id's decode verdict, not a blob."""
     from cqs_spark.operators import multimodal_queries as M
 
     p = _explain(getattr(M, builder)(spark, sf_dir))
@@ -464,7 +471,10 @@ def test_q178_metadata_scan_joins_flag_frames_never_blobs(spark, sf_dir):
     binary column never crosses a shuffle (blobs exist only inside the
     Arrow scan/strip stages), and every join is a plain equi-join on
     media_id, no cartesian."""
-    p = _formatted(spark, "q178", sf_dir)
+    from cqs_spark.operators import multimodal_queries as M
+    from cqs_spark.operators.mediameta import media_release_scan
+
+    p = _explain(media_release_scan(M._q178_media(spark, sf_dir)))
     assert "CartesianProduct" not in p
     # no Exchange node carries the binary data column
     for m in re.finditer(r"^\(\d+\) Exchange\n(?:.+\n)+?", p, re.M):
@@ -481,3 +491,58 @@ def test_q179_q180_windowed_audio_join_is_hash_table_only(spark, sf_dir):
         assert "CartesianProduct" not in p
         assert "partial" in p.lower()
     assert "BroadcastHashJoin" in _formatted(spark, "q180", sf_dir)
+
+
+# Every declared query whose global orderBy sat directly over an Arrow
+# Python stage, in the same Spark stage (a plan scan of all declared
+# queries at sf0.001).
+ARROW_SORT_SITES = [
+    "q30", "q78", "q113", "q115", "q116", "q119", "q120", "q121", "q122",
+    "q123", "q124", "q134", "q165", "q169", "q172", "q175", "q176", "q178",
+    "q183", "q184", "q185", "q186", "q187", "q188",
+]
+
+
+def _python_in_range_exchange_stage(df) -> list[str]:
+    """The Python nodes between each range-partition exchange and the
+    next exchange or leaf below it: the nodes the exchange's sample job
+    and its shuffle job would each run."""
+
+    def kids(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return [node.executedPlan()]
+        if name.endswith("QueryStage"):
+            return [node.plan()]
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def python_above_exchange(node):
+        found = []
+        for child in kids(node):
+            name = child.nodeName()
+            if "Exchange" in name or name.endswith("QueryStage"):
+                continue
+            if re.search(r"InPandas|InArrow|Python", name):
+                found.append(name)
+            found += python_above_exchange(child)
+        return found
+
+    found, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Exchange" and (
+            node.outputPartitioning().getClass().getSimpleName() == "RangePartitioning"
+        ):
+            found += python_above_exchange(node)
+        todo += kids(node)
+    return found
+
+
+@pytest.mark.parametrize("name", ARROW_SORT_SITES)
+def test_global_sort_reads_staged_arrow_output(spark, sf_dir, name):
+    """A global sort's range partitioner samples its input in a job of
+    its own before the shuffle reads it, so a Python stage inside the
+    sort's input stage would run twice: the query stages it first."""
+    df = E.queries()[name](spark, sf_dir)
+    assert _python_in_range_exchange_stage(df) == []

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pathlib
 from collections import Counter
 
-from pyspark.sql import types as T
+from pyspark.sql import functions as F, types as T
 
 from cqs_spark.rows import map_rows
 
@@ -56,6 +56,28 @@ def test_map_rows_round_trip(spark):
     )
     assert empty.schema == T.StructType.fromDDL(OUT_DDL)
     assert empty.collect() == []
+
+
+def test_staged_stage_runs_once_under_a_global_sort(spark):
+    """A global sort samples its input in a job of its own (the range
+    partitioner) before the shuffle reads it: a bare ``orderBy`` over a
+    Python stage runs the Python twice per row, ``stage(...)`` first
+    runs it once (see ``cqs_spark.staging``)."""
+    from cqs_spark.staging import stage
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def _bump(k):
+        calls.add(1)
+        yield (k,)
+
+    n = 200
+    src = spark.range(0, n, numPartitions=4).select((-1 * F.col("id")).alias("k"))
+    for wrap, per_row in ((stage, 1), (lambda df: df, 2)):
+        calls.value = 0
+        rows = wrap(map_rows(src, ["k"], _bump, "k long")).orderBy("k").collect()
+        assert [r["k"] for r in rows] == list(range(1 - n, 1))
+        assert calls.value == per_row * n
 
 
 def test_map_in_pandas_only_in_rows_and_batch_stages():

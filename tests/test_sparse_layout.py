@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import functions as F
 
 from cqs_spark.catalog import load_table
@@ -35,8 +38,12 @@ def test_bucketed_join_skips_exchanges(spark, sf_dir):
 def test_engine_bucketed_layout_end_to_end(spark, tmp_path_factory):
     """layout="bucketed": the four core tables land as same-key
     bucketed metastore tables (co-located joins plan no exchange),
-    search works, and incremental refresh keeps the layout."""
-    from cqs_spark.engine import Engine
+    search works, and incremental refresh keeps the layout.  The tables
+    live in the workdir: a stale warehouse directory left under the
+    same table names by an earlier session does not collide."""
+    from urllib.parse import urlparse
+
+    from cqs_spark.engine import _BUCKET_KEYS, Engine
     from cqs_spark.index.layout import bucketed_join_is_exchange_free
 
     src = tmp_path_factory.mktemp("bkt_src")
@@ -50,7 +57,18 @@ def test_engine_bucketed_layout_end_to_end(spark, tmp_path_factory):
     )
     wd = str(tmp_path_factory.mktemp("bkt_idx"))
     eng = Engine(spark, wd, layout="bucketed")
-    eng.index(str(tree))
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = [os.path.join(warehouse, eng._table_name(t)) for t in _BUCKET_KEYS]
+    for d in stale:
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, "part-00000-stale.parquet"), "wb") as fh:
+            fh.write(b"stale")
+    try:
+        eng.index(str(tree))
+    finally:
+        for d in stale:
+            shutil.rmtree(d)
+    assert os.path.isdir(os.path.join(wd, "chunks.parquet"))
 
     hits = eng.search("alpha", k=3, alpha=0.0)
     assert any(r["name"] == "alpha" for r in hits.collect())
