@@ -59,6 +59,21 @@ without its terminator quarantines — a concatenated second container
 or a truncated one could otherwise smuggle metadata past a scan that
 certifies "clean".
 
+One walker per format reads each blob ONCE and yields both answers:
+the scan result (flags, meta_bytes, the format's info fields) and the
+strip plan (the input ranges to drop or replace, then the format's
+fix-up — RIFF size, MP4 ``stco``/``co64`` remap, TIFF entry rewrite,
+HEIF/Ogg in-place scrub).  One format table (``_FORMATS``) is the only
+sniff, ``_Walk`` builds the one flag dict, and ``_quarantine`` is the
+one quarantine.  ``scan_media_metadata`` keeps the scan result,
+``strip_media_metadata`` applies the plan, and the release paths take
+both from one walk (``scan_and_strip``).  Because the flag decision
+and the keep/drop decision for a carrier sit in the same branch,
+strip quarantines wherever the scan does: a blob whose metadata cannot
+be read never ships.  The in-place formats (HEIF, Ogg, TIFF) overwrite
+bytes where they lie and cannot drop what they did not read, so an
+unscanned one does not strip either.
+
 ``strip_media_metadata`` removes exactly those carriers (JPEG keeps
 APP0/JFIF; PNG keeps all non-text ancillary chunks) and never touches
 entropy-coded data, so the decoded pixels are bit-identical before
@@ -71,8 +86,8 @@ release-gate contract (src/llm/validation.rs:153 is the text
 analogue's reference anchor).
 
 Scale shape: the scan is a header walk over the first few KB of each
-blob inside one Arrow ``mapInPandas`` stage — no shuffle, no decode;
-strip rewrites blobs in the same stage.  At 100 TB both are
+blob inside one per-row Arrow stage (``rows.map_rows``) — no shuffle,
+no decode; strip rewrites blobs in the same stage.  At 100 TB both are
 embarrassingly parallel scan-side transforms.
 """
 
@@ -132,6 +147,77 @@ _IPTC_TEXT_DS = {5, 25, 105, 120}          # ObjectName/Keywords/Headline/Captio
 
 class _Malformed(Exception):
     pass
+
+
+_FLAGS = ("gps", "serial", "author", "text", "unscanned")
+
+
+class _Walk:
+    """One pass over one blob, read by both the scan and the strip.
+
+    The format's walker fills in the scan result — ``flags``, ``meta``
+    (metadata bytes seen) and the format's extra ``info`` fields — and
+    the strip plan beside it: ``edits`` lists (lo, hi, replacement)
+    ranges of the input (a dropped carrier's replacement is empty) and
+    ``fix`` is the format's fix-up over the rewritten output.  So the
+    flag decision and the keep/drop decision for each carrier sit in
+    the same branch and cannot drift apart."""
+
+    __slots__ = ("blob", "depth", "fmt", "in_place", "flags", "meta",
+                 "info", "edits", "fix")
+
+    def __init__(self, blob: bytes, depth: int, fmt: str, in_place: bool):
+        self.blob, self.depth, self.fmt = blob, depth, fmt
+        self.in_place = in_place
+        self.flags = dict.fromkeys(_FLAGS, False)
+        self.meta = 0
+        self.info: dict = {}
+        self.edits: list = []
+        self.fix = None
+
+    def drop(self, lo: int, hi: int) -> None:
+        self.edits.append((lo, hi, b""))
+
+    def carrier(self, lo: int, hi: int) -> None:
+        """A metadata carrier: counted in meta_bytes, never shipped."""
+        self.meta += hi - lo
+        self.drop(lo, hi)
+
+    def apply(self) -> bytes:
+        """The strip: join what the edits keep, then the fix-up."""
+        out, at = bytearray(), 0
+        for lo, hi, repl in sorted(self.edits):
+            out += self.blob[at:lo]
+            out += repl
+            at = hi
+        out += self.blob[at:]
+        if self.fix is not None:
+            self.fix(out)
+        return bytes(out)
+
+
+def _quarantine(fn):
+    """Run one walk or strip: malformed structure of any kind returns
+    None instead of raising — metadata that cannot be parsed cannot be
+    certified clean."""
+    try:
+        return fn()
+    except (_Malformed, IndexError, struct.error, ValueError, RecursionError):
+        return None
+
+
+def _scan_nested(img: "bytes | None", flags: dict, depth: int) -> None:
+    """OR an embedded image's flags (MP3 APIC album art, an Ogg
+    METADATA_BLOCK_PICTURE) into its host's.  An image left unread
+    (None), past the nesting bound, or that quarantines marks the host
+    unscanned — the bound stops a crafted russian-doll blob from
+    exhausting the stack."""
+    inner = None if img is None or depth >= 3 else _walk(img, depth + 1)
+    if inner is None:
+        flags["unscanned"] = True
+    else:
+        for k, v in inner.flags.items():
+            flags[k] = flags[k] or v
 
 
 def _scan_xmp(payload: bytes, flags: dict) -> None:
@@ -263,64 +349,6 @@ def _scan_wav_bext(p: bytes, flags: dict) -> None:
         flags["serial"] = True  # UMID region
     if any(p[412:]):
         flags["text"] = True  # loudness/reserved/CodingHistory tail
-
-
-def _parse_tiff_flags(data: bytes, flags: dict) -> None:
-    """Walk a TIFF structure (EXIF payload) and OR PII flags into
-    ``flags``.  Raises _Malformed on anything structurally off —
-    unparseable metadata cannot be certified clean."""
-    if len(data) < 8:
-        raise _Malformed
-    bo = data[:2]
-    if bo == b"II":
-        e = "<"
-    elif bo == b"MM":
-        e = ">"
-    else:
-        raise _Malformed
-    if struct.unpack_from(e + "H", data, 2)[0] != 42:
-        raise _Malformed
-
-    seen = set()
-
-    def walk(off: int, depth: int) -> None:
-        if depth > 4:
-            raise _Malformed
-        while off:
-            # every IFD visited once, across walks AND next-IFD chains:
-            # a crafted next pointer cycling back would otherwise spin
-            # the Arrow stage forever
-            if off in seen:
-                raise _Malformed
-            seen.add(off)
-            if off + 2 > len(data):
-                raise _Malformed
-            n = struct.unpack_from(e + "H", data, off)[0]
-            if n > 512 or off + 2 + 12 * n + 4 > len(data):
-                raise _Malformed
-            for k in range(n):
-                base = off + 2 + 12 * k
-                tag, typ, cnt = struct.unpack_from(e + "HHI", data, base)
-                size = _TIFF_TYPE_SIZES.get(typ, 1) * cnt
-                val = struct.unpack_from(e + "I", data, base + 8)[0]
-                if size > 4 and val + size > len(data):
-                    raise _Malformed
-                if tag == _GPS_PTR:
-                    flags["gps"] = True
-                    walk(val, depth + 1)
-                elif tag == _EXIF_PTR:
-                    walk(val, depth + 1)
-                elif tag in _SERIAL_TAGS:
-                    flags["serial"] = True
-                elif tag in _AUTHOR_TAGS:
-                    flags["author"] = True
-                elif tag in _TEXT_TAGS:
-                    flags["text"] = True
-            off = struct.unpack_from(
-                e + "I", data, off + 2 + 12 * n
-            )[0]
-
-    walk(struct.unpack_from(e + "I", data, 4)[0], 0)
 
 
 def _jpeg_segments(blob: bytes):
@@ -517,11 +545,11 @@ def _mp4_scan_udta(blob: bytes, p: int, e: int, flags: dict) -> None:
             flags["unscanned"] = True
 
 
-# Box classification shared by scan and strip, so the two walks
-# cannot drift: "benign" boxes are structural (copied verbatim by
-# strip, no flags), "carrier" boxes hold metadata (scanned; dropped
-# by strip), anything else is a carrier the scan cannot read →
-# unscanned (and strip drops it — unread bytes never ship).
+# Box classification read by the one walk for both scan and strip:
+# "benign" boxes are structural (copied verbatim by strip, no flags),
+# "carrier" boxes hold metadata (scanned; dropped by strip), anything
+# else is a carrier the scan cannot read → unscanned (and strip drops
+# it — unread bytes never ship).
 # free/skip are NOT whitelisted: padding is droppable by definition,
 # so strip always drops them, and a padding box with a NON-ZERO
 # payload is a smuggling channel the scan flags unscanned (the r11
@@ -576,73 +604,88 @@ def _mp4_scan_carrier(
     return e - s
 
 
-def _mp4_scan(blob: bytes, flags: dict) -> dict:
+def _mp4_drop(w: _Walk, t: bytes, s: int, e: int, p: int) -> None:
+    """A box outside its level's whitelist never ships: a carrier or
+    padding box is read first, anything else is a carrier the walk
+    cannot read → unscanned."""
+    if t in _MP4_PADDING or t == b"wide":
+        w.meta += _mp4_scan_padding(w.blob, t, s, e, p, w.flags)
+    elif t in _MP4_CARRIERS:
+        w.meta += _mp4_scan_carrier(w.blob, t, s, e, p, w.flags)
+    else:
+        w.flags["unscanned"] = True  # moof/mfra/vendor boxes
+        w.meta += e - s
+    w.drop(s, e)
+
+
+def _mp4_rebuild(
+    w: _Walk, typ: bytes, s: int, e: int, p: int, benign: tuple
+) -> int:
+    """Walk a moov or trak box: duration_ms from mvhd, width/height
+    from tkhd, each trak recursively, and every child outside
+    ``benign`` dropped — the box header is rewritten with the size of
+    what ships.  Returns that size."""
+    blob, info = w.blob, w.info
+    kept = 0
+    for t, s2, e2, p2 in _mp4_boxes(blob, p, e):
+        if t not in benign:
+            _mp4_drop(w, t, s2, e2, p2)
+            continue
+        if t == b"trak":
+            kept += _mp4_rebuild(w, t, s2, e2, p2, _MP4_BENIGN_TRAK)
+            continue
+        if t == b"mvhd":
+            ver = blob[p2]
+            if ver == 1:
+                ts = struct.unpack_from(">I", blob, p2 + 20)[0]
+                dur = struct.unpack_from(">Q", blob, p2 + 24)[0]
+            else:
+                ts = struct.unpack_from(">I", blob, p2 + 12)[0]
+                dur = struct.unpack_from(">I", blob, p2 + 16)[0]
+            if ts == 0:
+                raise _Malformed
+            info["duration_ms"] = dur * 1000 // ts
+        elif t == b"tkhd":
+            off = 88 if blob[p2] == 1 else 76
+            tw, th = struct.unpack_from(">II", blob, p2 + off)
+            if tw and th:  # 16.16 fixed point
+                info["width"] = tw >> 16
+                info["height"] = th >> 16
+        kept += e2 - s2
+    w.edits.append((s, p, struct.pack(">I", kept + 8) + typ))
+    return kept + 8
+
+
+def _walk_mp4(w: _Walk) -> None:
     """Walk an ISO-BMFF file: PII flags from every carrier box at the
     top level, in moov, and in each trak (udta/©xyz GPS, meta/ilst
     atoms, uuid-XMP), plus structural info (width/height from tkhd,
     duration_ms from mvhd).  A box outside the structural whitelist
     sets ``unscanned`` — a carrier the walk did not read cannot be
-    certified clean.  Returns {width, height, duration_ms,
-    meta_bytes}."""
-    info = {"width": None, "height": None, "duration_ms": None}
-    meta = 0
+    certified clean — and drops, rebuilding ancestor box sizes; mdat
+    and codec boxes ship verbatim.  When the rewrite shifts mdat, the
+    stco/co64 chunk-offset tables inside the kept mdia boxes are
+    remapped to the new positions, so the sample table still points
+    at the same media bytes."""
+    w.info.update(width=None, height=None, duration_ms=None)
+    remap = []  # verbatim-copied top-level spans: (old_lo, old_hi, delta)
+    out_len = 0
     saw_moov = False
-    for typ, s, e, p in _mp4_boxes(blob, 0, len(blob)):
-        if typ in _MP4_BENIGN_TOP:
-            continue
-        if typ in _MP4_PADDING or typ == b"wide":
-            meta += _mp4_scan_padding(blob, typ, s, e, p, flags)
-            continue
-        if typ in _MP4_CARRIERS:
-            meta += _mp4_scan_carrier(blob, typ, s, e, p, flags)
-            continue
-        if typ != b"moov":
-            flags["unscanned"] = True  # moof/mfra/vendor top boxes
-            meta += e - s
-            continue
-        saw_moov = True
-        for t, s2, e2, p2 in _mp4_boxes(blob, p, e):
-            if t == b"mvhd":
-                ver = blob[p2]
-                if ver == 1:
-                    ts = struct.unpack_from(">I", blob, p2 + 20)[0]
-                    dur = struct.unpack_from(">Q", blob, p2 + 24)[0]
-                else:
-                    ts = struct.unpack_from(">I", blob, p2 + 12)[0]
-                    dur = struct.unpack_from(">I", blob, p2 + 16)[0]
-                if ts == 0:
-                    raise _Malformed
-                info["duration_ms"] = dur * 1000 // ts
-            elif t == b"trak":
-                for t3, s3, e3, p3 in _mp4_boxes(blob, p2, e2):
-                    if t3 == b"tkhd":
-                        off = 88 if blob[p3] == 1 else 76
-                        w, h = struct.unpack_from(">II", blob, p3 + off)
-                        if w and h:  # 16.16 fixed point
-                            info["width"] = w >> 16
-                            info["height"] = h >> 16
-                    elif t3 in _MP4_CARRIERS:
-                        meta += _mp4_scan_carrier(
-                            blob, t3, s3, e3, p3, flags
-                        )
-                    elif t3 in _MP4_PADDING or t3 == b"wide":
-                        meta += _mp4_scan_padding(
-                            blob, t3, s3, e3, p3, flags
-                        )
-                    elif t3 not in _MP4_BENIGN_TRAK:
-                        flags["unscanned"] = True
-                        meta += e3 - s3
-            elif t in _MP4_CARRIERS:
-                meta += _mp4_scan_carrier(blob, t, s2, e2, p2, flags)
-            elif t in _MP4_PADDING or t == b"wide":
-                meta += _mp4_scan_padding(blob, t, s2, e2, p2, flags)
-            elif t not in _MP4_BENIGN_MOOV:
-                flags["unscanned"] = True
-                meta += e2 - s2
+    for typ, s, e, p in _mp4_boxes(w.blob, 0, len(w.blob)):
+        if typ == b"moov":
+            saw_moov = True
+            out_len += _mp4_rebuild(w, typ, s, e, p, _MP4_BENIGN_MOOV)
+        elif typ in _MP4_BENIGN_TOP:
+            remap.append((s, e, out_len - s))
+            out_len += e - s
+        else:
+            _mp4_drop(w, typ, s, e, p)
     if not saw_moov:
         raise _Malformed  # headerless fragment: nothing certifiable
-    info["meta_bytes"] = meta
-    return info
+    # the remap runs even when nothing shifted: an stco entry pointing
+    # into a DROPPED box must quarantine on every path, not only when
+    # some kept span moved (delta-0 entries are no-op rewrites)
+    w.fix = lambda out: _mp4_patch_chunk_offsets(out, remap)
 
 
 def _mp4_patch_chunk_offsets(out: bytearray, remap: list) -> None:
@@ -683,43 +726,6 @@ def _mp4_patch_chunk_offsets(out: bytearray, remap: list) -> None:
     for t, _s, e, p in _mp4_boxes(out, 0, len(out)):
         if t == b"moov":
             walk(p, e)
-
-
-def _mp4_strip(blob: bytes) -> bytes:
-    """Drop every carrier box (udta / meta / uuid), every padding box
-    (free/skip/wide — droppable by definition, and a non-zero payload
-    is a smuggling channel) AND every box the scan would flag
-    unscanned — at the top level, in moov, and in each trak —
-    rebuilding ancestor box sizes bottom-up.  Exactly the boxes
-    _mp4_scan certifies (the shared whitelists) ship; mdat and codec
-    boxes are copied verbatim.  When the rewrite shifts mdat, the
-    stco/co64 chunk-offset tables inside the kept mdia boxes are
-    remapped to the new positions, so the sample table still points
-    at the same media bytes."""
-
-    def rebuild(typ: bytes, p: int, e: int, benign: tuple) -> bytes:
-        body = bytearray()
-        for t, s2, e2, p2 in _mp4_boxes(blob, p, e):
-            if t == b"trak":
-                body += rebuild(t, p2, e2, _MP4_BENIGN_TRAK)
-            elif t in benign:
-                body += blob[s2:e2]
-            # carriers, padding and unscanned boxes drop
-        return struct.pack(">I", len(body) + 8) + typ + bytes(body)
-
-    out = bytearray()
-    remap = []  # verbatim-copied top-level spans: (old_lo, old_hi, delta)
-    for typ, s, e, p in _mp4_boxes(blob, 0, len(blob)):
-        if typ == b"moov":
-            out += rebuild(typ, p, e, _MP4_BENIGN_MOOV)
-        elif typ in _MP4_BENIGN_TOP:
-            remap.append((s, e, len(out) - s))
-            out += blob[s:e]
-    # the remap runs even when nothing shifted: an stco entry pointing
-    # into a DROPPED box must quarantine on every path, not only when
-    # some kept span moved (delta-0 entries are no-op rewrites)
-    _mp4_patch_chunk_offsets(out, remap)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
@@ -945,112 +951,83 @@ def _heif_walk(blob: bytes, flags: dict):
     return (*items, pad_spans)
 
 
-def scan_heif_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """HEIF/HEIC scan: PII flags from the EXIF item (shared TIFF
+def _walk_heif(w: _Walk) -> None:
+    """HEIF/HEIC walk: PII flags from the EXIF item (shared TIFF
     parser) and XMP mime items (shared property scan), canvas dims
     from ispe; item types/constructions/properties the walk cannot
-    read → unscanned.  None = quarantine."""
-    if not _heif_is_brand(blob):
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    meta = 0
-    try:
-        types, mimes, locs, dims, _pads = _heif_walk(blob, flags)
-        for iid, spans in locs.items():
-            ityp = types.get(iid)
-            # the extents are only MATERIALIZED for the metadata
-            # items — joining a multi-MB hvc1/av01 pixel payload just
-            # to discard it would double-copy every image in the
-            # Arrow hot path
-            if ityp is None:
-                flags["unscanned"] = True  # located but undeclared
-            elif ityp == b"Exif":
-                payload = b"".join(blob[lo:hi] for lo, hi in spans)
-                meta += len(payload)
-                if len(payload) < 8:
-                    raise _Malformed
-                off = struct.unpack_from(">I", payload, 0)[0]
-                body = payload[4 + off :]
-                if body[:6] == b"Exif\x00\x00":  # some writers prefix
-                    body = body[6:]
-                _parse_tiff_flags(body, flags)
-            elif ityp == b"mime":
-                payload = b"".join(blob[lo:hi] for lo, hi in spans)
-                meta += len(payload)
-                if mimes.get(iid) in (
-                    b"application/rdf+xml", b"application/xml"
-                ):
-                    _scan_xmp(payload, flags)
-                else:  # a mime item this scan cannot classify
-                    flags["unscanned"] = True
-            elif ityp not in _HEIF_PIXEL_ITEMS:
+    read → unscanned.  The strip plan is the in-place item scrub
+    described above; unread items cannot be dropped without breaking
+    offsets, so an unscanned HEIF never strips."""
+    blob, flags = w.blob, w.flags
+    types, mimes, locs, dims, pads = _heif_walk(blob, flags)
+    w.info.update(width=dims[0], height=dims[1])
+    for iid, spans in locs.items():
+        ityp = types.get(iid)
+        # the extents are only MATERIALIZED for the metadata
+        # items — joining a multi-MB hvc1/av01 pixel payload just
+        # to discard it would double-copy every image in the
+        # Arrow hot path
+        if ityp is None:
+            flags["unscanned"] = True  # located but undeclared
+        elif ityp == b"Exif":
+            payload = b"".join(blob[lo:hi] for lo, hi in spans)
+            w.meta += len(payload)
+            if len(payload) < 8:
+                raise _Malformed
+            off = struct.unpack_from(">I", payload, 0)[0]
+            body = payload[4 + off :]
+            if body[:6] == b"Exif\x00\x00":  # some writers prefix
+                body = body[6:]
+            _tiff_surgery(body, flags)
+        elif ityp == b"mime":
+            payload = b"".join(blob[lo:hi] for lo, hi in spans)
+            w.meta += len(payload)
+            if mimes.get(iid) in (
+                b"application/rdf+xml", b"application/xml"
+            ):
+                _scan_xmp(payload, flags)
+            else:  # a mime item this scan cannot classify
                 flags["unscanned"] = True
-        for iid, ityp in types.items():
-            if iid not in locs and ityp not in _HEIF_PIXEL_ITEMS:
-                flags["unscanned"] = True  # declared but unlocatable
-    except (_Malformed, IndexError, struct.error, ValueError):
-        return None
-    return {
-        "fmt": "heif",
-        "width": dims[0],
-        "height": dims[1],
-        "meta_bytes": meta,
-        **flags,
-    }
+        elif ityp not in _HEIF_PIXEL_ITEMS:
+            flags["unscanned"] = True
+    for iid, ityp in types.items():
+        if iid not in locs and ityp not in _HEIF_PIXEL_ITEMS:
+            flags["unscanned"] = True  # declared but unlocatable
 
-
-def _heif_strip(blob: bytes) -> "bytes | None":
-    """In-place item scrub: Exif item extents become a minimal clean
-    TIFF (zero-padded), XMP mime item extents become zeros, padding
-    payloads become zeros — length-preserving, so every iloc offset
-    and pixel extent stays valid and a rescan certifies clean.  A
-    blob whose scan quarantines — or that carries items/children the
-    walk cannot read — cannot be scrubbed to certifiable-clean (the
-    unread bytes cannot be dropped without breaking offsets), so it
-    quarantines → None."""
-    info = scan_heif_info(blob)
-    if info is None or info["unscanned"]:
-        return None
-    flags = {k: False for k in
-             ("gps", "serial", "author", "text", "unscanned")}
-    types, mimes, locs, _dims, pads = _heif_walk(blob, flags)
-    out = bytearray(blob)
-
-    def scrub(spans: list, replacement: bytes) -> None:
-        total = sum(hi - lo for lo, hi in spans)
-        if len(replacement) > total:
-            raise _Malformed  # item too small to hold a clean stub
-        stream = replacement.ljust(total, b"\x00")
-        at = 0
-        for lo, hi in spans:
-            out[lo:hi] = stream[at : at + hi - lo]
-            at += hi - lo
-
-    try:
+    def scrub(out: bytearray) -> None:
         for iid, spans in locs.items():
             ityp = types.get(iid)
-            if ityp == b"Exif":
-                scrub(spans, _HEIF_CLEAN_EXIF)
-            elif ityp == b"mime":
-                scrub(spans, b"")
+            if ityp not in (b"Exif", b"mime"):
+                continue
+            repl = _HEIF_CLEAN_EXIF if ityp == b"Exif" else b""
+            total = sum(hi - lo for lo, hi in spans)
+            if len(repl) > total:
+                raise _Malformed  # item too small to hold a clean stub
+            stream = repl.ljust(total, b"\x00")
+            at = 0
+            for lo, hi in spans:
+                out[lo:hi] = stream[at : at + hi - lo]
+                at += hi - lo
         for lo, hi in pads:
             out[lo:hi] = bytes(hi - lo)
-    except _Malformed:
-        return None
-    return bytes(out)
+
+    w.fix = scrub
+
+
+def scan_heif_info(blob: bytes, depth: int = 0) -> "dict | None":
+    """HEIF/HEIC scan (:func:`_walk_heif`): {fmt, width, height,
+    meta_bytes, flags...}.  None = quarantine."""
+    return _result(_walk(blob, depth, "heif"), info=True)
 
 
 # ---------------------------------------------------------------------------
 # Standalone TIFF — the same IFD structure the JPEG/EXIF parser
 # already walks, at offset 0 of a .tif file (scans, scientific
-# imagery, scanned documents — a real crawl format).  Scan reuses
-# _parse_tiff_flags verbatim.  Strip is IN-PLACE IFD SURGERY: PII
+# imagery, scanned documents — a real crawl format).  One IFD walk,
+# _tiff_surgery, serves EXIF everywhere: inside JPEG/PNG/WebP/HEIF
+# only its flags are read (the whole carrier drops), while the
+# standalone file also takes its strip plan.  Strip is IN-PLACE IFD
+# SURGERY: PII
 # entries are removed from their IFD (entries compacted, count
 # rewritten, next-IFD pointer relocated, freed tail zeroed), their
 # out-of-line value bytes zeroed, and a GPS sub-IFD is zeroed WHOLE
@@ -1062,15 +1039,15 @@ def _heif_strip(blob: bytes) -> "bytes | None":
 _TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
 
 
-def _tiff_surgery(data: bytes, flags: "dict | None" = None):
-    """ONE walk that both scan and strip consume: returns
-    (endian, drops, zeros, dims) where ``drops`` maps ifd_offset ->
-    set of entry indices to remove, ``zeros`` lists (lo, hi) byte
-    ranges to blank (out-of-line PII values; whole GPS sub-IFDs), and
-    ``dims`` is IFD0's (ImageWidth, ImageLength).  When ``flags`` is
-    given, PII flags are OR'd into it — same classification as the
-    JPEG/EXIF _parse_tiff_flags, single copy of the walk logic for
-    the standalone-TIFF path."""
+def _tiff_surgery(data: bytes, flags: dict):
+    """THE TIFF IFD walk (EXIF payloads and standalone files): OR the
+    PII flags into ``flags`` and return the strip plan (endian, drops,
+    zeros, dims) where ``drops`` maps ifd_offset -> set of entry
+    indices to remove, ``zeros`` lists (lo, hi) byte ranges to blank
+    (out-of-line PII values; whole GPS sub-IFDs), and ``dims`` is
+    IFD0's (ImageWidth, ImageLength).  Raises _Malformed on anything
+    structurally off — unparseable metadata cannot be certified
+    clean."""
     if len(data) < 8:
         raise _Malformed
     bo = data[:2]
@@ -1091,6 +1068,9 @@ def _tiff_surgery(data: bytes, flags: "dict | None" = None):
         if depth > 4:
             raise _Malformed
         while off:
+            # every IFD visited once, across walks AND next-IFD chains:
+            # a crafted next pointer cycling back would otherwise spin
+            # the Arrow stage forever
             if off in seen:
                 raise _Malformed
             seen.add(off)
@@ -1119,16 +1099,14 @@ def _tiff_surgery(data: bytes, flags: "dict | None" = None):
                     else None
                 )
                 if tag == _GPS_PTR:
-                    if flags is not None:
-                        flags["gps"] = True
+                    flags["gps"] = True
                     walk(val, depth + 1, True, False)
                     drops.setdefault(off, set()).add(k)
                 elif tag == _EXIF_PTR:
                     walk(val, depth + 1, zero_all, False)
                 else:
                     if pii_kind is not None:
-                        if flags is not None:
-                            flags[pii_kind] = True
+                        flags[pii_kind] = True
                         if not zero_all:  # zero_all IFDs blank whole
                             drops.setdefault(off, set()).add(k)
                     if (pii_kind is not None or zero_all) and size > 4:
@@ -1140,58 +1118,46 @@ def _tiff_surgery(data: bytes, flags: "dict | None" = None):
     return e, drops, zeros, tuple(dims)
 
 
-def _tiff_strip(data: bytes) -> bytes:
-    e, drops, zeros, _dims = _tiff_surgery(data)
-    out = bytearray(data)
-    for lo, hi in zeros:
-        out[lo:hi] = bytes(hi - lo)
-    for off, idxs in drops.items():
-        n = struct.unpack_from(e + "H", data, off)[0]
-        entries = [
-            data[off + 2 + 12 * k : off + 2 + 12 * k + 12]
-            for k in range(n)
-            if k not in idxs
-        ]
-        nxt = data[off + 2 + 12 * n : off + 2 + 12 * n + 4]
-        struct.pack_into(e + "H", out, off, len(entries))
-        pos = off + 2
-        for ent in entries:
-            out[pos : pos + 12] = ent
-            pos += 12
-        out[pos : pos + 4] = nxt
-        pos += 4
-        out[pos : off + 2 + 12 * n + 4] = bytes(off + 2 + 12 * n + 4 - pos)
-    return bytes(out)
+def _walk_tiff(w: _Walk) -> None:
+    """Standalone TIFF: PII flags, IFD0 ImageWidth/ImageLength and the
+    in-place surgery plan all from the one IFD walk; meta_bytes counts
+    removed entry and zeroed value bytes."""
+    data = w.blob
+    e, drops, zeros, (width, height) = _tiff_surgery(data, w.flags)
+    w.info.update(width=width, height=height)
+    w.meta = 12 * sum(len(v) for v in drops.values()) + sum(
+        hi - lo for lo, hi in zeros
+    )
+
+    def surgery(out: bytearray) -> None:
+        for lo, hi in zeros:
+            out[lo:hi] = bytes(hi - lo)
+        for off, idxs in drops.items():
+            n = struct.unpack_from(e + "H", data, off)[0]
+            entries = [
+                data[off + 2 + 12 * k : off + 2 + 12 * k + 12]
+                for k in range(n)
+                if k not in idxs
+            ]
+            nxt = data[off + 2 + 12 * n : off + 2 + 12 * n + 4]
+            struct.pack_into(e + "H", out, off, len(entries))
+            pos = off + 2
+            for ent in entries:
+                out[pos : pos + 12] = ent
+                pos += 12
+            out[pos : pos + 4] = nxt
+            pos += 4
+            out[pos : off + 2 + 12 * n + 4] = bytes(
+                off + 2 + 12 * n + 4 - pos
+            )
+
+    w.fix = surgery
 
 
 def scan_tiff_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """Standalone-TIFF scan: PII flags, IFD0 ImageWidth/ImageLength
-    and the strip plan all from ONE IFD walk (_tiff_surgery);
-    meta_bytes counts removed entry and zeroed value bytes.  None =
-    quarantine."""
-    if blob[:4] not in _TIFF_MAGICS:
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    try:
-        _e, drops, zeros, (width, height) = _tiff_surgery(blob, flags)
-    except (_Malformed, IndexError, struct.error):
-        return None
-    meta = 12 * sum(len(v) for v in drops.values()) + sum(
-        hi - lo for lo, hi in zeros
-    )
-    return {
-        "fmt": "tiff",
-        "width": width,
-        "height": height,
-        "meta_bytes": meta,
-        **flags,
-    }
+    """Standalone-TIFF scan (:func:`_walk_tiff`): {fmt, width, height,
+    meta_bytes, flags...}.  None = quarantine."""
+    return _result(_walk(blob, depth, "tiff"), info=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1227,64 +1193,46 @@ def _webp_chunks(blob: bytes):
         raise _Malformed
 
 
-def scan_webp_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """WebP scan: PII flags from EXIF/XMP chunks, canvas dims from
-    VP8X; unknown fourccs → unscanned.  None = quarantine."""
-    if blob[:4] != b"RIFF" or blob[8:12] != b"WEBP":
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    width = height = None
-    meta = 0
-    try:
-        for four, lo, hi, s, e in _webp_chunks(blob):
-            if four == b"VP8X":
-                if hi - lo < 10:
-                    raise _Malformed
-                width = 1 + int.from_bytes(blob[lo + 4 : lo + 7], "little")
-                height = 1 + int.from_bytes(blob[lo + 7 : lo + 10], "little")
-            elif four == b"EXIF":
-                meta += e - s
+def _riff_size(out: bytearray) -> None:
+    """RIFF fix-up: the declared size covers the rewritten body."""
+    struct.pack_into("<I", out, 4, len(out) - 8)
+
+
+def _walk_webp(w: _Walk) -> None:
+    """WebP walk: PII flags from EXIF/XMP chunks, canvas dims from
+    VP8X; unknown fourccs → unscanned.  Strip drops EXIF/XMP/unknown
+    chunks, clears the VP8X E/X feature bits and fixes the RIFF size;
+    pixel chunks ship verbatim."""
+    blob, flags = w.blob, w.flags
+    w.info.update(width=None, height=None)
+    for four, lo, hi, s, e in _webp_chunks(blob):
+        if four == b"VP8X":
+            if hi - lo < 10:
+                raise _Malformed
+            w.info.update(
+                width=1 + int.from_bytes(blob[lo + 4 : lo + 7], "little"),
+                height=1 + int.from_bytes(blob[lo + 7 : lo + 10], "little"),
+            )
+            feat = blob[lo] & ~(_WEBP_EXIF_BIT | _WEBP_XMP_BIT)
+            w.edits.append((lo, lo + 1, bytes([feat])))
+        elif four not in _WEBP_BENIGN:
+            w.carrier(s, e)
+            if four == b"EXIF":
                 body = blob[lo:hi]
                 if body[:6] == b"Exif\x00\x00":  # some writers prefix
                     body = body[6:]
-                _parse_tiff_flags(body, flags)
+                _tiff_surgery(body, flags)
             elif four == b"XMP ":
-                meta += e - s
                 _scan_xmp(blob[lo:hi], flags)
-            elif four not in _WEBP_BENIGN:
-                meta += e - s
+            else:
                 flags["unscanned"] = True
-    except (_Malformed, IndexError, struct.error):
-        return None
-    return {
-        "fmt": "webp",
-        "width": width,
-        "height": height,
-        "meta_bytes": meta,
-        **flags,
-    }
+    w.fix = _riff_size
 
 
-def _webp_strip(blob: bytes) -> bytes:
-    """Drop EXIF/XMP/unknown chunks, clear the VP8X E/X feature bits,
-    fix the RIFF size; pixel chunks verbatim."""
-    out = bytearray(blob[:12])
-    for four, lo, hi, s, e in _webp_chunks(blob):
-        if four == b"VP8X":
-            at = len(out) + 8
-            out += blob[s:e]
-            out[at] &= ~(_WEBP_EXIF_BIT | _WEBP_XMP_BIT)
-        elif four in _WEBP_BENIGN:
-            out += blob[s:e]
-        # EXIF / XMP / unknown carriers drop
-    struct.pack_into("<I", out, 4, len(out) - 8)
-    return bytes(out)
+def scan_webp_info(blob: bytes, depth: int = 0) -> "dict | None":
+    """WebP scan (:func:`_walk_webp`): {fmt, width, height,
+    meta_bytes, flags...}.  None = quarantine."""
+    return _result(_walk(blob, depth, "webp"), info=True)
 
 
 def build_webp(
@@ -1472,112 +1420,76 @@ def _scan_vorbis_comments(data: bytes, flags: dict, depth: int) -> None:
                     raise _Malformed
                 img = pic[p : p + ilen]
             except Exception:
-                flags["unscanned"] = True  # undecodable picture block
-                continue
-            if depth >= 3:
-                flags["unscanned"] = True  # nesting bound
-            else:
-                inner = scan_media_metadata(img, _depth=depth + 1)
-                if inner is None:
-                    flags["unscanned"] = True
-                else:
-                    for k2 in (
-                        "gps", "serial", "author", "text", "unscanned"
-                    ):
-                        flags[k2] = flags[k2] or inner[k2]
+                img = None  # undecodable picture block: unread
+            _scan_nested(img, flags, depth)
         else:
             flags["text"] = True
 
 
-def scan_ogg_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """Ogg container scan: PII flags from the Vorbis/Opus comment
-    block (+ nested picture images), duration from the last granule;
-    multiplexed second streams and non-Vorbis/Opus codecs are seen
-    but unread → unscanned.  None = quarantine."""
-    if blob[:4] != b"OggS":
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    meta = 0
-    duration_ms = None
-    try:
-        pages = list(_ogg_pages(blob))
-        if len({p[4] for p in pages}) != 1:
-            flags["unscanned"] = True  # second stream: unread
-        packets, _spans, last_granule = _ogg_packets(blob, pages)
-        if not packets:
-            raise _Malformed
-        head = packets[0]
-        if head[:7] == b"\x01vorbis":
-            if len(packets) < 2 or packets[1][:7] != b"\x03vorbis":
-                raise _Malformed
-            rate = struct.unpack_from("<I", head, 12)[0]
-            if rate == 0:
-                raise _Malformed
-            meta += len(packets[1])
-            _scan_vorbis_comments(packets[1][7:], flags, depth)
-            if last_granule > 0:
-                duration_ms = last_granule * 1000 // rate
-        elif head[:8] == b"OpusHead":
-            if len(packets) < 2 or packets[1][:8] != b"OpusTags":
-                raise _Malformed
-            pre_skip = struct.unpack_from("<H", head, 10)[0]
-            meta += len(packets[1])
-            _scan_vorbis_comments(packets[1][8:], flags, depth)
-            if last_granule > pre_skip:
-                duration_ms = (last_granule - pre_skip) * 1000 // 48000
-        else:
-            flags["unscanned"] = True  # theora/speex/FLAC-in-Ogg
-    except (_Malformed, IndexError, struct.error, RecursionError):
-        return None
-    return {
-        "fmt": "ogg",
-        "duration_ms": duration_ms,
-        "meta_bytes": meta,
-        **flags,
-    }
-
-
-def _ogg_strip(blob: bytes) -> "bytes | None":
-    """In-place comment scrub, LENGTH-PRESERVING: the tags packet is
-    rewritten as a minimal header whose vendor string absorbs the
-    original length as padding, so every page boundary, lacing table
-    and granule stays put; only touched pages' CRCs are recomputed.
-    A stream the scan cannot certify (unknown codec, second stream)
-    quarantines — its unread bytes cannot ship."""
-    info = scan_ogg_info(blob)
-    if info is None or info["unscanned"]:
-        return None
+def _walk_ogg(w: _Walk) -> None:
+    """Ogg walk: PII flags from the Vorbis/Opus comment block (+
+    nested picture images), duration from the last granule;
+    multiplexed second streams and non-Vorbis/Opus codecs are seen but
+    unread → unscanned, and an unscanned Ogg never strips.  The strip
+    plan is the length-preserving tags-packet scrub described above."""
+    blob, flags = w.blob, w.flags
+    w.info["duration_ms"] = None
     pages = list(_ogg_pages(blob))
-    packets, spans, _g = _ogg_packets(blob, pages)
-    if packets[0][:7] == b"\x01vorbis":
+    if len({p[4] for p in pages}) != 1:
+        flags["unscanned"] = True  # second stream: unread
+    packets, spans, last_granule = _ogg_packets(blob, pages)
+    if not packets:
+        raise _Malformed
+    head = packets[0]
+    if head[:7] == b"\x01vorbis":
+        if len(packets) < 2 or packets[1][:7] != b"\x03vorbis":
+            raise _Malformed
+        rate = struct.unpack_from("<I", head, 12)[0]
+        if rate == 0:
+            raise _Malformed
+        w.meta += len(packets[1])
+        _scan_vorbis_comments(packets[1][7:], flags, w.depth)
+        if last_granule > 0:
+            w.info["duration_ms"] = last_granule * 1000 // rate
         sig, trail = b"\x03vorbis", b"\x01"  # framing bit
-    else:
+    elif head[:8] == b"OpusHead":
+        if len(packets) < 2 or packets[1][:8] != b"OpusTags":
+            raise _Malformed
+        pre_skip = struct.unpack_from("<H", head, 10)[0]
+        w.meta += len(packets[1])
+        _scan_vorbis_comments(packets[1][8:], flags, w.depth)
+        if last_granule > pre_skip:
+            w.info["duration_ms"] = (last_granule - pre_skip) * 1000 // 48000
         sig, trail = b"OpusTags", b""
-    total = len(packets[1])
-    pad = total - len(sig) - 8 - len(trail)
-    if pad < 0:
-        raise _Malformed  # tags packet too small to hold the stub
-    repl = (
-        sig + struct.pack("<I", pad) + b" " * pad
-        + struct.pack("<I", 0) + trail
-    )
-    out = bytearray(blob)
-    at = 0
-    for lo, hi in spans[1]:
-        out[lo:hi] = repl[at : at + hi - lo]
-        at += hi - lo
-    touched = {lo for lo, _hi in spans[1]}
-    for s, e, _ht, _g2, _ser, _seq, _n, _lac, body_off in pages:
-        if any(body_off <= lo < e for lo in touched):
-            struct.pack_into("<I", out, s + 22, 0)
-            struct.pack_into("<I", out, s + 22, _ogg_crc(bytes(out[s:e])))
-    return bytes(out)
+    else:
+        flags["unscanned"] = True  # theora/speex/FLAC-in-Ogg
+        return
+
+    def scrub(out: bytearray) -> None:
+        pad = len(packets[1]) - len(sig) - 8 - len(trail)
+        if pad < 0:
+            raise _Malformed  # tags packet too small to hold the stub
+        repl = (
+            sig + struct.pack("<I", pad) + b" " * pad
+            + struct.pack("<I", 0) + trail
+        )
+        at = 0
+        for lo, hi in spans[1]:
+            out[lo:hi] = repl[at : at + hi - lo]
+            at += hi - lo
+        touched = {lo for lo, _hi in spans[1]}
+        for s, e, _ht, _g, _ser, _seq, _n, _lac, body_off in pages:
+            if any(body_off <= lo < e for lo in touched):
+                struct.pack_into("<I", out, s + 22, 0)
+                struct.pack_into("<I", out, s + 22, _ogg_crc(bytes(out[s:e])))
+
+    w.fix = scrub
+
+
+def scan_ogg_info(blob: bytes, depth: int = 0) -> "dict | None":
+    """Ogg container scan (:func:`_walk_ogg`): {fmt, duration_ms,
+    meta_bytes, flags...}.  None = quarantine."""
+    return _result(_walk(blob, depth, "ogg"), info=True)
 
 
 def build_ogg(
@@ -1759,27 +1671,17 @@ def _id3v2_frames(blob: bytes, flags: dict, depth: int = 0) -> int:
         elif fid == (b"PIC" if ver == 2 else b"APIC"):
             # v2.3/2.4: enc(1) MIME\0 pictype(1) desc\0 image-bytes
             # v2.2:    enc(1) format(3) pictype(1) desc\0 image-bytes
-            if depth >= 3:
-                flags["unscanned"] = True  # nesting bound: unread
-            else:
-                try:
-                    if ver == 2:
-                        desc_end = payload.index(b"\x00", 5)
-                    else:
-                        mime_end = payload.index(b"\x00", 1)
-                        desc_end = payload.index(b"\x00", mime_end + 2)
-                    inner = scan_media_metadata(
-                        payload[desc_end + 1 :], _depth=depth + 1
-                    )
-                except ValueError:
-                    raise _Malformed from None
-                if inner is None:
-                    flags["unscanned"] = True
+            # (past the nesting bound the frame stays unread; a
+            # missing terminator raises ValueError → quarantine)
+            img = None
+            if depth < 3:
+                if ver == 2:
+                    desc_end = payload.index(b"\x00", 5)
                 else:
-                    for k in (
-                        "gps", "serial", "author", "text", "unscanned"
-                    ):
-                        flags[k] = flags[k] or inner[k]
+                    mime_end = payload.index(b"\x00", 1)
+                    desc_end = payload.index(b"\x00", mime_end + 2)
+                img = payload[desc_end + 1 :]
+            _scan_nested(img, flags, depth)
         else:
             flags["unscanned"] = True  # frame id this scan can't read
         j += fhdr + fsize
@@ -1837,17 +1739,20 @@ def _mp3_lattice(blob: bytes, start: int) -> "tuple[int, bool]":
     return n, False
 
 
-def _mp3_scan(blob: bytes, flags: dict, depth: int = 0) -> int:
+def _walk_mp3(w: _Walk) -> None:
     """Full MP3 walk: ID3v2 prefix → Layer-III frame lattice →
-    optional ID3v1 128-byte trailer.  Returns meta_bytes."""
-    meta = 0
+    optional ID3v1 128-byte trailer.  Strip ships the audio frames
+    verbatim and drops both tags; the trailer boundary comes from the
+    lattice walk — a frame payload that happens to contain 'TAG' 128
+    bytes before EOF is audio, not a trailer, and ships intact."""
+    blob, flags = w.blob, w.flags
     i = 0
     if blob[:3] == b"ID3":
-        i = _id3v2_frames(blob, flags, depth)
-        meta += i
+        i = _id3v2_frames(blob, flags, w.depth)
+        w.carrier(0, i)
     tag_at, has_v1 = _mp3_lattice(blob, i)
     if has_v1:
-        meta += 128
+        w.carrier(tag_at, len(blob))
         if any(blob[tag_at + 33 : tag_at + 63]):  # artist field
             flags["author"] = True
         if (
@@ -1856,97 +1761,306 @@ def _mp3_scan(blob: bytes, flags: dict, depth: int = 0) -> int:
             or any(blob[tag_at + 97 : tag_at + 127])  # comment
         ):
             flags["text"] = True
-    return meta
-
-
-def _mp3_strip(blob: bytes) -> bytes:
-    """Audio frames verbatim; ID3v2 prefix and ID3v1 trailer dropped.
-    The trailer boundary comes from the SAME lattice walk the scan
-    validates — a frame payload that happens to contain 'TAG' 128
-    bytes before EOF is audio, not a trailer, and ships intact."""
-    start = 0
-    if blob[:3] == b"ID3":
-        flags = {k: False for k in
-                 ("gps", "serial", "author", "text", "unscanned")}
-        start = _id3v2_frames(blob, flags)
-    end, _has_v1 = _mp3_lattice(blob, start)
-    return blob[start:end]
 
 
 def scan_mp3_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """MP3 container scan: PII flags from ID3v2/ID3v1 (+ nested APIC
-    images), the audio region validated as a clean Layer-III frame
-    lattice.  None = quarantine."""
-    if blob[:3] != b"ID3" and not (
-        len(blob) > 3 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    try:
-        meta = _mp3_scan(blob, flags, depth)
-    except (_Malformed, IndexError, struct.error, RecursionError):
-        return None
-    return {"fmt": "mp3", "meta_bytes": meta, **flags}
+    """MP3 container scan (:func:`_walk_mp3`): PII flags from
+    ID3v2/ID3v1 (+ nested APIC images), the audio region validated as
+    a clean Layer-III frame lattice.  None = quarantine."""
+    return _result(_walk(blob, depth, "mp3"), info=True)
 
 
 def scan_mp4_info(blob: bytes, depth: int = 0) -> "dict | None":
-    """Full MP4 container scan: PII flags + structural metadata
-    (width/height/duration_ms).  None = quarantine (malformed boxes,
-    missing moov, trailing bytes — unparseable is uncertifiable).
-    HEIF-family brands route to :func:`scan_heif_info` instead."""
-    if len(blob) < 12 or blob[4:8] != b"ftyp" or _heif_is_brand(blob):
-        return None
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    try:
-        info = _mp4_scan(blob, flags)
-    except (_Malformed, IndexError, struct.error):
-        return None
-    return {"fmt": "mp4", **info, **flags}
+    """Full MP4 container scan (:func:`_walk_mp4`): PII flags +
+    structural metadata (width/height/duration_ms).  None = quarantine
+    (malformed boxes, missing moov, trailing bytes — unparseable is
+    uncertifiable).  HEIF-family brands route to
+    :func:`scan_heif_info` instead."""
+    return _result(_walk(blob, depth, "mp4"), info=True)
 
 
-def _sniff_container(blob: bytes):
-    """THE single sniff authority for the struct-scanner containers
-    (heif/mp4/mp3/tiff/webp): returns the scan_*_info callable for the
-    magic, or None.  Both scan_media_metadata and strip_media_metadata
-    dispatch through here, so the scan and strip branches cannot
-    drift."""
-    if _heif_is_brand(blob):
-        return scan_heif_info
-    if len(blob) >= 12 and blob[4:8] == b"ftyp":
-        return scan_mp4_info
-    if blob[:3] == b"ID3" or (
-        len(blob) > 3 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        return scan_mp3_info
-    if blob[:4] in _TIFF_MAGICS:
-        return scan_tiff_info
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-        return scan_webp_info
-    if blob[:4] == b"OggS":
-        return scan_ogg_info
+def _walk_jpeg(w: _Walk) -> None:
+    """JPEG: APPn/COM segment walk.  Every APPn/COM segment is a
+    carrier that never ships except the pixel-interpretation segments
+    (APP0 JFIF/JFXX, ICC-signed APP2, Adobe-signed APP14), which set
+    no flags; entropy-coded data ships verbatim, so the decode is
+    bit-identical."""
+    blob, flags = w.blob, w.flags
+    ext_xmp = bytearray()  # extended-XMP slices, reassembled
+    for marker, s, t in _jpeg_segments(blob):
+        if not (0xE0 <= marker <= 0xEF or marker == 0xFE):
+            continue  # frame / scan structure
+        payload = blob[s + 4 : t]
+        if (
+            (marker == 0xE0 and payload[:5] in (b"JFIF\x00", b"JFXX\x00"))
+            # color profile: interpretation, not metadata
+            or (marker == 0xE2 and payload.startswith(b"ICC_PROFILE\x00"))
+            # Adobe color-transform marker
+            or (marker == 0xEE and payload.startswith(b"Adobe"))
+        ):
+            continue
+        w.carrier(s, t)
+        if marker == 0xFE:  # COM
+            flags["text"] = True
+        elif marker == 0xE1 and payload[:6] == b"Exif\x00\x00":
+            _tiff_surgery(payload[6:], flags)
+        elif marker == 0xE1 and payload.startswith(_XMP_SIG):
+            _scan_xmp(payload[len(_XMP_SIG):], flags)
+        elif marker == 0xE1 and payload.startswith(_XMP_EXT_SIG):
+            # extended-XMP chunk: GUID(32)+len(4)+off(4), then a slice
+            # of ONE packet split at arbitrary byte offsets —
+            # accumulate and scan the reassembled packet after the
+            # walk (a needle straddling a chunk boundary must still
+            # flag)
+            ext_xmp += payload[len(_XMP_EXT_SIG) + 40 :]
+        elif marker == 0xED and payload.startswith(_IPTC_SIG):
+            _scan_iptc_app13(payload[len(_IPTC_SIG):], flags)
+        else:
+            # carrier present, signature unknown → unread
+            flags["unscanned"] = True
+    if ext_xmp:
+        _scan_xmp(bytes(ext_xmp), flags)
+
+
+def _walk_png(w: _Walk) -> None:
+    """PNG: chunk walk.  Only the critical and benign ancillary chunks
+    ship; text/eXIf/tIME and private chunks are carriers."""
+    flags = w.flags
+    for tag, body, s, t in _png_chunks(w.blob):
+        if tag in _PNG_BENIGN:
+            continue
+        w.carrier(s, t)
+        if tag in _PNG_TEXT_CHUNKS:
+            flags["text"] = True
+            key = body.split(b"\x00", 1)[0].lower()
+            if key in _PNG_AUTHOR_KEYS:
+                flags["author"] = True
+            # a text chunk can CARRY an XMP packet (Adobe writes iTXt
+            # keyword "XML:com.adobe.xmp") — GPS/creator/serial there
+            # must flag as PII, not just as "text" (the JPEG-XMP
+            # blind-spot class, one container over); undecompressable
+            # zTXt/iTXt is unreadable metadata → quarantine
+            _scan_xmp(_png_text_payload(tag, body), flags)
+        elif tag == b"eXIf":
+            _tiff_surgery(body, flags)
+        elif tag == b"tIME":
+            # last-modification timestamp: a (weak) metadata
+            # side-channel strip drops — the scan flags what strip
+            # removes
+            flags["text"] = True
+        else:
+            flags["unscanned"] = True
+
+
+def _walk_gif(w: _Walk) -> None:
+    """GIF: block walk.  Image data, graphic control and the benign
+    loop-count application extensions ship; every other extension is
+    a carrier."""
+    blob, flags = w.blob, w.flags
+    for kind, label, s, t in _gif_blocks(blob):
+        if kind != "ext" or label == 0xF9:
+            continue  # image data / graphic control: structural
+        if label == 0xFF:  # application extension
+            bsz = blob[s + 2]
+            app_id = bytes(blob[s + 3 : s + 3 + bsz])
+            if app_id in _GIF_BENIGN_APPS:
+                continue  # loop-count control: structural
+        w.carrier(s, t)
+        if label in (0xFE, 0x01):
+            # comment extension / plain-text extension — the 0x01 form
+            # RENDERS text over the frame, the same carrier class
+            # (judge-reproduced r11)
+            flags["text"] = True
+        elif label == 0xFF and app_id == b"XMP DataXMP":
+            if blob[t - 258 : t] == _GIF_XMP_TRAILER:
+                # raw packet + magic trailer (the spec form): the
+                # packet bytes are contiguous
+                _scan_xmp(blob[s + 3 + bsz : t - 258], flags)
+            else:
+                # sub-block-framed writer: REASSEMBLE the blocks
+                # before scanning — a needle must not be missed
+                # because a 255-byte block boundary splits it
+                buf = bytearray()
+                j2 = s + 3 + bsz
+                while blob[j2]:
+                    buf += blob[j2 + 1 : j2 + 1 + blob[j2]]
+                    j2 += 1 + blob[j2]
+                _scan_xmp(bytes(buf), flags)
+        else:  # unknown application id or extension label: unread
+            flags["unscanned"] = True
+
+
+def _walk_wav(w: _Walk) -> None:
+    """WAV: RIFF chunk walk.  Only the signal/structure whitelist
+    ships — LIST, bext, ID3, iXML, padding and unknown chunks all
+    drop (unread bytes never ship) — and the RIFF size is fixed up."""
+    blob, flags = w.blob, w.flags
+    # declared RIFF size must cover the file exactly — bytes beyond it
+    # (a concatenated second container) would walk as opaque chunks
+    # and smuggle unscanned INFO metadata
+    if struct.unpack_from("<I", blob, 4)[0] + 8 != len(blob):
+        raise _Malformed
+    i = 12
+    while i + 8 <= len(blob):
+        tag = blob[i : i + 4]
+        ln = struct.unpack_from("<I", blob, i + 4)[0]
+        end = i + 8 + ln + (ln & 1)
+        if i + 8 + ln > len(blob):
+            raise _Malformed
+        if tag in _WAV_BENIGN:
+            pass  # signal/structure chunks ship
+        elif tag in _WAV_PADDING:
+            if any(blob[i + 8 : i + 8 + ln]):
+                flags["unscanned"] = True
+                w.carrier(i, end)
+            else:
+                w.drop(i, end)
+        elif tag == b"LIST":
+            w.carrier(i, end)
+            ltype = blob[i + 8 : i + 12]
+            if ltype not in (b"INFO", b"adtl"):
+                flags["unscanned"] = True  # a LIST type left unread
+            j = i + 12
+            while ltype in (b"INFO", b"adtl") and j + 8 <= i + 8 + ln:
+                sub = blob[j : j + 4]
+                sln = struct.unpack_from("<I", blob, j + 4)[0]
+                if j + 8 + sln > i + 8 + ln:
+                    # an oversized sub-chunk length would skip (and
+                    # silently certify) whatever follows it in the list
+                    raise _Malformed
+                if ltype == b"adtl":
+                    # cue labels/notes are user text annotations
+                    if sub in (b"labl", b"note", b"ltxt"):
+                        flags["text"] = True
+                    else:
+                        flags["unscanned"] = True
+                elif sub == b"IART":
+                    flags["author"] = True
+                elif sub in (b"ICMT", b"INAM", b"ICOP"):
+                    flags["text"] = True
+                    if sub == b"ICOP":
+                        flags["author"] = True
+                j += 8 + sln + (sln & 1)
+        elif tag == b"bext":
+            w.carrier(i, end)
+            _scan_wav_bext(blob[i + 8 : i + 8 + ln], flags)
+        elif tag in (b"ID3 ", b"id3 "):
+            # consumer tools embed a full ID3v2 tag in WAV — route it
+            # through the shared ID3 walk; non-zero bytes past the
+            # declared tag stay unread
+            w.carrier(i, end)
+            payload = blob[i + 8 : i + 8 + ln]
+            if payload[:3] == b"ID3":
+                tag_end = _id3v2_frames(payload, flags, w.depth)
+                if any(payload[tag_end:]):
+                    flags["unscanned"] = True
+            else:
+                flags["unscanned"] = True
+        else:  # iXML, vendor chunks: seen but unread
+            w.carrier(i, end)
+            flags["unscanned"] = True
+        i = end
+    if i != len(blob):
+        raise _Malformed  # trailing sub-8-byte tail
+    w.fix = _riff_size
+
+
+def _walk_pnm(w: _Walk) -> None:
+    """PNM: '#' comments are text carriers, dropped from the '#' up to
+    (not including) the line break.  The header is 3
+    whitespace-separated fields after the magic; any '#' before the
+    last header field starts a comment.  Plain formats (P2/P3) permit
+    '#' comments anywhere whitespace is allowed INCLUDING the ASCII
+    raster, so the walk continues to the end of the blob; binary P5/P6
+    stop after the header (raster bytes can legally be 0x23)."""
+    blob = w.blob
+    plain = blob[:2] in (b"P2", b"P3")
+    fields, j, comment, in_field = 0, 2, None, False
+    while j < len(blob) and (plain or fields < 3):
+        b = blob[j]
+        if comment is not None:
+            if b in (0x0A, 0x0D):
+                w.carrier(comment, j)  # full comment span
+                comment = None
+        elif b == 0x23:  # '#'
+            # '#' terminates a running field (netpbm: a comment acts
+            # as whitespace) — without this the walk runs past the
+            # header into pixel bytes; a '#' right after the 3rd field
+            # belongs to the raster of a BINARY format
+            if in_field:
+                fields += 1
+                in_field = False
+            if not plain and fields >= 3:
+                break
+            w.flags["text"] = True
+            comment = j
+        elif b in (0x20, 0x09, 0x0A, 0x0D):
+            if in_field:
+                fields += 1
+                in_field = False
+        else:
+            in_field = True
+        j += 1
+    if comment is not None:
+        w.carrier(comment, j)
+
+
+# THE format table: the only sniff.  The first matching row wins
+# where magics overlap (an ftyp box whose size bytes look like an MPEG
+# frame sync is MP4, not MP3).  ``in_place`` formats strip
+# by overwriting bytes where they lie, so they cannot drop what they
+# did not read: an unscanned one does not strip.
+_FORMATS = (
+    ("jpeg", lambda b: b[:2] == b"\xff\xd8", _walk_jpeg, False),
+    ("png", lambda b: b[:8] == b"\x89PNG\r\n\x1a\n", _walk_png, False),
+    ("gif", lambda b: b[:6] in (b"GIF87a", b"GIF89a"), _walk_gif, False),
+    ("wav", lambda b: b[:4] == b"RIFF" and b[8:12] == b"WAVE",
+     _walk_wav, False),
+    ("pnm", lambda b: b[:2] in (b"P2", b"P3", b"P5", b"P6"),
+     _walk_pnm, False),
+    # BMP has no metadata container
+    ("bmp", lambda b: b[:2] == b"BM", lambda w: None, False),
+    ("heif", _heif_is_brand, _walk_heif, True),
+    ("mp4", lambda b: len(b) >= 12 and b[4:8] == b"ftyp"
+     and not _heif_is_brand(b), _walk_mp4, False),
+    ("mp3", lambda b: b[:3] == b"ID3" or (
+        len(b) > 3 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0
+    ), _walk_mp3, False),
+    ("tiff", lambda b: b[:4] in _TIFF_MAGICS, _walk_tiff, True),
+    ("webp", lambda b: b[:4] == b"RIFF" and b[8:12] == b"WEBP",
+     _walk_webp, False),
+    ("ogg", lambda b: b[:4] == b"OggS", _walk_ogg, True),
+)
+
+
+def _walk(blob: bytes, depth: int = 0, fmt: "str | None" = None):
+    """The one walk of a blob: the first table format whose sniff
+    matches (only ``fmt`` when given) reads it.  Returns the _Walk, or
+    None (quarantine: no format claims the blob, or its walk hit
+    malformed structure)."""
+    for name, sniff, walker, in_place in _FORMATS:
+        if (fmt is None or fmt == name) and sniff(blob):
+            w = _Walk(blob, depth, name, in_place)
+            return _quarantine(lambda: walker(w) or w)
     return None
 
 
-_CONTAINER_STRIPPERS = {
-    scan_heif_info: _heif_strip,
-    scan_mp4_info: _mp4_strip,
-    scan_mp3_info: _mp3_strip,
-    scan_tiff_info: _tiff_strip,
-    scan_webp_info: _webp_strip,
-    scan_ogg_info: _ogg_strip,
-}
+def _result(w: "_Walk | None", info: bool = False) -> "dict | None":
+    """The scan dict of a walk: {fmt, meta_bytes, flags...}, with the
+    format's extra fields after fmt when ``info``."""
+    if w is None:
+        return None
+    return {"fmt": w.fmt, **(w.info if info else {}),
+            "meta_bytes": w.meta, **w.flags}
+
+
+def _strip(w: "_Walk | None") -> "bytes | None":
+    """Apply a walk's strip plan.  None where the scan quarantined,
+    where an in-place format holds unscanned carriers, and where the
+    fix-up cannot make the output consistent."""
+    if w is None or (w.in_place and w.flags["unscanned"]):
+        return None
+    return _quarantine(w.apply)
 
 
 def scan_media_metadata(blob: bytes, _depth: int = 0) -> "dict | None":
@@ -1960,255 +2074,7 @@ def scan_media_metadata(blob: bytes, _depth: int = 0) -> "dict | None":
     carrier-in-carrier recursion (MP3 APIC album art): the nesting
     bound quarantines crafted russian-doll blobs instead of
     exhausting the stack."""
-    flags = {
-        "gps": False,
-        "serial": False,
-        "author": False,
-        "text": False,
-        "unscanned": False,
-    }
-    meta = 0
-    try:
-        if blob[:2] == b"\xff\xd8":
-            ext_xmp = bytearray()  # extended-XMP slices, reassembled
-            for marker, s, t in _jpeg_segments(blob):
-                if marker == 0xFE:  # COM
-                    flags["text"] = True
-                    meta += t - s
-                elif 0xE1 <= marker <= 0xEF:
-                    payload = blob[s + 4 : t]
-                    if marker == 0xE1 and payload[:6] == b"Exif\x00\x00":
-                        meta += t - s
-                        _parse_tiff_flags(payload[6:], flags)
-                    elif marker == 0xE1 and payload.startswith(_XMP_SIG):
-                        meta += t - s
-                        _scan_xmp(payload[len(_XMP_SIG):], flags)
-                    elif marker == 0xE1 and payload.startswith(_XMP_EXT_SIG):
-                        # extended-XMP chunk: GUID(32)+len(4)+off(4),
-                        # then a slice of ONE packet split at arbitrary
-                        # byte offsets — accumulate and scan the
-                        # reassembled packet after the walk (a needle
-                        # straddling a chunk boundary must still flag)
-                        meta += t - s
-                        ext_xmp += payload[len(_XMP_EXT_SIG) + 40 :]
-                    elif marker == 0xED and payload.startswith(_IPTC_SIG):
-                        meta += t - s
-                        _scan_iptc_app13(payload[len(_IPTC_SIG):], flags)
-                    elif marker == 0xE2 and payload.startswith(
-                        b"ICC_PROFILE\x00"
-                    ):
-                        pass  # color profile: interpretation, not metadata
-                    elif marker == 0xEE and payload.startswith(b"Adobe"):
-                        pass  # Adobe color-transform marker
-                    else:
-                        # carrier present, signature unknown → unread
-                        meta += t - s
-                        flags["unscanned"] = True
-                elif marker == 0xE0 and not (
-                    blob[s + 4 : s + 9] in (b"JFIF\x00", b"JFXX\x00")
-                ):
-                    meta += t - s
-                    flags["unscanned"] = True
-            if ext_xmp:
-                _scan_xmp(bytes(ext_xmp), flags)
-            fmt = "jpeg"
-        elif blob[:8] == b"\x89PNG\r\n\x1a\n":
-            for tag, body, s, t in _png_chunks(blob):
-                if tag in _PNG_TEXT_CHUNKS:
-                    flags["text"] = True
-                    meta += t - s
-                    key = body.split(b"\x00", 1)[0].lower()
-                    if key in _PNG_AUTHOR_KEYS:
-                        flags["author"] = True
-                    # a text chunk can CARRY an XMP packet (Adobe
-                    # writes iTXt keyword "XML:com.adobe.xmp") — GPS/
-                    # creator/serial there must flag as PII, not just
-                    # as "text" (the JPEG-XMP blind-spot class, one
-                    # container over); undecompressable zTXt/iTXt is
-                    # unreadable metadata → quarantine
-                    _scan_xmp(_png_text_payload(tag, body), flags)
-                elif tag == b"eXIf":
-                    meta += t - s
-                    _parse_tiff_flags(body, flags)
-                elif tag == b"tIME":
-                    # last-modification timestamp: a (weak) metadata
-                    # side-channel strip already dropped — the scan
-                    # must flag what strip removes
-                    flags["text"] = True
-                    meta += t - s
-                elif tag not in _PNG_BENIGN:
-                    flags["unscanned"] = True
-                    meta += t - s
-            fmt = "png"
-        elif blob[:6] in (b"GIF87a", b"GIF89a"):
-            for kind, label, s, t in _gif_blocks(blob):
-                if kind != "ext" or label == 0xF9:
-                    continue  # image data / graphic control: structural
-                if label in (0xFE, 0x01):
-                    # comment extension / plain-text extension — the
-                    # 0x01 form RENDERS text over the frame, the
-                    # same carrier class (judge-reproduced r11)
-                    flags["text"] = True
-                    meta += t - s
-                elif label == 0xFF:  # application extension
-                    bsz = blob[s + 2]
-                    app_id = bytes(blob[s + 3 : s + 3 + bsz])
-                    if app_id in _GIF_BENIGN_APPS:
-                        continue  # loop-count control: structural
-                    meta += t - s
-                    if app_id == b"XMP DataXMP":
-                        if blob[t - 258 : t] == _GIF_XMP_TRAILER:
-                            # raw packet + magic trailer (the spec
-                            # form): the packet bytes are contiguous
-                            _scan_xmp(blob[s + 3 + bsz : t - 258], flags)
-                        else:
-                            # sub-block-framed writer: REASSEMBLE the
-                            # blocks before scanning — a needle must
-                            # not be missed because a 255-byte block
-                            # boundary splits it
-                            buf = bytearray()
-                            j2 = s + 3 + bsz
-                            while blob[j2]:
-                                buf += blob[j2 + 1 : j2 + 1 + blob[j2]]
-                                j2 += 1 + blob[j2]
-                            _scan_xmp(bytes(buf), flags)
-                    else:
-                        flags["unscanned"] = True
-                else:  # unknown extension label: seen but unread
-                    flags["unscanned"] = True
-                    meta += t - s
-            fmt = "gif"
-        elif blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-            # declared RIFF size must cover the file exactly — bytes
-            # beyond it (a concatenated second container) would walk
-            # as opaque chunks and smuggle unscanned INFO metadata
-            if struct.unpack_from("<I", blob, 4)[0] + 8 != len(blob):
-                raise _Malformed
-            i = 12
-            while i + 8 <= len(blob):
-                tag = blob[i : i + 4]
-                ln = struct.unpack_from("<I", blob, i + 4)[0]
-                end = i + 8 + ln + (ln & 1)
-                if i + 8 + ln > len(blob):
-                    raise _Malformed
-                if tag in _WAV_BENIGN:
-                    pass  # signal/structure chunks, copied by strip
-                elif tag == b"LIST":
-                    ltype = blob[i + 8 : i + 12]
-                    meta += end - i
-                    if ltype == b"INFO":
-                        j = i + 12
-                        while j + 8 <= i + 8 + ln:
-                            sub = blob[j : j + 4]
-                            sln = struct.unpack_from("<I", blob, j + 4)[0]
-                            if j + 8 + sln > i + 8 + ln:
-                                # an oversized sub-chunk length would
-                                # skip (and silently certify) whatever
-                                # follows it in the list
-                                raise _Malformed
-                            if sub == b"IART":
-                                flags["author"] = True
-                            elif sub in (b"ICMT", b"INAM", b"ICOP"):
-                                flags["text"] = True
-                                if sub == b"ICOP":
-                                    flags["author"] = True
-                            j += 8 + sln + (sln & 1)
-                    elif ltype == b"adtl":
-                        # cue labels/notes are user text annotations
-                        j = i + 12
-                        while j + 8 <= i + 8 + ln:
-                            sub = blob[j : j + 4]
-                            sln = struct.unpack_from("<I", blob, j + 4)[0]
-                            if j + 8 + sln > i + 8 + ln:
-                                raise _Malformed
-                            if sub in (b"labl", b"note", b"ltxt"):
-                                flags["text"] = True
-                            else:
-                                flags["unscanned"] = True
-                            j += 8 + sln + (sln & 1)
-                    else:  # a LIST type this walk does not read
-                        flags["unscanned"] = True
-                elif tag == b"bext":
-                    meta += end - i
-                    _scan_wav_bext(blob[i + 8 : i + 8 + ln], flags)
-                elif tag in (b"ID3 ", b"id3 "):
-                    # consumer tools embed a full ID3v2 tag in WAV —
-                    # route it through the shared ID3 walk; non-zero
-                    # bytes past the declared tag stay unread
-                    meta += end - i
-                    payload = blob[i + 8 : i + 8 + ln]
-                    if payload[:3] == b"ID3":
-                        tag_end = _id3v2_frames(payload, flags, _depth)
-                        if any(payload[tag_end:]):
-                            flags["unscanned"] = True
-                    else:
-                        flags["unscanned"] = True
-                elif tag in _WAV_PADDING:
-                    if any(blob[i + 8 : i + 8 + ln]):
-                        flags["unscanned"] = True
-                        meta += end - i
-                else:  # iXML, vendor chunks: seen but unread
-                    meta += end - i
-                    flags["unscanned"] = True
-                i = end
-            if i != len(blob):
-                raise _Malformed  # trailing sub-8-byte tail
-            fmt = "wav"
-        elif blob[:2] in (b"P2", b"P3", b"P5", b"P6"):
-            # header = 3 whitespace-separated fields after the magic;
-            # any '#' before the last header field starts a comment.
-            # Plain formats (P2/P3) permit '#' comments anywhere
-            # whitespace is allowed INCLUDING the ASCII raster, so the
-            # walk continues to the end of the blob; binary P5/P6 stop
-            # after the header (raster bytes can legally be 0x23).
-            plain = blob[:2] in (b"P2", b"P3")
-            fields, j, in_comment, in_field = 0, 2, False, False
-            while j < len(blob) and (plain or fields < 3):
-                b = blob[j]
-                if in_comment:
-                    if b in (0x0A, 0x0D):
-                        in_comment = False
-                    else:
-                        meta += 1  # full comment span, not 1/comment
-                elif b == 0x23:  # '#'
-                    # '#' terminates a running field (netpbm: a comment
-                    # acts as whitespace) — without this the walk runs
-                    # past the header into pixel bytes
-                    if in_field:
-                        fields += 1
-                        in_field = False
-                    if not plain and fields >= 3:
-                        break
-                    flags["text"] = True
-                    meta += 1
-                    in_comment = True
-                elif b in (0x20, 0x09, 0x0A, 0x0D):
-                    if in_field:
-                        fields += 1
-                        in_field = False
-                else:
-                    in_field = True
-                j += 1
-            fmt = "pnm"
-        elif blob[:2] == b"BM":
-            fmt = "bmp"  # no metadata container
-        else:
-            # the struct-scanner containers share one dispatch: the
-            # sniff lives in ONE place (_sniff_container) so the scan
-            # and strip branches cannot drift
-            scanner = _sniff_container(blob)
-            if scanner is None:
-                return None
-            info = scanner(blob, _depth)
-            if info is None:
-                return None
-            meta = info["meta_bytes"]
-            for k in flags:
-                flags[k] = info[k]
-            fmt = info["fmt"]
-    except (_Malformed, IndexError, struct.error, RecursionError):
-        return None
-    return {"fmt": fmt, "meta_bytes": meta, **flags}
+    return _result(_walk(blob, _depth))
 
 
 def strip_media_metadata(blob: bytes) -> "bytes | None":
@@ -2216,133 +2082,24 @@ def strip_media_metadata(blob: bytes) -> "bytes | None":
     n>=1 + COM — EXCEPT ICC-signed APP2 and Adobe-signed APP14, which
     are color-interpretation data external decoders need, carry no
     metadata, and set no scan flags; PNG text/eXIf/tIME chunks; GIF
-    comment extensions; WAV LIST/INFO; PNM '#' comments).  Entropy-
-    coded/pixel data is copied verbatim, so the decode is
-    bit-identical.  None on garbage or malformed metadata (same
-    quarantine contract as the scan)."""
-    try:
-        if blob[:2] == b"\xff\xd8":
-            out = bytearray()
-            last = 0
-            for marker, s, t in _jpeg_segments(blob):
-                out += blob[last:s]
-                keep = not (0xE0 <= marker <= 0xEF or marker == 0xFE)
-                if not keep:
-                    payload = blob[s + 4 : t]
-                    keep = (
-                        marker == 0xE0
-                        and payload[:5] in (b"JFIF\x00", b"JFXX\x00")
-                    ) or (
-                        marker == 0xE2
-                        and payload.startswith(b"ICC_PROFILE\x00")
-                    ) or (marker == 0xEE and payload.startswith(b"Adobe"))
-                if keep:
-                    out += blob[s:t]
-                last = t
-            out += blob[last:]
-            return bytes(out)
-        if blob[:8] == b"\x89PNG\r\n\x1a\n":
-            out = bytearray(blob[:8])
-            for tag, body, s, t in _png_chunks(blob):
-                if tag in _PNG_TEXT_CHUNKS:
-                    # same quarantine contract as the scan: a text
-                    # chunk whose payload cannot even be decompressed
-                    # marks the whole blob unparseable (dropping it
-                    # silently would certify what was never read)
-                    _png_text_payload(tag, body)
-                elif tag in _PNG_BENIGN:
-                    out += blob[s:t]
-                # eXIf / tIME / private / unknown chunks drop
-            return bytes(out)
-        if blob[:6] in (b"GIF87a", b"GIF89a"):
-            if scan_media_metadata(blob) is None:
-                return None
-            hdr = 13
-            packed = blob[10]
-            if packed & 0x80:
-                hdr += 3 * (2 << (packed & 0x07))
-            out = bytearray(blob[:hdr])
-            for kind, label, s, t in _gif_blocks(blob):
-                if kind == "img" or label == 0xF9:
-                    out += blob[s:t]  # pixels / graphic control
-                elif (
-                    label == 0xFF
-                    and bytes(blob[s + 3 : s + 3 + blob[s + 2]])
-                    in _GIF_BENIGN_APPS
-                ):
-                    out += blob[s:t]  # loop-count control
-                # comment / plain-text / application / unknown
-                # extensions drop — carriers never ship
-            out += b"\x3b"
-            return bytes(out)
-        if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-            if struct.unpack_from("<I", blob, 4)[0] + 8 != len(blob):
-                return None  # trailing data past the declared size
-            if scan_media_metadata(blob) is None:
-                return None  # same quarantine contract as the scan —
-                # a malformed carrier chunk is dropped by the loop
-                # below, but what could not be WALKED cannot certify
-            out = bytearray(blob[:12])
-            i = 12
-            while i + 8 <= len(blob):
-                ln = struct.unpack_from("<I", blob, i + 4)[0]
-                end = i + 8 + ln + (ln & 1)
-                if i + 8 + ln > len(blob):
-                    return None
-                # only the signal/structure whitelist ships — LIST,
-                # bext, ID3, iXML, padding and unknown chunks all
-                # drop (unread bytes never ship)
-                if blob[i : i + 4] in _WAV_BENIGN:
-                    out += blob[i:end]
-                i = end
-            if i != len(blob):
-                return None
-            struct.pack_into("<I", out, 4, len(out) - 8)
-            return bytes(out)
-        if blob[:2] in (b"P2", b"P3", b"P5", b"P6"):
-            # drop comment bytes: header region for binary P5/P6, the
-            # whole blob for plain P2/P3 (comments are legal anywhere
-            # whitespace is, including the ASCII raster)
-            plain = blob[:2] in (b"P2", b"P3")
-            out = bytearray(blob[:2])
-            fields, j, in_comment, in_field = 0, 2, False, False
-            while j < len(blob) and (plain or fields < 3):
-                b = blob[j]
-                if in_comment:
-                    if b in (0x0A, 0x0D):
-                        in_comment = False
-                        out.append(b)
-                elif b == 0x23:
-                    # same field-terminator rule as the scan: a '#'
-                    # right after the 3rd field belongs to the raster
-                    # region of a BINARY format and must be untouched
-                    if in_field:
-                        fields += 1
-                        in_field = False
-                    if not plain and fields >= 3:
-                        break
-                    in_comment = True
-                else:
-                    if b in (0x20, 0x09, 0x0A, 0x0D):
-                        if in_field:
-                            fields += 1
-                            in_field = False
-                    else:
-                        in_field = True
-                    out.append(b)
-                j += 1
-            out += blob[j:]
-            return bytes(out)
-        if blob[:2] == b"BM":
-            return bytes(blob)
-        scanner = _sniff_container(blob)
-        if scanner is None:
-            return None
-        if scanner(blob) is None:
-            return None  # same quarantine contract as the scan
-        return _CONTAINER_STRIPPERS[scanner](blob)
-    except (_Malformed, IndexError, struct.error, RecursionError):
-        return None
+    comment extensions; WAV LIST/INFO; PNM '#' comments; the
+    containers' carriers).  Entropy-coded/pixel data is copied
+    verbatim, so the decode is bit-identical.  None wherever the scan
+    quarantines (the same walk decides both), and where an in-place
+    format (HEIF, Ogg) holds carriers it could not read."""
+    return _strip(_walk(blob))
+
+
+def scan_and_strip(
+    blob: bytes, fmt: "str | None" = None
+) -> "tuple[dict | None, bytes | None]":
+    """The scan result and the stripped bytes from ONE walk:
+    (``scan_media_metadata(blob)``, ``strip_media_metadata(blob)``),
+    or with ``fmt`` the ``scan_<fmt>_info`` dict and the strip of that
+    walk — what the release paths certify.  A NULL blob gives
+    (None, None)."""
+    w = None if blob is None else _walk(bytes(blob), 0, fmt)
+    return _result(w, info=fmt is not None), _strip(w)
 
 
 # ---------------------------------------------------------------------------
@@ -3127,8 +2884,8 @@ def media_release_scan(
     bytes never materialize as a second corpus (guide §4: pass whole
     batches to one Python stage instead of shipping the payload through
     several).  Shared-definition guarantee: every number comes from the
-    SAME per-blob kernels the individually gated operators run —
-    ``scan_media_metadata`` / ``strip_media_metadata`` here,
+    SAME per-blob kernels the individually gated operators run — the
+    one scan/strip walk (``scan_and_strip``) and the rescan here,
     ``multimodal._phash_blob`` / ``multimodal._afp_blob`` for the
     signatures — so the fused report cannot drift from the operators
     the oracle gates separately.
@@ -3142,37 +2899,42 @@ def media_release_scan(
     both sides (two undecodable signatures compare equal, exactly the
     join form's ``eqNullSafe``).
     """
-    from cqs_spark.operators.multimodal import _afp_blob, _phash_blob
 
     def row(mid, blob):
-        blob = None if blob is None else bytes(blob)
-        r = None if blob is None else scan_media_metadata(blob)
-        if r is None:
-            yield (mid,) + (None,) * 9
-            return
-        stripped = strip_media_metadata(blob)
-        rs = None if stripped is None else scan_media_metadata(stripped)
-        strip_clean = (
-            None
-            if rs is None
-            else not (
-                rs["gps"] or rs["serial"] or rs["author"] or rs["text"]
-                or rs["unscanned"]
-            )
-        )
-        if r["fmt"] == "wav":
-            preserved = _afp_blob(blob) == _afp_blob(stripped)
-        else:
-            po = _phash_blob(blob)
-            ps = _phash_blob(stripped)
-            preserved = (po[1] if po else None) == (ps[1] if ps else None)
-        yield (
-            mid, r["fmt"], r["gps"], r["serial"], r["author"], r["text"],
-            r["gps"] or r["serial"] or r["author"], r["unscanned"],
-            strip_clean, preserved,
-        )
+        yield (mid, *_release_row(blob))
 
     return map_rows(media, [id_col, data_col], row, _RELEASE_SCAN_SCHEMA)
+
+
+def _release_row(blob: "bytes | None") -> tuple:
+    """One :func:`media_release_scan` row after the id: the scan and
+    the strip come from ONE walk of the blob; the rescan of the
+    stripped bytes is the certification."""
+    from cqs_spark.operators.multimodal import _afp_blob, _phash_blob
+
+    r, stripped = scan_and_strip(blob)
+    if r is None:
+        return (None,) * 9
+    rs = None if stripped is None else scan_media_metadata(stripped)
+    strip_clean = (
+        None
+        if rs is None
+        else not (
+            rs["gps"] or rs["serial"] or rs["author"] or rs["text"]
+            or rs["unscanned"]
+        )
+    )
+    if r["fmt"] == "wav":
+        preserved = _afp_blob(blob) == _afp_blob(stripped)
+    else:
+        po = _phash_blob(blob)
+        ps = _phash_blob(stripped)
+        preserved = (po[1] if po else None) == (ps[1] if ps else None)
+    return (
+        r["fmt"], r["gps"], r["serial"], r["author"], r["text"],
+        r["gps"] or r["serial"] or r["author"], r["unscanned"],
+        strip_clean, preserved,
+    )
 
 
 def media_metadata_strip(

@@ -1583,23 +1583,22 @@ def _eqns(a, b):
     return a == b
 
 
-def _fused_md5_strip_walk(scanner, info_cols, tail=None):
+def _fused_md5_strip_walk(fmt, info_cols, tail=None):
     """Row function for the clean_md5-proof container family
-    (q186/q187/q188): per blob, info scan + strip + md5-vs-expected-
-    twin in ONE Arrow stage, kernels shared with the gated operators.
-    ``info_cols(r)`` maps the scan dict to the columns between
-    media_id and strip_clean; ``tail(r, s)`` appends proof columns
-    after strip_clean.  Quarantined blobs (scanner → None) yield the
-    NULL info row; strip_clean is NULL when the expected twin is NULL
-    (the old join form's when(clean_md5 isNull) arm)."""
+    (q186/q187/q188): per blob, info scan + strip from ONE walk of the
+    ``fmt`` container + md5-vs-expected-twin in ONE Arrow stage,
+    kernels shared with the gated operators.  ``info_cols(r)`` maps
+    the scan dict to the columns between media_id and strip_clean;
+    ``tail(r, s)`` appends proof columns after strip_clean.
+    Quarantined blobs (scan → None) yield the NULL info row;
+    strip_clean is NULL when the expected twin is NULL (the old join
+    form's when(clean_md5 isNull) arm)."""
     import hashlib
 
-    from cqs_spark.operators.mediameta import NO_SCAN, strip_media_metadata
+    from cqs_spark.operators.mediameta import NO_SCAN, scan_and_strip
 
     def row(mid, blob, cm):
-        blob = None if blob is None else bytes(blob)
-        r = None if blob is None else scanner(blob)
-        s = None if blob is None else strip_media_metadata(blob)
+        r, s = scan_and_strip(blob, fmt)
         strip_clean = (
             None
             if cm is None
@@ -1621,15 +1620,15 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cqs_spark.operators.mediameta import (
         _mp4_boxes,
+        scan_and_strip,
         scan_mp4_info,
-        strip_media_metadata,
     )
 
-    # Fused release walk (r13): info-scan + strip + re-scan + stco
-    # byte proof per blob in ONE Arrow stage over ONE corpus pass —
-    # previously two staged blob corpora, four mapInPandas walks and
-    # two joins.  Same per-blob kernels as the gated operators
-    # (scan_mp4_info, strip_media_metadata, _mp4_boxes); NULL
+    # Fused release walk (r13): info-scan + strip (one walk) + re-scan
+    # + stco byte proof per blob in ONE Arrow stage over ONE corpus
+    # pass — previously two staged blob corpora, four mapInPandas
+    # walks and two joins.  Same per-blob kernels as the gated
+    # operators (scan_and_strip, scan_mp4_info, _mp4_boxes); NULL
     # semantics reproduced via _kand/_eqns (the Kleene twins of the
     # old join form's nullable boolean algebra).
     schema = (
@@ -1656,11 +1655,10 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def row(mid, blob):
         blob = None if blob is None else bytes(blob)
-        r = None if blob is None else scan_mp4_info(blob)
+        r, s = scan_and_strip(blob, "mp4")
         if r is None:
             yield (mid,) + (None,) * 11
             return
-        s = strip_media_metadata(blob)
         rs = None if s is None else scan_mp4_info(s)
         flags_clear = (
             None
@@ -1783,14 +1781,14 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     from cqs_spark.operators.mediameta import (
+        scan_and_strip,
         scan_media_metadata,
-        strip_media_metadata,
     )
 
-    # Fused release walk (r13): scan + strip + re-scan + md5 frame
-    # proof per blob in ONE Arrow stage (previously: two staged blob
-    # corpora, three walks, two joins).  Kernels shared with the gated
-    # operators (scan_media_metadata / strip_media_metadata).
+    # Fused release walk (r13): scan + strip (one walk) + re-scan +
+    # md5 frame proof per blob in ONE Arrow stage (previously: two
+    # staged blob corpora, three walks, two joins).  Kernels shared
+    # with the gated operators (scan_and_strip / scan_media_metadata).
     schema = (
         "media_id long, fmt string, has_gps boolean, has_author boolean, "
         "has_text boolean, has_pii boolean, has_unscanned_meta boolean, "
@@ -1798,9 +1796,7 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def row(mid, blob, fm):
-        blob = None if blob is None else bytes(blob)
-        r = None if blob is None else scan_media_metadata(blob)
-        s = None if blob is None else strip_media_metadata(blob)
+        r, s = scan_and_strip(blob)
         frames_preserved = (
             None
             if fm is None
@@ -1901,62 +1897,49 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
     then in-place strip surgery proven by (a) a clean re-scan with
     dims intact, (b) unchanged file length, and (c) md5-identical
     trailing pixel bytes; garbage quarantines to a NULL row."""
-    from cqs_spark.operators.mediameta import (
-        media_metadata_strip,
-        tiff_container_info,
+    import hashlib
+
+    from cqs_spark.operators.mediameta import scan_and_strip, scan_tiff_info
+
+    # Fused release walk: one Arrow stage — see q183.  The last 64
+    # bytes are the planted pixels (Spark's substring(data, -64, 64)).
+    schema = (
+        "media_id long, fmt string, width long, height long, "
+        "has_gps boolean, has_serial boolean, has_author boolean, "
+        "has_pii boolean, strip_clean boolean"
     )
 
-    media = stage(_q185_media(spark, sf_dir))
-    stripped = stage(media_metadata_strip(media.select("media_id", "data")))
-    info = tiff_container_info(media)
-    re_info = tiff_container_info(stripped).select(
-        "media_id",
-        F.col("width").alias("_w2"),
-        F.col("height").alias("_h2"),
-        (
-            ~(
-                F.col("has_gps")
-                | F.col("has_serial")
-                | F.col("has_author")
-                | F.col("has_text")
-                | F.col("has_unscanned_meta")
+    def row(mid, blob, px_md5):
+        r, s = scan_and_strip(blob, "tiff")
+        if r is None:
+            yield (mid,) + (None,) * 8
+            return
+        rs = None if s is None else scan_tiff_info(s)
+        clear = (
+            None
+            if rs is None
+            else not (
+                rs["gps"] or rs["serial"] or rs["author"] or rs["text"]
+                or rs["unscanned"]
             )
-        ).alias("_clear"),
-    )
-    sizes = media.select(
-        "media_id", F.length("data").alias("_len0"), "px_md5"
-    )
-    strip_side = stripped.select(
-        "media_id",
-        F.length("data").alias("_len1"),
-        F.md5(F.expr("substring(data, -64, 64)")).alias("_px1"),
-    )
-    strip_clean = (
-        F.col("_clear")
-        & F.col("width").eqNullSafe(F.col("_w2"))
-        & F.col("height").eqNullSafe(F.col("_h2"))
-        & (F.col("_len0") == F.col("_len1"))
-        & F.col("_px1").eqNullSafe(F.col("px_md5"))
-    )
-    out = (
-        info.join(re_info, "media_id", "left")
-        .join(sizes, "media_id", "left")
-        .join(strip_side, "media_id", "left")
-        .select(
-            "media_id",
-            "fmt",
-            "width",
-            "height",
-            "has_gps",
-            "has_serial",
-            "has_author",
-            "has_pii",
-            F.when(F.col("fmt").isNull(), F.lit(None).cast("boolean"))
-            .otherwise(strip_clean)
-            .alias("strip_clean"),
         )
-    )
-    return stage(out).orderBy("media_id")
+        px1 = None if s is None else hashlib.md5(s[-64:]).hexdigest()
+        strip_clean = _kand(
+            clear,
+            _eqns(r["width"], None if rs is None else rs["width"]),
+            _eqns(r["height"], None if rs is None else rs["height"]),
+            None if s is None else len(blob) == len(s),
+            _eqns(px1, px_md5),
+        )
+        yield (
+            mid, r["fmt"], r["width"], r["height"], r["gps"], r["serial"],
+            r["author"], r["gps"] or r["serial"] or r["author"], strip_clean,
+        )
+
+    media = _q185_media(spark, sf_dir)
+    return stage(
+        map_rows(media, ["media_id", "data", "px_md5"], row, schema)
+    ).orderBy("media_id")
 
 
 MULTIMODAL_QUERIES["q185"] = q185
@@ -2034,8 +2017,6 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
     then strip proven md5-identical to the clean twin (carriers
     dropped, feature bits cleared, pixel chunk verbatim); garbage
     quarantines to a NULL row."""
-    from cqs_spark.operators.mediameta import scan_webp_info
-
     # Fused release walk (r13): one Arrow stage — see q183.
     schema = (
         "media_id long, fmt string, width long, height long, "
@@ -2043,7 +2024,7 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
         "strip_clean boolean"
     )
     row = _fused_md5_strip_walk(
-        scan_webp_info,
+        "webp",
         lambda r: (
             r["fmt"], r["width"], r["height"], r["gps"], r["author"],
             r["gps"] or r["serial"] or r["author"],
@@ -2152,8 +2133,6 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrub proven md5-identical to the arithmetically-expected twin
     (length-preserving, pixel extents untouched); an unknown item
     quarantines the strip; garbage quarantines to a NULL row."""
-    from cqs_spark.operators.mediameta import scan_heif_info
-
     # Fused release walk (r13): one Arrow stage — see q183.
     schema = (
         "media_id long, fmt string, width long, height long, "
@@ -2162,7 +2141,7 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
         "strip_clean boolean, strip_quarantined boolean"
     )
     row = _fused_md5_strip_walk(
-        scan_heif_info,
+        "heif",
         lambda r: (
             r["fmt"], r["width"], r["height"], r["gps"], r["serial"],
             r["author"], r["gps"] or r["serial"] or r["author"],
@@ -2298,8 +2277,6 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nested picture images recursed), then the in-place scrub proven
     md5-identical to the arithmetically-expected twin; garbage
     quarantines to a NULL row."""
-    from cqs_spark.operators.mediameta import scan_ogg_info
-
     # Fused release walk (r13): one Arrow stage — see q183.
     schema = (
         "media_id long, fmt string, duration_ms long, has_gps boolean, "
@@ -2307,7 +2284,7 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
         "has_pii boolean, has_unscanned_meta boolean, strip_clean boolean"
     )
     row = _fused_md5_strip_walk(
-        scan_ogg_info,
+        "ogg",
         lambda r: (
             r["fmt"], r["duration_ms"], r["gps"], r["serial"], r["author"],
             r["text"], r["gps"] or r["serial"] or r["author"],

@@ -155,9 +155,6 @@ SLOW_TESTS = {
     "tests/test_eval.py::test_eval_engine_keyword_leg_retrieves",
     "tests/test_index_pipeline.py::test_keyword_search_finds_cosine_topk",
     "tests/test_injection_relay.py::test_convert_relay_flags",
-    "tests/test_mediameta.py::test_media_audit_pii_leg",
-    "tests/test_mediameta.py::test_r11_review_hardening",
-    "tests/test_mediameta.py::test_write_media_shards_strips_and_certifies",
     "tests/test_ml_audit.py::test_class_separation_all_short_label_dense_centroid",
     "tests/test_ml_audit.py::test_class_separation_collapses_when_labels_shuffled",
     "tests/test_ml_audit.py::test_class_separation_margin_positive_when_separable",

@@ -1489,3 +1489,266 @@ def test_media_release_scan_matches_operator_join(spark, sf_dir):
         .collect()
     )
     assert fused == ref
+
+
+# ---------------------------------------------------------------------------
+# One walk per blob: scan and strip read one classification
+# ---------------------------------------------------------------------------
+
+
+def test_strip_quarantines_where_scan_does():
+    """A carrier the scan cannot parse quarantines the scan AND the
+    strip: the JPEG/PNG strips once dropped such a carrier without
+    reading it and shipped the blob."""
+    from cqs_spark.operators.mediameta import inject_jpeg_iptc
+
+    jpeg = encode_jpeg(_px(8))
+    iptc = inject_jpeg_iptc(jpeg, byline="alice")
+    exif = inject_jpeg_metadata(jpeg, gps=(51, 30, 26))
+    png = inject_png_metadata(encode_png(_px(9)), serial="SN9")
+    s, p = exif.find(b"Exif\x00\x00") + 6, png.find(b"eXIf") + 4
+    probes = [
+        iptc.replace(b"8BIM", b"ZBIM", 1),  # 8BIM resource walk breaks
+        exif[:s] + b"ZZ" + exif[s + 2 :],   # EXIF TIFF byte order
+        png[:p] + b"ZZ" + png[p + 2 :],     # eXIf TIFF byte order
+    ]
+    for probe in probes:
+        assert scan_media_metadata(probe) is None
+        assert strip_media_metadata(probe) is None
+
+
+def test_mp4_trak_nested_in_trak_flags_and_drops():
+    """A trak inside a trak is outside the trak whitelist: the scan
+    flags it unscanned and the strip drops it (the strip once rebuilt
+    and shipped it, so the rescan could never certify the output)."""
+    import struct
+
+    from cqs_spark.operators.mediameta import build_mp4, scan_mp4_info
+
+    m = build_mp4(64, 48, 1000, artist="a")
+    t0 = m.index(b"trak") - 4
+    tsz = struct.unpack_from(">I", m, t0)[0]
+    trak = m[t0 : t0 + tsz]
+    nested = struct.pack(">I", 2 * tsz) + b"trak" + trak[8:] + trak
+    m0 = m.index(b"moov") - 4
+    msz = struct.unpack_from(">I", m, m0)[0]
+    blob = (
+        m[:m0] + struct.pack(">I", msz + tsz) + m[m0 + 4 : t0] + nested
+        + m[t0 + tsz :]
+    )
+    assert scan_mp4_info(blob)["unscanned"] is True
+    stripped = strip_media_metadata(blob)
+    assert stripped.count(b"trak") == 1
+    rescan = scan_mp4_info(stripped)
+    assert _flags(rescan) == CLEAN and rescan["unscanned"] is False
+    assert (rescan["width"], rescan["height"]) == (64, 48)
+
+
+def _planted_one_per_format() -> dict:
+    from cqs_spark.operators.mediameta import (
+        build_heif,
+        build_mp3,
+        build_mp4,
+        build_ogg,
+        build_tiff,
+        build_webp,
+        _build_exif,
+        inject_gif_comment,
+        inject_png_xmp,
+        inject_wav_info,
+    )
+
+    return {
+        "jpeg": inject_jpeg_metadata(encode_jpeg(_px(1)), gps=(1, 2, 3)),
+        "png": inject_png_metadata(encode_png(_px(2)), serial="SN2"),
+        "gif": inject_gif_comment(encode_gif([_px(3)]), "note"),
+        "wav": inject_wav_info(encode_wav([100, -100] * 64), artist="a"),
+        "pnm": encode_pnm(_px(4)).replace(b"P5\n", b"P5\n# note\n", 1),
+        "bmp": encode_bmp(_px(5)),
+        "heif": build_heif(64, 48, gps=(1, 2, 3)),
+        "mp4": build_mp4(64, 48, 1000, artist="a", chunk_offsets=[0, 8]),
+        "mp3": build_mp3(3, artist="a", apic=inject_png_xmp(
+            encode_png(_px(6)), gps=(1, 2, 3))),
+        "tiff": build_tiff(16, 16, serial="SN7", pixels=bytes(64)),
+        "webp": build_webp(16, 16, exif=_build_exif(artist="a")),
+        "ogg": build_ogg(artist="a"),
+    }
+
+
+def test_one_walk_per_strip_and_release_row(monkeypatch):
+    """strip_media_metadata walks its input once; a media_release_scan
+    row walks it once for scan + strip and once more to rescan the
+    stripped output (nested images walk at depth >= 1, not counted)."""
+    import cqs_spark.operators.mediameta as mm
+
+    walks = []
+
+    def counted(walker):
+        def run(w):
+            if w.depth == 0:
+                walks.append(w.fmt)
+            return walker(w)
+
+        return run
+
+    monkeypatch.setattr(
+        mm, "_FORMATS",
+        tuple((n, s, counted(f), ip) for n, s, f, ip in mm._FORMATS),
+    )
+    planted = _planted_one_per_format()
+    assert sorted(planted) == sorted(n for n, *_ in mm._FORMATS)
+    for fmt, blob in planted.items():
+        walks.clear()
+        assert mm.strip_media_metadata(blob) is not None, fmt
+        assert walks == [fmt]
+        walks.clear()
+        row = mm._release_row(blob)
+        assert row[0] == fmt and row[7] is True, (fmt, row)
+        assert walks == [fmt, fmt]
+
+
+# sha256 over (id, scan_media_metadata, scan_<fmt>_info, sha256 of the
+# stripped bytes) for every blob of each planted corpus, recorded
+# before the scan and strip shared one walk.  sf0.001 and sf0.01 hold
+# the same doc ids (0-499), so one digest covers both.
+_CORPUS_DIGESTS = {
+    "q178": (None, "df65907d56b2b5e9"),
+    "q183": ("scan_mp4_info", "ef8358231dbf9b24"),
+    "q184": ("scan_mp3_info", "3fb0d21113fb1e5f"),
+    "q185": ("scan_tiff_info", "32f3042615cefef7"),
+    "q186": ("scan_webp_info", "95edbb327049d4b0"),
+    "q187": ("scan_heif_info", "80eea1bb56c475ec"),
+    "q188": ("scan_ogg_info", "43331d953587fba1"),
+}
+
+
+def test_planted_corpora_scan_and_strip_digests(monkeypatch):
+    """Every blob the q178/q183-q188 builders plant scans and strips
+    exactly as recorded (no Spark: the builders' row functions are
+    called directly)."""
+    import hashlib
+    import json
+
+    import cqs_spark.operators.mediameta as mm
+    import cqs_spark.operators.multimodal_queries as mq
+
+    monkeypatch.setattr(
+        mq, "_id_corpus", lambda spark, sf_dir, rows_of, *a: rows_of
+    )
+    got = {}
+    for q, (info, _want) in _CORPUS_DIGESTS.items():
+        rows_of = getattr(mq, f"_{q}_media")(None, None)
+        h = hashlib.sha256()
+        for d in range(500):
+            for row in rows_of(d):
+                blob = row[1]
+                s = mm.strip_media_metadata(blob)
+                h.update(json.dumps([
+                    row[0], mm.scan_media_metadata(blob),
+                    None if info is None else getattr(mm, info)(blob),
+                    None if s is None else hashlib.sha256(s).hexdigest(),
+                ], sort_keys=True).encode())
+        got[q] = h.hexdigest()[:16]
+    assert got == {q: want for q, (_i, want) in _CORPUS_DIGESTS.items()}
+
+
+def test_container_strip_properties_hypothesis():
+    """The strip property contract over the six struct containers with
+    drawn carriers: the rescan is clean, strip is idempotent, and the
+    in-place formats (TIFF, HEIF, Ogg) keep the length."""
+    from hypothesis import given, settings, strategies as st
+
+    from cqs_spark.operators.mediameta import (
+        _build_exif,
+        _xmp_packet,
+        build_heif,
+        build_mp3,
+        build_mp4,
+        build_ogg,
+        build_tiff,
+        build_webp,
+        inject_png_xmp,
+    )
+
+    name = st.one_of(st.none(), st.text(min_size=1, max_size=16))
+    gps = st.one_of(st.none(), st.tuples(
+        st.integers(0, 89), st.integers(0, 59), st.integers(0, 59)))
+    xmp = st.one_of(st.none(), st.fixed_dictionaries(
+        {"gps": gps, "creator": name, "serial": name}))
+    payload = st.binary(min_size=1, max_size=64)
+
+    @st.composite
+    def planted(draw):
+        fmt = draw(st.sampled_from(
+            ["webp", "tiff", "mp4", "mp3", "ogg", "heif"]))
+        w, h = draw(st.integers(1, 4096)), draw(st.integers(1, 4096))
+        if fmt == "webp":
+            exif = draw(st.one_of(st.none(), st.builds(
+                _build_exif, gps, name, name)))
+            x = draw(xmp)
+            return fmt, build_webp(
+                w, h, exif=exif,
+                xmp=None if x is None else _xmp_packet(**x),
+                payload=draw(payload),
+            )
+        if fmt == "tiff":
+            return fmt, build_tiff(
+                w, h, gps=draw(gps), serial=draw(name), artist=draw(name),
+                pixels=draw(payload),
+            )
+        if fmt == "mp4":
+            loc = draw(st.one_of(st.none(), st.tuples(
+                st.floats(-89, 89), st.floats(-179, 179))))
+            return fmt, build_mp4(
+                w, h, draw(st.integers(1, 10**6)), gps=loc,
+                artist=draw(name), comment=draw(name),
+                payload=draw(payload), xmp=draw(xmp),
+                xmp_in=draw(st.sampled_from(["uuid", "udta"])),
+                free=draw(st.one_of(st.none(), st.binary(max_size=16))),
+                chunk_offsets=draw(st.one_of(st.none(), st.just([0]))),
+            )
+        if fmt == "mp3":
+            apic = None
+            if draw(st.booleans()):
+                apic = inject_png_xmp(
+                    encode_png(_px(draw(st.integers(0, 99)))),
+                    gps=draw(gps), creator=draw(name),
+                )
+            return fmt, build_mp3(
+                draw(st.integers(1, 5)), seed=draw(st.integers(0, 999)),
+                artist=draw(name), comment=draw(name),
+                id3v1_artist=draw(name), apic=apic,
+            )
+        if fmt == "ogg":
+            pic = None
+            if draw(st.booleans()):
+                pic = inject_png_metadata(
+                    encode_png(_px(draw(st.integers(0, 99)))),
+                    serial=draw(name),
+                )
+            return fmt, build_ogg(
+                codec=draw(st.sampled_from(["vorbis", "opus"])),
+                artist=draw(name), title=draw(name),
+                location=draw(name), picture=pic,
+                n_audio_pages=draw(st.integers(1, 3)),
+                seed=draw(st.integers(0, 999)),
+            )
+        return fmt, build_heif(
+            w, h, gps=draw(gps), serial=draw(name), artist=draw(name),
+            xmp=draw(xmp), pixel_payload=draw(payload),
+        )
+
+    @settings(max_examples=120, deadline=None)
+    @given(planted())
+    def prop(fmt_blob):
+        fmt, blob = fmt_blob
+        s1 = strip_media_metadata(blob)
+        assert s1 is not None
+        rescan = scan_media_metadata(s1)
+        assert rescan["fmt"] == fmt and _flags(rescan) == CLEAN
+        assert rescan["unscanned"] is False
+        assert strip_media_metadata(s1) == s1          # idempotent
+        if fmt in ("tiff", "heif", "ogg"):
+            assert len(s1) == len(blob)
+
+    prop()
