@@ -271,7 +271,8 @@ def _parser() -> argparse.ArgumentParser:
     s = sub.add_parser(
         "media-dedup",
         help="perceptual media near-dup pairs over a (media_id, data) "
-        "parquet: image dHash / audio delta-sign / video shared-frames",
+        "parquet: image dHash / audio delta-sign (hamming); video "
+        "frames / audio_windowed windows (shared hashes)",
     )
     s.add_argument("input", help="parquet with (media_id, data) columns")
     s.add_argument("output", help="directory for the pairs parquet")
@@ -665,26 +666,13 @@ def _run(eng, args, emit) -> int:
             from cqs_spark.operators.multimodal import media_dedup_apply
 
             result = media_dedup_apply(media, max_hamming=args.max_hamming)
-        elif args.kind == "video":
-            from cqs_spark.operators.multimodal import video_neardup
-
-            result = video_neardup(media, min_shared=args.min_shared)
-        elif args.kind == "audio_windowed":
-            from cqs_spark.operators.multimodal import (
-                audio_neardup_windowed,
-            )
-
-            result = audio_neardup_windowed(
-                media, window=args.window, min_shared=args.min_shared
-            )
-        elif args.kind == "audio":
-            from cqs_spark.operators.multimodal import audio_neardup
-
-            result = audio_neardup(media, max_hamming=args.max_hamming)
         else:
-            from cqs_spark.operators.multimodal import image_neardup
+            from cqs_spark.operators.multimodal import perceptual_neardup
 
-            result = image_neardup(media, max_hamming=args.max_hamming)
+            result = perceptual_neardup(
+                media, kind=args.kind, window=args.window,
+                max_hamming=args.max_hamming, min_shared=args.min_shared,
+            )
         result = stage(result, eager=True)
         result.write.mode("overwrite").parquet(args.output)
         n = result.count()

@@ -461,6 +461,8 @@ def _simhash_bands(
     a signature frame — pure per-row arithmetic (derivable from a
     PERSISTED signature table with no text re-touch), shared by
     simhash_neardup and incremental_simhash."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     nbands = max_hamming + 1
     sizes = [
         bits // nbands + (1 if i < bits % nbands else 0) for i in range(nbands)
@@ -471,12 +473,18 @@ def _simhash_bands(
     # would silently void the exact pigeonhole recall guarantee.  The
     # arithmetic shift's sign-extension is cut by the mask, so a
     # signed 64-bit signature's top band is still extracted exactly.
+    # A band as wide as a 64-bit signature is the signature itself (its
+    # mask would not fit in a long literal).
     band_arr = F.array(
         *[
             F.struct(
                 F.lit(i).alias("band"),
-                F.shiftright(F.col("simhash"), off)
-                .bitwiseAND(F.lit((1 << size) - 1))
+                (
+                    F.col("simhash")
+                    if size >= 64
+                    else F.shiftright(F.col("simhash"), off)
+                    .bitwiseAND(F.lit((1 << size) - 1))
+                )
                 .cast("long")
                 .alias("val"),
             )
@@ -518,27 +526,40 @@ def simhash_neardup(
     bit op on the joined pair — the shingle table is never re-touched.
     """
     sig = simhash(df, id_col, text_col, bits=bits)
-    cand = _simhash_sig_pairs(sig, id_col, bits, max_hamming, max_bucket)
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    return (
-        cand.distinct()
-        .select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return hamming_pairs(sig, id_col, bits, max_hamming, max_bucket)
 
 
-def _simhash_sig_pairs(
+def hamming_pairs(
     sig: DataFrame, id_col: str, bits: int, max_hamming: int,
     max_bucket: int | None,
 ) -> DataFrame:
-    """:func:`_simhash_band_pairs` over the bands of a signature frame.
+    """The hamming pair rule over an (id, simhash) signature frame of
+    ``bits``-wide signatures: (a, b, hamming), a < b, hamming <=
+    ``max_hamming`` — :func:`_simhash_band_pairs` over the pigeonhole
+    bands, then the ``bit_count(xor)`` verify.  Shared by the text
+    SimHash (:func:`simhash_neardup`) and the perceptual media kinds
+    (``multimodal.perceptual_neardup``, ``multimodal.media_audit``).
     With a cap the bands are staged EAGERLY: the capped join reads them
     4 times in one action (oversized agg, star join, anti-join,
     self-join)."""
     banded = _simhash_bands(sig, id_col, bits, max_hamming)
     if max_bucket is not None:
         banded = stage(banded, eager=True)
-    return _simhash_band_pairs(banded, id_col, max_bucket)
+    return _hamming_verify(
+        _simhash_band_pairs(banded, id_col, max_bucket), max_hamming
+    )
+
+
+def _hamming_verify(cand: DataFrame, max_hamming: int) -> DataFrame:
+    """(a, b, hamming) from candidate pairs (a, b, _sa, _sb): one
+    ``bit_count(xor)`` per distinct candidate, kept iff hamming <=
+    ``max_hamming`` — the precision side of every hamming rule."""
+    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
+    return (
+        cand.distinct()
+        .select("a", "b", ham.alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
 
 
 def _simhash_band_pairs(
@@ -548,7 +569,7 @@ def _simhash_band_pairs(
     via the per-band bucket self-join, with the star-reduce cap on
     oversized buckets — the shared core of simhash_neardup and the
     within-batch leg of incremental_simhash.  With a cap the caller
-    stages the frame eagerly first (see :func:`_simhash_sig_pairs`)."""
+    stages the frame eagerly first (see :func:`hamming_pairs`)."""
     star = None
     if max_bucket is not None:
         oversized = (
@@ -723,12 +744,7 @@ def incremental_sig_neardup(
     cand = within.unionByName(cross)
     if star is not None:
         cand = cand.unionByName(star)
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    return (
-        cand.distinct()
-        .select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _hamming_verify(cand, max_hamming)
 
 
 def token_jaccard_pairs(

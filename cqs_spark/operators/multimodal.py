@@ -17,6 +17,25 @@ Operators:
   decode_audio     binary → (sample_rate, channels, duration_ms); real for WAV
   frame_plan       video frame-sampling plan as a pure column expression
   media_stats      metadata rollup (the oracle-checkable aggregate, q49)
+  media_neardup    byte-histogram cosine near-dup (q78)
+  resize_images    box-pooled grayscale resize, long format
+
+Perceptual near-dup, one rule per media kind:
+  media_signatures   the one kind → decode kernel + (id, simhash) decision:
+                     image dHash/aHash (phash_images), audio delta-sign
+                     (audio_fingerprints), video per-frame dHash SET
+                     (video_fingerprints), audio_windowed per-window SET
+                     (audio_window_fingerprints)
+  _hamming_bits      the kind table — the one kind → pair rule decision:
+                     image/audio → hamming (dedup.hamming_pairs: pigeonhole
+                     bands + bit_count(xor) verify); video/audio_windowed →
+                     shared-hash (_shared_hash_pairs: distinct shared-hash
+                     count with a document-frequency stopword cap)
+  perceptual_neardup     batch pairs, any kind
+  incremental_media_neardup  a new batch against persisted signatures, any kind
+  media_dedup_apply  transitive image dedup (min-id survivor per cluster)
+  frame_containment  still images found as video frames
+  media_audit        release audit (decodable / near-dup / metadata PII)
 """
 
 from __future__ import annotations
@@ -786,41 +805,6 @@ def phash_images(
     )
 
 
-def image_neardup(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    method: str = "dhash",
-    max_hamming: int = 2,
-    max_bucket: int | None = 500,
-) -> DataFrame:
-    """Perceptual near-dup JOIN: (a, b, hamming) with a < b and
-    hamming <= ``max_hamming`` on the chosen 64-bit perceptual hash.
-
-    Re-encoded twins (the case byte-histogram cosine q78 cannot see)
-    hash identically and pair at distance 0; the pairing reuses the
-    SimHash pigeonhole machinery — ``max_hamming+1`` bit-bands over
-    the 64-bit signature, bucket join per band (exact recall), one
-    ``bit_count(xor)`` verify per candidate — so the scale shape is
-    q145's: the banding explodes the per-image SIGNATURE table, never
-    the pixels, and oversized buckets star-reduce.
-    """
-    from cqs_spark.operators.dedup import _simhash_sig_pairs
-
-    sig = (
-        phash_images(media, id_col, data_col)
-        .filter(F.col(method).isNotNull())
-        .select(F.col("media_id").alias(id_col), F.col(method).alias("simhash"))
-    )
-    cand = _simhash_sig_pairs(sig, id_col, 64, max_hamming, max_bucket)
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    return (
-        cand.distinct()
-        .select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Audio PCM decode + delta-sign fingerprint
 # ---------------------------------------------------------------------------
@@ -945,34 +929,6 @@ def audio_fingerprints(
     )
 
 
-def audio_neardup(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    frames: int = 64,
-    max_hamming: int = 2,
-    max_bucket: int | None = 500,
-) -> DataFrame:
-    """Audio near-dup JOIN: (a, b, hamming), a < b, over the
-    delta-sign fingerprint — amplitude-rescaled copies of a clip pair
-    at distance ~0.  Same pigeonhole band join as image_neardup, on a
-    ``frames-1``-bit signature."""
-    from cqs_spark.operators.dedup import _simhash_sig_pairs
-
-    sig = (
-        audio_fingerprints(media, id_col, data_col, frames)
-        .filter(F.col("afp").isNotNull())
-        .select(F.col("media_id").alias(id_col), F.col("afp").alias("simhash"))
-    )
-    cand = _simhash_sig_pairs(sig, id_col, frames - 1, max_hamming, max_bucket)
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    return (
-        cand.distinct()
-        .select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def media_dedup_apply(
     media: DataFrame,
     id_col: str = "media_id",
@@ -986,7 +942,8 @@ def media_dedup_apply(
     duplicate-image cluster — the media twin of ``dedup.dedup_apply``
     (the curation step itself, not just the pair report).
 
-    ``image_neardup`` finds verified pairs (hamming <= max_hamming);
+    :func:`perceptual_neardup` (``kind='image'``) finds verified pairs
+    (hamming <= max_hamming);
     label propagation over the pair graph clusters TRANSITIVE
     duplicates (A≈B≈C collapses to one survivor even when A-C never
     paired, e.g. two re-encodes each within radius of the original but
@@ -1017,8 +974,9 @@ def media_dedup_apply(
     tests/test_multimodal.py::test_star_reduce_under_merge_bound."""
     from cqs_spark.operators.graph import label_propagation
 
-    pairs = image_neardup(
-        media, id_col, data_col, method, max_hamming, max_bucket
+    pairs = perceptual_neardup(
+        media, id_col, data_col, "image", method,
+        max_hamming=max_hamming, max_bucket=max_bucket,
     )
     edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     clusters = label_propagation(edges, converge=True, max_iters=lp_max_iters)
@@ -1057,8 +1015,10 @@ def audio_window_fingerprints(
     never pairs — but a trim at window granularity leaves every
     surviving window's samples bit-identical, so its sub-fingerprints
     survive verbatim and the shared-hash JOIN finds the pair (the
-    exact ``video_neardup`` shared-frame design; a video 'frame' and
-    an audio 'window' are the same discretization trick)."""
+    video kind's shared-frame design; a video 'frame' and an audio
+    'window' are the same discretization trick)."""
+    if window < 1:
+        raise ValueError(f"window must be >= 1 sample, got {window}")
 
     def row(mid, blob):
         s = None if blob is None else decode_samples(bytes(blob))
@@ -1075,51 +1035,20 @@ def audio_window_fingerprints(
     )
 
 
-def audio_neardup_windowed(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    window: int = 1024,
-    frames: int = 64,
-    min_shared: int = 3,
-    max_df: int | None = 100,
-) -> DataFrame:
-    """Clip-robust audio near-dup JOIN: (a, b, shared) pairs of clips
-    sharing at least ``min_shared`` distinct window fingerprints —
-    prefix/suffix-trimmed (window-granular) copies pair through their
-    surviving windows even though the whole-clip fingerprint is
-    destroyed (``audio_neardup`` provably misses them).
-
-    Scale shape: identical to ``video_neardup`` — the join runs on the
-    distinct (id, afp) table (16 bytes/window, samples never leave the
-    decode stage); ``max_df`` drops fingerprints occurring in more
-    than that many clips (silence/jingle windows, the stopword
-    analogue) BEFORE the self-join so a degenerate window can't go
-    quadratic; the pair aggregate is a map-side-combinable count."""
-    fp = (
-        audio_window_fingerprints(media, id_col, data_col, window, frames)
-        .filter(F.col("afp").isNotNull())
-        .select(F.col("media_id").alias(id_col), "afp")
-        .distinct()
-    )
-    if max_df is not None:
-        fp = stage(fp, eager=True)
-        common = (
-            fp.groupBy("afp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("afp")
-        )
-        fp = fp.join(F.broadcast(common), "afp", "left_anti")
-    a = fp.select(F.col(id_col).alias("a"), "afp")
-    b = fp.select(F.col(id_col).alias("b"), "afp")
-    return (
-        a.join(b, "afp")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
+def _hamming_bits(kind: str, frames: int) -> "int | None":
+    """The kind table — the one place a kind picks its pair rule.  A
+    hamming kind keeps ONE signature per item and maps to its width in
+    bits (image dHash/aHash 64, audio delta-sign ``frames-1``); a
+    shared-hash kind keeps a signature SET per item (video frame
+    hashes, audio_windowed window fingerprints) and maps to None:
+    hamming on one member of a set would silently pair frames instead
+    of clips."""
+    rules = {
+        "image": 64, "audio": frames - 1, "video": None, "audio_windowed": None
+    }
+    if kind not in rules:
+        raise ValueError(f"unknown media kind {kind!r}")
+    return rules[kind]
 
 
 def media_signatures(
@@ -1132,50 +1061,143 @@ def media_signatures(
     window: int = 1024,
 ) -> DataFrame:
     """Canonical (id, simhash) signature frame for a media corpus —
-    the PERSISTABLE index state for incremental perceptual dedup.
+    the one kind → decode kernel + signature decision, and the
+    PERSISTABLE index state for incremental perceptual dedup.
     ``kind='image'`` decodes pixels and keeps the chosen perceptual
     hash (``method`` in {ahash, dhash}); ``kind='audio'`` keeps the
     delta-sign energy fingerprint; ``kind='video'`` keeps the DISTINCT
-    per-frame dHash SET (multiple rows per id — the count-overlap
-    signature :func:`incremental_video_neardup` probes);
-    ``kind='audio_windowed'`` keeps the DISTINCT per-window
-    fingerprint SET (the clip-robust count-overlap signature
-    :func:`incremental_audio_neardup_windowed` probes).  Undecodable
-    blobs quarantine out (no signature row).  Stage the result to
-    parquet once per corpus; daily arrivals then run the matching
-    incremental op against it without ever re-decoding the indexed
-    blobs."""
+    per-frame dHash SET (multiple rows per id); ``kind='audio_windowed'``
+    keeps the DISTINCT per-window fingerprint SET (``window`` samples
+    each).  Undecodable blobs quarantine out (no signature row).  Stage
+    the result to parquet once per corpus; daily arrivals then run
+    :func:`incremental_media_neardup` against it without ever
+    re-decoding the indexed blobs."""
+    bits = _hamming_bits(kind, frames)
     if kind == "image":
         if method not in ("ahash", "dhash"):
             raise ValueError(f"unknown perceptual hash {method!r}")
-        sig = phash_images(media, id_col, data_col).filter(
-            F.col(method).isNotNull()
-        )
-        col = method
+        fp, col = phash_images(media, id_col, data_col), method
     elif kind == "audio":
-        sig = audio_fingerprints(media, id_col, data_col, frames).filter(
-            F.col("afp").isNotNull()
-        )
-        col = "afp"
+        fp, col = audio_fingerprints(media, id_col, data_col, frames), "afp"
     elif kind == "video":
-        return (
-            video_fingerprints(media, id_col, data_col)
-            .filter(F.col("dhash").isNotNull())
-            .select(F.col("media_id").alias(id_col), F.col("dhash").alias("simhash"))
-            .distinct()
-        )
-    elif kind == "audio_windowed":
-        return (
-            audio_window_fingerprints(media, id_col, data_col, window, frames)
-            .filter(F.col("afp").isNotNull())
-            .select(F.col("media_id").alias(id_col), F.col("afp").alias("simhash"))
-            .distinct()
-        )
+        fp, col = video_fingerprints(media, id_col, data_col), "dhash"
     else:
-        raise ValueError(f"unknown media kind {kind!r}")
-    return sig.select(
+        fp = audio_window_fingerprints(media, id_col, data_col, window, frames)
+        col = "afp"
+    sig = fp.filter(F.col(col).isNotNull()).select(
         F.col("media_id").alias(id_col), F.col(col).alias("simhash")
     )
+    return sig if bits is not None else sig.distinct()
+
+
+def _drop_common_hashes(
+    counted: DataFrame, max_df: int, *frames: DataFrame, col: str = "simhash"
+) -> list:
+    """The stopword cap: drop from each of ``frames`` the hashes held
+    by more than ``max_df`` items of ``counted`` (a distinct (id, hash)
+    table) — black/intro frames, silence/jingle windows — by a
+    broadcast anti-join on the small common-hash set, BEFORE any
+    fan-out, so a degenerate hash can't go quadratic."""
+    common = (
+        counted.groupBy(col)
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select(col)
+    )
+    return [f.join(F.broadcast(common), col, "left_anti") for f in frames]
+
+
+def _shared_hash_pairs(
+    fp_b: DataFrame,
+    id_col: str,
+    min_shared: int,
+    max_df: "int | None",
+    fp_i: "DataFrame | None" = None,
+) -> DataFrame:
+    """The shared-hash pair rule over distinct (id, simhash) signature
+    SET tables: (a, b, shared) pairs, a < b, sharing at least
+    ``min_shared`` distinct hashes.  ``fp_b`` pairs with itself by an
+    equi-join on the 16-byte hash table; with an index ``fp_i`` the
+    batch side also broadcasts onto the index (the index joins
+    map-side with NO shuffle) and the stopword cap counts document
+    frequency across BOTH populations, so a hash common only in the
+    index still can't fan out against the batch.  The pair aggregate
+    is one map-side-combinable count per (a, b)."""
+    if max_df is not None:
+        if fp_i is None:
+            (fp_b,) = _drop_common_hashes(fp_b, max_df, fp_b)
+        else:
+            fp_b, fp_i = _drop_common_hashes(
+                fp_b.unionByName(fp_i), max_df, fp_b, fp_i
+            )
+    a = fp_b.select(F.col(id_col).alias("a"), "simhash")
+    b = fp_b.select(F.col(id_col).alias("b"), "simhash")
+    pairs = a.join(b, "simhash").filter(F.col("a") < F.col("b")).select("a", "b")
+    if fp_i is not None:
+        pairs = pairs.unionByName(
+            F.broadcast(fp_b.select(F.col(id_col).alias("_bid"), "simhash"))
+            .join(fp_i.select(F.col(id_col).alias("_iid"), "simhash"), "simhash")
+            .select(
+                F.least("_bid", "_iid").alias("a"),
+                F.greatest("_bid", "_iid").alias("b"),
+            )
+        )
+    return (
+        pairs.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .filter(F.col("shared") >= min_shared)
+    )
+
+
+def perceptual_neardup(
+    media: DataFrame,
+    id_col: str = "media_id",
+    data_col: str = "data",
+    kind: str = "image",
+    method: str = "dhash",
+    frames: int = 64,
+    window: int = 1024,
+    max_hamming: int = 2,
+    max_bucket: int | None = 500,
+    min_shared: int = 3,
+    max_df: int | None = 100,
+) -> DataFrame:
+    """Perceptual near-dup JOIN over one media corpus by ``kind``'s
+    pair rule (:func:`_hamming_bits`) on its :func:`media_signatures`.
+
+    Hamming kinds (image, audio) return (a, b, hamming), a < b,
+    hamming <= ``max_hamming``: re-encoded image twins (the case
+    byte-histogram cosine q78 cannot see) and amplitude-rescaled audio
+    copies pair at distance ~0.  The pairing is the SimHash pigeonhole
+    machinery (``dedup.hamming_pairs``) — ``max_hamming+1`` bit-bands,
+    bucket join per band (exact recall), one ``bit_count(xor)`` verify
+    per candidate — so the scale shape is q145's: the banding explodes
+    the per-item SIGNATURE table, never the pixels, and buckets larger
+    than ``max_bucket`` star-reduce.
+
+    Shared-hash kinds (video, audio_windowed) return (a, b, shared),
+    a < b, pairs sharing at least ``min_shared`` distinct frame/window
+    hashes: clipped, re-encoded or re-interlaced videos keep their
+    frames' hashes, and window-granular trims of a clip keep their
+    surviving windows' fingerprints, so they pair where no whole-item
+    signal survives (whole-clip audio provably misses trims).  Scale
+    shape: the join runs on the DISTINCT (id, hash) table (16 bytes per
+    frame/window, never pixels or samples); ``max_df`` drops hashes
+    held by more than that many items (the stopword analogue) BEFORE
+    the self-join, and the pair aggregate is a map-side-combinable
+    count.
+
+    The within-corpus leg of :func:`incremental_media_neardup`: against
+    an empty index the two return the same rows."""
+    from cqs_spark.operators.dedup import hamming_pairs
+
+    sig = media_signatures(media, id_col, data_col, kind, method, frames, window)
+    bits = _hamming_bits(kind, frames)
+    if bits is not None:
+        return hamming_pairs(sig, id_col, bits, max_hamming, max_bucket)
+    if max_df is not None:
+        sig = stage(sig, eager=True)
+    return _shared_hash_pairs(sig, id_col, min_shared, max_df)
 
 
 def incremental_media_neardup(
@@ -1189,51 +1211,48 @@ def incremental_media_neardup(
     max_hamming: int = 2,
     max_bucket: int | None = 500,
     batch_sigs: DataFrame | None = None,
+    window: int = 1024,
+    min_shared: int = 3,
+    max_df: int | None = 100,
 ) -> DataFrame:
-    """Incremental perceptual media dedup: a NEW batch of image/audio
-    blobs against an already-indexed corpus's PERSISTED fingerprints —
-    the multimodal leg of the incremental family (exact q99 / MinHash
-    q132 / semantic q133 / SimHash q147 / media q171).
+    """Incremental perceptual media dedup: a NEW batch of blobs against
+    an already-indexed corpus's PERSISTED signatures — the multimodal
+    leg of the incremental family (exact q99 / MinHash q132 / semantic
+    q133 / SimHash q147 / media q171, q180), by ``kind``'s pair rule
+    with :func:`perceptual_neardup`'s outputs and parameters.
 
-    Only the batch decodes pixels/samples (the one Python stage,
-    Arrow-batched); ``indexed_sigs`` is the staged (id, simhash)
-    table from :func:`media_signatures` — at 100 TB the blobs
-    dominate the corpus footprint and are never re-read, while the
-    8-byte-per-item signature index rides the same
-    broadcast-batch-bands / hub-star-reduce plan as incremental
-    SimHash (``dedup.incremental_sig_neardup``).  Returns
-    (a, b, hamming), a < b, hamming <= ``max_hamming``.  Batch ids
+    Only the batch decodes pixels/samples/frames (the one Python
+    stage, Arrow-batched); ``indexed_sigs`` is the staged (id, simhash)
+    table from :func:`media_signatures` of the same kind — at 100 TB
+    the blobs dominate the corpus footprint and are never re-read.
+    Hamming kinds ride the broadcast-batch-bands / hub-star-reduce plan
+    of incremental SimHash (``dedup.incremental_sig_neardup``);
+    shared-hash kinds broadcast the batch's hash set onto the index and
+    cap stopwords by document frequency across batch+index.  Batch ids
     must be disjoint from indexed ids.
 
-    ``kind`` is image/audio — a video signature is a frame-hash SET
-    with count-overlap semantics (:func:`incremental_video_neardup`),
-    so hamming-per-frame would silently mis-pair clips; rejected.
-    Pass ``batch_sigs`` (a precomputed, ideally checkpointed
-    ``media_signatures`` frame for the batch) to skip the decode —
-    the streaming path computes signatures once and reuses them for
-    both the pair join and the index staging.
+    Pass ``batch_sigs`` (a precomputed, staged ``media_signatures``
+    frame for the batch) to skip the decode — the streaming path
+    computes signatures once and reuses them for both the pair join
+    and the index staging.
     """
-    if kind not in ("image", "audio"):
-        raise ValueError(
-            "incremental_media_neardup supports kind in ('image', "
-            f"'audio'); use incremental_video_neardup for {kind!r}"
-        )
     from cqs_spark.operators.dedup import incremental_sig_neardup
 
-    sig_b = (
-        batch_sigs
-        if batch_sigs is not None
-        else media_signatures(batch, id_col, data_col, kind, method, frames)
-    )
-    bits = 64 if kind == "image" else frames - 1
-    return incremental_sig_neardup(
-        sig_b.select(F.col(id_col), F.col("simhash")),
-        indexed_sigs.select(F.col(id_col), F.col("simhash")),
-        id_col,
-        bits,
-        max_hamming,
-        max_bucket,
-    )
+    bits = _hamming_bits(kind, frames)
+    sig_b = batch_sigs
+    if sig_b is None:
+        sig_b = media_signatures(
+            batch, id_col, data_col, kind, method, frames, window
+        )
+        if bits is None:
+            sig_b = stage(sig_b, eager=True)
+    sig_b = sig_b.select(F.col(id_col), F.col("simhash"))
+    sig_i = indexed_sigs.select(F.col(id_col), F.col("simhash"))
+    if bits is not None:
+        return incremental_sig_neardup(
+            sig_b, sig_i, id_col, bits, max_hamming, max_bucket
+        )
+    return _shared_hash_pairs(sig_b, id_col, min_shared, max_df, sig_i)
 
 
 # ---------------------------------------------------------------------------
@@ -1243,12 +1262,11 @@ def incremental_media_neardup(
 # The "video" leg of the multimodal pillar: the container the pure-
 # python ladder can fully decode is animated GIF (LZW is spec'd in
 # GIF89a itself; no codec wheel).  decode_frames -> per-frame dHash
-# (video_fingerprints) -> shared-frame-hash join (video_neardup) —
-# re-encoded / clipped copies of a clip share frame hashes even when
-# byte histograms (q78) and single-image hashes can't see them.
-# Reference parity: frame sampling mirrors the reference's media
-# ingest plan (frame_plan, SURVEY §2); the fingerprint join is the
-# video analogue of image_neardup.
+# (video_fingerprints) -> shared-frame-hash join (perceptual_neardup
+# kind='video') — re-encoded / clipped copies of a clip share frame
+# hashes even when byte histograms (q78) and single-image hashes
+# can't see them.  Reference parity: frame sampling mirrors the
+# reference's media ingest plan (frame_plan, SURVEY §2).
 
 
 def _lzw_decode(data: bytes, min_size: int) -> "list[int] | None":
@@ -1500,71 +1518,23 @@ def video_fingerprints(
     media: DataFrame,
     id_col: str = "media_id",
     data_col: str = "data",
-    frame_step: int = 1,
     grid: int = 8,
 ) -> DataFrame:
-    """Per-sampled-frame perceptual hashes of a video column:
-    (media_id, frame, dhash), one NULL row per undecodable blob.
-    ``frame_step`` subsamples frames (every k-th), the batch analogue
-    of frame_plan's 1-frame/sec contract — at 100 TB the hash table
-    is frames/k rows of 16 bytes, the blobs never leave the decode
-    stage."""
+    """Per-frame perceptual hashes of a video column: (media_id,
+    frame, dhash), one NULL row per undecodable blob — at 100 TB the
+    hash table is one 16-byte row per frame, the blobs never leave the
+    decode stage."""
 
     def row(mid, blob):
         fr = None if blob is None else decode_frames(bytes(blob))
         if not fr:
             yield mid, None, None
             return
-        for fno in range(0, len(fr), frame_step):
-            yield mid, fno, dhash(fr[fno], grid)
+        for fno, f in enumerate(fr):
+            yield mid, fno, dhash(f, grid)
 
     return map_rows(
         media, [F.col(id_col).alias(id_col), F.col(data_col)], row, VIDEO_FP_SCHEMA
-    )
-
-
-def video_neardup(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    frame_step: int = 1,
-    min_shared: int = 3,
-    max_df: int | None = 100,
-) -> DataFrame:
-    """Video near-dup JOIN: (a, b, shared) pairs of videos sharing at
-    least ``min_shared`` distinct frame dHashes — clipped, re-encoded
-    or re-interlaced copies keep their frames' hashes, so they pair
-    even when no single-image or byte-level signal survives.
-
-    Scale shape: the join runs on the (id, dhash) DISTINCT frame-hash
-    table (16 bytes/frame, never pixels); ``max_df`` drops hashes that
-    occur in more than that many videos (black/intro frames — the
-    stopword analogue) BEFORE the self-join, so a degenerate frame
-    can't go quadratic; the pair aggregate is a map-side-combinable
-    count per (a, b)."""
-    fp = (
-        video_fingerprints(media, id_col, data_col, frame_step)
-        .filter(F.col("dhash").isNotNull())
-        .select(F.col("media_id").alias(id_col), "dhash")
-        .distinct()
-    )
-    if max_df is not None:
-        fp = stage(fp, eager=True)
-        common = (
-            fp.groupBy("dhash")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("dhash")
-        )
-        fp = fp.join(F.broadcast(common), "dhash", "left_anti")
-    a = fp.select(F.col(id_col).alias("a"), "dhash")
-    b = fp.select(F.col(id_col).alias("b"), "dhash")
-    return (
-        a.join(b, "dhash")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
     )
 
 
@@ -1573,13 +1543,12 @@ def frame_containment(
     videos: DataFrame,
     id_col: str = "media_id",
     data_col: str = "data",
-    frame_step: int = 1,
     max_hamming: int = 0,
     max_df: int | None = 100,
 ) -> DataFrame:
     """Cross-modal containment join: still images that occur as frames
     of videos — (image_id, video_id, frame, hamming) with hamming <=
-    ``max_hamming`` between the image's dHash and a sampled frame's.
+    ``max_hamming`` between the image's dHash and a frame's.
     The dedup case a corpus holds silently: thumbnails and key-frames
     extracted from clips that also ship whole.
 
@@ -1595,21 +1564,15 @@ def frame_containment(
         .select(F.col("media_id").alias("image_id"), F.col("dhash"))
     )
     vid = (
-        video_fingerprints(videos, id_col, data_col, frame_step)
+        video_fingerprints(videos, id_col, data_col)
         .filter(F.col("dhash").isNotNull())
         .select(F.col("media_id").alias("video_id"), "frame", "dhash")
     )
     if max_df is not None:
         vid = stage(vid, eager=True)
-        common = (
-            vid.select("video_id", "dhash")
-            .distinct()
-            .groupBy("dhash")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("dhash")
+        (vid,) = _drop_common_hashes(
+            vid.select("video_id", "dhash").distinct(), max_df, vid, col="dhash"
         )
-        vid = vid.join(F.broadcast(common), "dhash", "left_anti")
     if max_hamming == 0:
         return img.join(vid, "dhash").select(
             "image_id", "video_id", "frame", F.lit(0).cast("long").alias("hamming")
@@ -1681,138 +1644,6 @@ def resize_images(
     return map_rows(
         media, [F.col(id_col).alias(id_col), F.col(data_col)], row, RESIZE_SCHEMA
     )
-
-
-def incremental_video_neardup(
-    batch: DataFrame,
-    indexed_sigs: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    frame_step: int = 1,
-    min_shared: int = 3,
-    max_df: int | None = 100,
-    batch_sigs: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental video near-dup: a NEW batch of clips against an
-    indexed corpus's PERSISTED frame-hash table — the count-overlap
-    analogue of :func:`incremental_media_neardup` (a video signature
-    is a SET of frame hashes, so the dedup rule is shared-distinct-
-    hash count, not hamming distance).
-
-    Only the batch decodes.  ``indexed_sigs`` is the staged
-    (id, simhash) frame-hash table (:func:`media_signatures` with
-    ``kind='video'``).  The batch's (small) hash set broadcasts onto
-    the index for the cross leg — the index side joins map-side with
-    NO shuffle; the within-batch leg self-joins the batch table.
-    ``max_df`` drops hashes occurring in more than that many videos
-    across batch+index (black/intro stopword frames) before any
-    fan-out.  Returns (a, b, shared), a < b, shared >= ``min_shared``.
-    Batch ids must be disjoint from indexed ids.  Pass ``batch_sigs``
-    (a precomputed ``media_signatures(kind='video')`` frame) to skip
-    the batch decode — the streaming path reuses one signature pass
-    for the join and the index staging.
-    """
-    if batch_sigs is not None:
-        fp_b = stage(
-            batch_sigs.select(F.col(id_col), F.col("simhash").alias("dhash")),
-            eager=True,
-        )
-    else:
-        fp_b = stage(
-            video_fingerprints(batch, id_col, data_col, frame_step)
-            .filter(F.col("dhash").isNotNull())
-            .select(F.col("media_id").alias(id_col), "dhash")
-            .distinct(),
-            eager=True,
-        )
-    fp_i = indexed_sigs.select(F.col(id_col), F.col("simhash").alias("dhash"))
-    return _incremental_set_neardup(fp_b, fp_i, id_col, min_shared, max_df)
-
-
-def _incremental_set_neardup(
-    fp_b: DataFrame,
-    fp_i: DataFrame,
-    id_col: str,
-    min_shared: int,
-    max_df: "int | None",
-) -> DataFrame:
-    """Shared kernel of the set-signature incremental near-dups (video
-    frame-hash sets, windowed audio fingerprint sets): given the
-    batch's and index's (id, dhash) distinct-hash tables, return
-    (a, b, shared) pairs touching the batch with shared >=
-    ``min_shared``.  The batch side broadcasts onto the index (no
-    index shuffle); ``max_df`` computes document frequency across
-    BOTH populations so a hash common only in the index still can't
-    fan out against the batch."""
-    if max_df is not None:
-        df_all = (
-            fp_b.unionByName(fp_i)
-            .groupBy("dhash")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("dhash")
-        )
-        fp_b = fp_b.join(F.broadcast(df_all), "dhash", "left_anti")
-        fp_i = fp_i.join(F.broadcast(df_all), "dhash", "left_anti")
-    a = fp_b.select(F.col(id_col).alias("a"), "dhash")
-    b = fp_b.select(F.col(id_col).alias("b"), "dhash")
-    within = (
-        a.join(b, "dhash")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    cross = (
-        F.broadcast(fp_b.select(F.col(id_col).alias("_bid"), "dhash"))
-        .join(fp_i.select(F.col(id_col).alias("_iid"), "dhash"), "dhash")
-        .select(
-            F.least("_bid", "_iid").alias("a"),
-            F.greatest("_bid", "_iid").alias("b"),
-        )
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return within.unionByName(cross).filter(
-        F.col("shared") >= min_shared
-    )
-
-
-def incremental_audio_neardup_windowed(
-    batch: DataFrame,
-    indexed_sigs: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    window: int = 1024,
-    frames: int = 64,
-    min_shared: int = 3,
-    max_df: int | None = 100,
-    batch_sigs: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental CLIP-ROBUST audio near-dup: a new batch of clips
-    against an indexed corpus's persisted windowed-fingerprint SET
-    (:func:`media_signatures` with ``kind='audio_windowed'``) — the
-    audio twin of :func:`incremental_video_neardup` (an audio window
-    is the frame analogue).  Only the batch decodes; trimmed
-    (window-granular) re-uploads of indexed clips pair through their
-    surviving windows, which the whole-clip hamming path
-    (:func:`incremental_media_neardup` kind='audio') provably misses.
-    Batch ids must be disjoint from indexed ids.  Pass ``batch_sigs``
-    to reuse one signature pass (the streaming path)."""
-    if batch_sigs is not None:
-        fp_b = stage(
-            batch_sigs.select(F.col(id_col), F.col("simhash").alias("dhash")),
-            eager=True,
-        )
-    else:
-        fp_b = stage(
-            audio_window_fingerprints(batch, id_col, data_col, window, frames)
-            .filter(F.col("afp").isNotNull())
-            .select(F.col("media_id").alias(id_col), F.col("afp").alias("dhash"))
-            .distinct(),
-            eager=True,
-        )
-    fp_i = indexed_sigs.select(F.col(id_col), F.col("simhash").alias("dhash"))
-    return _incremental_set_neardup(fp_b, fp_i, id_col, min_shared, max_df)
 
 
 _AUDIT_FEATURES_SCHEMA = T.StructType(
@@ -1899,7 +1730,7 @@ def media_audit(
         raise ValueError(
             f"media_audit supports kind in ('image', 'audio'), got {kind!r}"
         )
-    from cqs_spark.operators.dedup import _simhash_sig_pairs
+    from cqs_spark.operators.dedup import hamming_pairs
 
     # ONE fused Arrow walk computes signature + metadata flags per blob
     # (previously: a media_signatures walk AND a media_metadata_scan
@@ -1915,13 +1746,8 @@ def media_audit(
     sigs = feats.filter(F.col("simhash").isNotNull()).select(
         F.col("media_id").alias(id_col), "simhash"
     )
-    bits = 64 if kind == "image" else frames - 1
-    cand = _simhash_sig_pairs(sigs, id_col, bits, max_hamming, max_bucket)
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("long")
-    pairs = (
-        cand.distinct()
-        .select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+    pairs = hamming_pairs(
+        sigs, id_col, _hamming_bits(kind, frames), max_hamming, max_bucket
     )
     dup_ids = (
         pairs.select(F.col("a").alias(id_col))

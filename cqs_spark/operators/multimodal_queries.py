@@ -364,9 +364,9 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIFFERENT container) pairs at distance 0 through the SimHash
     pigeonhole band join; distinct images (min cross-seed distance 8
     on this corpus) never pair; quarantined blobs never appear."""
-    from cqs_spark.operators.multimodal import image_neardup
+    from cqs_spark.operators.multimodal import perceptual_neardup
 
-    return image_neardup(
+    return perceptual_neardup(
         _q165_media(spark, sf_dir), max_hamming=2
     ).orderBy("a", "b")
 
@@ -472,10 +472,10 @@ def q170(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint): every surviving amplitude-halved twin pairs at
     distance 0; distinct clips (min cross distance 8 on this corpus)
     never pair; quarantined blobs never appear."""
-    from cqs_spark.operators.multimodal import audio_neardup
+    from cqs_spark.operators.multimodal import perceptual_neardup
 
-    return audio_neardup(
-        _q169_media(spark, sf_dir), max_hamming=2
+    return perceptual_neardup(
+        _q169_media(spark, sf_dir), kind="audio", max_hamming=2
     ).orderBy("a", "b")
 
 
@@ -729,10 +729,10 @@ def q173(spark: SparkSession, sf_dir: str) -> DataFrame:
     every clip pairs with its source at shared = nf-1 >= 3 distinct
     frame hashes (the deinterlace path is inside the gate); distinct
     videos never pair; quarantined blobs never appear."""
-    from cqs_spark.operators.multimodal import video_neardup
+    from cqs_spark.operators.multimodal import perceptual_neardup
 
-    return video_neardup(
-        _q172_media(spark, sf_dir, twins=True), min_shared=3
+    return perceptual_neardup(
+        _q172_media(spark, sf_dir, twins=True), kind="video", min_shared=3
     ).orderBy("a", "b")
 
 
@@ -1286,13 +1286,14 @@ def _q179_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip-robust audio near-dup: prefix/suffix-TRIMMED copies pair
-    via shared per-window delta-sign fingerprints (the video_neardup
-    shared-hash shape) — the whole-clip fingerprint (q170's scheme)
+    via shared per-window delta-sign fingerprints (the video kind's
+    shared-hash rule) — the whole-clip fingerprint (q170's scheme)
     provably misses every one of these pairs."""
-    from cqs_spark.operators.multimodal import audio_neardup_windowed
+    from cqs_spark.operators.multimodal import perceptual_neardup
 
-    return audio_neardup_windowed(
+    return perceptual_neardup(
         _q179_media(spark, sf_dir),
+        kind="audio_windowed",
         window=_Q179_WIN,
         frames=64,
         min_shared=3,
@@ -1399,7 +1400,7 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared windows; within-batch fresh twins at 8; garbage never
     appears."""
     from cqs_spark.operators.multimodal import (
-        incremental_audio_neardup_windowed,
+        incremental_media_neardup,
         media_signatures,
     )
 
@@ -1410,9 +1411,10 @@ def q180(spark: SparkSession, sf_dir: str) -> DataFrame:
             window=_Q179_WIN,
         )
     )
-    return incremental_audio_neardup_windowed(
+    return incremental_media_neardup(
         _q180_batch_media(spark, sf_dir),
         idx_sigs,
+        kind="audio_windowed",
         window=_Q179_WIN,
         min_shared=3,
     ).orderBy("a", "b")

@@ -1034,7 +1034,7 @@ def media_arrivals(
     min_shared: int = 3,
 ):
     """Streaming perceptual media dedup: each micro-batch of arriving
-    image/audio blobs (parquet file stream, one file per trigger) runs
+    blobs (parquet file stream, one file per trigger) runs
     :func:`~cqs_spark.operators.multimodal.incremental_media_neardup`
     against the staged fingerprint index at ``index_dir``; surviving
     items append to ``out_dir`` AND their signatures join the index,
@@ -1042,13 +1042,12 @@ def media_arrivals(
     leg of the dedup_arrivals family (q171's operator as a
     continuously-maintained pipeline).
 
-    ``kind='video'`` switches the rule from hamming on one signature
-    to shared-distinct-frame-hash count (>= ``min_shared``, via
-    incremental_video_neardup); the staged table then holds each
-    survivor's frame-hash SET.  ``kind='audio_windowed'`` is the same
-    count-overlap rule over per-window audio fingerprints
-    (incremental_audio_neardup_windowed) — trimmed re-uploads dedup
-    against the index, which whole-clip hamming (kind='audio') misses.  Duplicates never join the index (it
+    ``kind`` picks the pair rule: hamming on one signature for
+    image/audio (<= ``max_hamming``), shared-distinct-hash count
+    (>= ``min_shared``) for video frame hashes and audio_windowed
+    window fingerprints, whose staged table holds each survivor's hash
+    SET — trimmed re-uploads dedup against the index, which whole-clip
+    hamming (kind='audio') misses.  Duplicates never join the index (it
     holds canonical survivors only); only the BATCH decodes
     pixels/samples — staged state is signatures, never blobs.  Ids must arrive monotonically increasing
     (append-only arrival log): canonical a < b means the b-side of
@@ -1081,29 +1080,11 @@ def media_arrivals(
             media_signatures(batch, id_col, data_col, kind, method, frames, window),
             eager=True,
         )
-        if kind == "video":
-            from cqs_spark.operators.multimodal import (
-                incremental_video_neardup,
-            )
-
-            pairs = incremental_video_neardup(
-                batch, isigs, id_col, data_col, min_shared=min_shared,
-                batch_sigs=sigs_b,
-            )
-        elif kind == "audio_windowed":
-            from cqs_spark.operators.multimodal import (
-                incremental_audio_neardup_windowed,
-            )
-
-            pairs = incremental_audio_neardup_windowed(
-                batch, isigs, id_col, data_col, window, frames,
-                min_shared=min_shared, batch_sigs=sigs_b,
-            )
-        else:
-            pairs = incremental_media_neardup(
-                batch, isigs, id_col, data_col, kind, method, frames,
-                max_hamming, max_bucket, batch_sigs=sigs_b,
-            )
+        pairs = incremental_media_neardup(
+            batch, isigs, id_col, data_col, kind, method, frames,
+            max_hamming, max_bucket, batch_sigs=sigs_b, window=window,
+            min_shared=min_shared,
+        )
         dups = pairs.select(F.col("b").alias(id_col)).distinct()
         survivors = stage(batch.join(dups, id_col, "left_anti"), eager=True)
         _write_batch_slice(survivors, out_dir, batch_id, rid)

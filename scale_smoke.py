@@ -55,8 +55,8 @@ from cqs_spark.operators.mediameta import (
     inject_jpeg_metadata, inject_jpeg_xmp, inject_png_metadata, media_metadata_scan,
     media_metadata_strip)
 from cqs_spark.operators.multimodal import (
-    encode_bmp, encode_png, encode_pnm, image_neardup, incremental_media_neardup,
-    media_signatures, phash_images)
+    encode_bmp, encode_png, encode_pnm, incremental_media_neardup, media_signatures,
+    perceptual_neardup, phash_images)
 from cqs_spark.operators.multimodal_queries import _q165_media, _q165_pixels
 from cqs_spark.operators.taskplan import scout_roles
 from cqs_spark.operators.textops import (
@@ -712,7 +712,7 @@ LEGS = [
     # exactly that structure (never bucket²) while the wall time tracks
     # the (linear) decode work; re-encoded twins pair at 1x.
     Leg("image_phash", ALL,
-        lambda c, media: {"pairs": image_neardup(media, max_hamming=2).count()},
+        lambda c, media: {"pairs": perceptual_neardup(media, max_hamming=2).count()},
         lambda c, one, many: {
             "phash_found_reencoded_twins": one["pairs"] > 0,
             "phash_pairs_bounded_by_true_structure": many["pairs"]

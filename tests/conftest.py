@@ -108,7 +108,6 @@ SLOW_TESTS = {
     "tests/test_dedup_apply.py::test_incremental_minhash_skips_indexed_pairs",
     "tests/test_dedup_apply.py::test_incremental_semantic_matches_full_recompute",
     "tests/test_dedup_apply.py::test_incremental_simhash_skips_indexed_pairs",
-    "tests/test_dedup_apply.py::test_simhash_neardup_pigeonhole_and_star_reduce",
     "tests/test_dedup_scale.py::test_bfs_releases_hop_caches",
     "tests/test_dedup_scale.py::test_dedup_corpus_long_chain_one_survivor",
     "tests/test_dedup_scale.py::test_embedding_neardup_matches_bruteforce[1000]",
@@ -165,7 +164,6 @@ SLOW_TESTS = {
     "tests/test_ml_audit.py::test_shard_plan_balances_structured_ids",
     "tests/test_multimodal.py::test_incremental_media_neardup_image_and_audio",
     "tests/test_multimodal.py::test_label_propagation_strict_raises_on_diameter",
-    "tests/test_multimodal.py::test_media_dedup_apply_transitive_and_passthrough",
     "tests/test_nlgen.py::test_training_pairs_and_triples",
     "tests/test_notes.py::test_crud_roundtrip",
     "tests/test_notes.py::test_embedding_text_prefixes",
@@ -174,9 +172,6 @@ SLOW_TESTS = {
     "tests/test_notes.py::test_stale_flags_any_stale_mention_and_skips_mentionless",
     "tests/test_notes.py::test_stale_notes_detected",
     "tests/test_plan_quality.py::test_q156_release_audit_single_row_legs_broadcast",
-    "tests/test_plan_quality.py::test_q171_incremental_media_index_never_shuffles_to_batch",
-    "tests/test_plan_quality.py::test_q173_video_neardup_stopword_drop_is_broadcast_anti",
-    "tests/test_plan_quality.py::test_q179_q180_windowed_audio_join_is_hash_table_only",
     "tests/test_scoring_oracle.py::test_q48_mmr",
     "tests/test_slots.py::test_cli_slot_verbs_and_search_reads_active",
     "tests/test_slots.py::test_cross_slot_embed_cache_hits_same_fingerprint",
@@ -192,7 +187,6 @@ SLOW_TESTS = {
     "tests/test_streaming.py::test_dedup_arrivals_stream",
     "tests/test_streaming.py::test_exactsubstr_unit_marker_rejects_mixing",
     "tests/test_streaming.py::test_media_arrivals_stream",
-    "tests/test_streaming.py::test_media_arrivals_video_kind",
     "tests/test_streaming.py::test_monitor_arrivals_per_source_catches_diluted_flood",
     "tests/test_streaming.py::test_monitor_media_arrivals_flags_pii_and_garbage_floods",
     "tests/test_streaming.py::test_seed_staged_index_day0_bootstrap",

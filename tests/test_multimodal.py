@@ -393,18 +393,17 @@ def test_media_dedup_apply_transitive_and_passthrough(spark):
 
 def test_audio_windowed_neardup_clip_robust(spark):
     """Trimmed-copy robustness: a prefix/suffix trim (window-granular)
-    destroys the whole-clip fingerprint (audio_neardup must MISS the
+    destroys the whole-clip fingerprint (kind='audio' must MISS the
     pair) but leaves the surviving windows' sub-fingerprints
-    bit-identical, so audio_neardup_windowed pairs them via the
-    shared-hash join — the video_neardup shape for audio."""
+    bit-identical, so kind='audio_windowed' pairs them via the
+    shared-hash rule — the video kind's shape for audio."""
     import random
 
     from cqs_spark.operators.multimodal import (
         audio_fingerprint_bits,
-        audio_neardup,
-        audio_neardup_windowed,
         audio_window_fingerprints,
         encode_wav,
+        perceptual_neardup,
     )
 
     W, NW = 256, 8
@@ -427,12 +426,12 @@ def test_audio_windowed_neardup_clip_robust(spark):
     fp_base = audio_fingerprint_bits(base)
     fp_trim = audio_fingerprint_bits(prefix_trim)
     assert bin(fp_base ^ fp_trim).count("1") > 2
-    assert audio_neardup(media, max_hamming=2).count() == 0
+    assert perceptual_neardup(media, kind="audio", max_hamming=2).count() == 0
 
     got = {
         (r["a"], r["b"]): r["shared"]
-        for r in audio_neardup_windowed(
-            media, window=W, min_shared=3
+        for r in perceptual_neardup(
+            media, kind="audio_windowed", window=W, min_shared=3
         ).collect()
     }
     assert got == {(0, 1): 6, (0, 2): 5, (1, 2): 3}
@@ -641,7 +640,7 @@ def test_gif_disposal_methods():
 
 
 def test_video_neardup_max_df_stopword_frame(spark):
-    from cqs_spark.operators.multimodal import encode_gif, video_neardup
+    from cqs_spark.operators.multimodal import encode_gif, perceptual_neardup
 
     def mk(seed):
         return [[(seed * 131 + r * 16 + c) * 29 % 256 for c in range(16)] for r in range(16)]
@@ -657,7 +656,9 @@ def test_video_neardup_max_df_stopword_frame(spark):
     media = spark.createDataFrame(rows, "media_id long, data binary")
     pairs = {
         (r["a"], r["b"]): r["shared"]
-        for r in video_neardup(media, min_shared=3, max_df=3).collect()
+        for r in perceptual_neardup(
+            media, kind="video", min_shared=3, max_df=3
+        ).collect()
     }
     # the intro frame occurs in 6 videos > max_df: dropped, so the
     # unrelated videos share only 1 (dropped) frame and never pair
@@ -792,7 +793,7 @@ def test_decode_pixels_jpeg_and_gif_branches(spark):
     from cqs_spark.operators.multimodal import (
         decode_pixels,
         encode_gif,
-        image_neardup,
+        perceptual_neardup,
     )
 
     def mk(seed):
@@ -812,7 +813,9 @@ def test_decode_pixels_jpeg_and_gif_branches(spark):
         ],
         "media_id long, data binary",
     )
-    pairs = {(r["a"], r["b"]) for r in image_neardup(media, max_hamming=2).collect()}
+    pairs = {
+        (r["a"], r["b"]) for r in perceptual_neardup(media, max_hamming=2).collect()
+    }
     assert (1, 2) in pairs and not any(3 in p for p in pairs)
 
 
@@ -1037,3 +1040,112 @@ def test_audit_features_match_gated_operators(spark, sf_dir):
         assert r["unscannable"] == (
             s["fmt"] is None or bool(s["has_unscanned_meta"])
         )
+
+
+def _kind_fixture(spark, kind):
+    """(media, expected pairs) per media kind: a re-encoded image twin,
+    an amplitude-halved WAV twin, a clipped interlaced GIF twin, and a
+    window-trimmed WAV, each beside a distinct item and a garbage
+    blob."""
+    from cqs_spark.operators.multimodal import (
+        encode_bmp,
+        encode_gif,
+        encode_pnm,
+        encode_wav,
+    )
+
+    def px(seed):
+        return [[(seed * 31 + r * 16 + c) * 97 % 256 for c in range(16)] for r in range(16)]
+
+    s = [((t * 37) % 4001) - 2000 for t in range(8 * 256)]
+    other = [((t * 53) % 3001) - 1500 for t in range(8 * 256)]
+    blobs, expected = {
+        "image": (
+            [encode_pnm(px(1)), encode_bmp(px(1)), encode_pnm(px(9))],
+            {(1, 2): 0},
+        ),
+        "audio": (
+            [encode_wav(s), encode_wav([x // 2 for x in s]), encode_wav(other)],
+            {(1, 2): 0},
+        ),
+        "video": (
+            [
+                encode_gif([px(i) for i in range(4)]),
+                encode_gif([px(i) for i in range(1, 4)], interlace=True),
+                encode_gif([px(i) for i in range(20, 23)]),
+            ],
+            {(1, 2): 3},
+        ),
+        "audio_windowed": (
+            [encode_wav(s), encode_wav(s[2 * 256 :]), encode_wav(other)],
+            {(1, 2): 6},
+        ),
+    }[kind]
+    rows = [(i + 1, bytearray(b)) for i, b in enumerate(blobs)]
+    rows.append((4, bytearray(b"garbage")))
+    return spark.createDataFrame(rows, "media_id long, data binary"), expected
+
+
+@pytest.mark.parametrize("kind", ["image", "audio", "video", "audio_windowed"])
+def test_kind_rule_batch_is_incremental_against_empty_index(spark, kind):
+    """Each kind reaches its one pair rule: the batch entry returns the
+    rule's schema, finds the planted twin, and equals the incremental
+    entry against an empty signature index (the batch join is the
+    incremental join with nothing indexed yet)."""
+    from cqs_spark.operators.multimodal import (
+        incremental_media_neardup,
+        perceptual_neardup,
+    )
+
+    media, expected = _kind_fixture(spark, kind)
+    score = "hamming" if kind in ("image", "audio") else "shared"
+    opts = {"window": 256} if kind == "audio_windowed" else {}
+    batch = perceptual_neardup(media, kind=kind, **opts)
+    assert batch.columns == ["a", "b", score]
+    got = {(r["a"], r["b"]): r[score] for r in batch.collect()}
+    assert got == expected
+    empty = spark.createDataFrame([], "media_id long, simhash long")
+    incr = incremental_media_neardup(media, empty, kind=kind, **opts)
+    assert incr.columns == ["a", "b", score]
+    assert {(r["a"], r["b"]): r[score] for r in incr.collect()} == got
+
+
+def test_max_hamming_zero_pairs_64bit_twins(spark):
+    """max_hamming=0 is the exact-hash case: the one pigeonhole band of
+    a 64-bit image signature is the whole signature, so the re-encoded
+    twin pairs at hamming 0 through the batch and incremental entries
+    (the band's mask used to overflow the long literal at plan build)."""
+    from cqs_spark.operators.multimodal import (
+        incremental_media_neardup,
+        media_signatures,
+        perceptual_neardup,
+    )
+
+    media, _ = _kind_fixture(spark, "image")
+    got = {tuple(r) for r in perceptual_neardup(media, max_hamming=0).collect()}
+    assert got == {(1, 2, 0)}
+    idx = media_signatures(media.filter("media_id = 1"))
+    incr = incremental_media_neardup(
+        media.filter("media_id <> 1"), idx, max_hamming=0
+    )
+    assert {tuple(r) for r in incr.collect()} == {(1, 2, 0)}
+
+
+@pytest.mark.parametrize(
+    "kind, opts, match",
+    [
+        ("audio_windowed", {"window": 0}, "window"),
+        ("audio_windowed", {"window": -1024}, "window"),
+        ("image", {"max_hamming": -1}, "max_hamming"),
+    ],
+)
+def test_out_of_range_kind_parameters_rejected(spark, kind, opts, match):
+    """A zero window used to kill the job in the Python worker, a
+    negative one silently yielded no fingerprint rows, and a negative
+    radius failed deep in plan build; each is a plain ValueError where
+    it enters."""
+    from cqs_spark.operators.multimodal import perceptual_neardup
+
+    media = spark.createDataFrame([], "media_id long, data binary")
+    with pytest.raises(ValueError, match=match):
+        perceptual_neardup(media, kind=kind, **opts)

@@ -1151,7 +1151,7 @@ def test_incremental_video_neardup_max_df(spark):
     out against a batch that also carries it."""
     from cqs_spark.operators.multimodal import (
         encode_gif,
-        incremental_video_neardup,
+        incremental_media_neardup,
         media_signatures,
     )
 
@@ -1176,8 +1176,8 @@ def test_incremental_video_neardup_max_df(spark):
     )
     pairs = {
         (r["a"], r["b"]): r["shared"]
-        for r in incremental_video_neardup(
-            batch, sigs, min_shared=3, max_df=3
+        for r in incremental_media_neardup(
+            batch, sigs, kind="video", min_shared=3, max_df=3
         ).collect()
     }
     assert pairs == {(2, 101): 3}
